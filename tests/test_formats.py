@@ -1,9 +1,8 @@
-"""File-format sources/sinks (S6) and the injected-transport NATS sink."""
+"""File-format sources/sinks (S6) and the NATS publish core over the
+transformed stream."""
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 
 from pyspark.sql import functions as F
@@ -20,7 +19,7 @@ from tigerbeetle_cdc_nats_spark.sources.formats import (
 from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
     HEADER_COLS,
     NatsSinkConfig,
-    make_nats_sink,
+    drain_partition,
 )
 from tigerbeetle_cdc_nats_spark.streaming.pipeline import transform_events
 
@@ -67,35 +66,24 @@ def test_stream_real_testdata_through_pipeline(spark, tmp_path):
     assert sink.where(~F.col("subject").startswith("tigerbeetle.cdc.")).count() == 0
 
 
-def test_nats_sink_with_injected_transport(spark, tmp_path):
-    """The JetStream sink shape, with transport injected: every row is
+def test_nats_sink_with_injected_transport(spark):
+    """The JetStream publish shape over transformed rows: every row is
     published once with subject, dedup msg id, and the 5 routing headers
     (runner.go:586-605)."""
-    outdir = str(tmp_path / "published")
-    os.makedirs(outdir)
+    published = []
 
     def publish(subject: str, msg_id: str, headers: dict, payload: bytes):
-        # executor-side: append one JSON line per publish to a per-pid file
-        fname = os.path.join(outdir, f"{os.getpid()}.jsonl")
-        with open(fname, "a") as f:
-            f.write(json.dumps({
-                "subject": subject, "msg_id": msg_id,
-                "headers": headers, "n": len(payload),
-            }) + "\n")
+        published.append({"subject": subject, "msg_id": msg_id,
+                          "headers": headers, "n": len(payload)})
 
     cfg = validate(CdcConfig(cluster_id="3"))
-    batch = transform_events(
+    rows = transform_events(
         spark.read.schema(EVENTS_SCHEMA)
         .parquet("/root/testdata/sf0.001/events.parquet"), cfg
-    ).drop("event_time").limit(50)
+    ).drop("event_time").limit(50).collect()
 
-    sink = make_nats_sink(NatsSinkConfig(max_pending=8), publish=publish)
-    sink(batch, batch_id=0)
-
-    published = []
-    for f in glob.glob(os.path.join(outdir, "*.jsonl")):
-        with open(f) as fh:
-            published += [json.loads(line) for line in fh]
+    assert drain_partition(iter(rows), publish,
+                           NatsSinkConfig(max_pending=8)) == (50, 0)
     assert len(published) == 50
     assert len({p["msg_id"] for p in published}) == 50
     sample = published[0]

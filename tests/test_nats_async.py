@@ -14,7 +14,6 @@ import pytest
 from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
     NatsSinkConfig,
     drain_partition,
-    make_nats_sink,
 )
 
 
@@ -121,31 +120,6 @@ def test_ack_timeout_propagates():
     with pytest.raises(TimeoutError):
         drain_partition(iter(_rows(["x"])), publish,
                         NatsSinkConfig(max_pending=8, ack_timeout_s=0.01))
-
-
-def test_spark_sink_accumulates_counts(spark):
-    """End-to-end through foreachPartition: per-partition counts aggregate
-    into the sink's Spark accumulators."""
-    import os
-
-    from tigerbeetle_cdc_nats_spark.config import CdcConfig, validate
-    from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
-    from tigerbeetle_cdc_nats_spark.streaming.pipeline import transform_events
-
-    cfg = validate(CdcConfig(cluster_id="7"))
-    batch = transform_events(
-        spark.read.schema(EVENTS_SCHEMA)
-        .parquet("/root/testdata/sf0.001/events.parquet"), cfg
-    ).drop("event_time").limit(20)
-
-    # executor-side sync publisher; all acks fresh (msg ids are unique)
-    def publish(subject, msg_id, headers, payload):
-        return {"duplicate": False}
-
-    sink = make_nats_sink(NatsSinkConfig(max_pending=8), publish=publish)
-    sink(batch, batch_id=0)
-    assert sink.published.value == 20
-    assert sink.duplicates.value == 0
 
 
 def test_native_publish_writer_end_to_end(spark, tmp_path):

@@ -71,12 +71,3 @@ def test_ensure_update_applies_new_config(tmp_path):
     out = ensure_resource(d, _cfg(replicas=2), update=True)
     assert out.replicas == 2
     ensure_resource(d, _cfg(replicas=2))  # now matches
-
-
-def test_nats_sink_requires_transport_or_injection():
-    from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
-        NatsSinkConfig,
-        make_nats_sink,
-    )
-    with pytest.raises(NotImplementedError, match="nats"):
-        make_nats_sink(NatsSinkConfig())

@@ -31,6 +31,23 @@ def test_footer_count_directory_dataset(spark, tmp_path):
     assert table_rows(str(tmp_path)) == 5
 
 
+def test_directory_with_subdirectories_returns_none(spark, tmp_path):
+    """Spark's partition discovery decides which nested part files a
+    directory dataset holds (here only ``k=1/``'s); a top-level footer
+    walk can't follow it, so it defers to the Spark count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(tmp_path, "embeddings.parquet")
+    os.makedirs(os.path.join(d, "k=1"))
+    pq.write_table(pa.table({"v": [1, 2, 3]}), os.path.join(d, "a.parquet"))
+    pq.write_table(pa.table({"v": [4, 5]}),
+                   os.path.join(d, "k=1", "b.parquet"))
+    assert table_rows(str(tmp_path)) is None
+    # the top-level walk would have said 3
+    assert spark.read.parquet(d).count() != 3
+
+
 def test_footer_count_missing_file_returns_none(tmp_path):
     assert table_rows(str(tmp_path)) is None
 

@@ -74,18 +74,6 @@ def sql_hash60(expr: str) -> str:
     return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def sql_word_shingles(expr: str = "text", n: int = 3) -> str:
-    # DuckDB lists are 1-indexed: grams i = 1 .. len-(n-1).
-    toks = f"str_split({expr}, ' ')"
-    gram = " || ' ' || ".join(f"{toks}[CAST(i + {j} AS INT)]" for j in range(n))
-    return (
-        f"CASE WHEN len({toks}) >= {n} THEN "
-        f"list_distinct(list_transform(range(1, len({toks}) - {n - 2}), "
-        f"i -> {gram})) "
-        f"ELSE CAST([] AS VARCHAR[]) END"
-    )
-
-
 def gram_hash_rows(docs: DataFrame, *, text_col: str = "text",
                    id_col: str = "doc_id", n: int = 3,
                    keep: tuple[str, ...] = ()) -> DataFrame:

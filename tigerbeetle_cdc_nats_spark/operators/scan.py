@@ -1,13 +1,10 @@
-"""Source-side operators: incremental cursor scan, range filter, progress
-recovery.
+"""Source-side operators: incremental cursor scan and range filter.
 
 Reference semantics:
 - Incremental scan: poll ``GetChangeEvents(timestamp_min=last+1,
   timestamp_max, limit)`` — /root/reference/runner.go:142-164; cursor
   arithmetic runner.go:726-736; default limit 4096 (config.go:40).
 - Range filter: ``timestamp_max = 0`` means unbounded (runner.go:147-151).
-- Progress recovery: explicit override > stored progress > 0
-  (runner.go:388-410).
 
 Scale notes: the ts predicate is a plain comparison on a long column, so it
 pushes down to the parquet scan (row-group min/max pruning — on a
@@ -86,20 +83,3 @@ def cdc_incremental_scan(events: DataFrame, cursor: int = 0, ts_max: int = 0,
         .orderBy(ts_col)
         .limit(limit)
     )
-
-
-def next_cursor(batch: DataFrame, ts_col: str = "ts") -> int | None:
-    """Cursor advance: max timestamp of the batch (runner.go:453-461).
-    Returns None on an empty batch (cursor unchanged)."""
-    row = batch.agg(F.max(ts_col).alias("m")).first()
-    return row["m"] if row else None
-
-
-def recover_progress(override: int | None, stored: int | None) -> int:
-    """Resume timestamp: explicit override wins, else stored progress, else 0
-    (runner.go:388-410)."""
-    if override is not None:
-        return override
-    if stored is not None:
-        return stored
-    return 0

@@ -96,8 +96,9 @@ def table_rows(sf_dir: str, table: str = "embeddings") -> int | None:
     driver-side, no Spark job; equals ``df.count()`` on the same file(s)
     by the parquet spec (num_rows is required and exact). Memoized on
     file identity (mtime_ns/size), so a rewritten file re-probes. Returns
-    None when the path can't be probed locally (remote FS, missing file);
-    callers fall back to the Spark count."""
+    None when the path can't be probed locally (remote FS, missing file)
+    or is a directory dataset with subdirectories; callers fall back to
+    the Spark count."""
     import os
 
     path = os.path.join(sf_dir, f"{table}.parquet")
@@ -114,10 +115,15 @@ def table_rows(sf_dir: str, table: str = "embeddings") -> int | None:
         if os.path.isdir(path):
             # directory datasets can gain part files without changing the
             # top-level stat (same hazard memo_read_parquet documents):
-            # compute, but never memoize
-            parts = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_")))
+            # compute, but never memoize. With subdirectories, Spark's
+            # partition discovery picks the files it reads; leave those
+            # datasets to the Spark count.
+            entries = [e for e in os.scandir(path)
+                       if not e.name.startswith((".", "_"))]
+            if any(e.is_dir() for e in entries):
+                return None
+            parts = sorted(e.path for e in entries
+                           if e.name.endswith(".parquet"))
             if not parts:
                 return None
             return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)

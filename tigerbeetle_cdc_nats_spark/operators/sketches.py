@@ -26,11 +26,6 @@ CMS_A = tuple((3 * i + 7) * 2654435761 % MINHASH_P for i in range(CMS_DEPTH))
 CMS_B = tuple((i * 1013904223 + 5) % MINHASH_P for i in range(CMS_DEPTH))
 
 
-def cms_cell(key: Column, row: int, width: int = CMS_WIDTH) -> Column:
-    h = hash60(key) % MINHASH_P
-    return ((F.lit(CMS_A[row]) * h + F.lit(CMS_B[row])) % MINHASH_P) % width
-
-
 def sql_cms_cell(expr: str, row: int, width: int = CMS_WIDTH) -> str:
     h = f"({sql_hash60(expr)} % {MINHASH_P})"
     return f"((({CMS_A[row]} * {h} + {CMS_B[row]}) % {MINHASH_P}) % {width})"

@@ -319,7 +319,8 @@ FROM ev WHERE ts >= {CURSOR_NS + 1} ORDER BY ts LIMIT 4096""",
     doc="the same CDC poll served by the NATIVE Python DataSource "
         "(sources/cdc_source.py batch reader): the cursor is the source "
         "OFFSET, pruning at the parquet row-group level from footer "
-        "stats — identical rows to cdc_incremental_scan",
+        "stats — the same ts multiset as cdc_incremental_scan (which "
+        "rows survive a tie at the LIMIT cut can differ)",
 )
 def q_cdc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One poll through the first-class source's batch reader.

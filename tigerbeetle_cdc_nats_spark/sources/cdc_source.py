@@ -303,9 +303,11 @@ class CdcEventsBatchReader(DataSourceReader):
 
     def _read_top_k(self, partition: _RowGroupPartition):
         """The partition's k smallest-ts rows: a global ts-ascending
-        LIMIT k over the scan is a subset of the union of per-partition
-        top-k sets, so the consumer's TakeOrdered result is unchanged
-        while only k rows per row group cross the Arrow boundary."""
+        LIMIT k over the scan takes its ts values from the union of
+        per-partition top-k sets, so the consumer's TakeOrdered result has
+        the same ts multiset while only k rows per row group cross the
+        Arrow boundary. Which rows survive a tie at the k-th ts can differ
+        from an unpushed scan (the sort key is ts alone)."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -380,10 +382,11 @@ def read_cdc_batch(spark, events_path: str, *, start_ts: int = 0,
     ``top_k`` is the manual limit-pushdown channel (the Python DataSource
     API exposes no SupportsPushDownLimit): each PARTITION emits only its
     k smallest-ts rows, so a consumer that applies a global
-    ``ORDER BY ts LIMIT k`` gets identical rows while the Python->JVM
-    Arrow transfer carries k rows per row group instead of the whole
-    pending backlog. Only valid when the consumer really is a
-    ts-ascending top-k."""
+    ``ORDER BY ts LIMIT k`` gets the same ts multiset while the
+    Python->JVM Arrow transfer carries k rows per row group instead of
+    the whole pending backlog. Which rows survive a tie at the cut can
+    differ from an unpushed scan. Only valid when the consumer really is
+    a ts-ascending top-k."""
     _register_once(spark)
     reader = (spark.read.format("tb_cdc_events")
               .option("path", events_path)

@@ -6,16 +6,14 @@ pending`` publishes are in flight at once, acks are awaited IN ORDER, and
 duplicate acks (JetStream's msg-id dedup) are counted (runner.go:484-584,
 duplicate counting runner.go:542-555).
 
-In this engine the publish step is a pluggable ``foreachBatch`` sink; the
-default correctness sink writes parquet (streaming/pipeline.py), and THIS
-adapter is the JetStream drop-in for deployments with a broker.
-
-No NATS client library ships in this environment, so the transport is gated
-behind an import-try: constructing the sink without ``nats-py`` installed
-raises with a clear message, while the pipelining logic (subject, msg id,
-headers, bounded in-flight window, ordered ack awaits, duplicate counting)
-is real and unit-tested via the ``publish`` callable injection
-(:func:`drain_partition` is the pure, Spark-free core).
+The pipeline's own sink writes parquet (streaming/pipeline.py); THIS
+module is the broker path: the ``tb_cdc_publish`` streaming writer, a
+Python DataSource sink whose tasks drain their partitions through
+:func:`drain_partition` (the pure, Spark-free pipelining core: subject,
+msg id, headers, bounded in-flight window, ordered ack awaits, duplicate
+counting). The connection is built on the executor by a
+``publisherFactory`` — ``nats_live.jetstream_publisher_factory`` for a
+live JetStream, :func:`fake_publisher_factory` without a broker.
 """
 
 from __future__ import annotations
@@ -24,14 +22,6 @@ from collections import deque
 from collections.abc import Callable
 from dataclasses import dataclass
 from typing import Any
-
-from pyspark.sql import DataFrame
-
-try:  # pragma: no cover - transport optional
-    import nats  # type: ignore  # noqa: F401
-    HAVE_NATS = True
-except ImportError:
-    HAVE_NATS = False
 
 #: (subject, msg_id, headers, payload) -> ack | future-of-ack.
 #: A *sync* publisher returns the ack directly (or None). An *async*
@@ -69,8 +59,8 @@ def drain_partition(rows, publish: PublishFn,
     publishing the next; drain the remainder in publish order at the end.
 
     Returns ``(published, duplicates)`` for the partition. Pure Python over
-    an iterator — unit-testable without Spark; the Spark sink calls this
-    per partition.
+    an iterator — unit-testable without Spark; each ``tb_cdc_publish``
+    task calls this on its partition.
     """
     pending: deque[Any] = deque()
     published = 0
@@ -87,51 +77,6 @@ def drain_partition(rows, publish: PublishFn,
     while pending:
         duplicates += _settle(pending.popleft(), cfg.ack_timeout_s)
     return published, duplicates
-
-
-def make_nats_sink(cfg: NatsSinkConfig,
-                   publish: PublishFn | None = None):
-    """Build a foreachBatch body that publishes every row of the
-    transformed stream (streaming/pipeline.py:transform_events output shape)
-    to its subject with bounded async pipelining.
-
-    ``publish`` injection exists for tests; without it a real JetStream
-    connection is required. After a batch completes, the sink exposes
-    ``sink.published`` / ``sink.duplicates`` Spark accumulators with the
-    batch totals (the reference logs its duplicate count the same way,
-    runner.go:580-583).
-    """
-    if publish is None:
-        if not HAVE_NATS:
-            raise NotImplementedError(
-                "nats-py is not installed in this environment; inject a "
-                "publish callable or install the NATS client"
-            )
-        raise NotImplementedError(
-            "JetStream connection wiring is deployment-specific; inject a "
-            "publish callable built from your nats.aio client"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        sc = batch_df.sparkSession.sparkContext
-        if sink.published is None:
-            sink.published = sc.accumulator(0)
-            sink.duplicates = sc.accumulator(0)
-        published_acc, duplicates_acc = sink.published, sink.duplicates
-
-        # Partition-parallel publish: each task drains its partition with
-        # its own bounded in-flight window — the async pipelining of
-        # runner.go:510-558 distributed across executors.
-        def drain(rows) -> None:
-            n, d = drain_partition(rows, publish, cfg)
-            published_acc.add(n)
-            duplicates_acc.add(d)
-
-        batch_df.foreachPartition(drain)
-
-    sink.published = None
-    sink.duplicates = None
-    return sink
 
 
 # ---------------------------------------------------------------------------
@@ -170,13 +115,13 @@ def fake_publisher_factory() -> PublishFn:
 
 
 class NatsPublishWriter:
-    """DataSourceStreamWriter: the publish sink as a NATIVE streaming sink
-    instead of a foreachBatch body. Each task drains its partition through
-    the bounded in-flight window (drain_partition — the runner.go:510-584
-    pipelining), returns its (published, duplicates) counts as the commit
-    message, and the driver-side commit() appends one metrics record per
-    micro-batch — the reference's per-chunk publish log
-    (runner.go:580-583) as a queryable artifact."""
+    """DataSourceStreamWriter: the publish sink as a NATIVE streaming
+    sink. Each task drains its partition through the bounded in-flight
+    window (drain_partition — the runner.go:510-584 pipelining), returns
+    its (published, duplicates) counts as the commit message, and the
+    driver-side commit() appends one metrics record per micro-batch — the
+    reference's per-chunk publish log (runner.go:580-583) as a queryable
+    artifact."""
 
     def __init__(self, options: dict):
         spec = options.get("publisherfactory")

@@ -6,13 +6,16 @@ Reference mapping (runner.go:49-170, 425-466):
 |---------------------------------------------|---------------------------------|
 | poll loop + idle backoff (runner.go:126-169)| micro-batch trigger             |
 | cursor recovery (runner.go:388-410)         | checkpointLocation (+ override) |
-| chunked publish+checkpoint (425-466)        | foreachBatch, ack-before-commit |
+| chunked publish+checkpoint (425-466)        | foreachBatch: one write with    |
+|                                             | observed count + max ts, then   |
+|                                             | the cursor (ack-before-commit)  |
 | dedupe window (runner.go:180,602)           | withWatermark + dropDuplicates  |
 | single-writer lock (runner.go:607-724)      | one active query per checkpoint |
 |                                             | dir (Spark-enforced) + lease    |
 |                                             | marker for operator visibility  |
-| JetStream publish (484-584)                 | pluggable sink (parquet default;|
-|                                             | a NATS writer drops in here)    |
+| JetStream publish (484-584)                 | parquet sink; the broker path   |
+|                                             | is the tb_cdc_publish writer    |
+|                                             | (sources/nats_sink.py)          |
 
 At-least-once becomes effectively-once: the sink write is idempotent per
 micro-batch (overwrite-by-batch-id), and the cursor record is committed only
@@ -35,7 +38,7 @@ import threading
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.config import CdcConfig
 from tigerbeetle_cdc_nats_spark.functions.events import msg_id_column, subject_column
@@ -252,39 +255,41 @@ def acquire_lock(paths: StreamPaths, owner: str,
     return lease
 
 
-def release_lock(lease: LockLease | str) -> None:
-    if isinstance(lease, str):  # legacy path-only callers
-        path = lease
-    else:
-        lease.stop()
-        path = lease.path
+def release_lock(lease: LockLease) -> None:
+    lease.stop()
     try:
-        os.remove(path)
+        os.remove(lease.path)
     except FileNotFoundError:
         pass
 
 
 def make_batch_sink(spark: SparkSession, paths: StreamPaths):
     """foreachBatch body: idempotent publish (overwrite-by-batch-id) THEN
-    cursor commit — the at-least-once ordering of runner.go:442-462."""
+    cursor commit — the at-least-once ordering of runner.go:442-462.
+
+    Two Spark jobs per non-empty batch: the write carries the batch's row
+    count and max ``ts`` as observed metrics (side outputs of the same
+    job), and the progress append is the second."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            n = batch_df.count()
-            if n == 0:
-                return
-            # "publish": idempotent parquet write (a NATS JetStream writer
-            # is a drop-in replacement — same at-least-once contract).
-            (batch_df.drop("event_time")
-             .write.mode("overwrite")
-             .parquet(os.path.join(paths.sink_dir, f"batch_id={batch_id}")))
-            # chunk-max checkpoint AFTER successful publish
-            # (runner.go:453-461).
-            max_ts = batch_df.agg(F.max("ts").alias("m")).first()["m"]
-            _write_progress(spark, paths.cursor_dir, max_ts, batch_id)
-        finally:
-            batch_df.unpersist()
+        out = os.path.join(paths.sink_dir, f"batch_id={batch_id}")
+        obs = Observation()
+        (batch_df.drop("event_time")
+         .observe(obs, F.count(F.lit(1)).alias("rows"),
+                  F.max("ts").alias("max_ts"))
+         .write.mode("overwrite").parquet(out))
+        # read only after the write returned: a failed publish raises
+        # above and commits nothing
+        metrics = obs.get
+        if metrics["rows"] == 0:
+            # e.g. the no-data batch that evicts watermark state: nothing
+            # published, so no batch directory and no cursor record
+            jpath = spark._jvm.org.apache.hadoop.fs.Path(out)
+            jpath.getFileSystem(
+                spark._jsc.hadoopConfiguration()).delete(jpath, True)
+            return
+        # chunk-max checkpoint AFTER successful publish (runner.go:453-461).
+        _write_progress(spark, paths.cursor_dir, metrics["max_ts"], batch_id)
 
     return sink
 
