@@ -10,6 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
 from tigerbeetle_cdc_nats_spark.queries_similarity import (
     near_dup_pairs_pinned,
@@ -169,7 +170,7 @@ def test_corrupt_index_raises_not_silent_fallback(spark, tmp_path,
             fh.write(b"not a parquet file")
     with pytest.raises(Exception) as ei:
         q(spark, sf_dir).count()
-    assert not qsim._expected_index_env_error(ei.value)
+    assert not expected_index_env_error(ei.value)
 
     # environment errors still degrade to the computed path, VISIBLY
     def _unwritable(*a, **k):

@@ -1,0 +1,121 @@
+"""The session memo primitive (session.memo / dataset_identity): values
+are served while the data identity holds, and rebuilt — stale storage
+released — when the data moves, with no caller-side invalidation."""
+
+from __future__ import annotations
+
+import os
+
+from tigerbeetle_cdc_nats_spark import queries_dedup as qd
+from tigerbeetle_cdc_nats_spark import queries_similarity as qs
+from tigerbeetle_cdc_nats_spark.operators import similarity as sim
+from tigerbeetle_cdc_nats_spark.session import (
+    dataset_identity,
+    memo,
+    memo_record,
+    memo_scope,
+)
+from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
+
+GOOD = "alpha beta gamma delta epsilon zeta eta theta"
+
+
+def _n_materialized(spark) -> int:
+    # materialized cache blocks registered with the block manager
+    return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+
+def test_memo_invalidates_and_unpersists_on_rewrite(spark, tmp_path):
+    p = str(tmp_path / "t.parquet")
+    spark.range(10).coalesce(1).write.parquet(p)
+    scope = memo_scope(spark)
+
+    def get():
+        def build():
+            df = spark.read.parquet(p).persist()
+            df.count()
+            return df
+        return memo(scope, "test_memo", p, dataset_identity(p), build)
+
+    d1 = get()
+    after_first = _n_materialized(spark)
+    assert d1.is_cached
+    assert get() is d1  # hit: the same object
+    assert memo_record(scope, "test_memo")[0::2] == (1, 1)
+
+    spark.range(25).coalesce(1).write.mode("overwrite").parquet(p)
+    d2 = get()
+    assert d2 is not d1
+    # the rewrite is served, never the superseded cache (unpersisted
+    # BEFORE the rebuild), and the old blocks were released
+    assert d2.count() == 25
+    assert not d1.is_cached and _n_materialized(spark) <= after_first
+    builds, build_s, hits = memo_record(scope, "test_memo")
+    assert (builds, hits) == (2, 1) and build_s > 0
+
+
+def test_identity_sees_nested_appends_and_marker(tmp_path):
+    d = tmp_path / "idx"
+    (d / "band=0").mkdir(parents=True)
+    (d / "band=0" / "a.parquet").write_bytes(b"x")
+    marker = str(d / "_meta.json")
+    assert dataset_identity(str(d), marker) is None  # no marker yet
+    (d / "_meta.json").write_text("{}")
+    before = dataset_identity(str(d), marker)
+    assert before == dataset_identity(str(d), marker)
+    (d / "band=0" / "b.parquet").write_bytes(b"y")
+    assert dataset_identity(str(d), marker) != before
+    assert dataset_identity(str(tmp_path / "missing")) is None
+
+
+def _write_embeddings(path, n, dim):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = os.path.join(path, "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array([[float(i % 5 - 2)] * dim for i in range(n)],
+                              pa.list_(pa.float32())),
+    }), p)
+    os.utime(p, ns=(dim, dim))  # distinct mtime per width
+
+
+def test_dim_and_planes_follow_an_embeddings_rewrite(tmp_path):
+    sf = str(tmp_path)
+    _write_embeddings(sf, 8, 16)
+    assert sim.embedding_dim(sf) == qs._dim(sf) == 16
+    assert len(qs._planes(sf)[0]) == 16
+    _write_embeddings(sf, 8, 24)  # same sf_dir, new width
+    assert sim.embedding_dim(sf) == qs._dim(sf) == 24
+    assert len(qs._planes(sf)[0]) == 24
+
+
+def _clusters(comp) -> dict[int, int]:
+    return {r["node"]: r["cluster_id"] for r in comp.collect()}
+
+
+def test_dup_components_follow_index_append_and_compaction(spark, tmp_path):
+    sfd = str(tmp_path / "sf")
+    spark.createDataFrame(
+        [(1, GOOD), (2, GOOD + " iota"),
+         (5, "totally different words entirely distinct here")],
+        "doc_id long, text string",
+    ).coalesce(1).write.parquet(os.path.join(sfd, "documents.parquet"))
+
+    c1 = qd._dup_components(spark, sfd)
+    assert qd._dup_components(spark, sfd) is c1  # memo hit
+    assert 3 not in _clusters(c1)
+
+    idx = qd.stored_index_dir("minhash", sfd)
+    di.append_minhash_index(spark.createDataFrame(
+        [(3, GOOD)], "doc_id long, text string"), idx)
+    c2 = qd._dup_components(spark, sfd)
+    assert c2 is not c1
+    got = _clusters(c2)
+    assert got[3] == got[1]  # the appended exact dup joins doc 1's cluster
+
+    di.compact_minhash_index(spark, idx)
+    c3 = qd._dup_components(spark, sfd)
+    assert c3 is not c2
+    assert _clusters(c3) == got

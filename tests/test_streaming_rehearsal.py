@@ -62,7 +62,7 @@ def _run_ingest(spark, src, curated, chk):
     q.awaitTermination(120)
 
 
-def test_end_to_end_corpus_rehearsal(spark, tmp_path):
+def test_end_to_end_corpus_rehearsal(spark, tmp_path, monkeypatch):
     src = str(tmp_path / "src")
     curated = str(tmp_path / "curated")
     mh_idx = str(tmp_path / "mh_idx")
@@ -117,13 +117,6 @@ def test_end_to_end_corpus_rehearsal(spark, tmp_path):
             time.sleep(0.5)
         assert pred(), (info() if info else "wait_for timeout")
 
-    # prime the session pairs memo so maintenance has something to
-    # invalidate (keyed by (appId, sf_dir) — any entry counts)
-    from tigerbeetle_cdc_nats_spark import queries_dedup as qd
-
-    qd.corpus_minhash_pairs(spark, "/root/testdata/sf0.001")
-    assert qd._PAIRS_CACHE
-
     qm, qa = start_maintenance()
     try:
         deadline = time.time() + 120
@@ -134,9 +127,6 @@ def test_end_to_end_corpus_rehearsal(spark, tmp_path):
         qa.stop()
         qm.awaitTermination(60)
         qa.awaitTermination(60)
-    # the appends invalidated the session memo in sequence
-    assert not qd._PAIRS_CACHE
-
     # ---- phase 2: crash-replay simulation while the streams are DOWN:
     # an uncommitted batch re-appends already-indexed rows ----
     replay = spark.createDataFrame(
@@ -145,6 +135,18 @@ def test_end_to_end_corpus_rehearsal(spark, tmp_path):
     ai.append_ann_index(replay.select(
         F.col("doc_id").alias("vec_id"), _embedding().alias("embedding")),
         ann_idx, planes, dim=DIM)
+
+    # prime the session pairs memo on the maintained index: a corpus
+    # directory whose stored minhash index IS mh_idx
+    from tigerbeetle_cdc_nats_spark import queries_dedup as qd
+
+    sfd = str(tmp_path / "sf")
+    spark.read.parquet(curated).select("doc_id", "text").coalesce(1) \
+        .write.parquet(os.path.join(sfd, "documents.parquet"))
+    monkeypatch.setattr(qd, "stored_index_dir",
+                        lambda kind, sf_dir, table="documents": mh_idx)
+    primed = qd.corpus_minhash_pairs(spark, sfd)
+    assert qd.corpus_minhash_pairs(spark, sfd) is primed  # memo hit
 
     # ---- phase 3: two more ingest batches + restart; the maintenance
     # batch ids resume from the checkpoint and batch 2 fires compaction,
@@ -164,6 +166,9 @@ def test_end_to_end_corpus_rehearsal(spark, tmp_path):
         all_docs = {1, 2, 5, 6, 7}
         wait_for(lambda: ids_in(mh_idx, "doc_id") == all_docs, deadline)
         wait_for(lambda: ids_in(ann_idx, "vec_id") == all_docs, deadline)
+        # the maintenance appends moved the index snapshot identity, so
+        # the session memo serves the grown index, not the primed table
+        assert qd.corpus_minhash_pairs(spark, sfd) is not primed
 
         # replay-INVARIANT property while the streams run: SERVED
         # candidate pairs / distinct (vec_id, bucket) sets must equal a

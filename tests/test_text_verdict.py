@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
 from tigerbeetle_cdc_nats_spark.operators import dedup as dd
 from tigerbeetle_cdc_nats_spark.queries_dedup import (
     DUP_CLUSTER_THRESHOLD,
@@ -197,7 +198,7 @@ def test_corrupt_text_index_raises_not_silent_fallback(spark, tmp_path,
             fh.write(b"not a parquet file")
     with pytest.raises(Exception) as ei:
         q(spark, sf_dir).count()
-    assert not qsim._expected_index_env_error(ei.value)
+    assert not expected_index_env_error(ei.value)
 
     # environment errors still degrade to the computed path, VISIBLY
     def _unwritable(*a, **k):

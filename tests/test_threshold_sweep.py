@@ -1,4 +1,5 @@
-"""dedup_threshold_sweep's conditional-aggregate + stack() form must equal
+"""dedup_threshold_sweep's conditional-aggregate + stack() form (the
+production ``sweep_counts`` the registered query calls) must equal
 the oracle's sw-explode semantics, including all-zero threshold rows and
 the nested-threshold doc counting (doc in sw(t) iff its max agreement
 >= t)."""
@@ -7,7 +8,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tigerbeetle_cdc_nats_spark.queries_dedup import SWEEP_MIN_AGREE
+from tigerbeetle_cdc_nats_spark.queries_dedup import (
+    SWEEP_MIN_AGREE,
+    sweep_counts,
+)
 
 
 def _sweep_reference(spark, pairs):
@@ -33,26 +37,6 @@ def _sweep_reference(spark, pairs):
                     .alias("n_docs")))
 
 
-def _sweep_stack(pairs):
-    """The registered query's conditional-aggregate + stack shape."""
-    np_ = pairs.agg(*[
-        F.sum(F.when(F.col("m") >= t, 1).otherwise(0)).cast("bigint")
-        .alias(f"p{t}") for t in SWEEP_MIN_AGREE])
-    dm = (pairs.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id"), "m")
-        .groupBy("doc_id").agg(F.max("m").alias("mm")))
-    nd = dm.agg(*[
-        F.sum(F.when(F.col("mm") >= t, 1).otherwise(0)).cast("bigint")
-        .alias(f"d{t}") for t in SWEEP_MIN_AGREE])
-    return np_.crossJoin(nd).select(F.expr(
-        "stack({n}, {args}) AS (min_agree, n_pairs, n_docs)".format(
-            n=len(SWEEP_MIN_AGREE),
-            args=", ".join(
-                f"CAST({t} AS BIGINT), coalesce(p{t}, CAST(0 AS BIGINT)), "
-                f"coalesce(d{t}, CAST(0 AS BIGINT))"
-                for t in SWEEP_MIN_AGREE))))
-
-
 def test_stack_form_matches_explode_form(spark):
     # doc 1 pairs with 2 (m=16) and 3 (m=9); docs 4-5 at the lowest cut;
     # doc 6 isolated below every threshold via m=7 (never counted)
@@ -60,7 +44,7 @@ def test_stack_form_matches_explode_form(spark):
         [(1, 2, 16), (1, 3, 9), (4, 5, 8), (6, 7, 7)],
         "doc_a long, doc_b long, m int")
     ref = {tuple(r) for r in _sweep_reference(spark, pairs).collect()}
-    got = {tuple(r) for r in _sweep_stack(pairs).collect()}
+    got = {tuple(r) for r in sweep_counts(pairs).collect()}
     assert got == ref
     # nested-threshold spot check: at the top cut only the m=16 pair and
     # its two docs survive
@@ -70,5 +54,5 @@ def test_stack_form_matches_explode_form(spark):
 
 def test_stack_form_empty_pairs_keeps_zero_spine(spark):
     pairs = spark.createDataFrame([], "doc_a long, doc_b long, m int")
-    got = {tuple(r) for r in _sweep_stack(pairs).collect()}
+    got = {tuple(r) for r in sweep_counts(pairs).collect()}
     assert got == {(int(t), 0, 0) for t in SWEEP_MIN_AGREE}

@@ -34,12 +34,6 @@ SIM_SCALE = 1_000_000
 EMBEDDING_DIM = 64
 
 
-#: embedding_dim probe memo keyed on (path, mtime_ns, size): dozens of
-#: registered queries probe the same file per bench pass; the pyarrow
-#: footer+first-row read is ~10 ms each, pure repeated driver work.
-_DIM_MEMO: dict = {}
-
-
 def embedding_dim(sf_dir: str, default: int = EMBEDDING_DIM) -> int:
     """Probe the corpus's embedding width from the parquet file itself —
     one row via pyarrow, driver-side, no Spark job.
@@ -48,76 +42,64 @@ def embedding_dim(sf_dir: str, default: int = EMBEDDING_DIM) -> int:
     re-generated testdata with changed physical schemas between rounds
     (events.ts round 2); a stale hard-coded width would silently turn the
     unrolled dot products into NULLs. Falls back to ``default`` when the
-    file can't be probed (remote FS, empty table)."""
+    file can't be probed (remote FS, empty table). Memoized on the file's
+    identity: dozens of registered queries probe the same file per bench
+    pass, ~10 ms of footer + first-row read each."""
     import os
 
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        memo_key = (os.path.abspath(sf_dir), st.st_mtime_ns, st.st_size,
-                    default)
-    except OSError:
-        memo_key = None
-    if memo_key is not None and memo_key in _DIM_MEMO:
-        return _DIM_MEMO[memo_key]
-    try:
-        import pyarrow.parquet as pq
+    from tigerbeetle_cdc_nats_spark.session import dataset_identity, memo
 
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        if os.path.isdir(path):
-            # Spark writes a parquet DIRECTORY of part files; probe the
-            # first data file (pq.ParquetFile rejects directories, and
-            # the bare-except default would silently pin dim=64 on a
-            # directory-shaped corpus of any other width)
-            parts = sorted(f for f in os.listdir(path)
-                           if f.endswith(".parquet")
-                           and not f.startswith((".", "_")))
-            if not parts:
-                return default
-            path = os.path.join(path, parts[0])
-        batch = next(pq.ParquetFile(path).iter_batches(batch_size=1))
-        dim = len(batch.column("embedding")[0])
-        if memo_key is not None:
-            _DIM_MEMO[memo_key] = dim
-        return dim
-    except Exception:
-        return default
+    path = os.path.join(sf_dir, "embeddings.parquet")
 
+    def probe() -> int:
+        try:
+            import pyarrow.parquet as pq
 
-#: table_rows memo keyed on (path, mtime_ns, size): ~a dozen registered
-#: queries sized their adaptive LSH geometry with a blocking `df.count()`
-#: Spark job at PLAN-BUILD time (30-80 ms of scheduler + scan each, per
-#: query per bench pass). The parquet footer's num_rows is authoritative
-#: for a static file, so the count is a ~1 ms driver-side metadata read.
-_ROWS_MEMO: dict = {}
+            first = path
+            if os.path.isdir(path):
+                # Spark writes a parquet DIRECTORY of part files; probe
+                # the first data file (pq.ParquetFile rejects
+                # directories, and the bare-except default would
+                # silently pin dim=64 on a directory-shaped corpus of
+                # any other width)
+                parts = sorted(f for f in os.listdir(path)
+                               if f.endswith(".parquet")
+                               and not f.startswith((".", "_")))
+                if not parts:
+                    return default
+                first = os.path.join(path, parts[0])
+            batch = next(pq.ParquetFile(first).iter_batches(batch_size=1))
+            return len(batch.column("embedding")[0])
+        except Exception:
+            return default
+
+    return memo(None, "embedding_dim", (os.path.abspath(path), default),
+                dataset_identity(path), probe)
 
 
 def table_rows(sf_dir: str, table: str = "embeddings") -> int | None:
     """Exact row count of a testdata table from parquet FOOTER metadata —
     driver-side, no Spark job; equals ``df.count()`` on the same file(s)
-    by the parquet spec (num_rows is required and exact). Memoized on
-    file identity (mtime_ns/size), so a rewritten file re-probes. Returns
-    None when the path can't be probed locally (remote FS, missing file)
-    or is a directory dataset with subdirectories; callers fall back to
-    the Spark count."""
+    by the parquet spec (num_rows is required and exact). It replaced a
+    blocking plan-build-time ``df.count()`` (30-80 ms each) in a dozen
+    adaptive-geometry queries. Memoized on the dataset identity, so a
+    rewritten file re-probes. Returns None when the path can't be probed
+    locally (remote FS, missing file) or is a directory dataset with
+    subdirectories; callers fall back to the Spark count."""
     import os
 
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    if key in _ROWS_MEMO:
-        return _ROWS_MEMO[key]
-    try:
-        import pyarrow.parquet as pq
+    from tigerbeetle_cdc_nats_spark.session import dataset_identity, memo
 
-        if os.path.isdir(path):
-            # directory datasets can gain part files without changing the
-            # top-level stat (same hazard memo_read_parquet documents):
-            # compute, but never memoize. With subdirectories, Spark's
-            # partition discovery picks the files it reads; leave those
-            # datasets to the Spark count.
+    path = os.path.join(sf_dir, f"{table}.parquet")
+
+    def count() -> int | None:
+        try:
+            import pyarrow.parquet as pq
+
+            if not os.path.isdir(path):
+                return pq.ParquetFile(path).metadata.num_rows
+            # with subdirectories, Spark's partition discovery picks the
+            # files it reads; leave those datasets to the Spark count
             entries = [e for e in os.scandir(path)
                        if not e.name.startswith((".", "_"))]
             if any(e.is_dir() for e in entries):
@@ -127,11 +109,11 @@ def table_rows(sf_dir: str, table: str = "embeddings") -> int | None:
             if not parts:
                 return None
             return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
-        n = pq.ParquetFile(path).metadata.num_rows
-    except Exception:
-        return None
-    _ROWS_MEMO[key] = n
-    return n
+        except Exception:
+            return None
+
+    return memo(None, "table_rows", os.path.abspath(path),
+                dataset_identity(path), count)
 
 
 def _unrolled_dot_sql(a: str, b: str, dim: int) -> str:

@@ -11,7 +11,13 @@ from tigerbeetle_cdc_nats_spark import errors as errmod
 from tigerbeetle_cdc_nats_spark.operators import dedup as dd
 from tigerbeetle_cdc_nats_spark.operators import text as tx
 from tigerbeetle_cdc_nats_spark.registry import register
-from tigerbeetle_cdc_nats_spark.session import load_table
+from tigerbeetle_cdc_nats_spark.session import (
+    dataset_identity,
+    load_table,
+    memo,
+    memo_scope,
+    table_path,
+)
 from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
 _log = logging.getLogger(__name__)
@@ -159,28 +165,54 @@ def stored_index_dir(kind: str, sf_dir: str,
     return os.path.join(root, f"{kind}_{h}")
 
 
-#: Session-level memo of the served candidate-pair table, keyed by
-#: (spark application id, sf_dir): the stored index is the CROSS-session
-#: cache, this persist is the WITHIN-session one — 14 consumers share one
-#: in-memory pairs table instead of each re-reading + re-joining the
-#: index (measured ~1.2 s fixed overhead per consumer at sf0.1).
-_PAIRS_CACHE: dict = {}
+def _degrade(name: str, exc: Exception) -> None:
+    """Log the in-session fallback for an unusable index environment —
+    unwritable or untrusted scratch, the only errors that may degrade
+    (round-11 advice); anything else (a corrupt snapshot) re-raises
+    instead of silently rebuilding forever."""
+    if not errmod.expected_index_env_error(exc):
+        raise exc
+    _log.warning("%s: stored-index path unavailable (%s); serving the "
+                 "in-session build", name, exc)
 
 
-def invalidate_pairs_cache() -> None:
-    """Drop every memoized pairs table (unpersisting its storage).
+def _minhash_index(spark: SparkSession, sf_dir: str, name: str):
+    """(path, identity) of the corpus's MinHash banded index, built on
+    first touch; path is None when the index environment is unusable.
 
-    MUST be called whenever the stored index gains rows outside the
-    batch build path — streaming maintenance
-    (streaming/corpus.maintain_minhash_index) calls this per appended
-    batch so same-session batch consumers re-read the grown index
-    instead of serving a frozen snapshot."""
-    while _PAIRS_CACHE:
-        _key, pairs = _PAIRS_CACHE.popitem()
+    The identity — the memo key of every value derived from the index —
+    is the documents identity PLUS the index snapshot identity, taken
+    AFTER the build (else the first lookup after a cold build always
+    misses once): a streaming append into the live snapshot or a
+    compaction flip moves it by itself, so same-session consumers
+    re-read the grown index instead of serving a frozen snapshot."""
+    from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
+
+    try:
+        path = stored_index_dir("minhash", sf_dir)
+        if not iv.index_ready(path):
+            di.write_minhash_index(load_table(spark, sf_dir, "documents"),
+                                   path)
+        index_ident = dataset_identity(iv.current_dir(path))
+    except Exception as exc:
+        _degrade(name, exc)
+        path, index_ident = None, "computed"
+    docs_ident = dataset_identity(table_path(sf_dir, "documents"))
+    if docs_ident is None or index_ident is None:
+        return path, None
+    return path, (docs_ident, index_ident)
+
+
+def _served(name: str, path: str | None, from_index, computed) -> DataFrame:
+    """``from_index(path)`` from the stored index, else (no index, or an
+    index-environment error) the in-session ``computed()`` — identical
+    rows either way (stored and fresh share pairs_est_from_banded)."""
+    if path is not None:
         try:
-            pairs.unpersist()
-        except Exception:
-            pass  # session already stopped: nothing to release
+            return from_index(path)
+        except Exception as exc:
+            _degrade(name, exc)
+    return computed()
 
 
 def corpus_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -191,64 +223,54 @@ def corpus_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     share this one stored artifact instead of each rebuilding one md5 per
     gram occurrence). Falls back to the in-session signature build when
     the index scratch is unwritable/untrusted — identical candidates
-    either way (stored and fresh share pairs_est_from_banded)."""
-    import os
+    either way.
 
+    The stored index is the CROSS-session cache; this session memo (one
+    persisted pairs table, keyed like _minhash_index) is the
+    WITHIN-session one — 14 consumers share it instead of each re-reading
+    + re-joining the index (measured ~1.2 s fixed overhead per consumer
+    at sf0.1)."""
     from pyspark import StorageLevel
 
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    try:
-        path = stored_index_dir("minhash", sf_dir)
-        if not iv.index_ready(path):
-            di.write_minhash_index(docs, path)
-        pairs = di.minhash_pairs_from_index(
-            di.read_minhash_index(spark, path))
-    except Exception as exc:
-        # index location unwritable (read-only scratch): same result
-        # from the in-session path — the stored artifact is a perf
-        # optimization, never a correctness dependency. Only ENV
-        # errors may degrade (round-11 advice): a corrupt snapshot
-        # must raise, not silently rebuild forever.
-        if not errmod.expected_index_env_error(exc):
-            raise
-        _log.warning("corpus_minhash_pairs: stored-index path "
-                     "unavailable (%s); serving the in-session build",
-                     exc)
-        pairs = dd.minhash_candidate_pairs(dd.minhash_signatures(docs))
-    pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-    pairs.count()  # eager: concurrent consumers read one materialization
-    _PAIRS_CACHE[key] = pairs
-    return pairs
+    path, ident = _minhash_index(spark, sf_dir, "corpus_minhash_pairs")
+
+    def build() -> DataFrame:
+        pairs = _served(
+            "corpus_minhash_pairs", path,
+            lambda p: di.minhash_pairs_from_index(
+                di.read_minhash_index(spark, p)),
+            lambda: dd.minhash_candidate_pairs(dd.minhash_signatures(
+                load_table(spark, sf_dir, "documents"))))
+        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+        pairs.count()  # eager: concurrent consumers read one materialization
+        return pairs
+
+    return memo(memo_scope(spark), "minhash_pairs", sf_dir, ident, build)
 
 
 def corpus_shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc shingle-hash sets ``(doc_id, sh, n_sh)`` for the corpus,
-    session-memoized (round 12): the gram explode + one md5 per gram
-    occurrence + collect_set is the dominant cost of every exact-set
-    consumer, and minhash_containment and rag_retrieve_diverse each
-    recomputed it per query. Shares _PAIRS_CACHE's lifecycle (an
-    invalidation drops it with the pairs)."""
+    session-memoized on the documents identity (round 12): the gram
+    explode + one md5 per gram occurrence + collect_set is the dominant
+    cost of every exact-set consumer, and minhash_containment and
+    rag_retrieve_diverse each recomputed it per query."""
     from pyspark import StorageLevel
 
-    key = (spark.sparkContext.applicationId, sf_dir, "shingle_sets")
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    sets = (dd.gram_hash_rows(docs).groupBy("doc_id")
-            .agg(F.collect_set("h").alias("sh"))
-            .select("doc_id", "sh",
-                    F.size("sh").cast("bigint").alias("n_sh"))
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    sets.count()  # eager: concurrent consumers read one materialization
-    _PAIRS_CACHE[key] = sets
-    return sets
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        sets = (dd.gram_hash_rows(docs).groupBy("doc_id")
+                .agg(F.collect_set("h").alias("sh"))
+                .select("doc_id", "sh",
+                        F.size("sh").cast("bigint").alias("n_sh"))
+                .persist(StorageLevel.MEMORY_AND_DISK))
+        sets.count()  # eager: concurrent consumers read one materialization
+        return sets
+
+    return memo(memo_scope(spark), "shingle_sets", sf_dir,
+                dataset_identity(table_path(sf_dir, "documents")), build)
 
 
 def corpus_minhash_probe(spark: SparkSession, sf_dir: str,
@@ -266,44 +288,29 @@ def corpus_minhash_probe(spark: SparkSession, sf_dir: str,
     pruning predicate) plus an index open — four registered consumers
     (minhash_probe_indexed, incremental_dedup, novelty_score,
     delta_dedup_verdict) each re-paid it per query (~0.5 s fixed,
-    measured). One shared persist; invalidate_pairs_cache drops it when
-    streaming maintenance grows the index."""
-    import os
-
+    measured). One shared persist, re-probed when the index grows."""
     from pyspark import StorageLevel
 
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
-    key = (spark.sparkContext.applicationId, sf_dir, delta_mod, delta_rem,
-           "probe")
-    hit = _PAIRS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = load_table(spark, sf_dir, "documents")
-    pred = (F.col("doc_id") % delta_mod) == delta_rem
-    try:
-        path = stored_index_dir("minhash", sf_dir)
-        if not iv.index_ready(path):
-            di.write_minhash_index(docs, path)
-        pairs = di.probe_minhash_index(spark, path, docs.where(pred))
-    except Exception as exc:
-        # same narrowed-fallback discipline as corpus_minhash_pairs:
-        # this probe serves delta_dedup_verdict's stored path, so a
-        # corrupt index must raise there too (round-11 judge item #3)
-        if not errmod.expected_index_env_error(exc):
-            raise
-        _log.warning("corpus_minhash_probe: stored-index path "
-                     "unavailable (%s); serving the in-session build",
-                     exc)
-        pairs = dd.minhash_incremental_pairs(
-            dd.minhash_signatures(docs), pred).select(
-            "doc_id", "other_id", "est_jaccard")
-    # delta membership is a pure id function — derivable on either path
-    out = pairs.withColumn(
-        "other_is_delta", (F.col("other_id") % delta_mod) == delta_rem)
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    _PAIRS_CACHE[key] = out
-    return out
+    path, ident = _minhash_index(spark, sf_dir, "corpus_minhash_probe")
+
+    def build() -> DataFrame:
+        docs = load_table(spark, sf_dir, "documents")
+        pred = (F.col("doc_id") % delta_mod) == delta_rem
+        pairs = _served(
+            "corpus_minhash_probe", path,
+            lambda p: di.probe_minhash_index(spark, p, docs.where(pred)),
+            lambda: dd.minhash_incremental_pairs(
+                dd.minhash_signatures(docs), pred).select(
+                "doc_id", "other_id", "est_jaccard"))
+        # delta membership is a pure id function — derivable on either path
+        return pairs.withColumn(
+            "other_is_delta", (F.col("other_id") % delta_mod) == delta_rem
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+
+    return memo(memo_scope(spark), "minhash_probe",
+                (sf_dir, delta_mod, delta_rem), ident, build)
 
 
 @register(
@@ -362,27 +369,24 @@ def q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.simhash(load_table(spark, sf_dir, "documents"))
 
 
-#: Resolved cluster table memo, keyed by (spark application id, sf_dir).
-#: The CC fixpoint runs EAGERLY at plan-build time (driver-side convergence
-#: probes), so plan-level CacheManager dedup can't share it across queries —
-#: but the cluster table is the same materialized artifact for dup_clusters
-#: and canonical_selection (real dedup pipelines resolve clusters once and
-#: reuse the assignment downstream). The memo'd DataFrame is backed by a
-#: localCheckpoint inside the owning session; a new session misses the key
-#: and recomputes.
-_CC_CACHE: dict = {}
-
-
 def _dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    edges = corpus_minhash_pairs(spark, sf_dir).where(
-        F.col("est_jaccard") >= DUP_CLUSTER_THRESHOLD)
-    comp = dd.connected_components(edges, src="doc_a", dst="doc_b")
-    _CC_CACHE[key] = comp
-    return comp
+    """The resolved cluster table, memoized on _minhash_index's identity.
+
+    The CC fixpoint runs EAGERLY at plan-build time (driver-side
+    convergence probes), so plan-level CacheManager dedup can't share it
+    across queries — but the cluster table is the same materialized
+    artifact for dup_clusters and canonical_selection (real dedup
+    pipelines resolve clusters once and reuse the assignment
+    downstream). The memoized DataFrame is backed by a localCheckpoint
+    inside the owning session."""
+
+    def build() -> DataFrame:
+        edges = corpus_minhash_pairs(spark, sf_dir).where(
+            F.col("est_jaccard") >= DUP_CLUSTER_THRESHOLD)
+        return dd.connected_components(edges, src="doc_a", dst="doc_b")
+
+    _path, ident = _minhash_index(spark, sf_dir, "dup_components")
+    return memo(memo_scope(spark), "dup_components", sf_dir, ident, build)
 
 
 @register(
@@ -1138,11 +1142,21 @@ LEFT JOIN nd ON nd.min_agree = t.min_agree""",
         "cross-engine deterministic",
 )
 def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pair/doc counts per candidate threshold, from the stored index.
+    """Pair/doc counts per candidate threshold, from the stored index:
+    ``sweep_counts`` over the session-persisted pairs memo."""
+    return sweep_counts(corpus_minhash_pairs(spark, sf_dir).select(
+        "doc_a", "doc_b",
+        (F.col("est_jaccard") * dd.MINHASH_K).cast("int").alias("m")))
+
+
+def sweep_counts(pairs: DataFrame) -> DataFrame:
+    """(min_agree, n_pairs, n_docs) for every SWEEP_MIN_AGREE threshold
+    over ``pairs`` (doc_a, doc_b, m = signature agreement count).
 
     Scale shape (round 13): the thresholds are NESTED (sw at t+1 is a
-    subset of sw at t), so neither side needs the 9-way threshold explode
-    of the raw pair set the oracle spells out:
+    subset of sw at t), so neither side needs the
+    len(SWEEP_MIN_AGREE)-way (5) threshold explode of the raw pair set
+    the oracle spells out:
 
     - n_pairs(t) = count of pairs with m >= t — one CONDITIONAL column
       per threshold inside a single global aggregate over the pair set;
@@ -1152,18 +1166,15 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
       the same conditional way, instead of dropping
       2 x |pairs| x |thresholds| rows through a global distinct.
 
-    Both rollups are map-side-combined single passes over the
-    session-persisted pairs memo; the two 1-row results cross join (1x1)
-    and a stack() projection emits the 9-row sweep — no threshold-spine
-    join, no explode, and two fewer exchanges than the sw form
-    (interleaved A/B at sf0.1: 0.46 -> 0.30 s; rows verified equal).
-    Empty pair set: the global aggregates still return one row (NULL
-    sums), and the coalesce inside the stack keeps every threshold row
-    at 0 — exactly the spine the oracle's LEFT JOIN guarantees.
+    Both rollups are map-side-combined single passes over the pair set;
+    the two 1-row results cross join (1x1) and a stack() projection
+    emits one row per threshold (5) — no threshold-spine join, no
+    explode, and two fewer exchanges than the sw form (interleaved A/B
+    at sf0.1: 0.46 -> 0.30 s; rows verified equal). Empty pair set: the
+    global aggregates still return one row (NULL sums), and the
+    coalesce inside the stack keeps every threshold row at 0 — exactly
+    the spine the oracle's LEFT JOIN guarantees.
     """
-    pairs = corpus_minhash_pairs(spark, sf_dir).select(
-        "doc_a", "doc_b",
-        (F.col("est_jaccard") * dd.MINHASH_K).cast("int").alias("m"))
     np_ = pairs.agg(*[
         F.sum(F.when(F.col("m") >= t, 1).otherwise(0)).cast("bigint")
         .alias(f"p{t}") for t in SWEEP_MIN_AGREE])
@@ -1679,10 +1690,7 @@ def q_text_dedup_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends cannot change any min() and are dropped inside the hot
     scan, so the verdict is replay-tolerant between compactions.
     """
-    from tigerbeetle_cdc_nats_spark.queries_similarity import (
-        VERDICT_SERVED,
-        _expected_index_env_error,
-    )
+    from tigerbeetle_cdc_nats_spark.queries_similarity import VERDICT_SERVED
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
@@ -1707,7 +1715,7 @@ def q_text_dedup_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
         # silent in-session rebuild masks the stored-index bug forever
         # (bit-identical result here, so it is cost-masking, which is
         # exactly why it would never be noticed).
-        if not _expected_index_env_error(exc):
+        if not errmod.expected_index_env_error(exc):
             raise
         VERDICT_SERVED["text_dedup_verdict"] = "computed"
         _log.warning("text_dedup_verdict: stored-index path unavailable "

@@ -322,10 +322,8 @@ def corpus_verdict_served(spark: SparkSession, sf_dir: str, *,
     (rehearsal-pinned). This is how the stats rollup and the pipeline
     composite avoid re-running all three stage verdicts per query
     (round-11 judge item #2's consumer half)."""
-    from tigerbeetle_cdc_nats_spark.queries_similarity import (
-        VERDICT_SERVED,
-        _expected_index_env_error,
-    )
+    from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
+    from tigerbeetle_cdc_nats_spark.queries_similarity import VERDICT_SERVED
     from tigerbeetle_cdc_nats_spark.sources import verdict_store as vs
 
     try:
@@ -334,7 +332,7 @@ def corpus_verdict_served(spark: SparkSession, sf_dir: str, *,
         VERDICT_SERVED[consumer] = "stored"
         return out.select("doc_id", "rep_id", "is_kept", "stage")
     except Exception as exc:
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         VERDICT_SERVED[consumer] = "computed"
         _log.warning("%s: stored verdict unavailable (%s); serving the "

@@ -3,11 +3,20 @@ brute-force cosine top-k baseline + LSH-bucketed ANN scale path."""
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, SparkSession
 
+from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
 from tigerbeetle_cdc_nats_spark.registry import register
-from tigerbeetle_cdc_nats_spark.session import load_table
+from tigerbeetle_cdc_nats_spark.session import (
+    dataset_identity,
+    load_table,
+    memo,
+    memo_scope,
+    table_path,
+)
 from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
 QUERY_IDS = (0, 1, 2, 3, 4)
@@ -20,9 +29,6 @@ QUERY_IDS = (0, 1, 2, 3, 4)
 _DIM = sim.EMBEDDING_DIM
 PLANES = sim.hyperplanes(n_planes=8, dim=_DIM)
 
-import functools
-import logging
-
 _log = logging.getLogger(__name__)
 
 #: Which path served the last verdict build per query name ("stored" |
@@ -31,22 +37,6 @@ _log = logging.getLogger(__name__)
 VERDICT_SERVED: dict[str, str] = {}
 
 
-def _expected_index_env_error(exc: Exception) -> bool:
-    """True only for errors a healthy deployment can legitimately hit
-    when the index scratch is unusable — unwritable/missing/full
-    filesystem (OSError incl. PermissionError) or the deliberate
-    foreign-ownership refusal in stored_index_dir. Round-12: the
-    classification now lives in ``errors.expected_index_env_error``
-    and matches JVM-side (Py4J) payloads by the exception CLASS
-    carrying the message, not by free text anywhere in the stack.
-    Everything else (corrupt snapshot, bad sidecar, layout regression)
-    is a real bug and must propagate."""
-    from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
-
-    return expected_index_env_error(exc)
-
-
-@functools.lru_cache(maxsize=8)
 def _dim(sf_dir: str) -> int:
     return sim.embedding_dim(sf_dir)
 
@@ -60,7 +50,6 @@ def _corpus_n(emb, sf_dir: str) -> int:
     return n if n is not None else emb.count()
 
 
-@functools.lru_cache(maxsize=8)
 def _planes(sf_dir: str):
     d = _dim(sf_dir)
     return PLANES if d == _DIM else sim.hyperplanes(n_planes=8, dim=d)
@@ -169,7 +158,7 @@ def q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         # read-only scratch fallback: identical result from a per-session
         # bucketing of the corpus (loses only the file-level pruning).
         # Env errors only — a corrupt index must raise (round-11 advice).
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         _log.warning("ann_lsh_indexed: stored index unavailable (%s); "
                      "serving the computed path", exc)
@@ -492,7 +481,7 @@ def q_embedding_near_dup_indexed(spark: SparkSession,
     except Exception as exc:
         # read-only scratch: identical result from the computed path.
         # Env errors only — a corrupt index must raise (round-11 advice).
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         _log.warning("near-dup indexed pairs: stored index unavailable "
                      "(%s); serving the computed path", exc)
@@ -742,7 +731,7 @@ def q_embedding_dedup_verdict(spark: SparkSession,
         # bug — corrupt snapshot, bad sidecar, layout regression — must
         # raise, or it would be masked forever while every query
         # silently pays the computed cost (round-10 judge item #4).
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         VERDICT_SERVED["embedding_dedup_verdict"] = "computed"
         _log.warning("embedding_dedup_verdict: stored-index path "
@@ -1007,82 +996,31 @@ def centroid_vectors(emb: DataFrame) -> DataFrame:
     )
 
 
-#: Session memo of the IVF coarse quantization, keyed on (application id,
-#: embeddings file identity): centroid_vectors + the full-corpus
-#: ivf_assign pass are byte-identical plans across the 8 IVF-family
-#: consumers, but each query used to re-pay ivf_assign's construction-time
-#: centroid collect (a blocking Spark job) and its own persist round
-#: trips; CacheManager's plan-equality substitution also hinged on
-#: cloudpickle byte stability of the per-call mapInPandas closure. One
-#: explicit memo removes all of that (round 12, guide §2.4/§5). The
-#: mtime/size key drops the entry if the embeddings file ever changes;
-#: nothing mutates it in-session (streaming maintains separate indexes).
-_IVF_CACHE: dict = {}
-
-
-def _emb_identity(sf_dir: str):
-    """Embeddings dataset identity for memo keys: (abspath, mtime_ns,
-    size) for a single file, or a stat fingerprint of every data file
-    for a directory dataset (the per-file walk
-    memo_read_parquet_snapshot uses — a top-level stat alone cannot see
-    an in-place part-file rewrite, round-12 advice)."""
+def _emb_memo(spark: SparkSession, sf_dir: str, name: str, params, build):
+    """``build()`` memoized per (session, corpus, params) on the
+    embeddings dataset identity — the per-file walk for a directory
+    corpus, since a top-level stat cannot see an in-place part-file
+    rewrite (round-12 advice)."""
     import os
 
-    from tigerbeetle_cdc_nats_spark.session import table_path
-
     p = table_path(sf_dir, "embeddings")
-    st = os.stat(p)
-    if os.path.isfile(p):
-        return (os.path.abspath(p), st.st_mtime_ns, st.st_size)
-    fp = []
-    for root, _dirs, files in os.walk(p):
-        for f in files:
-            fst = os.stat(os.path.join(root, f))
-            fp.append((os.path.relpath(os.path.join(root, f), p),
-                       fst.st_mtime_ns, fst.st_size))
-    return (os.path.abspath(p), hash(tuple(sorted(fp))))
-
-
-def _memo_swap(cache: dict, key: tuple):
-    """Memo lookup with stale-entry release. Keys are
-    (app_id, path, fingerprint, *params): on a miss, pop and unpersist
-    every entry for the same (app_id, path) whose FINGERPRINT differs —
-    a changed embeddings file must not leave superseded materializations
-    pinning executor storage for the session lifetime (round-12 advice
-    on _IVF_CACHE). Same-fingerprint entries with other params (e.g. a
-    different plane count) stay valid. Returns the hit or None."""
-    hit = cache.get(key)
-    if hit is not None:
-        return hit
-    app_path, fp = key[:2], key[2]
-    for k in [k for k in cache if k[:2] == app_path and k[2] != fp]:
-        stale = cache.pop(k)
-        for df in (stale if isinstance(stale, (tuple, list)) else (stale,)):
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # plain value or stopped session: nothing to release
-    return None
-
-
-#: Session memo of the SRP-signed corpus (vec_id, embedding, bucket,
-#: norm) + its bucket-population census, keyed on (application id,
-#: embeddings identity, n_planes, dim). FIVE query families built and
-#: persisted their own copy of this exact frame per call (ann_lsh x3
-#: consumers, multiprobe, bucket stats, the adaptive and skew-safe pair
-#: generators x7 consumers) — same data, different column aliases, so
-#: CacheManager's byte-equality reuse could not even dedup the storage.
-#: One memo = one signature pass, one persisted copy, and the skew-safe
-#: census (a blocking .first() job per consumer) paid once. Same
-#: key/invalidation discipline as _IVF_CACHE.
-_SIGNED_CACHE: dict = {}
+    return memo(memo_scope(spark), name, (os.path.abspath(p), params),
+                dataset_identity(p), build)
 
 
 def signed_corpus(spark: SparkSession, sf_dir: str,
                   n_planes: int | None = None) -> DataFrame:
-    """The persisted signed corpus for ``hyperplanes(n_planes, dim)``
-    geometry (default: the adaptive resolution every registered
-    consumer uses — max(pinned 8, planes_for_corpus(n, 64)))."""
+    """The persisted SRP-signed corpus (vec_id, embedding, bucket, norm)
+    for ``hyperplanes(n_planes, dim)`` geometry (default: the adaptive
+    resolution every registered consumer uses — max(pinned 8,
+    planes_for_corpus(n, 64))).
+
+    Session-memoized: FIVE query families built and persisted their own
+    copy of this exact frame per call (ann_lsh x3 consumers, multiprobe,
+    bucket stats, the adaptive and skew-safe pair generators x7
+    consumers) — same data, different column aliases, so CacheManager's
+    byte-equality reuse could not even dedup the storage. One memo = one
+    signature pass and one persisted copy."""
     return _signed_corpus_entry(spark, sf_dir, n_planes)[0]
 
 
@@ -1093,13 +1031,17 @@ def signed_corpus_census(spark: SparkSession, sf_dir: str,
     trigger). The census job runs once per (session, corpus, geometry)
     instead of once per consumer; the tuple feeds
     ``near_dup_pairs_skewsafe(census=...)`` directly."""
-    entry = _signed_corpus_entry(spark, sf_dir, n_planes)
-    if entry[2] is None:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        row = entry[1].agg(F.max("_pop").alias("m")).first()
-        entry[2] = int((row or {"m": 0})["m"] or 0)
-    return entry[0], entry[1], entry[2], entry[3]
+    b, pop, n_planes = _signed_corpus_entry(spark, sf_dir, n_planes)
+
+    def census() -> int:
+        row = pop.agg(F.max("_pop").alias("m")).first()
+        return int((row or {"m": 0})["m"] or 0)
+
+    max_pop = _emb_memo(spark, sf_dir, "signed_census",
+                        (n_planes, _dim(sf_dir)), census)
+    return b, pop, max_pop, n_planes
 
 
 def _signed_ann_side(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,6 +1056,8 @@ def _signed_ann_side(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _signed_corpus_entry(spark: SparkSession, sf_dir: str,
                          n_planes: int | None):
+    """(b, pop, n_planes): the memoized signed corpus and its persisted
+    bucket-population table."""
     from pyspark import StorageLevel
     from pyspark.sql import functions as F
 
@@ -1123,43 +1067,45 @@ def _signed_corpus_entry(spark: SparkSession, sf_dir: str,
         n_planes = max(len(PLANES),
                        sim.planes_for_corpus(_corpus_n(emb, sf_dir),
                                              target_bucket=64))
-    ident = _emb_identity(sf_dir)
-    key = (spark.sparkContext.applicationId, ident[0], ident[1:],
-           n_planes, dim)
-    hit = _memo_swap(_SIGNED_CACHE, key)
-    if hit is not None:
-        return hit
-    planes = (_planes(sf_dir) if n_planes == len(PLANES)
-              else sim.hyperplanes(n_planes, dim))
-    b = sim.signature_cols(emb.select("vec_id", "embedding"), [planes],
-                           "embedding", dim, bucket_names=["bucket"],
-                           norm_name="norm").persist(
-        StorageLevel.MEMORY_AND_DISK)
-    pop = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("_pop")).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    entry = _SIGNED_CACHE[key] = [b, pop, None, n_planes]
-    return entry
+
+    def build():
+        planes = (_planes(sf_dir) if n_planes == len(PLANES)
+                  else sim.hyperplanes(n_planes, dim))
+        b = sim.signature_cols(emb.select("vec_id", "embedding"), [planes],
+                               "embedding", dim, bucket_names=["bucket"],
+                               norm_name="norm").persist(
+            StorageLevel.MEMORY_AND_DISK)
+        pop = b.groupBy("bucket").agg(
+            F.count(F.lit(1)).alias("_pop")).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        return b, pop
+
+    b, pop = _emb_memo(spark, sf_dir, "signed_corpus", (n_planes, dim),
+                       build)
+    return b, pop, n_planes
 
 
 def ivf_assigned(spark: SparkSession,
                  sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(centv, assigned) for the corpus — persisted, session-memoized.
-    Keyed on the full dataset identity (per-file fingerprint for
-    directory corpora) with stale-entry unpersist on key change
-    (round-12 advice items #1/#2)."""
+
+    centroid_vectors + the full-corpus ivf_assign pass are byte-identical
+    plans across the 8 IVF-family consumers, but each query used to
+    re-pay ivf_assign's construction-time centroid collect (a blocking
+    Spark job) and its own persist round trips (round 12, guide
+    §2.4/§5). The build materializes both, so the first consumer reads
+    one materialization."""
     from pyspark import StorageLevel
 
-    ident = _emb_identity(sf_dir)
-    key = (spark.sparkContext.applicationId, ident[0], ident[1:])
-    hit = _memo_swap(_IVF_CACHE, key)
-    if hit is not None:
-        return hit[0], hit[1]
-    emb = load_table(spark, sf_dir, "embeddings")
-    centv = centroid_vectors(emb).persist(StorageLevel.MEMORY_AND_DISK)
-    assigned = ivf_assign(emb, centv, dim=_dim(sf_dir)).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    _IVF_CACHE[key] = [centv, assigned, None]
-    return centv, assigned
+    def build():
+        emb = load_table(spark, sf_dir, "embeddings")
+        centv = centroid_vectors(emb).persist(StorageLevel.MEMORY_AND_DISK)
+        assigned = ivf_assign(emb, centv, dim=_dim(sf_dir)).persist(
+            StorageLevel.MEMORY_AND_DISK)
+        assigned.count()
+        return centv, assigned
+
+    return _emb_memo(spark, sf_dir, "ivf_assigned", (), build)
 
 
 def ivf_centroid_rows(spark: SparkSession, sf_dir: str) -> list:
@@ -1171,14 +1117,11 @@ def ivf_centroid_rows(spark: SparkSession, sf_dir: str) -> list:
         _bounded_collect,
     )
 
-    centv, _assigned = ivf_assigned(spark, sf_dir)
-    ident = _emb_identity(sf_dir)
-    entry = _IVF_CACHE[
-        (spark.sparkContext.applicationId, ident[0], ident[1:])]
-    if entry[2] is None:
-        entry[2] = _bounded_collect(centv.select("cell", "c_arr"),
-                                    "ivf_assign centroids")
-    return entry[2]
+    return _emb_memo(
+        spark, sf_dir, "ivf_centroid_rows", (),
+        lambda: _bounded_collect(
+            ivf_assigned(spark, sf_dir)[0].select("cell", "c_arr"),
+            "ivf_assign centroids"))
 
 
 def ivf_assign_expr(emb: DataFrame, centv: DataFrame,
@@ -3416,7 +3359,7 @@ def q_ivf_ann_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception as exc:
         # read-only scratch fallback: identical result in-session.
         # Env errors only — a corrupt index must raise (round-11 advice).
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         _log.warning("ivf indexed: stored index unavailable (%s); "
                      "serving the computed path", exc)
@@ -3491,7 +3434,7 @@ def q_ann_multiprobe_indexed(spark: SparkSession,
     except Exception as exc:
         # read-only scratch fallback: identical result in-session.
         # Env errors only — a corrupt index must raise (round-11 advice).
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         _log.warning("multiprobe indexed: stored index unavailable "
                      "(%s); serving the computed path", exc)
@@ -3618,7 +3561,7 @@ def q_embedding_delta_verdict(spark: SparkSession,
         VERDICT_SERVED["embedding_delta_verdict"] = "stored"
         return df
     except Exception as exc:
-        if not _expected_index_env_error(exc):
+        if not expected_index_env_error(exc):
             raise
         VERDICT_SERVED["embedding_delta_verdict"] = "computed"
         _log.warning("embedding_delta_verdict: stored-index path "

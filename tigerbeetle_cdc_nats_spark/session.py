@@ -1,15 +1,24 @@
-"""SparkSession construction and testdata loading.
+"""SparkSession construction, testdata loading, and the session memo.
 
 Scale notes: every knob here is chosen for the 100 TB case and merely
 *parameterized* for local runs — shuffle partitions track core count locally
 but should be ~2-3x total cluster cores in production; AQE handles runtime
 coalescing and skew joins so the static number only needs to be an upper
 bound.
+
+Memo: ``memo(scope, name, params, identity, build)`` is the one way the
+package reuses a result across the queries of a session, and
+``dataset_identity`` is the one notion of "same data" it keys on — the
+value is served while the identity is unchanged and rebuilt (stale
+storage unpersisted first) when it moves, like a checkpointed cursor
+that advances only when the data does.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import time
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -148,91 +157,138 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-#: Session-scoped memo of ANALYZED parquet scans, keyed on
-#: (abspath, mtime_ns, size). Every `spark.read.parquet` call re-creates
-#: the file index and re-reads the footer schema — measured 0.10-0.26 s
-#: of pure driver time per call on this host, several calls per query
-#: (guide §6: file-listing/metadata work is driver-side, single-process,
-#: and cacheable; Spark only caches it for catalog tables). The memo
-#: returns the same immutable DataFrame (a logical plan — NO data is
-#: cached or persisted; every action still scans parquet), and the
-#: mtime/size key drops entries whenever the file changes. WeakKey on
-#: the session so stopped sessions don't pin JVM references. Disable
-#: with SPARK_GRAFT_NO_SCAN_MEMO=1.
-_SCAN_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
-    weakref.WeakKeyDictionary())
+#: The session memo store — the ONE memo mechanism of the package:
+#: (scope, name, params) -> _Slot. Every memoized value (analyzed parquet
+#: scans, footer probes, the persisted signed corpus / IVF assignment /
+#: candidate pairs / clusters) lives here, keyed on its DATA IDENTITY
+#: (``dataset_identity``), so a rewritten, appended or compacted dataset
+#: changes the key by itself and no caller has to invalidate anything.
+_MEMO: dict = {}
+#: Streaming foreachBatch threads read stored indexes through the memo
+#: while batch queries run; builds nest (a pairs build loads a scan).
+_MEMO_LOCK = threading.RLock()
 
 
-def memo_read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` with the analyzed-scan memo above."""
-    if os.environ.get("SPARK_GRAFT_NO_SCAN_MEMO"):
-        return spark.read.parquet(path)
+class _Slot:
+    """One memo slot: the value, the identity it was built from, and
+    its build record (builds, cumulative build seconds, hits)."""
+
+    __slots__ = ("identity", "value", "builds", "build_s", "hits")
+
+    def __init__(self) -> None:
+        self.identity = self.value = None
+        self.builds = self.hits = 0
+        self.build_s = 0.0
+
+
+def dataset_identity(path: str, marker: str | None = None):
+    """Data identity of a dataset, or None when it can't be stat-ed
+    locally (missing path, remote FS) — a None identity is never
+    memoized.
+
+    A single file is ``(abspath, mtime_ns, size)``. A directory is
+    ``(abspath, hash of the sorted per-file (relpath, mtime_ns, size))``:
+    a top-level stat cannot see a part file appended into a nested
+    ``band=/shard=`` directory or rewritten in place (a corrupted part
+    file must fall out of the memo so the next action re-reads, and
+    raises on, the real bytes). The walk is a local stat pass, ~1 ms for
+    a few hundred part files. ``marker`` (a stored index's metadata
+    sidecar, rewritten last by every build/append/compaction) adds its
+    stat; a missing marker (pre-metadata layout) means no identity."""
     try:
         st = os.stat(path)
+        if os.path.isfile(path):
+            ident: tuple = (os.path.abspath(path), st.st_mtime_ns,
+                            st.st_size)
+        else:
+            files = []
+            for root, _dirs, names in os.walk(path):
+                for f in names:
+                    fp = os.path.join(root, f)
+                    fst = os.stat(fp)
+                    files.append((os.path.relpath(fp, path),
+                                  fst.st_mtime_ns, fst.st_size))
+            ident = (os.path.abspath(path), hash(tuple(sorted(files))))
+        if marker is not None:
+            mst = os.stat(marker)
+            ident += (mst.st_mtime_ns, mst.st_size)
+        return ident
     except OSError:
-        return spark.read.parquet(path)
-    if not os.path.isfile(path):
-        # Directory datasets (stored indexes) are mutated IN PLACE by
-        # appends into the live snapshot — a top-level mtime key cannot
-        # see a new file landing in a nested band=/shard= partition dir,
-        # so only single-FILE datasets (the testdata tables) are safe to
-        # key this way.
-        return spark.read.parquet(path)
-    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
-    try:
-        per = _SCAN_MEMO.setdefault(spark, {})
-    except TypeError:  # non-weakref-able session stand-in (tests/mocks)
-        return spark.read.parquet(path)
-    df = per.get(key)
-    if df is None:
-        df = per[key] = spark.read.parquet(path)
-    return df
+        return None
 
 
-def memo_read_parquet_snapshot(spark: SparkSession, data_dir: str,
-                               marker_path: str) -> DataFrame:
-    """Memoized ``spark.read.parquet(data_dir)`` for a stored-index
-    SNAPSHOT directory, keyed on the snapshot's metadata marker file.
+def memo_scope(spark: SparkSession) -> str:
+    """Scope of Spark-backed memo values: the application id."""
+    return spark.sparkContext.applicationId
 
-    Valid because every mutation of these indexes — build, append into
-    the live snapshot, compaction flip — rewrites its marker
-    (``_index_meta.json`` / ``_skew_meta.json`` / ``_store_meta.json``)
-    as its last step, so (marker mtime_ns, size) changes whenever the
-    directory's contents do. The key ALSO folds in a stat fingerprint of
-    every data file under the snapshot (sorted relpath/mtime_ns/size,
-    hashed): an out-of-band rewrite that does NOT go through the
-    build/append/compaction protocol — e.g. a corrupted part file —
-    must fall out of the memo so the next action re-reads (and raises
-    on) the real bytes instead of serving blocks the first action
-    cached (pinned by test_corrupt_text_index_raises_not_silent_
-    fallback; the walk is a local-FS stat pass, ~1 ms for a few hundred
-    part files, vs the 0.1-0.26 s JVM re-analyze it replaces). A
-    missing marker (legacy pre-metadata layout, or an index whose
-    appends don't refresh one — IVF) gets a direct uncached read. Same
-    memo store and off-switch as memo_read_parquet."""
-    if os.environ.get("SPARK_GRAFT_NO_SCAN_MEMO"):
-        return spark.read.parquet(data_dir)
-    try:
-        st = os.stat(marker_path)
-        fp = []
-        for root, _dirs, files in os.walk(data_dir):
-            for f in files:
-                fst = os.stat(os.path.join(root, f))
-                fp.append((os.path.relpath(os.path.join(root, f), data_dir),
-                           fst.st_mtime_ns, fst.st_size))
-        files_key = hash(tuple(sorted(fp)))
-    except OSError:
-        return spark.read.parquet(data_dir)
-    key = (os.path.abspath(data_dir), os.path.abspath(marker_path),
-           st.st_mtime_ns, st.st_size, files_key)
-    try:
-        per = _SCAN_MEMO.setdefault(spark, {})
-    except TypeError:
-        return spark.read.parquet(data_dir)
-    df = per.get(key)
-    if df is None:
-        df = per[key] = spark.read.parquet(data_dir)
-    return df
+
+def _unpersist(value) -> None:
+    for df in value if isinstance(value, (tuple, list)) else (value,):
+        if isinstance(df, DataFrame):
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # stopped session: nothing to release
+
+
+def memo(scope, name: str, params, identity, build):
+    """``build()``'s value, memoized under (scope, name, params) while
+    ``identity`` is unchanged.
+
+    ``scope`` is ``memo_scope(spark)`` for Spark-backed values and None
+    for driver-side metadata. A process runs one SparkContext at a time,
+    so entries of any other application id are dead and get dropped. On
+    an identity change every DataFrame in the old value is unpersisted
+    BEFORE the rebuild: CacheManager's plan matching on an unchanged
+    path would otherwise hand the rebuilt frame the stale blocks. Each
+    slot records its builds, build seconds and hits (``memo_record``).
+    A None identity (unprobeable data) builds without memoizing."""
+    if identity is None:
+        return build()
+    with _MEMO_LOCK:
+        if scope is not None:
+            for k in [k for k in _MEMO if k[0] not in (None, scope)]:
+                del _MEMO[k]
+        key = (scope, name, params)
+        slot = _MEMO.get(key)
+        if slot is None:
+            slot = _MEMO[key] = _Slot()
+        elif slot.identity == identity:
+            slot.hits += 1
+            return slot.value
+        else:
+            _unpersist(slot.value)
+            slot.identity = slot.value = None
+        t0 = time.perf_counter()
+        value = build()
+        slot.build_s += time.perf_counter() - t0
+        slot.builds += 1
+        slot.identity, slot.value = identity, value
+        return value
+
+
+def memo_record(scope, name: str) -> tuple[int, float, int]:
+    """(builds, build seconds, hits) summed over ``name``'s slots in
+    ``scope``."""
+    with _MEMO_LOCK:
+        slots = [s for k, s in _MEMO.items() if k[:2] == (scope, name)]
+    return (sum(s.builds for s in slots), sum(s.build_s for s in slots),
+            sum(s.hits for s in slots))
+
+
+def memo_read_parquet(spark: SparkSession, path: str,
+                      marker: str | None = None) -> DataFrame:
+    """``spark.read.parquet(path)``, memoized on the dataset identity.
+
+    Every read re-creates the file index and re-reads the footer schema
+    — 0.10-0.26 s of pure driver time per call on a 4-core host, several
+    calls per query; Spark only caches that for catalog tables. The memo
+    holds the analyzed DataFrame (a logical plan: nothing is cached or
+    persisted, every action still scans parquet). ``marker`` is a
+    stored-index snapshot's metadata sidecar (see dataset_identity)."""
+    return memo(memo_scope(spark), "scan", os.path.abspath(path),
+                dataset_identity(path, marker),
+                lambda: spark.read.parquet(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -258,10 +258,7 @@ def append_ann_index(new_vectors: DataFrame, path: str,
 def read_ann_index(spark: SparkSession, path: str) -> DataFrame:
     import os
 
-    from tigerbeetle_cdc_nats_spark.session import (
-        configure,
-        memo_read_parquet_snapshot,
-    )
+    from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
     snap = iv.current_dir(path)
@@ -269,8 +266,7 @@ def read_ann_index(spark: SparkSession, path: str) -> DataFrame:
     # compact_ann_index each finish by rewriting it, so the memoized
     # listing is invalidated on every mutation; a pre-sidecar index
     # falls through to a direct read
-    return memo_read_parquet_snapshot(spark, snap,
-                                      os.path.join(snap, _SKEW_META))
+    return memo_read_parquet(spark, snap, os.path.join(snap, _SKEW_META))
 
 
 def probe_buckets(index: DataFrame, buckets: list[int]) -> DataFrame:

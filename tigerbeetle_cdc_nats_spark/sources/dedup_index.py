@@ -134,17 +134,13 @@ def append_minhash_index(delta_docs: DataFrame, path: str) -> None:
 
 
 def read_minhash_index(spark: SparkSession, path: str) -> DataFrame:
-    from tigerbeetle_cdc_nats_spark.session import (
-        configure,
-        memo_read_parquet_snapshot,
-    )
+    from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
     snap = iv.current_dir(path)
     # keyed on the meta sidecar: every build/append/compaction rewrites
     # it last, so the memo can never serve a stale file listing
-    return memo_read_parquet_snapshot(spark, snap,
-                                      os.path.join(snap, _META))
+    return memo_read_parquet(spark, snap, os.path.join(snap, _META))
 
 
 def read_minhash_snapshot(spark: SparkSession,
@@ -159,7 +155,7 @@ def read_minhash_snapshot(spark: SparkSession,
     snapshot once pins data and meta to the same immutable version
     directory (versioned snapshots are never mutated in place, so the
     pair stays coherent even if a flip lands mid-scan)."""
-    from tigerbeetle_cdc_nats_spark.session import configure
+    from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
     snap = iv.current_dir(path)
@@ -168,10 +164,7 @@ def read_minhash_snapshot(spark: SparkSession,
             meta = json.load(fh)
     except (OSError, ValueError):
         meta = {}
-    from tigerbeetle_cdc_nats_spark.session import memo_read_parquet_snapshot
-
-    return (memo_read_parquet_snapshot(spark, snap,
-                                       os.path.join(snap, _META)), meta)
+    return memo_read_parquet(spark, snap, os.path.join(snap, _META)), meta
 
 
 def minhash_pairs_from_index(index: DataFrame) -> DataFrame:
@@ -249,15 +242,11 @@ def append_winnow_index(delta_docs: DataFrame, path: str) -> None:
 
 
 def read_winnow_index(spark: SparkSession, path: str) -> DataFrame:
-    from tigerbeetle_cdc_nats_spark.session import (
-        configure,
-        memo_read_parquet_snapshot,
-    )
+    from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
     snap = iv.current_dir(path)
-    return memo_read_parquet_snapshot(spark, snap,
-                                      os.path.join(snap, _META))
+    return memo_read_parquet(spark, snap, os.path.join(snap, _META))
 
 
 def winnow_candidates_from_index(index: DataFrame) -> DataFrame:
@@ -344,17 +333,13 @@ def compact_minhash_index(spark: SparkSession, path: str) -> None:
     the row identity (doc_id, band, bucket) — sig is doc-determined,
     shard is bucket-determined — rewritten under the SAME shard modulus,
     so probes keep pruning correctly. O(index) once, amortized against
-    every read after it; the session pairs memo is invalidated so
-    same-session consumers re-read the compacted files."""
-    from tigerbeetle_cdc_nats_spark.queries_dedup import (
-        invalidate_pairs_cache,
-    )
-
+    every read after it. The flip to a new snapshot moves the identity
+    the session pairs memo keys on, so same-session consumers re-read
+    the compacted files."""
     rows = read_minhash_index(spark, path).select(
         "doc_id", "sig", "band", "bucket", "shard"
     ).dropDuplicates(["doc_id", "band", "bucket"])
     _swap_in(spark, path, rows, ["band", "shard"])
-    invalidate_pairs_cache()
 
 
 def compact_winnow_index(spark: SparkSession, path: str) -> None:

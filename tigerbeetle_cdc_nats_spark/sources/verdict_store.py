@@ -106,14 +106,14 @@ def read_corpus_verdict(spark: SparkSession, path: str) -> DataFrame:
     over smaller-id state that replay cannot change), so a doc_id-keyed
     max() collapse restores exactly the one true row per doc without a
     window or sort."""
-    from tigerbeetle_cdc_nats_spark.session import memo_read_parquet_snapshot
+    from tigerbeetle_cdc_nats_spark.session import memo_read_parquet
 
     snap = iv.current_dir(path)
     # keyed on the store meta: every build/append/compaction rewrites it
     # after the verdict/hash rows land, so the memo never serves a stale
     # listing
-    rows = memo_read_parquet_snapshot(spark, os.path.join(snap, "verdict"),
-                                      os.path.join(snap, _META))
+    rows = memo_read_parquet(spark, os.path.join(snap, "verdict"),
+                             os.path.join(snap, _META))
     return (rows.groupBy("doc_id")
             .agg(F.max("rep_id").alias("rep_id"),
                  F.max("is_kept").alias("is_kept"),
@@ -126,12 +126,12 @@ def hash_reps_for(spark: SparkSession, path: str,
     index to the probe's shards (bounded <= n_shards driver-side set),
     then broadcast-semi-restrict to the probed h values and min-fold
     across appends."""
-    from tigerbeetle_cdc_nats_spark.session import memo_read_parquet_snapshot
+    from tigerbeetle_cdc_nats_spark.session import memo_read_parquet
 
     n_shards = int(read_store_meta(path).get("n_shards") or N_SHARDS)
     snap = iv.current_dir(path)
-    idx = memo_read_parquet_snapshot(spark, os.path.join(snap, "hashes"),
-                                     os.path.join(snap, _META))
+    idx = memo_read_parquet(spark, os.path.join(snap, "hashes"),
+                            os.path.join(snap, _META))
     shards = sorted({
         r["s"] for r in probe_hashes.select(
             _hash_shard(F.col("h"), n_shards).alias("s"))

@@ -237,13 +237,6 @@ def maintain_minhash_index(docs: DataFrame, index_path: str, *,
                 # _SUCCESS marker so batch readers trust the location
                 open(os.path.join(index_path, "_SUCCESS"), "a").close()
                 replayed = _note_batch(index_path, batch_id)
-            # same-session batch consumers memoize the served pairs
-            # table; a grown index must invalidate that snapshot or
-            # their dedup verdicts freeze at the pre-append corpus
-            from tigerbeetle_cdc_nats_spark.queries_dedup import (
-                invalidate_pairs_cache,
-            )
-            invalidate_pairs_cache()
             if replayed or (compact_every and batch_id > 0
                             and batch_id % compact_every == 0):
                 di.compact_minhash_index(batch_df.sparkSession, index_path)
@@ -554,11 +547,6 @@ def maintain_corpus_verdict(docs: DataFrame, store_path: str, *,
                 di.write_minhash_index(docs_b, minhash_path)
                 open(os.path.join(minhash_path, "_SUCCESS"), "a").close()
                 mh_replay = _note_batch(minhash_path, batch_id)
-            from tigerbeetle_cdc_nats_spark.queries_dedup import (
-                invalidate_pairs_cache,
-            )
-
-            invalidate_pairs_cache()
             # (2) vector index (flat near-dup layout, caller geometry)
             batch_vecs = None
             an_replay = False
