@@ -147,6 +147,7 @@ def test_corrupt_index_raises_not_silent_fallback(spark, tmp_path,
     import glob
     import os
 
+    from tigerbeetle_cdc_nats_spark import queries_dedup as qd
     from tigerbeetle_cdc_nats_spark import queries_similarity as qsim
     from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
@@ -157,7 +158,7 @@ def test_corrupt_index_raises_not_silent_fallback(spark, tmp_path,
         os.path.join(sf_dir, "embeddings.parquet"))
     q = all_queries()["embedding_dedup_verdict"].fn
     assert q(spark, sf_dir).count() == 120  # builds + serves the index
-    assert qsim.VERDICT_SERVED["embedding_dedup_verdict"] == "stored"
+    assert qd.SERVED["embedding_dedup_verdict"] == "stored"
 
     # corrupt every data file in the live snapshot; sidecars stay valid
     live = iv.current_dir(stored_index_dir("annlsh", sf_dir,
@@ -178,4 +179,4 @@ def test_corrupt_index_raises_not_silent_fallback(spark, tmp_path,
 
     monkeypatch.setattr(qsim, "ensure_near_dup_index", _unwritable)
     assert q(spark, sf_dir).count() == 120
-    assert qsim.VERDICT_SERVED["embedding_dedup_verdict"] == "computed"
+    assert qd.SERVED["embedding_dedup_verdict"] == "computed"

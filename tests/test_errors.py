@@ -56,3 +56,33 @@ def test_bare_os_string_without_class_context_is_env():
     # last-resort string match
     assert expected_index_env_error(_Fake("Read-only file system"))
     assert not expected_index_env_error(_Fake("some other failure"))
+
+
+def test_serve_stored_degrades_only_on_env_errors():
+    # the one caller of the classifier: an environment error degrades,
+    # once and visibly; anything else propagates without a recompute
+    import pytest
+
+    from tigerbeetle_cdc_nats_spark import queries_dedup as qd
+
+    calls = []
+
+    def computed():
+        calls.append(1)
+        return "computed rows"
+
+    def unwritable():
+        raise OSError("Read-only file system")
+
+    assert qd.serve_stored("t_env", unwritable, computed) == "computed rows"
+    assert calls == [1] and qd.SERVED["t_env"] == "computed"
+    assert qd.serve_stored("t_env", lambda: "stored rows",
+                           computed) == "stored rows"
+    assert calls == [1] and qd.SERVED["t_env"] == "stored"
+
+    def corrupt():
+        raise RuntimeError("corrupt snapshot")
+
+    with pytest.raises(RuntimeError, match="corrupt snapshot"):
+        qd.serve_stored("t_bug", corrupt, computed)
+    assert calls == [1] and "t_bug" not in qd.SERVED

@@ -177,7 +177,6 @@ def test_corrupt_text_index_raises_not_silent_fallback(spark, tmp_path,
     import pytest
 
     from tigerbeetle_cdc_nats_spark import queries_dedup as qd
-    from tigerbeetle_cdc_nats_spark import queries_similarity as qsim
     from tigerbeetle_cdc_nats_spark.registry import all_queries
     from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
@@ -187,7 +186,7 @@ def test_corrupt_text_index_raises_not_silent_fallback(spark, tmp_path,
         os.path.join(sf_dir, "documents.parquet"))
     q = all_queries()["text_dedup_verdict"].fn
     assert q(spark, sf_dir).count() == 100  # builds + serves the index
-    assert qsim.VERDICT_SERVED["text_dedup_verdict"] == "stored"
+    assert qd.SERVED["text_dedup_verdict"] == "stored"
 
     live = iv.current_dir(qd.stored_index_dir("minhash", sf_dir))
     parts = glob.glob(os.path.join(live, "**", "*.parquet"),
@@ -206,4 +205,4 @@ def test_corrupt_text_index_raises_not_silent_fallback(spark, tmp_path,
 
     monkeypatch.setattr(qd, "stored_index_dir", _unwritable)
     assert q(spark, sf_dir).count() == 100
-    assert qsim.VERDICT_SERVED["text_dedup_verdict"] == "computed"
+    assert qd.SERVED["text_dedup_verdict"] == "computed"

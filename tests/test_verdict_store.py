@@ -177,7 +177,7 @@ def test_registered_indexed_verdict_equals_composed(spark, tmp_path):
     """corpus_verdict_indexed (batch build of the store) == the
     registered corpus_dedup_verdict, and a second call serves the
     stored artifact without rebuilding."""
-    from tigerbeetle_cdc_nats_spark import queries_similarity as qsim
+    from tigerbeetle_cdc_nats_spark import queries_dedup as qd
     from tigerbeetle_cdc_nats_spark.registry import all_queries
 
     sf = "/root/testdata/sf0.001"
@@ -185,4 +185,4 @@ def test_registered_indexed_verdict_equals_composed(spark, tmp_path):
     want = _rows(qs["corpus_dedup_verdict"].fn(spark, sf))
     got = _rows(qs["corpus_verdict_indexed"].fn(spark, sf))
     assert got == want
-    assert qsim.VERDICT_SERVED["corpus_verdict_indexed"] == "stored"
+    assert qd.SERVED["corpus_verdict_indexed"] == "stored"

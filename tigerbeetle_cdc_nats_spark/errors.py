@@ -1,8 +1,10 @@
 """Error classification for stored-index fallback paths.
 
-Every stored-index serving path (text/embedding verdicts, ANN probes,
-banded-pair serving) has an in-session computed fallback for the one
-deployment condition that legitimately produces it: an UNUSABLE INDEX
+``queries_dedup.serve_stored`` is the one caller of the classifier:
+every stored-index serving path (text/embedding verdicts, ANN probes,
+banded-pair serving, the index prebuild) goes through it, and it
+degrades to the in-session computed path for the one deployment
+condition that legitimately calls for it: an UNUSABLE INDEX
 ENVIRONMENT — unwritable/missing/full scratch filesystem, or the
 deliberate foreign-ownership refusal in ``stored_index_dir``. Anything
 else (corrupt snapshot, bad sidecar, layout regression) is a real bug

@@ -17,17 +17,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-import logging
-
-from tigerbeetle_cdc_nats_spark import errors as errmod
+from tigerbeetle_cdc_nats_spark import queries_dedup as qd
 from tigerbeetle_cdc_nats_spark.operators import dedup as dd
 from tigerbeetle_cdc_nats_spark.operators import text as tx
 from tigerbeetle_cdc_nats_spark.queries_dedup import _MINHASH_CTES
 from tigerbeetle_cdc_nats_spark.registry import register
 from tigerbeetle_cdc_nats_spark.session import load_table
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
-
-_log = logging.getLogger(__name__)
 
 #: Source partition held out as the "benchmark" set for decontamination.
 BENCHMARK_SOURCE = "src19"
@@ -1406,26 +1401,20 @@ def q_winnow_candidates_indexed(spark: SparkSession,
     """Candidate pairs from the stored winnowing fingerprint index —
     stored and fresh paths share winnow_candidates_from_fp, so results
     are byte-identical to winnow_candidates."""
-    import os
-
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
-    path = stored_index_dir("winnow", sf_dir)
-    try:
-        if not iv.index_ready(path):
-            di.write_winnow_index(docs, path)
+
+    def stored() -> DataFrame:
+        path = qd.stored_index("winnow", sf_dir,
+                               lambda p: di.write_winnow_index(docs, p))
         return di.winnow_candidates_from_index(
             di.read_winnow_index(spark, path))
-    except Exception as exc:
-        # read-only scratch fallback: identical result in-session.
-        # Env errors only — a corrupt index must raise (round-11 advice).
-        if not errmod.expected_index_env_error(exc):
-            raise
-        _log.warning("winnow indexed: stored index unavailable (%s); "
-                     "serving the computed path", exc)
-        return winnow_candidates_from_fp(winnow_fingerprints(docs))
+
+    # the computed path: an identical result in-session
+    return qd.serve_stored(
+        "winnow_candidates_indexed", stored,
+        lambda: winnow_candidates_from_fp(winnow_fingerprints(docs)))
 
 
 def winnow_candidates_from_fp(fp: DataFrame) -> DataFrame:
@@ -1960,25 +1949,18 @@ def q_winnow_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     its gram volume); the index side prunes to the probed shards before
     any join, so a daily batch costs O(|delta|), not O(corpus).
     """
-    import os
-
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
     pred = (F.col("doc_id") % 5) == 4
-    try:
-        path = stored_index_dir("winnow", sf_dir)
-        if not iv.index_ready(path):
-            di.write_winnow_index(docs, path)
+
+    def stored() -> DataFrame:
+        path = qd.stored_index("winnow", sf_dir,
+                               lambda p: di.write_winnow_index(docs, p))
         return di.probe_winnow_index(spark, path, docs.where(pred))
-    except Exception as exc:
-        # read-only scratch fallback: identical counts in-session.
-        # Env errors only — a corrupt index must raise (round-11 advice).
-        if not errmod.expected_index_env_error(exc):
-            raise
-        _log.warning("winnow probe: stored index unavailable (%s); "
-                     "serving the computed path", exc)
+
+    def computed() -> DataFrame:
+        # identical counts in-session
         fp = winnow_fingerprints(docs).persist()
         a = fp.where(pred).select("wm", F.col("doc_id").alias("doc_id"))
         b = fp.select("wm", F.col("doc_id").alias("other_id"))
@@ -1986,6 +1968,8 @@ def q_winnow_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .where(F.col("doc_id") != F.col("other_id"))
                 .groupBy("doc_id", "other_id")
                 .agg(F.count("*").alias("n_shared")))
+
+    return qd.serve_stored("winnow_probe_indexed", stored, computed)
 
 
 #: Head sizes for the vocabulary coverage curve.

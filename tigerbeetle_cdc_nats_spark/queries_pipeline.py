@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, Window
 
+from tigerbeetle_cdc_nats_spark import queries_dedup as qd
 from tigerbeetle_cdc_nats_spark.operators import text as tx
 from tigerbeetle_cdc_nats_spark.registry import register
 from tigerbeetle_cdc_nats_spark.session import load_table
@@ -245,10 +246,7 @@ def q_training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- stored composed verdict (round-12) ---------------------------------------
 
 import hashlib  # noqa: E402
-import logging  # noqa: E402
 import os  # noqa: E402
-
-_log = logging.getLogger(__name__)
 
 
 def _verdict_store_kind(sf_dir: str) -> str:
@@ -275,18 +273,16 @@ def ensure_corpus_verdict_store(spark: SparkSession, sf_dir: str) -> str:
     Streaming ingest keeps it fresh via
     streaming/corpus.maintain_corpus_verdict (delta-fold, the
     progress-record pattern of runner.go:412-423)."""
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
-    from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
     from tigerbeetle_cdc_nats_spark.sources import verdict_store as vs
 
-    path = stored_index_dir(_verdict_store_kind(sf_dir), sf_dir)
-    if not iv.index_ready(path):
+    def build(path: str) -> None:
         docs = load_table(spark, sf_dir, "documents")
         hashes = (docs.select(F.md5("text").alias("h"), "doc_id")
                   .groupBy("h").agg(F.min("doc_id").alias("rep")))
         vs.write_verdict_store(corpus_verdict(spark, sf_dir), hashes,
                                path)
-    return path
+
+    return qd.stored_index(_verdict_store_kind(sf_dir), sf_dir, build)
 
 
 @register(
@@ -322,19 +318,11 @@ def corpus_verdict_served(spark: SparkSession, sf_dir: str, *,
     (rehearsal-pinned). This is how the stats rollup and the pipeline
     composite avoid re-running all three stage verdicts per query
     (round-11 judge item #2's consumer half)."""
-    from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
-    from tigerbeetle_cdc_nats_spark.queries_similarity import VERDICT_SERVED
     from tigerbeetle_cdc_nats_spark.sources import verdict_store as vs
 
-    try:
-        path = ensure_corpus_verdict_store(spark, sf_dir)
-        out = vs.read_corpus_verdict(spark, path)
-        VERDICT_SERVED[consumer] = "stored"
-        return out.select("doc_id", "rep_id", "is_kept", "stage")
-    except Exception as exc:
-        if not expected_index_env_error(exc):
-            raise
-        VERDICT_SERVED[consumer] = "computed"
-        _log.warning("%s: stored verdict unavailable (%s); serving the "
-                     "computed path", consumer, exc)
-        return corpus_verdict(spark, sf_dir)
+    return qd.serve_stored(
+        consumer,
+        lambda: vs.read_corpus_verdict(
+            spark, ensure_corpus_verdict_store(spark, sf_dir)).select(
+            "doc_id", "rep_id", "is_kept", "stage"),
+        lambda: corpus_verdict(spark, sf_dir))

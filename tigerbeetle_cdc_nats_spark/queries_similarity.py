@@ -3,11 +3,9 @@ brute-force cosine top-k baseline + LSH-bucketed ANN scale path."""
 
 from __future__ import annotations
 
-import logging
-
 from pyspark.sql import DataFrame, SparkSession
 
-from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
+from tigerbeetle_cdc_nats_spark import queries_dedup as qd
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
 from tigerbeetle_cdc_nats_spark.registry import register
 from tigerbeetle_cdc_nats_spark.session import (
@@ -28,13 +26,6 @@ QUERY_IDS = (0, 1, 2, 3, 4)
 #: testdata regeneration can't silently turn the unrolled dots into NULLs.
 _DIM = sim.EMBEDDING_DIM
 PLANES = sim.hyperplanes(n_planes=8, dim=_DIM)
-
-_log = logging.getLogger(__name__)
-
-#: Which path served the last verdict build per query name ("stored" |
-#: "computed") — the round-10 judge asked the fallback to be VISIBLE so
-#: a regressed index can't hide behind a silently slower recompute.
-VERDICT_SERVED: dict[str, str] = {}
 
 
 def _dim(sf_dir: str) -> int:
@@ -140,58 +131,53 @@ def q_ann_lsh_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     earlier IN-filter form synchronized on a collect and re-planned a
     second job). Results are identical to ann_lsh_cosine.
     """
-    import os
-
     from pyspark.sql import Window, functions as F
 
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
 
     dim, planes = _dim(sf_dir), _planes(sf_dir)
-    path = stored_index_dir("annlsh", sf_dir, table="embeddings")
-    try:
-        if not iv.index_ready(path):
-            ai.write_ann_index(load_table(spark, sf_dir, "embeddings"),
-                               path, planes, dim=dim)
+
+    def stored() -> DataFrame:
+        path = qd.stored_index(
+            "annlsh", sf_dir, lambda p: ai.write_ann_index(
+                load_table(spark, sf_dir, "embeddings"), p, planes, dim=dim),
+            table="embeddings")
         idx = ai.read_ann_index(spark, path)
-    except Exception as exc:
-        # read-only scratch fallback: identical result from a per-session
-        # bucketing of the corpus (loses only the file-level pruning).
-        # Env errors only — a corrupt index must raise (round-11 advice).
-        if not expected_index_env_error(exc):
-            raise
-        _log.warning("ann_lsh_indexed: stored index unavailable (%s); "
-                     "serving the computed path", exc)
-        return sim.ann_lsh(load_table(spark, sf_dir, "embeddings"),
-                           QUERY_IDS, planes, k=5, dim=dim,
-                           bucketed=_signed_ann_side(spark, sf_dir)
-                           ).withColumnRenamed("rank", "knn_rank")
-    qsrc = (load_table(spark, sf_dir, "embeddings")
-            .where(F.col("vec_id").isin(list(QUERY_IDS))))
-    q = (sim.signature_cols(qsrc, [planes], "embedding", dim,
-                            bucket_names=["bucket"])
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb"),
-                 F.col("bucket").alias("q_bucket"),
-                 sim.norm_col("embedding", dim).alias("q_n")))
-    # Candidate norms come from the index's stored ``norm`` column (the
-    # writer persists the same fold precisely so probes never re-plan a
-    # dim-unrolled norm expression per candidate row); index_norm falls
-    # back to the fold only for pre-norm-era indexes.
-    c = idx.select(F.col("vec_id").alias("c_id"),
-                   F.col("embedding").alias("c_emb"),
-                   F.col("bucket").alias("c_bucket"),
-                   ai.index_norm(idx, "embedding", dim).alias("c_n"))
-    s = sim.cosine_sim_e6_prenorm("q_emb", "c_emb",
-                                  F.col("q_n"), F.col("c_n"), None)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), "c_id")
-    return (
-        c.join(F.broadcast(q), (F.col("q_bucket") == F.col("c_bucket"))
-               & (F.col("q_id") != F.col("c_id")))
-        .select("q_id", "c_id", s.alias("sim_e6"))
-        .withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("knn_rank") <= 5)
-    )
+        qsrc = (load_table(spark, sf_dir, "embeddings")
+                .where(F.col("vec_id").isin(list(QUERY_IDS))))
+        q = (sim.signature_cols(qsrc, [planes], "embedding", dim,
+                                bucket_names=["bucket"])
+             .select(F.col("vec_id").alias("q_id"),
+                     F.col("embedding").alias("q_emb"),
+                     F.col("bucket").alias("q_bucket"),
+                     sim.norm_col("embedding", dim).alias("q_n")))
+        # Candidate norms come from the index's stored ``norm`` column
+        # (the writer persists the same fold precisely so probes never
+        # re-plan a dim-unrolled norm expression per candidate row);
+        # index_norm falls back to the fold only for pre-norm-era indexes.
+        c = idx.select(F.col("vec_id").alias("c_id"),
+                       F.col("embedding").alias("c_emb"),
+                       F.col("bucket").alias("c_bucket"),
+                       ai.index_norm(idx, "embedding", dim).alias("c_n"))
+        s = sim.cosine_sim_e6_prenorm("q_emb", "c_emb",
+                                      F.col("q_n"), F.col("c_n"), None)
+        w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), "c_id")
+        return (
+            c.join(F.broadcast(q), (F.col("q_bucket") == F.col("c_bucket"))
+                   & (F.col("q_id") != F.col("c_id")))
+            .select("q_id", "c_id", s.alias("sim_e6"))
+            .withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
+            .where(F.col("knn_rank") <= 5)
+        )
+
+    # the computed path: an identical result from a per-session bucketing
+    # of the corpus (loses only the file-level pruning)
+    return qd.serve_stored(
+        "ann_lsh_indexed", stored,
+        lambda: sim.ann_lsh(load_table(spark, sf_dir, "embeddings"),
+                            QUERY_IDS, planes, k=5, dim=dim,
+                            bucketed=_signed_ann_side(spark, sf_dir)
+                            ).withColumnRenamed("rank", "knn_rank"))
 
 
 @register(
@@ -343,10 +329,8 @@ def _sweep_stale_geometry(sf_dir: str, keep: str | None) -> None:
     import os
     import shutil
 
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
-
-    root = os.path.dirname(stored_index_dir("annlsh", sf_dir,
-                                            table="embeddings"))
+    root = os.path.dirname(qd.stored_index_dir("annlsh", sf_dir,
+                                               table="embeddings"))
     want = os.path.abspath(sf_dir)
     keep_base = os.path.basename(keep) if keep else None
     try:
@@ -384,12 +368,11 @@ def ensure_near_dup_index(spark: SparkSession,
     one join task — see write_ann_index), keyed so a corpus growth that
     changes the adaptive width can never serve stale geometry (the
     stored_index_dir fingerprint also rotates on any source change)."""
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
     dim, planes = _dim(sf_dir), _planes(sf_dir)
-    path = stored_index_dir("annlsh", sf_dir, table="embeddings")
+    path = qd.stored_index_dir("annlsh", sf_dir, table="embeddings")
     meta = ai.read_skew_meta(path) if iv.index_ready(path) else None
     # no sidecar knows n yet -> one count() scan job; a build-path-only
     # cost paid once per index generation, never by warm serving (with
@@ -407,8 +390,8 @@ def ensure_near_dup_index(spark: SparkSession,
         # widening point orphans its old wide-geometry dirs
         _sweep_stale_geometry(sf_dir, keep=None)
         return path, len(planes)
-    wpath = stored_index_dir(f"annlshw{adaptive}", sf_dir,
-                             table="embeddings")
+    wpath = qd.stored_index_dir(f"annlshw{adaptive}", sf_dir,
+                                table="embeddings")
     if not iv.index_ready(wpath):
         # flat balanced layout: near-dup serving is this index's only
         # consumer and it scans ALL buckets — per-bucket directories
@@ -474,19 +457,16 @@ def q_embedding_near_dup_indexed(spark: SparkSession,
     """
     emb = load_table(spark, sf_dir, "embeddings")
     dim = _dim(sf_dir)
-    try:
+
+    def stored() -> DataFrame:
         path, n_planes = ensure_near_dup_index(spark, sf_dir)
         return near_dup_pairs_from_index(spark, path, dim,
                                          n_planes=n_planes)
-    except Exception as exc:
-        # read-only scratch: identical result from the computed path.
-        # Env errors only — a corrupt index must raise (round-11 advice).
-        if not expected_index_env_error(exc):
-            raise
-        _log.warning("near-dup indexed pairs: stored index unavailable "
-                     "(%s); serving the computed path", exc)
-    return near_dup_pairs_skewsafe(
-        emb, dim, census=signed_corpus_census(spark, sf_dir))
+
+    return qd.serve_stored(
+        "embedding_near_dup_indexed", stored,
+        lambda: near_dup_pairs_skewsafe(
+            emb, dim, census=signed_corpus_census(spark, sf_dir)))
 
 
 #: Largest hot-bucket population the per-bucket early-exit Arrow scan will
@@ -719,33 +699,26 @@ def q_embedding_dedup_verdict(spark: SparkSession,
     """
     emb = load_table(spark, sf_dir, "embeddings")
     dim = _dim(sf_dir)
-    try:
+
+    def stored() -> DataFrame:
         path, n_planes = ensure_near_dup_index(spark, sf_dir)
-        df = near_dup_verdict_from_index(spark, path, dim,
-                                         n_planes=n_planes)
-        VERDICT_SERVED["embedding_dedup_verdict"] = "stored"
-        return df
-    except Exception as exc:
-        # ONLY the expected environment errors (read-only/full/foreign-
-        # owned scratch) degrade to the computed path; a genuine index
-        # bug — corrupt snapshot, bad sidecar, layout regression — must
-        # raise, or it would be masked forever while every query
-        # silently pays the computed cost (round-10 judge item #4).
-        if not expected_index_env_error(exc):
-            raise
-        VERDICT_SERVED["embedding_dedup_verdict"] = "computed"
-        _log.warning("embedding_dedup_verdict: stored-index path "
-                     "unavailable (%s); serving the computed path", exc)
-    # NOTE the computed path is NOT always identical to the stored one:
-    # for hot corpora (cap < max_pop <= scan_cap) the index-served branch
-    # is EXACT full-bucket, while near_dup_pairs_skewsafe's residual
-    # splits have recall < 1 on within-hot-bucket pairs — an unusable
-    # scratch changes which docs are dropped there (round-10 advice).
-    # Cold corpora (every registered SF) are bit-identical either way.
-    ids = emb.select("vec_id")
-    pairs = near_dup_pairs_skewsafe(
-        emb, dim, census=signed_corpus_census(spark, sf_dir))
-    return _verdict_from_pairs(ids, pairs)
+        return near_dup_verdict_from_index(spark, path, dim,
+                                           n_planes=n_planes)
+
+    def computed() -> DataFrame:
+        # NOTE the computed path is NOT always identical to the stored
+        # one: for hot corpora (cap < max_pop <= scan_cap) the
+        # index-served branch is EXACT full-bucket, while
+        # near_dup_pairs_skewsafe's residual splits have recall < 1 on
+        # within-hot-bucket pairs — an unusable scratch changes which
+        # docs are dropped there (round-10 advice). Cold corpora (every
+        # registered SF) are bit-identical either way.
+        ids = emb.select("vec_id")
+        pairs = near_dup_pairs_skewsafe(
+            emb, dim, census=signed_corpus_census(spark, sf_dir))
+        return _verdict_from_pairs(ids, pairs)
+
+    return qd.serve_stored("embedding_dedup_verdict", stored, computed)
 
 
 @register(
@@ -3341,48 +3314,42 @@ def q_ivf_ann_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     stored (no per-probe recompute), and the query-side assignment runs
     the same Arrow argmax the writer used against the SAME stored
     centroid longs — bit-identical cells by construction."""
-    import os
-
     from pyspark.sql import Window, functions as F
 
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
 
     dim = _dim(sf_dir)
-    path = stored_index_dir("ivfcell", sf_dir, table="embeddings")
-    try:
-        if not iv.index_ready(path):
-            ai.write_ivf_index(load_table(spark, sf_dir, "embeddings"),
-                               path, dim=dim)
+
+    def stored() -> DataFrame:
+        path = qd.stored_index(
+            "ivfcell", sf_dir, lambda p: ai.write_ivf_index(
+                load_table(spark, sf_dir, "embeddings"), p, dim=dim),
+            table="embeddings")
         idx = ai.read_ivf_index(spark, path)
         centv = ai.read_ivf_centroids(spark, path)
-    except Exception as exc:
-        # read-only scratch fallback: identical result in-session.
-        # Env errors only — a corrupt index must raise (round-11 advice).
-        if not expected_index_env_error(exc):
-            raise
-        _log.warning("ivf indexed: stored index unavailable (%s); "
-                     "serving the computed path", exc)
-        return q_ivf_ann(spark, sf_dir)
-    qsrc = (load_table(spark, sf_dir, "embeddings")
-            .where(F.col("vec_id").isin(list(QUERY_IDS))))
-    q = ivf_assign(qsrc, centv, dim=dim).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"),
-        F.col("cell").alias("q_cell"), F.col("norm").alias("q_n"))
-    c = idx.select(F.col("vec_id").alias("c_id"),
-                   F.col("embedding").alias("c_emb"),
-                   F.col("cell").alias("c_cell"),
-                   F.col("norm").alias("c_n"))
-    s = sim.cosine_sim_e6_prenorm("q_emb", "c_emb",
-                                  F.col("q_n"), F.col("c_n"), dim)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), "c_id")
-    return (
-        c.join(F.broadcast(q), (F.col("q_cell") == F.col("c_cell"))
-               & (F.col("q_id") != F.col("c_id")))
-        .select("q_id", "c_id", s.alias("sim_e6"))
-        .withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("knn_rank") <= 5)
-    )
+        qsrc = (load_table(spark, sf_dir, "embeddings")
+                .where(F.col("vec_id").isin(list(QUERY_IDS))))
+        q = ivf_assign(qsrc, centv, dim=dim).select(
+            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"),
+            F.col("cell").alias("q_cell"), F.col("norm").alias("q_n"))
+        c = idx.select(F.col("vec_id").alias("c_id"),
+                       F.col("embedding").alias("c_emb"),
+                       F.col("cell").alias("c_cell"),
+                       F.col("norm").alias("c_n"))
+        s = sim.cosine_sim_e6_prenorm("q_emb", "c_emb",
+                                      F.col("q_n"), F.col("c_n"), dim)
+        w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), "c_id")
+        return (
+            c.join(F.broadcast(q), (F.col("q_cell") == F.col("c_cell"))
+                   & (F.col("q_id") != F.col("c_id")))
+            .select("q_id", "c_id", s.alias("sim_e6"))
+            .withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
+            .where(F.col("knn_rank") <= 5)
+        )
+
+    # the computed path: an identical result in-session
+    return qd.serve_stored("ivf_ann_indexed", stored,
+                           lambda: q_ivf_ann(spark, sf_dir))
 
 
 @register(
@@ -3417,55 +3384,49 @@ def q_ann_multiprobe_indexed(spark: SparkSession,
     per query with no full index scan and no driver collect. The
     query-side bucket derives via the writer's Arrow path
     (bit-identical)."""
-    import os
-
     from pyspark.sql import Window, functions as F
 
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
     from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
 
     dim, planes = _dim(sf_dir), _planes(sf_dir)
-    path = stored_index_dir("annlsh", sf_dir, table="embeddings")
-    try:
-        if not iv.index_ready(path):
-            ai.write_ann_index(load_table(spark, sf_dir, "embeddings"),
-                               path, planes, dim=dim)
+
+    def stored() -> DataFrame:
+        path = qd.stored_index(
+            "annlsh", sf_dir, lambda p: ai.write_ann_index(
+                load_table(spark, sf_dir, "embeddings"), p, planes, dim=dim),
+            table="embeddings")
         idx = ai.read_ann_index(spark, path)
-    except Exception as exc:
-        # read-only scratch fallback: identical result in-session.
-        # Env errors only — a corrupt index must raise (round-11 advice).
-        if not expected_index_env_error(exc):
-            raise
-        _log.warning("multiprobe indexed: stored index unavailable "
-                     "(%s); serving the computed path", exc)
-        return q_ann_multiprobe(spark, sf_dir)
-    qsrc = (load_table(spark, sf_dir, "embeddings")
-            .where(F.col("vec_id").isin(list(QUERY_IDS))))
-    masks = F.array(*[F.lit(m) for m in _PROBE_MASKS])
-    q = (sim.signature_cols(qsrc, [planes], "embedding", dim,
-                            bucket_names=["bucket"])
-         .select(F.col("vec_id").alias("q_id"),
-                 F.col("embedding").alias("q_emb"),
-                 sim.norm_col("embedding", dim).alias("q_n"),
-                 F.explode(F.transform(
-                     masks, lambda m: F.col("bucket").bitwiseXOR(m)))
-                 .alias("probe")))
-    # Stored-norm contract (see q_ann_lsh_indexed): candidates read the
-    # index's persisted ``norm``, never recompute the fold per row.
-    c = idx.select(F.col("vec_id").alias("c_id"),
-                   F.col("embedding").alias("c_emb"),
-                   F.col("bucket").alias("c_bucket"),
-                   ai.index_norm(idx, "embedding", dim).alias("c_n"))
-    s = sim.cosine_sim_e6_prenorm("q_emb", "c_emb",
-                                  F.col("q_n"), F.col("c_n"), dim)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), "c_id")
-    return (
-        c.join(F.broadcast(q), (F.col("probe") == F.col("c_bucket"))
-               & (F.col("q_id") != F.col("c_id")))
-        .select("q_id", "c_id", s.alias("sim_e6"))
-        .withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("knn_rank") <= 5)
-    )
+        qsrc = (load_table(spark, sf_dir, "embeddings")
+                .where(F.col("vec_id").isin(list(QUERY_IDS))))
+        masks = F.array(*[F.lit(m) for m in _PROBE_MASKS])
+        q = (sim.signature_cols(qsrc, [planes], "embedding", dim,
+                                bucket_names=["bucket"])
+             .select(F.col("vec_id").alias("q_id"),
+                     F.col("embedding").alias("q_emb"),
+                     sim.norm_col("embedding", dim).alias("q_n"),
+                     F.explode(F.transform(
+                         masks, lambda m: F.col("bucket").bitwiseXOR(m)))
+                     .alias("probe")))
+        # Stored-norm contract (see q_ann_lsh_indexed): candidates read the
+        # index's persisted ``norm``, never recompute the fold per row.
+        c = idx.select(F.col("vec_id").alias("c_id"),
+                       F.col("embedding").alias("c_emb"),
+                       F.col("bucket").alias("c_bucket"),
+                       ai.index_norm(idx, "embedding", dim).alias("c_n"))
+        s = sim.cosine_sim_e6_prenorm("q_emb", "c_emb",
+                                      F.col("q_n"), F.col("c_n"), dim)
+        w = Window.partitionBy("q_id").orderBy(F.col("sim_e6").desc(), "c_id")
+        return (
+            c.join(F.broadcast(q), (F.col("probe") == F.col("c_bucket"))
+                   & (F.col("q_id") != F.col("c_id")))
+            .select("q_id", "c_id", s.alias("sim_e6"))
+            .withColumn("knn_rank", F.row_number().over(w).cast("bigint"))
+            .where(F.col("knn_rank") <= 5)
+        )
+
+    # the computed path: an identical result in-session
+    return qd.serve_stored("ann_multiprobe_indexed", stored,
+                           lambda: q_ann_multiprobe(spark, sf_dir))
 
 
 def delta_verdict_from_index(spark: SparkSession, path: str, dim: int,
@@ -3555,24 +3516,21 @@ def q_embedding_delta_verdict(spark: SparkSession,
     emb = load_table(spark, sf_dir, "embeddings")
     dim = _dim(sf_dir)
     pred = (F.col("vec_id") % 5) == 4
-    try:
+
+    def stored() -> DataFrame:
         path, _n_planes = ensure_near_dup_index(spark, sf_dir)
-        df = delta_verdict_from_index(spark, path, dim, pred)
-        VERDICT_SERVED["embedding_delta_verdict"] = "stored"
-        return df
-    except Exception as exc:
-        if not expected_index_env_error(exc):
-            raise
-        VERDICT_SERVED["embedding_delta_verdict"] = "computed"
-        _log.warning("embedding_delta_verdict: stored-index path "
-                     "unavailable (%s); serving the computed path", exc)
-    # computed fallback: fold the skew-safe pair set restricted to the
-    # delta on the larger-id side — same hot-corpus recall caveat as the
-    # full verdict's fallback (residual splits vs exact full buckets)
-    ids = emb.where(pred).select("vec_id")
-    pairs = near_dup_pairs_skewsafe(
-        emb, dim, census=signed_corpus_census(spark, sf_dir))
-    rep = (pairs.where((F.col("vec_b") % 5) == 4)
-           .groupBy(F.col("vec_b").alias("vec_id"))
-           .agg(F.min("vec_a").alias("_rep")))
-    return _assemble_verdict(ids, rep)
+        return delta_verdict_from_index(spark, path, dim, pred)
+
+    def computed() -> DataFrame:
+        # computed fallback: fold the skew-safe pair set restricted to the
+        # delta on the larger-id side — same hot-corpus recall caveat as the
+        # full verdict's fallback (residual splits vs exact full buckets)
+        ids = emb.where(pred).select("vec_id")
+        pairs = near_dup_pairs_skewsafe(
+            emb, dim, census=signed_corpus_census(spark, sf_dir))
+        rep = (pairs.where((F.col("vec_b") % 5) == 4)
+               .groupBy(F.col("vec_b").alias("vec_id"))
+               .agg(F.min("vec_a").alias("_rep")))
+        return _assemble_verdict(ids, rep)
+
+    return qd.serve_stored("embedding_delta_verdict", stored, computed)

@@ -8,61 +8,69 @@ wall time overstates steady-state serving cost for exactly the queries
 whose design point is amortization (round-6 judge finding #3).
 
 ``ensure_indexes`` builds whatever is missing through the SAME
-build-on-first-touch code paths the queries use, so a prebuilt index and
-a query-built one are byte-identical; it returns per-kind build seconds
-(0.0 = already warm).
+build-on-first-touch code paths the queries use (queries_dedup.
+stored_index, guarded by serve_stored), so a prebuilt index and a
+query-built one are byte-identical; it returns per-kind build seconds
+(0.0 = already warm, -1.0 = unusable index environment).
 """
 
 from __future__ import annotations
 
-import os
 import time
 
 from pyspark.sql import SparkSession
 
 
 def ensure_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
-    """Build any missing stored index for ``sf_dir``; per-kind seconds."""
-    from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
+    """Build any missing stored index for ``sf_dir``; per-kind seconds
+    (-1.0 = the index environment is unusable, queries serve computed)."""
+    from tigerbeetle_cdc_nats_spark import queries_dedup as qd
     from tigerbeetle_cdc_nats_spark.queries_similarity import _dim, _planes
     from tigerbeetle_cdc_nats_spark.session import load_table
     from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
-    from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
-    def build(kind: str, table: str, write) -> float:
-        try:
-            path = stored_index_dir(kind, sf_dir, table=table)
-            if iv.index_ready(path):  # resolves versioned layouts too
-                return 0.0
+    def table(kind: str) -> str:
+        return "documents" if kind in ("minhash", "winnow") else "embeddings"
+
+    def guarded(name: str, fn):
+        # unusable scratch: queries fall back in-session, the bench then
+        # honestly times that fallback path
+        return qd.serve_stored(name, fn, lambda: -1.0)
+
+    def build(kind: str, write) -> float:
+        took = 0.0
+
+        def timed(path: str) -> None:
+            nonlocal took
             t0 = time.perf_counter()
-            write(load_table(spark, sf_dir, table), path)
-            return round(time.perf_counter() - t0, 4)
-        except Exception:
-            # unwritable scratch: queries fall back in-session, the
-            # bench then honestly times that fallback path
-            return -1.0
+            write(load_table(spark, sf_dir, table(kind)), path)
+            took = round(time.perf_counter() - t0, 4)
+
+        def stored() -> float:
+            qd.stored_index(kind, sf_dir, timed, table=table(kind))
+            return took
+
+        return guarded(f"ensure_indexes:{kind}", stored)
 
     dim, planes = _dim(sf_dir), _planes(sf_dir)
     out = {
-        "minhash": build("minhash", "documents",
+        "minhash": build("minhash",
                          lambda df, p: di.write_minhash_index(df, p)),
-        "winnow": build("winnow", "documents",
+        "winnow": build("winnow",
                         lambda df, p: di.write_winnow_index(df, p)),
-        "annlsh": build("annlsh", "embeddings",
+        "annlsh": build("annlsh",
                         lambda df, p: ai.write_ann_index(
                             df, p, planes, dim=dim)),
-        "ivfcell": build("ivfcell", "embeddings",
+        "ivfcell": build("ivfcell",
                          lambda df, p: ai.write_ivf_index(df, p, dim=dim)),
     }
-    try:
+    if out["annlsh"] >= 0:
         # a warm pre-sidecar-era annlsh index gains its skew sidecar here
         # so the near-dup serving path never recomputes the bucket census
-        ai.ensure_skew_sidecar(
-            spark, stored_index_dir("annlsh", sf_dir, table="embeddings"),
-            dim=dim)
-    except Exception:
-        pass  # unwritable scratch: serving falls back to the census job
+        guarded("ensure_skew_sidecar", lambda: ai.ensure_skew_sidecar(
+            spark, qd.stored_index_dir("annlsh", sf_dir, table="embeddings"),
+            dim=dim))
     # Warm the file-listing metadata too: spark.read.parquet on a
     # many-partition index builds its InMemoryFileIndex eagerly, and the
     # FIRST listing of a few hundred bucket/shard directories costs
@@ -73,14 +81,13 @@ def ensure_indexes(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     # reported alongside the build cost instead of landing on whichever
     # indexed query happens to run first.
     def warm(kind: str, read) -> float:
-        try:
+        def timed() -> float:
             t0 = time.perf_counter()
-            read(stored_index_dir(kind, sf_dir,
-                                  table="documents" if kind in
-                                  ("minhash", "winnow") else "embeddings"))
+            read(qd.stored_index_dir(kind, sf_dir, table=table(kind)))
             return round(time.perf_counter() - t0, 4)
-        except Exception:
-            return -1.0
+
+        # no index to list when its build found the scratch unusable
+        return -1.0 if out[kind] < 0 else guarded(f"list_warm:{kind}", timed)
 
     out["list_warm"] = {
         "minhash": warm("minhash", lambda p: di.read_minhash_index(spark, p)),
@@ -115,13 +122,14 @@ def ensure_session_memos(spark: SparkSession, sf_dir: str) -> dict[str, float]:
     scope = memo_scope(spark)
 
     def touch(fn, *names: str) -> float:
-        before = sum(memo_record(scope, n)[1] for n in names)
-        try:
+        def built() -> float:
+            before = sum(memo_record(scope, n)[1] for n in names)
             fn()
-        except Exception:
-            return -1.0
-        return round(sum(memo_record(scope, n)[1] for n in names) - before,
-                     4)
+            return round(
+                sum(memo_record(scope, n)[1] for n in names) - before, 4)
+
+        return qd.serve_stored(f"ensure_session_memos:{names[0]}", built,
+                               lambda: -1.0)
 
     signed = ("signed_corpus", "signed_census")
     return {
