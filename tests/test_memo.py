@@ -119,3 +119,102 @@ def test_dup_components_follow_index_append_and_compaction(spark, tmp_path):
     c3 = qd._dup_components(spark, sfd)
     assert c3 is not c2
     assert _clusters(c3) == got
+
+
+def _write_documents(path, docs, stamp):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = os.path.join(path, "documents.parquet")
+    pq.write_table(pa.table({
+        "doc_id": pa.array([d for d, _ in docs], pa.int64()),
+        "text": pa.array([t for _, t in docs], pa.string()),
+    }), p)
+    os.utime(p, ns=(stamp, stamp))  # distinct mtime per rewrite
+
+
+def _write_labelled_embeddings(path, n, labels, stamp):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = os.path.join(path, "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(n), pa.int64()),
+        "embedding": pa.array(
+            [[float((i * 7 + j) % 5 - 2) for j in range(16)]
+             for i in range(n)], pa.list_(pa.float32())),
+        "label": pa.array([i % labels for i in range(n)], pa.int32()),
+    }), p)
+    os.utime(p, ns=(stamp, stamp))
+
+
+def _frames(value):
+    return value if isinstance(value, tuple) else (value,)
+
+
+def _follows_rewrite(spark, get, rewrite):
+    """The memo_invalidates template for a registered memo: a hit is the
+    same object; after ``rewrite()`` the next get is a new value and the
+    old one's blocks were released. Returns the new value."""
+    v1 = get()
+    for df in _frames(v1):
+        df.count()  # materialize lazily persisted frames
+    after_first = _n_materialized(spark)
+    assert get() is v1
+    rewrite()
+    v2 = get()
+    assert v2 is not v1
+    for df in _frames(v2):
+        df.count()
+    assert not any(df.is_cached for df in _frames(v1))
+    assert _n_materialized(spark) <= after_first
+    return v2
+
+
+OTHER = "totally different words entirely distinct here"
+
+
+def test_shingle_sets_follow_a_documents_rewrite(spark, tmp_path):
+    sf = str(tmp_path)
+    _write_documents(sf, [(1, GOOD), (2, OTHER)], 1)
+    sets = _follows_rewrite(
+        spark, lambda: qd.corpus_shingle_sets(spark, sf),
+        lambda: _write_documents(sf, [(1, GOOD), (2, OTHER), (3, GOOD)], 2))
+    assert sorted(r["doc_id"] for r in sets.collect()) == [1, 2, 3]
+
+
+def test_minhash_probe_follows_a_documents_rewrite(spark, tmp_path):
+    sf = str(tmp_path)
+    # the probed delta is doc_id % 5 == 4
+    _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER)], 1)
+    assert {r["doc_id"] for r in
+            qd.corpus_minhash_probe(spark, sf).collect()} == {4}
+    probe = _follows_rewrite(
+        spark, lambda: qd.corpus_minhash_probe(spark, sf),
+        lambda: _write_documents(
+            sf, [(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2))
+    assert {r["doc_id"] for r in probe.collect()} == {4, 9}
+
+
+def test_ivf_assigned_follows_an_embeddings_rewrite(spark, tmp_path):
+    sf = str(tmp_path)
+    _write_labelled_embeddings(sf, 12, 2, 1)
+    centv, assigned = _follows_rewrite(
+        spark, lambda: qs.ivf_assigned(spark, sf),
+        lambda: _write_labelled_embeddings(sf, 20, 3, 2))
+    assert assigned.count() == 20
+    assert sorted(r["cell"] for r in centv.collect()) == [0, 1, 2]
+
+
+def test_ivf_centroid_rows_follow_an_embeddings_rewrite(spark, tmp_path):
+    sf = str(tmp_path)
+    _write_labelled_embeddings(sf, 12, 2, 1)
+    rows = qs.ivf_centroid_rows(spark, sf)
+    assert qs.ivf_centroid_rows(spark, sf) is rows
+    old = qs.ivf_assigned(spark, sf)
+    _write_labelled_embeddings(sf, 20, 3, 2)
+    fresh = qs.ivf_centroid_rows(spark, sf)
+    assert sorted(r["cell"] for r in fresh) == [0, 1, 2]
+    # the collected rows hold no blocks; the frames they came from were
+    # released
+    assert not any(df.is_cached for df in old)

@@ -187,8 +187,12 @@ def probe_minhash_index(spark: SparkSession, path: str,
     n_shards = _read_meta_shards(path)
     delta_banded = (dd.banded_buckets(dd.minhash_signatures(delta_docs))
                     .withColumn("shard",
-                                _bucket_shard(F.col("bucket"), n_shards))
-                    .persist())
+                                _bucket_shard(F.col("bucket"), n_shards)))
+    # CacheManager matches a plan by source path, not content: release
+    # the copy an earlier probe of a since-rewritten source persisted,
+    # else this probe would read its stale blocks
+    delta_banded.unpersist()
+    delta_banded = delta_banded.persist()
     # Bounded driver-side probe set: <= bands x N_SHARDS entries.
     probed = {(int(r["band"]), int(r["shard"]))
               for r in delta_banded.select("band", "shard")

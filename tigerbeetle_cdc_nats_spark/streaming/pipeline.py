@@ -8,7 +8,8 @@ Reference mapping (runner.go:49-170, 425-466):
 | cursor recovery (runner.go:388-410)         | checkpointLocation (+ override) |
 | chunked publish+checkpoint (425-466)        | foreachBatch: one write with    |
 |                                             | observed count + max ts, then   |
-|                                             | the cursor (ack-before-commit)  |
+|                                             | a driver-written cursor record  |
+|                                             | (ack-before-commit, no job)     |
 | dedupe window (runner.go:180,602)           | withWatermark + dropDuplicates  |
 | single-writer lock (runner.go:607-724)      | one active query per checkpoint |
 |                                             | dir (Spark-enforced) + lease    |
@@ -21,7 +22,7 @@ At-least-once becomes effectively-once: the sink write is idempotent per
 micro-batch (overwrite-by-batch-id), and the cursor record is committed only
 AFTER the sink write succeeds — the reference's ack-before-checkpoint
 invariant (runner.go:442-462). A crash between write and commit replays the
-batch into the same batch directory.
+batch into the same batch directory and the same one cursor record.
 
 Scale notes: no global ordering is imposed — the stream is processed
 partition-parallel and the cursor is the batch max timestamp (chunk-max
@@ -33,11 +34,15 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import socket
 import threading
 import time
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.config import CdcConfig
@@ -94,25 +99,75 @@ def transform_events(stream: DataFrame, cfg: CdcConfig) -> DataFrame:
     return out.dropDuplicates(["msg_id"])
 
 
+_PROGRESS_SCHEMA = pa.schema([("timestamp", pa.int64()),
+                              ("version", pa.string()),
+                              ("batch_id", pa.int64())])
+_RECORD_NAME = re.compile(r"part-(\d+)\.parquet")
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path``, over py4j."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _record_name(batch_id: int) -> str:
+    return f"part-{int(batch_id):020d}.parquet"
+
+
+def _progress_records(fs, jdir) -> dict:
+    """Visible progress records of a cursor dir: file name -> Path. Hidden
+    names (a ``.tmp`` left by a crash mid-commit, checksums) are skipped,
+    as Spark's parquet reader skips them."""
+    if not fs.exists(jdir):
+        return {}
+    paths = (s.getPath() for s in fs.listStatus(jdir))
+    return {p.getName(): p for p in paths
+            if p.getName().startswith("part-")
+            and p.getName().endswith(".parquet")}
+
+
 def read_progress(spark: SparkSession, cursor_dir: str) -> int | None:
-    """Stored cursor, or None when no progress record exists
-    (runner.go:388-410)."""
-    try:
-        rows = spark.read.parquet(cursor_dir).agg(
-            F.max("timestamp").alias("m")).first()
-        return rows["m"]
-    except Exception:
-        return None
+    """Stored cursor: max(timestamp) over the visible records, decoded in
+    the driver, or None when no record exists (runner.go:388-410). A
+    corrupt or unreadable record raises. Runs no Spark job."""
+    fs, jdir = _hadoop_fs(spark, cursor_dir)
+    ios = spark._jvm.org.apache.commons.io.IOUtils
+
+    def stamp(path) -> int:
+        stream = fs.open(path)
+        try:
+            data = ios.toByteArray(stream)
+        finally:
+            stream.close()
+        table = pq.read_table(pa.BufferReader(data), columns=["timestamp"])
+        return pc.max(table["timestamp"]).as_py()
+
+    return max(map(stamp, _progress_records(fs, jdir).values()),
+               default=None)
 
 
 def _write_progress(spark: SparkSession, cursor_dir: str, ts: int,
                     batch_id: int, version: str = "dev") -> None:
-    """Progress record {timestamp, version} (runner.go:20-23, 412-423),
-    appended per batch; reads take max(timestamp)."""
-    spark.createDataFrame(
-        [(int(ts), version, int(batch_id))],
-        "timestamp long, version string, batch_id long",
-    ).coalesce(1).write.mode("append").parquet(cursor_dir)
+    """Progress record {timestamp, version, batch_id} (runner.go:20-23,
+    412-423): one parquet row, encoded by pyarrow in the driver and
+    written through the Hadoop FileSystem to a hidden temp name, then
+    renamed onto ``part-<batch_id>.parquet``. A replay of the batch
+    replaces its one record. Runs no Spark job."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table([[int(ts)], [version], [int(batch_id)]],
+                            schema=_PROGRESS_SCHEMA), buf)
+    fs, jdir = _hadoop_fs(spark, cursor_dir)
+    Path, name = spark._jvm.org.apache.hadoop.fs.Path, _record_name(batch_id)
+    tmp, final = Path(jdir, f".{name}.tmp"), Path(jdir, name)
+    out = fs.create(tmp, True)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    fs.delete(final, False)  # not every FileSystem renames onto a file
+    if not fs.rename(tmp, final):
+        raise OSError(f"progress commit: cannot rename {tmp} to {final}")
 
 
 class LockLease:
@@ -267,11 +322,19 @@ def make_batch_sink(spark: SparkSession, paths: StreamPaths):
     """foreachBatch body: idempotent publish (overwrite-by-batch-id) THEN
     cursor commit — the at-least-once ordering of runner.go:442-462.
 
-    Two Spark jobs per non-empty batch: the write carries the batch's row
+    One Spark job per non-empty batch: the write carries the batch's row
     count and max ``ts`` as observed metrics (side outputs of the same
-    job), and the progress append is the second."""
+    job); the progress record is written by the driver. Each record holds
+    the running max (the batch max ``ts`` and the cursor read when the
+    sink was made), so trimming old records never lowers the cursor."""
+    retain = int(spark.conf.get("spark.sql.streaming.minBatchesToRetain"))
+    cursor = read_progress(spark, paths.cursor_dir)
+    fs, jdir = _hadoop_fs(spark, paths.cursor_dir)
+    kept = {int(m[1]) for m in map(_RECORD_NAME.fullmatch,
+                                   _progress_records(fs, jdir)) if m}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal cursor
         out = os.path.join(paths.sink_dir, f"batch_id={batch_id}")
         obs = Observation()
         (batch_df.drop("event_time")
@@ -284,12 +347,20 @@ def make_batch_sink(spark: SparkSession, paths: StreamPaths):
         if metrics["rows"] == 0:
             # e.g. the no-data batch that evicts watermark state: nothing
             # published, so no batch directory and no cursor record
-            jpath = spark._jvm.org.apache.hadoop.fs.Path(out)
-            jpath.getFileSystem(
-                spark._jsc.hadoopConfiguration()).delete(jpath, True)
+            out_fs, jout = _hadoop_fs(spark, out)
+            out_fs.delete(jout, True)
             return
         # chunk-max checkpoint AFTER successful publish (runner.go:453-461).
-        _write_progress(spark, paths.cursor_dir, metrics["max_ts"], batch_id)
+        ts = (metrics["max_ts"] if cursor is None
+              else max(metrics["max_ts"], cursor))
+        _write_progress(spark, paths.cursor_dir, ts, batch_id)
+        cursor = ts
+        # bounded like the checkpoint's offset and commit logs
+        kept.add(batch_id)
+        for old in [b for b in kept if b <= batch_id - retain]:
+            kept.discard(old)
+            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(
+                jdir, _record_name(old)), False)
 
     return sink
 
