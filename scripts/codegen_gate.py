@@ -16,16 +16,35 @@ Exit 0 = every query executed end-to-end with zero codegen-compile
 fallbacks. Intentional interpreted paths (higher-order-function folds,
 ArrowEvalPython projections) are excluded from whole-stage codegen at
 PLANNING time, so they do not trip the gate.
+
+It also reports the JIT cliff, without gating on it: each query's largest
+generated method, in bytes of bytecode, and at the end every query whose
+largest method is over HotSpot's 8,000-byte ``HugeMethodLimit`` (such a
+method is never JIT-compiled, so it runs in the bytecode interpreter for
+every row).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+#: HotSpot's HugeMethodLimit: a larger method is never JIT-compiled.
+JIT_METHOD_LIMIT = 8000
+
+
+def max_method_bytes(spark, df) -> int:
+    """Largest generated method over every whole-stage-codegen subtree of
+    ``df``'s executed plan (0 when nothing is codegen'd)."""
+    text = spark._jvm.org.apache.spark.sql.execution.debug.package \
+        .codegenString(df._jdf.queryExecution().executedPlan())
+    return max(map(int, re.findall(r"maxMethodCodeSize:(\d+)", text)),
+               default=0)
 
 
 def main() -> int:
@@ -51,13 +70,18 @@ def main() -> int:
 
     qs = all_queries()
     fails: list[tuple[str, str]] = []
+    huge: list[tuple[str, int]] = []
     names = [n for n in sorted(qs) if not only or n in only]
     t0 = time.time()
     for i, name in enumerate(names):
         try:
-            df = qs[name].fn(spark, sf)
-            df.limit(1_000_000).collect()
-            print(f"OK   [{i + 1}/{len(names)}] {name}")
+            df = qs[name].fn(spark, sf).limit(1_000_000)
+            df.collect()
+            size = max_method_bytes(spark, df)
+            if size > JIT_METHOD_LIMIT:
+                huge.append((name, size))
+            print(f"OK   [{i + 1}/{len(names)}] {name} "
+                  f"max_method={size}")
         except Exception as e:  # noqa: BLE001 - gate reports every failure
             msg = str(e).replace("\n", " ")[:300]
             kind = ("CODEGEN" if "compile" in msg.lower()
@@ -70,6 +94,10 @@ def main() -> int:
           f"failures: {len(fails)}")
     for name, msg in fails:
         print(f"  {name}: {msg}")
+    print(f"over the {JIT_METHOD_LIMIT}-byte JIT limit (report only): "
+          f"{len(huge)}")
+    for name, size in sorted(huge, key=lambda h: -h[1]):
+        print(f"  {name}: {size}")
     return 1 if fails else 0
 
 

@@ -11,12 +11,18 @@ correctness check. These tests pin:
    bytecode: WholeStageCodegenExec re-throws the compile error when the
    conf is off, so a regression fails the test hard);
 3. the per-batch top-k inside the PQ ADC scan is exact across any
-   partitioning of the codes table.
+   partitioning of the codes table;
+4. every generated method of a CDC data micro-batch stays under HotSpot's
+   8,000-byte ``HugeMethodLimit`` (a larger method is never JIT-compiled,
+   so every event would be encoded in the bytecode interpreter), and the
+   dedup's shuffle carries the raw columns, not the encoded message.
 """
 
 from __future__ import annotations
 
 import contextlib
+import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -124,3 +130,61 @@ def test_codebook_too_small_raises(spark):
     with pytest.raises(ValueError, match="at least"):
         sim._codebook_np(cb)
     cb.unpersist()
+
+
+#: HotSpot's HugeMethodLimit: a larger method is never JIT-compiled.
+JIT_METHOD_LIMIT = 8000
+
+
+def _plan_nodes(plan):
+    """Every node of a physical plan, through py4j."""
+    nodes, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        nodes.append(node)
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def test_cdc_data_batch_code_shape(spark, tmp_path):
+    """A data micro-batch of the CDC query: every whole-stage-codegen
+    subtree's largest method is JIT-compilable, and the Exchange in front
+    of the dedup carries no encoded payload or subject."""
+    from tigerbeetle_cdc_nats_spark.config import CdcConfig, validate
+    from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
+    from tigerbeetle_cdc_nats_spark.streaming import pipeline as pl
+
+    paths = pl.StreamPaths(*(str(tmp_path / d) for d in (
+        "source", "sink", "chk", "cursor", "lock")))
+    os.makedirs(paths.source_dir)
+    base = 1_704_067_200_000_000_000
+    (spark.createDataFrame(
+        [(i, base + i * 1_000, i % 7, "purchase", 1.5, "{}")
+         for i in range(64)], EVENTS_SCHEMA)
+     .write.mode("append").parquet(paths.source_dir))
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")  # the last execution is the data batch
+    try:
+        q = pl.build_query(spark, validate(CdcConfig(cluster_id="1")), paths,
+                           trigger_available_now=True).start()
+        q.awaitTermination(120)
+        assert q.exception() is None
+        plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+    finally:
+        spark.conf.set(key, old)
+    assert q.lastProgress["numInputRows"] == 64
+
+    debug = spark._jvm.org.apache.spark.sql.execution.debug.package
+    sizes = [int(m) for m in re.findall(r"maxMethodCodeSize:(\d+)",
+                                        debug.codegenString(plan))]
+    assert sizes and max(sizes) < JIT_METHOD_LIMIT, sizes
+
+    exchanges = [n for n in _plan_nodes(plan)
+                 if "Exchange" in n.nodeName()]
+    assert exchanges
+    for ex in exchanges:
+        out = ex.output()
+        cols = {out.apply(i).name() for i in range(out.size())}
+        assert "msg_id" in cols and not cols & {"payload", "subject"}, cols

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F, types as T
 
+from tests.conftest import SF_SMOKE
 from tigerbeetle_cdc_nats_spark.functions.json_codec import (
     ACCOUNT_SPEC,
     ENVELOPE_SPEC,
@@ -165,3 +166,73 @@ def test_spark_sql_encoder_matches_column_encoder(spark):
         encode_cdc_json_spark_expr("event").alias("b"),
     )
     assert df.where(F.col("a") != F.col("b")).count() == 0
+
+
+def test_field_encoder_matches_struct_encoder(spark):
+    """The pipeline's form — the walker over ``cdc_view.spark_field`` —
+    is byte-equal to encoding the materialized ``event`` struct."""
+    from tigerbeetle_cdc_nats_spark.functions.json_codec import (
+        encode_cdc_json_fields,
+    )
+    from tigerbeetle_cdc_nats_spark.operators.cdc_view import (
+        spark_field,
+        with_cdc_event,
+    )
+    from tigerbeetle_cdc_nats_spark.session import load_events
+
+    ev = with_cdc_event(load_events(spark, SF_SMOKE))
+    df = ev.select(
+        encode_cdc_json("event").alias("a"),
+        encode_cdc_json_fields(spark_field).alias("b"),
+    )
+    assert df.count() > 0
+    assert df.where(~F.col("a").eqNullSafe(F.col("b"))).count() == 0
+
+
+def _struct_transform(events, cfg):
+    """The pipeline transform as it was before the dedup moved ahead of
+    the encode: encode every row from the ``event`` struct, then dedup."""
+    from tigerbeetle_cdc_nats_spark.functions.events import (
+        msg_id_column,
+        subject_column,
+    )
+    from tigerbeetle_cdc_nats_spark.operators.cdc_view import with_cdc_event
+
+    e = F.col("event")
+    out = with_cdc_event(events).select(
+        "event_id", "ts",
+        msg_id_column(cfg.cluster_id, "ts").alias("msg_id"),
+        subject_column(cfg.subject_prefix, e["ledger"], e["type"])
+        .alias("subject"),
+        encode_cdc_json("event").alias("payload"),
+        e["type"].cast("string").alias("event_type"),
+        e["ledger"].cast("string").alias("ledger"),
+        e["transfer"]["code"].cast("string").alias("transfer_code"),
+        e["debit_account"]["code"].cast("string").alias("debit_account_code"),
+        e["credit_account"]["code"].cast("string")
+        .alias("credit_account_code"),
+    )
+    return (out.withColumn("event_time",
+                           F.timestamp_micros(F.expr("ts div 1000")))
+            .dropDuplicates(["msg_id"]))
+
+
+def test_transform_matches_struct_path_with_replays(spark):
+    """transform_events (dedup first, encode from the field expressions)
+    returns the rows, columns and column order of the struct path on a
+    batch with planted replays."""
+    from tigerbeetle_cdc_nats_spark.config import CdcConfig, validate
+    from tigerbeetle_cdc_nats_spark.session import load_events
+    from tigerbeetle_cdc_nats_spark.streaming.pipeline import transform_events
+
+    events = load_events(spark, SF_SMOKE)
+    replays = events.where(F.col("event_id") % 7 == 3)
+    batch = events.unionByName(replays)
+    cfg = validate(CdcConfig(cluster_id="9"))
+    got, want = transform_events(batch, cfg), _struct_transform(batch, cfg)
+    assert got.columns == want.columns and got.columns[-1] == "event_time"
+    n_events, n_replays = events.count(), replays.count()
+    assert n_replays > 0
+    rows = sorted(got.collect())
+    assert len(rows) == n_events
+    assert rows == sorted(want.collect())

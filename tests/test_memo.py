@@ -196,6 +196,25 @@ def test_minhash_probe_follows_a_documents_rewrite(spark, tmp_path):
     assert {r["doc_id"] for r in probe.collect()} == {4, 9}
 
 
+def test_winnow_probe_follows_a_same_path_rewrite(spark, tmp_path):
+    """A probe of a rewritten documents file reads the new delta, not the
+    delta fingerprints an earlier probe of the same path persisted."""
+    sf = str(tmp_path)
+
+    def probed(docs, stamp) -> set:
+        _write_documents(sf, docs, stamp)
+        frame = spark.read.parquet(os.path.join(sf, "documents.parquet"))
+        index = str(tmp_path / f"winnow{stamp}")
+        di.write_winnow_index(frame, index, n_shards=4)
+        delta = frame.where(frame["doc_id"] % 5 == 4)
+        return {r["doc_id"] for r in
+                di.probe_winnow_index(spark, index, delta).collect()}
+
+    assert probed([(1, GOOD), (4, GOOD), (7, OTHER)], 1) == {4}
+    assert probed([(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2) == {4, 9}
+    spark.catalog.clearCache()
+
+
 def test_ivf_assigned_follows_an_embeddings_rewrite(spark, tmp_path):
     sf = str(tmp_path)
     _write_labelled_embeddings(sf, 12, 2, 1)

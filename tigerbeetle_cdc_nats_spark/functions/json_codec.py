@@ -7,9 +7,21 @@ and the portable-number rule (number <= 2^53-1, decimal string above).
 
 Spark's ``to_json`` cannot express "number or string per value", so the JSON
 is assembled with ``concat`` of literal fragments and per-field encodings —
-still a single whole-stage-codegen'd expression, no UDF, no Python in the hot
-path. The same field spec also generates the equivalent DuckDB SQL expression
-so the driver's oracle produces identical strings.
+no UDF, no Python in the hot path. One spec walker (``_walk``) emits every
+form: Spark Columns, Spark SQL text and the equivalent DuckDB SQL, so the
+DuckDB oracle produces identical strings. Its input is a field accessor
+(path -> value), so the envelope can be read from a struct column or built
+straight from the per-field expressions.
+
+The encode is ~500 expression nodes, and its generated code is large.
+HotSpot never JIT-compiles a method over 8,000 bytes of bytecode
+(``HugeMethodLimit``); such a method runs in the bytecode interpreter for
+every row. When the encode reads a materialized struct, the optimizer
+keeps two Projects (the struct, then the encode) and every field access
+carries struct-extraction code, which puts the fused stage's largest
+method over that limit. So the pipeline encodes from the field expressions
+(``encode_cdc_json_fields(cdc_view.spark_field)``); the struct wrapper
+``encode_cdc_json`` serves the goldens and the lossless u128 path.
 """
 
 from __future__ import annotations
@@ -19,6 +31,7 @@ from pyspark.sql import Column, functions as F
 from tigerbeetle_cdc_nats_spark.functions.portable import (
     portable_uint_json,
     portable_uint_json_str,
+    portable_uint_spark_sql,
     portable_uint_sql,
 )
 
@@ -42,6 +55,13 @@ ENVELOPE_SPEC = (
 )  # message.go:70-77 scalar head; then transfer/debit_account/credit_account
 
 
+NESTED_SPECS = (
+    ("transfer", TRANSFER_SPEC),
+    ("debit_account", ACCOUNT_SPEC),
+    ("credit_account", ACCOUNT_SPEC),
+)  # message.go:70-77 nested objects, in envelope order
+
+
 def _encode_field(kind: str, c: Column, from_strings: bool = False) -> Column:
     if kind == "p":
         return portable_uint_json_str(c) if from_strings else portable_uint_json(c)
@@ -58,6 +78,14 @@ def _encode_field_sql(kind: str, expr: str) -> str:
     if kind == "n":
         return f"CAST({expr} AS VARCHAR)"
     return f"'\"' || {expr} || '\"'"
+
+
+def _encode_field_spark_sql(kind: str, expr: str) -> str:
+    if kind == "p":
+        return portable_uint_spark_sql(expr)
+    if kind == "n":
+        return f"CAST(CAST({expr} AS DECIMAL(38,0)) AS STRING)"
+    return f"concat('\"', {expr}, '\"')"
 
 
 def json_object(items: list[tuple[str, Column]]) -> Column:
@@ -80,51 +108,56 @@ def json_object_sql(items: list[tuple[str, str]]) -> str:
     return "(" + " || ".join(parts) + " || '}')"
 
 
-def encode_cdc_json(event: Column | str, *, from_strings: bool = False) -> Column:
-    """Encode a struct column shaped like ``schemas.CDC_EVENT_SCHEMA`` to the
-    reference's exact JSON bytes (message.go:96-152).
+def _walk(field, encode, obj):
+    """The envelope in the reference's field order (message.go:96-152):
+    ``field(path)`` reads one field by its path (``"ledger"``,
+    ``"transfer.id"``), ``encode(kind, value)`` turns it into a JSON
+    fragment and ``obj(items)`` joins ``(key, fragment)`` pairs into an
+    object."""
+    items = [(n, encode(k, field(n))) for n, k in ENVELOPE_SPEC]
+    for nested, spec in NESTED_SPECS:
+        inner = [(n, encode(k, field(f"{nested}.{n}"))) for n, k in spec]
+        items.append((nested, obj(inner)))
+    return obj(items)
+
+
+def encode_cdc_json_fields(field, *, from_strings: bool = False) -> Column:
+    """The reference's exact JSON bytes (message.go:96-152), read through
+    ``field(path) -> Column`` — e.g. ``cdc_view.spark_field``, which builds
+    each field straight from the raw event columns.
 
     ``from_strings=True`` treats every numeric field as a canonical-digit
     string — the lossless u128 path needed for the all-max golden
     (message_test.go:88); the decimal-typed path covers the realistic range.
     """
+    return _walk(field, lambda k, c: _encode_field(k, c, from_strings),
+                 json_object)
+
+
+def encode_cdc_json(event: Column | str, *, from_strings: bool = False) -> Column:
+    """:func:`encode_cdc_json_fields` over a struct column shaped like
+    ``schemas.CDC_EVENT_SCHEMA``."""
     ev = F.col(event) if isinstance(event, str) else event
-    items = [(n, _encode_field(k, ev[n], from_strings)) for n, k in ENVELOPE_SPEC]
-    for nested, spec in (("transfer", TRANSFER_SPEC),
-                         ("debit_account", ACCOUNT_SPEC),
-                         ("credit_account", ACCOUNT_SPEC)):
-        inner = [(n, _encode_field(k, ev[nested][n], from_strings)) for n, k in spec]
-        items.append((nested, json_object(inner)))
-    return json_object(items)
+
+    def field(path: str) -> Column:
+        c = ev
+        for name in path.split("."):
+            c = c[name]
+        return c
+
+    return encode_cdc_json_fields(field, from_strings=from_strings)
 
 
 def encode_cdc_json_sql(field_expr) -> str:
     """DuckDB SQL producing the identical JSON string. ``field_expr(path)``
     maps a field path like ``"transfer.id"`` to an integer (or, for
     ``"type"``, string) SQL expression."""
-    items = [(n, _encode_field_sql(k, field_expr(n))) for n, k in ENVELOPE_SPEC]
-    for nested, spec in (("transfer", TRANSFER_SPEC),
-                         ("debit_account", ACCOUNT_SPEC),
-                         ("credit_account", ACCOUNT_SPEC)):
-        inner = [(n, _encode_field_sql(k, field_expr(f"{nested}.{n}"))) for n, k in spec]
-        items.append((nested, json_object_sql(inner)))
-    return json_object_sql(items)
-
-
-def _encode_field_spark_sql(kind: str, expr: str) -> str:
-    from tigerbeetle_cdc_nats_spark.functions.portable import (
-        portable_uint_spark_sql,
-    )
-
-    if kind == "p":
-        return portable_uint_spark_sql(expr)
-    if kind == "n":
-        return f"CAST(CAST({expr} AS DECIMAL(38,0)) AS STRING)"
-    return f"concat('\"', {expr}, '\"')"
+    return _walk(field_expr, _encode_field_sql, json_object_sql)
 
 
 def encode_cdc_json_spark_expr(event_col: str) -> Column:
-    """The full envelope encoding as ONE Spark-SQL expression string.
+    """The full envelope encoding of struct column ``event_col`` as ONE
+    Spark-SQL expression string.
 
     Value-identical to ``encode_cdc_json(F.col(event_col))`` (same field
     order, same portable rule, same cast chain) but built as a single
@@ -133,16 +166,5 @@ def encode_cdc_json_spark_expr(event_col: str) -> Column:
     parses JVM-side. The golden byte tests pin both forms to the same
     output.
     """
-    items = [
-        (n, _encode_field_spark_sql(k, f"{event_col}.{n}"))
-        for n, k in ENVELOPE_SPEC
-    ]
-    for nested, spec in (("transfer", TRANSFER_SPEC),
-                         ("debit_account", ACCOUNT_SPEC),
-                         ("credit_account", ACCOUNT_SPEC)):
-        inner = [
-            (n, _encode_field_spark_sql(k, f"{event_col}.{nested}.{n}"))
-            for n, k in spec
-        ]
-        items.append((nested, json_object_sql(inner)))
-    return F.expr(json_object_sql(items))
+    return F.expr(_walk(lambda path: f"{event_col}.{path}",
+                        _encode_field_spark_sql, json_object_sql))

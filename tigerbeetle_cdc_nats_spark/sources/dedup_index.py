@@ -175,6 +175,15 @@ def minhash_pairs_from_index(index: DataFrame) -> DataFrame:
         index.select("doc_id", "band", "bucket", "sig"))
 
 
+def _persist_fresh(delta: DataFrame) -> DataFrame:
+    """``delta.persist()`` for a probe. CacheManager matches a plan by
+    source path, not content, so first release the copy an earlier probe
+    of a since-rewritten source persisted; else this probe would read its
+    stale blocks."""
+    delta.unpersist()
+    return delta.persist()
+
+
 def probe_minhash_index(spark: SparkSession, path: str,
                         delta_docs: DataFrame) -> DataFrame:
     """Delta-vs-corpus probe: band the delta, prune the stored index to
@@ -188,11 +197,7 @@ def probe_minhash_index(spark: SparkSession, path: str,
     delta_banded = (dd.banded_buckets(dd.minhash_signatures(delta_docs))
                     .withColumn("shard",
                                 _bucket_shard(F.col("bucket"), n_shards)))
-    # CacheManager matches a plan by source path, not content: release
-    # the copy an earlier probe of a since-rewritten source persisted,
-    # else this probe would read its stale blocks
-    delta_banded.unpersist()
-    delta_banded = delta_banded.persist()
+    delta_banded = _persist_fresh(delta_banded)
     # Bounded driver-side probe set: <= bands x N_SHARDS entries.
     probed = {(int(r["band"]), int(r["shard"]))
               for r in delta_banded.select("band", "shard")
@@ -275,10 +280,9 @@ def probe_winnow_index(spark: SparkSession, path: str,
     from tigerbeetle_cdc_nats_spark.queries_corpus import winnow_fingerprints
 
     n_shards = _read_meta_shards(path)
-    delta_fp = (winnow_fingerprints(delta_docs)
-                .withColumn("shard", F.pmod(F.col("wm"), F.lit(n_shards))
-                            .cast("int"))
-                .persist())
+    delta_fp = _persist_fresh(
+        winnow_fingerprints(delta_docs)
+        .withColumn("shard", F.pmod(F.col("wm"), F.lit(n_shards)).cast("int")))
     shards = sorted({int(r["shard"]) for r in
                      delta_fp.select("shard").distinct().collect()})
     if not shards:

@@ -11,6 +11,10 @@ Reference mapping (runner.go:49-170, 425-466):
 |                                             | a driver-written cursor record  |
 |                                             | (ack-before-commit, no job)     |
 | dedupe window (runner.go:180,602)           | withWatermark + dropDuplicates  |
+|                                             | on the raw rows, before encode  |
+| encodeEventJSON (message.go:96-152)         | envelope, subject and headers   |
+|                                             | from the field expressions of   |
+|                                             | the dedup survivors             |
 | single-writer lock (runner.go:607-724)      | one active query per checkpoint |
 |                                             | dir (Spark-enforced) + lease    |
 |                                             | marker for operator visibility  |
@@ -46,9 +50,13 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.config import CdcConfig
-from tigerbeetle_cdc_nats_spark.functions.events import msg_id_column, subject_column
-from tigerbeetle_cdc_nats_spark.operators.cdc_view import with_cdc_event
-from tigerbeetle_cdc_nats_spark.functions.json_codec import encode_cdc_json
+from tigerbeetle_cdc_nats_spark.functions.events import (
+    header_columns,
+    msg_id_column,
+    subject_column,
+)
+from tigerbeetle_cdc_nats_spark.functions.json_codec import encode_cdc_json_fields
+from tigerbeetle_cdc_nats_spark.operators.cdc_view import spark_field
 from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
 
 
@@ -62,41 +70,46 @@ class StreamPaths:
 
 
 def transform_events(stream: DataFrame, cfg: CdcConfig) -> DataFrame:
-    """events -> publishable messages: envelope JSON payload, subject,
-    deterministic msg id, routing headers (runner.go:586-605) — all Column
-    expressions, streaming-safe."""
-    enveloped = with_cdc_event(stream)
-    e = F.col("event")
-    out = enveloped.select(
-        "event_id",
-        "ts",
-        msg_id_column(cfg.cluster_id, "ts").alias("msg_id"),
-        subject_column(
-            cfg.subject_prefix, e["ledger"], e["type"],
-            single_subject=(cfg.single_subject
-                            if cfg.subject_mode == "single" else None),
-        ).alias("subject"),
-        encode_cdc_json("event").alias("payload"),
-        e["type"].cast("string").alias("event_type"),
-        e["ledger"].cast("string").alias("ledger"),
-        e["transfer"]["code"].cast("string").alias("transfer_code"),
-        e["debit_account"]["code"].cast("string").alias("debit_account_code"),
-        e["credit_account"]["code"].cast("string").alias("credit_account_code"),
-    )
+    """events -> publishable messages (runner.go:586-605): dedup the raw
+    rows on the deterministic msg id, then encode the survivors — envelope
+    JSON payload, subject and routing headers — straight from the field
+    expressions. All Column expressions, streaming-safe.
+
+    The dedup comes first, so its shuffle carries only the raw columns and
+    dropped replays are never encoded. The encode reads no ``event`` struct
+    column: built from the field expressions, every generated method of the
+    encode stage stays under HotSpot's 8,000-byte JIT limit (see
+    functions/json_codec.py)."""
     # ST3: bounded-state dedup within the dedupe window. Event time is the
     # ns timestamp (integer division — `/` on ~1.7e18 longs goes through a
     # double and loses ULPs); watermark = the reference's 2-minute window.
     # dropDuplicatesWithinWatermark is the state-BOUNDED form: plain
     # dropDuplicates(['msg_id']) never evicts keys that lack the event-time
     # column in the subset, so its state grows for the stream's lifetime.
-    out = out.withColumn("event_time",
-                         F.timestamp_micros(F.expr("ts div 1000")))
-    out = out.withWatermark("event_time", f"{int(cfg.dedupe_window_s)} seconds")
-    if out.isStreaming:
-        return out.dropDuplicatesWithinWatermark(["msg_id"])
+    raw = stream.select(
+        "event_id", "ts", "user_id", "value",
+        msg_id_column(cfg.cluster_id, "ts").alias("msg_id"),
+        F.timestamp_micros(F.expr("ts div 1000")).alias("event_time"),
+    ).withWatermark("event_time", f"{int(cfg.dedupe_window_s)} seconds")
     # batch replay of the same transform (tests, backfills): plain
     # dropDuplicates is equivalent — a batch job's "state" ends with the job.
-    return out.dropDuplicates(["msg_id"])
+    deduped = (raw.dropDuplicatesWithinWatermark(["msg_id"])
+               if raw.isStreaming else raw.dropDuplicates(["msg_id"]))
+    return deduped.select(
+        "event_id",
+        "ts",
+        "msg_id",
+        subject_column(
+            cfg.subject_prefix, spark_field("ledger"), spark_field("type"),
+            single_subject=(cfg.single_subject
+                            if cfg.subject_mode == "single" else None),
+        ).alias("subject"),
+        encode_cdc_json_fields(spark_field).alias("payload"),
+        *header_columns(*map(spark_field, (
+            "type", "ledger", "transfer.code", "debit_account.code",
+            "credit_account.code"))),
+        "event_time",
+    )
 
 
 _PROGRESS_SCHEMA = pa.schema([("timestamp", pa.int64()),
