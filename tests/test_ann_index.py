@@ -12,7 +12,6 @@ from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 from tigerbeetle_cdc_nats_spark.plans.inspect import physical_plan
 from tigerbeetle_cdc_nats_spark.session import load_table
 from tigerbeetle_cdc_nats_spark.sources.ann_index import (
-    probe_buckets,
     read_ann_index,
     write_ann_index,
 )
@@ -49,7 +48,7 @@ def test_roundtrip_and_bucket_agreement(spark, index):
 def test_single_probe_prunes_files(spark, index):
     idx = read_ann_index(spark, index)
     some_bucket = idx.select("bucket").first()["bucket"]
-    probe = probe_buckets(idx, [some_bucket])
+    probe = idx.where(F.col("bucket").isin([some_bucket]))
     plan = physical_plan(probe)
     assert "PartitionFilters" in plan
     assert "bucket" in plan.split("PartitionFilters", 1)[1].split("]")[0]
@@ -60,7 +59,7 @@ def test_multi_probe_reads_only_probe_set(spark, index):
     idx = read_ann_index(spark, index)
     base = int(idx.select("bucket").first()["bucket"])
     probes = [base] + [base ^ (1 << j) for j in range(len(PLANES))]
-    probe = probe_buckets(idx, probes)
+    probe = idx.where(F.col("bucket").isin(probes))
     got_buckets = {r["bucket"]
                    for r in probe.select("bucket").distinct().collect()}
     assert got_buckets <= set(probes)
@@ -112,7 +111,7 @@ def test_ann_compaction_drops_replay_duplicates(spark, tmp_path):
     assert after.count() == baseline
     # partition pruning still works on the rewritten layout
     some_bucket = after.select("bucket").first()["bucket"]
-    pruned = ai.probe_buckets(after, [some_bucket])
+    pruned = after.where(F.col("bucket").isin([some_bucket]))
     assert pruned.count() > 0
     assert {r["bucket"] for r in pruned.select("bucket")
             .distinct().collect()} == {some_bucket}
@@ -128,45 +127,4 @@ def test_stored_ivf_equals_in_session(spark, tmp_path, monkeypatch):
     sf = "/root/testdata/sf0.001"
     fresh = sorted(map(tuple, qs["ivf_ann_cosine"].fn(spark, sf).collect()))
     stored = sorted(map(tuple, qs["ivf_ann_indexed"].fn(spark, sf).collect()))
-    assert stored == fresh
-
-
-def test_ivf_append_and_compact_lifecycle(spark, tmp_path):
-    """Online insert assigns against the STORED centroids (no re-train);
-    a replayed insert's duplicates compact away; the centroid sidecar
-    survives compaction byte-for-byte."""
-    from tigerbeetle_cdc_nats_spark.operators import similarity as sim
-    from tigerbeetle_cdc_nats_spark.session import load_table
-    from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
-
-    sf = "/root/testdata/sf0.001"
-    emb = load_table(spark, sf, "embeddings")
-    dim = sim.embedding_dim(sf)
-    base = emb.where("vec_id < 400")
-    delta = emb.where("vec_id >= 400 and vec_id < 420")
-    path = str(tmp_path / "ivfidx")
-    ai.write_ivf_index(base, path, dim=dim)
-    cent_before = sorted(map(tuple, ai.read_ivf_centroids(spark, path)
-                             .collect()))
-    n0 = spark.read.parquet(iv.current_dir(path)).count()
-
-    ai.append_ivf_index(delta, path, dim=dim)
-    ai.append_ivf_index(delta, path, dim=dim)  # at-least-once replay
-    assert spark.read.parquet(iv.current_dir(path)).count() == n0 + 40
-
-    ai.compact_ivf_index(spark, path)
-    idx = ai.read_ivf_index(spark, path)
-    assert idx.count() == n0 + 20
-    # centroids untouched by insert AND compaction (no silent re-train)
-    cent_after = sorted(map(tuple, ai.read_ivf_centroids(spark, path)
-                            .collect()))
-    assert cent_after == cent_before
-    # appended vectors landed in the same cells a fresh assignment picks
-    from tigerbeetle_cdc_nats_spark.queries_similarity import ivf_assign
-    centv = ai.read_ivf_centroids(spark, path)
-    fresh = {(r["vec_id"], r["cell"]) for r in
-             ivf_assign(delta, centv, dim=dim)
-             .select("vec_id", "cell").collect()}
-    stored = {(r["vec_id"], r["cell"]) for r in
-              idx.where("vec_id >= 400").select("vec_id", "cell").collect()}
     assert stored == fresh

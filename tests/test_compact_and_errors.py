@@ -1,5 +1,4 @@
-"""Compaction rewrites many small files into few; strict enum dispatch
-raises on unknown values (message.go:91-93)."""
+"""Strict enum dispatch raises on unknown values (message.go:91-93)."""
 
 from __future__ import annotations
 
@@ -7,21 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tigerbeetle_cdc_nats_spark.functions.events import event_type_name
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
-from tigerbeetle_cdc_nats_spark.sources.compact import compact_parquet_dir
-
-
-def test_compaction_reduces_file_count(spark, tmp_path):
-    path = str(tmp_path / "store")
-    df = spark.range(0, 10_000).withColumn("v", F.col("id") * 2)
-    df.repartition(40).write.parquet(path)  # 40 small files
-    before = len([f for f in spark.read.parquet(iv.current_dir(path)).inputFiles()])
-    assert before >= 40
-    n = compact_parquet_dir(spark, path)
-    after = spark.read.parquet(iv.current_dir(path))
-    assert len(after.inputFiles()) == n < before
-    assert after.count() == 10_000
-    assert after.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
 
 
 def test_event_type_unknown_raises(spark):

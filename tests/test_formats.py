@@ -1,4 +1,4 @@
-"""File-format sources/sinks (S6) and the NATS publish core over the
+"""The parquet stream source (S6) and the NATS publish core over the
 transformed stream."""
 
 from __future__ import annotations
@@ -8,31 +8,13 @@ import os
 from pyspark.sql import functions as F
 
 from tigerbeetle_cdc_nats_spark.config import CdcConfig, validate
-from tigerbeetle_cdc_nats_spark.registry import events_table
 from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
-from tigerbeetle_cdc_nats_spark.sources.formats import (
-    read_jsonl,
-    stream_parquet,
-    write_jsonl,
-    write_parquet,
-)
 from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
     HEADER_COLS,
     NatsSinkConfig,
     drain_partition,
 )
 from tigerbeetle_cdc_nats_spark.streaming.pipeline import transform_events
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    src = events_table(spark, "/root/testdata/sf0.001").limit(100)
-    path = str(tmp_path / "ev.jsonl")
-    write_jsonl(src, path)
-    back = read_jsonl(spark, path, EVENTS_SCHEMA)
-    assert back.count() == 100
-    a = src.agg(F.sum(F.col("ts").cast("decimal(38,0)"))).first()[0]
-    b = back.agg(F.sum(F.col("ts").cast("decimal(38,0)"))).first()[0]
-    assert a == b
 
 
 def test_stream_real_testdata_through_pipeline(spark, tmp_path):
@@ -45,8 +27,8 @@ def test_stream_real_testdata_through_pipeline(spark, tmp_path):
     os.makedirs(srcdir)
     shutil.copy("/root/testdata/sf0.001/events.parquet",
                 os.path.join(srcdir, "events.parquet"))
-    stream = stream_parquet(spark, srcdir, EVENTS_SCHEMA,
-                            max_files_per_trigger=1)
+    stream = (spark.readStream.schema(EVENTS_SCHEMA)
+              .option("maxFilesPerTrigger", 1).parquet(srcdir))
     out = str(tmp_path / "out")
     q = (
         transform_events(stream, cfg)
@@ -90,32 +72,3 @@ def test_nats_sink_with_injected_transport(spark):
     assert sample["subject"].startswith("tigerbeetle.cdc.")
     assert set(HEADER_COLS) | {"Nats-Msg-Id"} == set(sample["headers"])
     assert sample["n"] > 500  # full envelope payload
-
-
-def test_csv_and_orc_roundtrip(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from tigerbeetle_cdc_nats_spark.sources.formats import (
-        read_csv,
-        read_orc,
-        write_csv,
-        write_orc,
-    )
-
-    schema = T.StructType([
-        T.StructField("k", T.LongType()),
-        T.StructField("s", T.StringType()),
-        T.StructField("v", T.DoubleType()),
-    ])
-    rows = [(1, "a", 1.5), (2, "b,c", -2.0), (3, None, 0.0)]
-    df = spark.createDataFrame(rows, schema)
-
-    csv_dir = str(tmp_path / "csv")
-    write_csv(df, csv_dir, mode="overwrite")
-    got_csv = sorted(map(tuple, read_csv(spark, csv_dir, schema).collect()))
-    assert got_csv == sorted(rows)
-
-    orc_dir = str(tmp_path / "orc")
-    write_orc(df, orc_dir, mode="overwrite")
-    got_orc = sorted(map(tuple, read_orc(spark, orc_dir).collect()))
-    assert got_orc == sorted(rows)

@@ -1,71 +1,7 @@
-"""Partitioned event-store layout: writes must produce a prunable layout and
-reads must actually prune (PartitionFilters in the scan, fewer files read).
-"""
+"""Z-order layout key: the Spark expression interleaves bits exactly as an
+independent Python model does."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from tigerbeetle_cdc_nats_spark.plans import physical_plan
-from tigerbeetle_cdc_nats_spark.registry import events_table
-from tigerbeetle_cdc_nats_spark.sources.layout import (
-    NS_PER_DAY,
-    read_event_store,
-    write_event_store,
-)
-
-
-@pytest.fixture(scope="module")
-def store(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("store") / "events")
-    write_event_store(events_table(spark, "/root/testdata/sf0.001"), path)
-    return path
-
-
-def test_roundtrip_preserves_rows(spark, store):
-    src = events_table(spark, "/root/testdata/sf0.001")
-    out = read_event_store(spark, store)
-    assert out.count() == src.count()
-    dec_sum = F.sum(F.col("ts").cast("decimal(38,0)"))  # sum(long) overflows
-    assert out.agg(dec_sum).first()[0] == src.agg(dec_sum).first()[0]
-
-
-def test_date_predicate_prunes_partitions(spark, store):
-    df = read_event_store(spark, store)
-    one_day = df.where(F.col("event_date") == 19723)
-    plan = physical_plan(one_day)
-    assert "PartitionFilters" in plan
-    assert "event_date" in plan.split("PartitionFilters", 1)[1].split("]")[0]
-    # A pruned day must actually READ fewer files than the full store
-    # (input_file_name observes execution, not the pre-pruning listing).
-    full = _files_read(read_event_store(spark, store))
-    day = _files_read(one_day)
-    assert 0 < day < full
-
-
-def _files_read(df) -> int:
-    return df.select(F.input_file_name().alias("f")).distinct().count()
-
-
-def test_ledger_predicate_prunes(spark, store):
-    df = read_event_store(spark, store).where(F.col("ledger") == 3)
-    assert _files_read(df) < _files_read(read_event_store(spark, store))
-
-
-def test_cursor_scan_on_store_prunes_by_date(spark, store):
-    """The cursor poll maps to a date-partition predicate + ts filter:
-    partitions strictly before the cursor's day are never opened."""
-    df = read_event_store(spark, store)
-    cursor = 1705000000000000000
-    scan = df.where(
-        (F.col("event_date") >= F.floor(F.lit(cursor) / NS_PER_DAY))
-        & (F.col("ts") > cursor)
-    )
-    assert _files_read(scan) < _files_read(df)
-    # Equivalence with the unpartitioned filter.
-    expect = df.where(F.col("ts") > cursor).count()
-    assert scan.count() == expect
 
 
 def test_zorder_key_interleaves_bits(spark):

@@ -11,31 +11,6 @@ from tigerbeetle_cdc_nats_spark.operators import similarity as sim
 from tigerbeetle_cdc_nats_spark.session import load_table
 
 
-def test_minhash_geometry_widens_bands_with_corpus():
-    """Band width r must grow ~log(n) so expected spurious candidates stay
-    linear in corpus size; k is always bands * r."""
-    r_small = None
-    prev_r = 0
-    for n in (1_000, 1_000_000, 1_000_000_000):
-        k, b = dd.minhash_geometry(n)
-        r = k // b
-        assert k == b * r
-        assert r >= prev_r
-        prev_r = r
-        if r_small is None:
-            r_small = r
-    assert prev_r > r_small  # 1e9 corpus uses strictly wider bands than 1e3
-
-
-def test_minhash_geometry_r_bound():
-    """r >= ln(n)/ln(1/j0) -> n * j0^r <= 1 (the sub-linear-candidates
-    condition)."""
-    for n in (10_000, 10_000_000):
-        k, b = dd.minhash_geometry(n, background_j=0.1)
-        r = k // b
-        assert n * (0.1 ** r) <= 1.0 + 1e-9
-
-
 def test_wider_bands_shrink_candidate_volume(spark):
     """On the real corpus, r=4 banding must pass strictly fewer candidate
     pairs than r=2 at the same k — the false-candidate knob actually

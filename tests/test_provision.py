@@ -5,8 +5,9 @@ create/validate/update flow (runner.go:207-291)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
-from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA, PROGRESS_SCHEMA
+from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
 from tigerbeetle_cdc_nats_spark.sources.provision import (
     ResourceMismatchError,
     SinkResourceConfig,
@@ -47,7 +48,9 @@ def test_unlimited_bytes_normalized():
 
 
 def test_schema_diff_detected():
-    other = _cfg(schema_json=schema_to_json(PROGRESS_SCHEMA))
+    cursor = T.StructType([T.StructField("timestamp", T.LongType(), False),
+                           T.StructField("version", T.StringType(), True)])
+    other = _cfg(schema_json=schema_to_json(cursor))
     assert any("schema differs" in m for m in config_mismatches(other, _cfg()))
 
 

@@ -89,57 +89,3 @@ def test_rate_limited_counts_throttle_over_limit(spark, dirs):
     row = final.orderBy(F.col("n_admitted").desc()).first()
     assert row["n_admitted"] == 5
     assert row["n_throttled"] == 2
-
-
-def test_streaming_heavy_hitters_tracks_planted_hitter(spark, dirs):
-    """A planted heavy user must survive across micro-batches with the
-    SpaceSaving bound (true <= est <= true + err), and state must be
-    BOUNDED: far more distinct users than capacity, summary size capped."""
-    from tigerbeetle_cdc_nats_spark.streaming.stateful import (
-        HH_CAPACITY,
-        streaming_heavy_hitters,
-    )
-
-    src, out, chk = dirs
-    hot = 7  # lands in shard 7 % 32
-    # batch 1: hot user 60x + 100 distinct light users (> capacity churn)
-    rows1 = [(i, BASE_TS + i, hot, "view", 1.0, "{}") for i in range(60)]
-    rows1 += [(1000 + u, BASE_TS + 1000 + u, 7 + 32 * (u + 1), "view",
-               1.0, "{}") for u in range(100)]  # same shard as hot
-    _write(spark, src, rows1)
-    _run_stream(spark, src, out, chk,
-                lambda s: streaming_heavy_hitters(s, n_shards=32))
-    # batch 2: 40 more hot events — state must carry the prior 60
-    rows2 = [(5000 + i, BASE_TS + 5000 + i, hot, "view", 1.0, "{}")
-             for i in range(40)]
-    _write(spark, src, rows2)
-    _run_stream(spark, src, out, chk,
-                lambda s: streaming_heavy_hitters(s, n_shards=32))
-
-    got = spark.read.parquet(out)
-    latest = (got.where(F.col("item") == hot)
-              .orderBy(F.col("est_count").desc()).first())
-    assert latest is not None, "planted hitter evicted"
-    true = 100
-    assert true <= latest["est_count"] <= true + latest["max_err"]
-    # bounded state: no output batch ever reports more tracked items for
-    # the shard than the summary capacity (2 batches appended here)
-    n_rows = got.where(F.col("shard") == hot % 32).count()
-    assert n_rows <= 2 * HH_CAPACITY
-
-
-def test_streaming_heavy_hitters_state_is_capacity_bounded(spark):
-    """Unit-level: merging far more distinct items than capacity keeps the
-    summary at exactly `capacity` entries with valid SpaceSaving bounds."""
-    from tigerbeetle_cdc_nats_spark.streaming.stateful import _hh_merge
-
-    summary, errs = {}, {}
-    cap = 8
-    for item in range(100):
-        _hh_merge(summary, errs, item, 1, cap)
-    assert len(summary) == cap
-    # one mega-item merged late must displace and dominate
-    _hh_merge(summary, errs, 999, 1000, cap)
-    assert 999 in summary
-    assert summary[999] >= 1000
-    assert summary[999] - errs[999] <= 1000  # est - err <= true

@@ -118,57 +118,6 @@ def test_pii_gate_scrubs_before_fingerprinting(spark):
     assert out[0]["fp"] == expected_fp
 
 
-def test_normalized_dedup_stream_collapses_formatting_variants(
-        spark, tmp_path):
-    """Case/punctuation/whitespace re-ingests dedup online; genuinely
-    different content passes — and the key equals batch normalized_dedup's
-    norm_h (online/offline agreement)."""
-    from pyspark.sql import functions as F, types as T
-
-    from tigerbeetle_cdc_nats_spark.streaming.corpus import (
-        normalized_dedup_stream,
-    )
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("ingest_time", T.TimestampType()),
-    ])
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    chk = str(tmp_path / "chk")
-    import datetime
-
-    t0 = datetime.datetime(2026, 1, 1)
-    rows = [
-        (1, "The quick brown fox", t0),
-        (2, "the QUICK,, brown fox!!", t0),       # formatting variant of 1
-        (3, "a different document entirely", t0),
-        (4, "  the quick   brown fox  ", t0),     # whitespace variant of 1
-    ]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    q = (normalized_dedup_stream(
-            spark.readStream.schema(schema).parquet(src))
-         .writeStream.format("parquet").option("path", sink)
-         .option("checkpointLocation", chk)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-    got = spark.read.parquet(sink)
-    kept = sorted(r["doc_id"] for r in got.select("doc_id").collect())
-    assert len(kept) == 2  # one of {1,2,4} plus doc 3
-    assert 3 in kept
-
-    # online key == batch normalized_dedup's norm_h, per doc
-    from tigerbeetle_cdc_nats_spark.operators import dedup as dd
-    from tigerbeetle_cdc_nats_spark.queries_corpus import normalize_text
-
-    batch = spark.createDataFrame(rows, schema).select(
-        "doc_id", dd.hash60(normalize_text(F.col("text"))).alias("h"))
-    online = got.select("doc_id", "norm_h")
-    j = online.join(batch, "doc_id")
-    assert j.where(F.col("norm_h") != F.col("h")).count() == 0
-
-
 def test_streaming_index_maintenance_matches_rebuild(spark, tmp_path):
     """The stored MinHash index maintained continuously from the doc
     stream must yield candidate pairs BYTE-IDENTICAL to a from-scratch

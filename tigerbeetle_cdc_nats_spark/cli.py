@@ -6,6 +6,15 @@ Flag names match the reference flag surface (config.go:180-214) where the
 concept carries over; transport-specific flags map to their Spark
 equivalents (``--source-dir``/``--sink-dir``/``--checkpoint-dir`` replace
 the TigerBeetle addresses + NATS URL for the file-backed pipeline).
+
+Inert flags: these are parsed and validated but nothing reads them.
+``--event-count-max`` reaches only the cursor DataSource branch of
+``streaming.pipeline.build_query``, which the CLI never takes; its file
+source batches by ``maxFilesPerTrigger=16`` instead, so the flag has no
+effect here. ``--requests-per-second-limit``, ``--progress-every-events``,
+``--publish-mode``, ``--publish-ack-timeout``,
+``--publish-async-max-pending``, ``--provision``, ``--stream-update``,
+``--stream-replicas`` and ``--kv-replicas`` are likewise never read.
 """
 
 from __future__ import annotations

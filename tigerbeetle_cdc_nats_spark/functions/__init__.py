@@ -4,7 +4,6 @@ from tigerbeetle_cdc_nats_spark.functions.portable import (  # noqa: F401
 )
 from tigerbeetle_cdc_nats_spark.functions.events import (  # noqa: F401
     event_type_name,
-    event_type_code,
     subject_column,
     msg_id_column,
     header_columns,

@@ -41,15 +41,6 @@ def event_type_name(code: Column | str, *, strict: bool = True) -> Column:
     return expr  # unknown -> NULL
 
 
-def event_type_code(name: Column | str) -> Column:
-    """Inverse mapping (wire name -> enum int); unknown name -> NULL."""
-    name = _col(name)
-    expr = F.when(name == EVENT_TYPE_NAMES[0], F.lit(0))
-    for i, n in enumerate(EVENT_TYPE_NAMES[1:], start=1):
-        expr = expr.when(name == n, F.lit(i))
-    return expr
-
-
 def subject_column(prefix: str, ledger: Column | str, event_type: Column | str,
                    *, single_subject: str | None = None) -> Column:
     """NATS subject for an event (config.go:157-162).

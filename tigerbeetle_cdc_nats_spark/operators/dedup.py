@@ -36,35 +36,6 @@ MINHASH_A = tuple((2 * i + 1) * 12582917 % MINHASH_P for i in range(MINHASH_K))
 MINHASH_B = tuple((i * 4256249 + 1) % MINHASH_P for i in range(MINHASH_K))
 
 
-def minhash_geometry(corpus_size: int, *, threshold: float = 0.5,
-                     background_j: float = 0.1,
-                     detect_j: float = 0.7,
-                     recall: float = 0.95) -> tuple[int, int]:
-    """(k, bands) scaled to the corpus — the 100 TB knob the fixed 16x8
-    default lacks.
-
-    Band width r is the anti-false-positive knob: a band collides for a
-    random pair with prob ~ j^r, so expected spurious candidates are
-    ~ bands * n^2 * background_j^r / 2. Choosing r >= ln(n)/ln(1/j0) keeps
-    n * j0^r <= 1, i.e. expected false candidates per doc O(bands) — the
-    candidate volume stays LINEAR in corpus size instead of quadratic.
-    Band count b is the recall knob: detect pairs at ``detect_j`` with
-    probability >= recall via 1-(1-j^r)^b.
-
-    The registered query keeps the (16, 8) default so its oracle stays
-    byte-identical; at real corpus sizes callers pass
-    ``minhash_signatures(docs, k=k)`` / ``minhash_candidate_pairs(sigs,
-    bands=b, k=k)`` with this function's output.
-    """
-    import math
-
-    n = max(int(corpus_size), 2)
-    r = max(2, math.ceil(math.log(n) / math.log(1.0 / background_j)))
-    p_band = detect_j ** r
-    b = max(1, math.ceil(math.log(1.0 - recall) / math.log(1.0 - p_band)))
-    return r * b, b
-
-
 def hash60(c: Column) -> Column:
     """60-bit integer hash of a string column (md5-prefix, cross-engine)."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")

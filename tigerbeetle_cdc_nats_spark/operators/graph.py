@@ -18,7 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-DAMP_E6 = 850000
 BASE_E6 = 150000
 
 

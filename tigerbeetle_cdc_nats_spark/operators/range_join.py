@@ -15,7 +15,7 @@ shorter grains make more buckets — both linear, never quadratic.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def bucketize_facts(facts: DataFrame, ts_col: str, grain: int) -> DataFrame:

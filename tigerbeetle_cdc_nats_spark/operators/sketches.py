@@ -155,8 +155,7 @@ def hll_registers(df: DataFrame, key: Column,
 def hll_estimate_from_registers(reg: DataFrame,
                                 group_cols: list[str]) -> DataFrame:
     """Harmonic estimate (with linear-counting small range) from a register
-    table — the read side of the sketch; shared by the batch query and the
-    streaming register maintenance."""
+    table — the read side of the sketch."""
     g = reg.groupBy(*group_cols).agg(
         F.count("*").cast("long").alias("nonzero_registers"),
         F.sum("r").cast("long").alias("sum_rho"),

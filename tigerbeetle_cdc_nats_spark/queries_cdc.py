@@ -14,10 +14,7 @@ from tigerbeetle_cdc_nats_spark.functions.events import (
     msg_id_column,
     subject_column,
 )
-from tigerbeetle_cdc_nats_spark.functions.json_codec import (
-    encode_cdc_json,
-    encode_cdc_json_sql,
-)
+from tigerbeetle_cdc_nats_spark.functions.json_codec import encode_cdc_json_sql
 from tigerbeetle_cdc_nats_spark.functions.portable import (
     portable_uint_json,
     portable_uint_sql,

@@ -1,4 +1,4 @@
-"""Fixed schemas for the CDC event envelope, state records, and testdata.
+"""Fixed schemas for the CDC event envelope and the testdata tables.
 
 The CDC envelope mirrors the reference's wire contract exactly — struct tags
 at /root/reference/message.go:43-77 define both the field set and the field
@@ -88,23 +88,6 @@ CDC_EVENT_SCHEMA = T.StructType([
     T.StructField("transfer", TRANSFER_SCHEMA, True),
     T.StructField("debit_account", ACCOUNT_SCHEMA, True),
     T.StructField("credit_account", ACCOUNT_SCHEMA, True),
-])
-
-# ---------------------------------------------------------------------------
-# State records (runner.go:20-31)
-# ---------------------------------------------------------------------------
-
-PROGRESS_SCHEMA = T.StructType([
-    T.StructField("timestamp", T.LongType(), False),   # runner.go:21
-    T.StructField("version", T.StringType(), True),    # runner.go:22
-])
-
-LOCK_SCHEMA = T.StructType([
-    T.StructField("owner", T.StringType(), False),      # runner.go:26
-    T.StructField("hostname", T.StringType(), True),
-    T.StructField("pid", T.IntegerType(), True),
-    T.StructField("version", T.StringType(), True),
-    T.StructField("updated_at", T.StringType(), True),  # RFC3339Nano, runner.go:707
 ])
 
 # ---------------------------------------------------------------------------

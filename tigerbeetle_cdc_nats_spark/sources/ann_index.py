@@ -269,12 +269,6 @@ def read_ann_index(spark: SparkSession, path: str) -> DataFrame:
     return memo_read_parquet(spark, snap, os.path.join(snap, _SKEW_META))
 
 
-def probe_buckets(index: DataFrame, buckets: list[int]) -> DataFrame:
-    """Candidate fetch for a (multi-)probe set: an IN filter on the
-    partition column — prunes to |buckets| directories at the file level."""
-    return index.where(F.col("bucket").isin([int(b) for b in buckets]))
-
-
 def compact_ann_index(spark: SparkSession, path: str) -> None:
     """Replay-duplicate compaction (same lifecycle op as the text
     indexes, sources/dedup_index.compact_minhash_index): at-least-once
@@ -362,46 +356,3 @@ def read_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
     configure(spark)
     return spark.read.parquet(
         os.path.join(iv.current_dir(path), _IVF_CENTROIDS))
-
-
-def append_ivf_index(new_vectors: DataFrame, path: str, *,
-                     dim: int | None = None) -> None:
-    """Online IVF insert: new vectors are assigned to the EXISTING stored
-    centroids (the standard inverted-file insert — centroids stay fixed
-    between re-trainings; centroid_drift_audit quantifies when a rebuild
-    is due) and appended into their cell's partition directory,
-    O(|delta| x k) with no touch of existing partitions."""
-    from tigerbeetle_cdc_nats_spark.queries_similarity import ivf_assign
-
-    spark = new_vectors.sparkSession
-    centv = read_ivf_centroids(spark, path)
-    (ivf_assign(new_vectors, centv, dim=dim)
-     .write.mode("append").partitionBy("cell")
-     .parquet(iv.current_dir(path)))
-
-
-def compact_ivf_index(spark: SparkSession, path: str) -> None:
-    """Replay-duplicate compaction for the IVF index: row identity is
-    (vec_id, cell) — the cell is centroid-determined under the stored
-    (fixed) centroid table, so a replayed insert writes the same cell
-    twice. The centroid sidecar rides INSIDE each snapshot (copied into
-    the new version dir), so a reader pinned to the grace snapshot sees
-    matching vectors + centroids. Published via sources/index_versioning:
-    atomic CURRENT flip, previous snapshot kept as the concurrent-reader
-    grace window."""
-    import os
-    import shutil
-
-    vecs = read_ivf_index(spark, path).dropDuplicates(["vec_id", "cell"])
-    cols = [c for c in vecs.columns if c != "cell"] + ["cell"]
-    live = iv.current_dir(path)
-
-    def write(vdir: str) -> None:
-        vecs.select(*cols).write.mode("overwrite").partitionBy(
-            "cell").parquet(vdir)
-        shutil.copytree(os.path.join(live, _IVF_CENTROIDS),
-                        os.path.join(vdir, _IVF_CENTROIDS))
-        open(os.path.join(vdir, "_SUCCESS"), "a").close()
-
-    iv.publish_version(path, write)
-    spark.catalog.clearCache()

@@ -1,10 +1,5 @@
-"""File-format sources/sinks (SURVEY.md §2.1 S6).
-
-The reference's only wire format is JSON-over-NATS; the batch engine adds
-parquet (columnar, the testdata format) and JSON-lines with EXPLICIT schemas
-— schema inference is disabled by policy: at 100 TB an inference pass is a
-full extra scan, and a drifting inferred schema breaks the fail-fast
-config-diff contract (sources/provision.py).
+"""File-format source (SURVEY.md §2.1 S6): parquet, the testdata format,
+read with an optional EXPLICIT schema.
 """
 
 from __future__ import annotations
@@ -21,74 +16,3 @@ def read_parquet(spark: SparkSession, path: str,
     if schema is not None:
         reader = reader.schema(schema)
     return reader.parquet(path)
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """JSON-lines with a required schema (no inference pass)."""
-    configure(spark)
-    return spark.read.schema(schema).json(path)
-
-
-def write_parquet(df: DataFrame, path: str, *, mode: str = "append",
-                  partition_by: tuple[str, ...] = ()) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def write_jsonl(df: DataFrame, path: str, *, mode: str = "append") -> None:
-    """JSON-lines sink — the batch analogue of the reference's JSON wire
-    format (message.go:146)."""
-    df.write.mode(mode).json(path)
-
-
-def stream_parquet(spark: SparkSession, path: str, schema: T.StructType,
-                   max_files_per_trigger: int = 16) -> DataFrame:
-    """Streaming file source with bounded batch size (the event-count-max
-    batching analogue, config.go:40)."""
-    configure(spark)
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(path)
-    )
-
-
-def read_csv(spark: SparkSession, path: str,
-             schema: T.StructType, *, header: bool = True,
-             sep: str = ",") -> DataFrame:
-    """CSV with an EXPLICIT schema (inference disabled by the same policy
-    as JSONL: an inference pass is a full extra scan at 100 TB, and a
-    drifting inferred schema breaks the fail-fast config-diff contract).
-    mode=FAILFAST so malformed rows stop the job instead of becoming
-    silent nulls."""
-    configure(spark)
-    return (spark.read.schema(schema)
-            .option("header", str(header).lower())
-            .option("sep", sep)
-            .option("mode", "FAILFAST")
-            .csv(path))
-
-
-def write_csv(df: DataFrame, path: str, *, mode: str = "append",
-              header: bool = True, sep: str = ",") -> None:
-    (df.write.mode(mode)
-     .option("header", str(header).lower())
-     .option("sep", sep)
-     .csv(path))
-
-
-def read_orc(spark: SparkSession, path: str,
-             schema: T.StructType | None = None) -> DataFrame:
-    """ORC — the other columnar interchange format; schema optional
-    because ORC carries its own (no inference scan needed)."""
-    configure(spark)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
-
-
-def write_orc(df: DataFrame, path: str, *, mode: str = "append") -> None:
-    df.write.mode(mode).orc(path)

@@ -1,49 +1,11 @@
-"""Physical data layout for the 100 TB event store.
+"""Physical data layout: the z-order (Morton) sort key.
 
-The reference streams into one JetStream subject space; a Spark-native event
-store lays the same data out as date-partitioned (and optionally bucketed)
-parquet so that:
-
-- cursor scans prune whole partitions (the poll's ``ts > cursor`` predicate
-  hits partition values before any file is opened);
-- per-ledger analytics prune on the ledger partition column;
-- repeated account-keyed joins can use bucketing to co-locate both sides
-  and skip the shuffle entirely.
+Sorting a parquet layout by ``zorder_key`` clusters rows on two columns at
+once, so zone-map (row-group min/max) pruning serves predicates on either
+column. ``sql_zorder_key`` is the DuckDB mirror the oracle uses.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-NS_PER_DAY = 86_400_000_000_000
-
-
-def with_partition_columns(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Derive the layout columns: event_date (days since epoch — integer
-    arithmetic on the ns timestamp, no tz conversions) and ledger."""
-    return (
-        events.withColumn("event_date",
-                          F.floor(F.col(ts_col) / NS_PER_DAY).cast("long"))
-        .withColumn("ledger", F.col("user_id") % 10)
-    )
-
-
-def write_event_store(events: DataFrame, path: str, *,
-                      mode: str = "overwrite") -> None:
-    """Date+ledger partitioned layout. At 100 TB this is the difference
-    between scanning ~1/30th of a month and scanning all of it."""
-    (with_partition_columns(events)
-     .write.mode(mode)
-     .partitionBy("event_date", "ledger")
-     .parquet(path))
-
-
-def read_event_store(spark: SparkSession, path: str) -> DataFrame:
-    from tigerbeetle_cdc_nats_spark.session import configure
-
-    configure(spark)
-    return spark.read.parquet(path)
-
 
 #: Bits per dimension in the z-order key (20-bit key total).
 ZORDER_BITS = 10

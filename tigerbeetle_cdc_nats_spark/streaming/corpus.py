@@ -103,34 +103,6 @@ def ingest_pipeline(docs: DataFrame, *, watermark: str = "10 minutes",
                         min_tokens=min_tokens)
 
 
-def normalized_dedup_stream(docs: DataFrame, *,
-                            watermark: str = "10 minutes",
-                            event_time_col: str = "ingest_time",
-                            text_col: str = "text") -> DataFrame:
-    """Online NORMALIZATION-AWARE dedup: drop re-ingests whose canonical
-    form (lowercase, strip non-[a-z0-9 ], collapse whitespace — the
-    C4/RefinedWeb 'fuzzy exact' normalizer) was already seen within the
-    watermark horizon.
-
-    The key is the same 60-bit ``norm_h`` the batch ``normalized_dedup``
-    query computes, so online and offline verdicts agree bit-for-bit:
-    a crawler re-fetching a page with changed capitalization/punctuation
-    is gated here; WORD-level edits remain the batch near-dup pass's job
-    (minhash/winnowing), exactly as the module docstring splits online
-    vs offline responsibility. State: one entry per unique normalized
-    hash inside the window — bounded by unique-content rate x window.
-    """
-    from tigerbeetle_cdc_nats_spark.operators import dedup as dd
-    from tigerbeetle_cdc_nats_spark.queries_corpus import normalize_text
-
-    out = (docs.withColumn("norm_h",
-                           dd.hash60(normalize_text(F.col(text_col))))
-           .withWatermark(event_time_col, watermark))
-    if docs.isStreaming:
-        return out.dropDuplicatesWithinWatermark(["norm_h"])
-    return out.dropDuplicates(["norm_h"])
-
-
 def _note_batch(index_path: str, batch_id: int, *,
                 suspect_if_missing: bool = False) -> bool:
     """Record ``batch_id`` in the index's ``.last_batch`` marker and

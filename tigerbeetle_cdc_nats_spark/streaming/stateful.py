@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 BALANCE_STATE_SCHEMA = "debits_cents LONG, credits_cents LONG, n_events LONG"
@@ -119,97 +119,6 @@ def rate_limited_counts(events: DataFrame, limit: int = 4096,
             fn,
             outputStructType=RATE_OUTPUT_SCHEMA,
             stateStructType=RATE_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-HH_STATE_SCHEMA = "items ARRAY<LONG>, counts ARRAY<LONG>, errs ARRAY<LONG>"
-HH_OUTPUT_SCHEMA = T.StructType([
-    T.StructField("shard", T.LongType()),
-    T.StructField("item", T.LongType()),
-    T.StructField("est_count", T.LongType()),
-    T.StructField("max_err", T.LongType()),
-])
-
-#: Tracked items per shard summary — state is O(capacity) per shard
-#: forever, regardless of stream volume or item cardinality.
-HH_CAPACITY = 64
-
-
-def _hh_merge(summary: dict, errs: dict, item: int, c: int,
-              capacity: int) -> None:
-    """SpaceSaving batch-increment: known items add exactly; a new item
-    over capacity evicts the current minimum and inherits its count as
-    the error bound (Metwally et al.'s update generalized to +c). Ties
-    evict the smallest (count, item) for cross-run determinism."""
-    if item in summary:
-        summary[item] += c
-        return
-    if len(summary) < capacity:
-        summary[item] = c
-        errs[item] = 0
-        return
-    evict = min(summary, key=lambda k: (summary[k], k))
-    floor = summary.pop(evict)
-    errs.pop(evict, None)
-    summary[item] = floor + c
-    errs[item] = floor
-
-
-def _hh_fn(key, pdfs: Iterator, state: GroupState,
-           capacity: int = HH_CAPACITY) -> Iterator:
-    import pandas as pd
-
-    if state.exists:
-        items, counts, errbs = state.get
-        summary = dict(zip(items, counts))
-        errs = dict(zip(items, errbs))
-    else:
-        summary, errs = {}, {}
-    for pdf in pdfs:
-        vc = pdf["user_id"].value_counts()
-        # sorted item order makes eviction sequences deterministic
-        for item in sorted(int(i) for i in vc.index):
-            _hh_merge(summary, errs, item, int(vc[item]), capacity)
-    keys = sorted(summary)
-    state.update((
-        [int(k) for k in keys],
-        [int(summary[k]) for k in keys],
-        [int(errs.get(k, 0)) for k in keys],
-    ))
-    yield pd.DataFrame({
-        "shard": [key[0]] * len(keys),
-        "item": keys,
-        "est_count": [summary[k] for k in keys],
-        "max_err": [errs.get(k, 0) for k in keys],
-    })
-
-
-def streaming_heavy_hitters(events: DataFrame, *,
-                            n_shards: int = 32) -> DataFrame:
-    """Streaming heavy hitters: one SpaceSaving summary per shard carried
-    across micro-batches — the streaming twin of the batch CMS/heavy-
-    hitter sketches (operators/sketches.py).
-
-    Scale shape: state per shard is a FIXED-capacity (item, count, err)
-    summary — memory is O(n_shards * capacity) forever, independent of
-    event volume and item cardinality (the property exact per-key
-    streaming counts lack). Shards parallelize the merge; the classic
-    SpaceSaving guarantees hold per shard (true_count <= est_count <=
-    true_count + max_err, and any item with shard frequency >
-    shard_volume / capacity is guaranteed tracked); a driver-side
-    roll-up sums per-item est_count/max_err across shards for the global
-    view, exactly like merging CMS rows."""
-    shard = (F.col("user_id") % n_shards).cast("long").alias("shard")
-    return (
-        events.select(shard, "user_id")
-        .groupBy("shard")
-        .applyInPandasWithState(
-            _hh_fn,
-            outputStructType=HH_OUTPUT_SCHEMA,
-            stateStructType=HH_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
