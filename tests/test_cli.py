@@ -50,3 +50,59 @@ def test_module_invocation():
 def test_version_flag_exits_zero(capsys):
     assert run_cli(["--version"]) == 0
     assert "0.1.0" in capsys.readouterr().out
+
+
+def test_once_drains_a_multi_batch_backlog(spark, tmp_path):
+    """--once is the reference's poll-until-empty loop (runner.go:126-169):
+    one call drains a backlog of more files than one micro-batch admits
+    (maxFilesPerTrigger=16), replays included, and commits the cursor at
+    the backlog's max ts."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tigerbeetle_cdc_nats_spark.streaming.pipeline import read_progress
+
+    base_ts, n_files, per_file = 1_704_067_200_000_000_000, 20, 10
+    src = tmp_path / "source"
+    os.makedirs(src)
+
+    def write_file(name, ids):
+        pq.write_table(pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array([base_ts + i * 1_000_000 for i in ids],
+                           pa.int64()),
+            "user_id": pa.array([i % 7 for i in ids], pa.int64()),
+            "event_type": ["purchase"] * len(ids),
+            "value": pa.array([float(i) for i in ids], pa.float64()),
+            "props": ['{"k": 1}'] * len(ids),
+        }), str(src / name))
+
+    for f in range(n_files):
+        write_file(f"part-{f:03d}.parquet",
+                   list(range(f * per_file, (f + 1) * per_file)))
+    # at-least-once upstream: two files replay the first file's events
+    for f in (n_files, n_files + 1):
+        write_file(f"part-{f:03d}.parquet", list(range(per_file)))
+    n_unique = n_files * per_file
+
+    sink, cursor = tmp_path / "sink", tmp_path / "cursor"
+    # run_cli builds its session through get_spark, which resets the
+    # shared session's shuffle partitions; restore them for later tests
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        assert run_cli(["--cluster-id", "1", "--source-dir", str(src),
+                        "--sink-dir", str(sink),
+                        "--checkpoint-dir", str(tmp_path / "chk"),
+                        "--cursor-dir", str(cursor), "--once"]) == 0
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+
+    batches = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
+    assert len(batches) >= 2  # 22 files at 16 per micro-batch
+    out = spark.read.parquet(str(sink))
+    assert out.count() == n_unique
+    assert out.select("msg_id").distinct().count() == n_unique
+    assert read_progress(spark, str(cursor)) == (
+        base_ts + (n_unique - 1) * 1_000_000)

@@ -116,16 +116,17 @@ def _stream_messages(url: str):
 
 
 def _publish_batch(spark, events_path, chk, metrics_dir):
-    """Drain the CDC source through the native publish writer once."""
+    """Drain the events store through the native publish writer once."""
     from pyspark.sql import functions as F
 
-    from tigerbeetle_cdc_nats_spark.sources.cdc_source import read_cdc_stream
+    from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
     from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
         make_publish_datasource,
     )
 
     spark.dataSource.register(make_publish_datasource())
-    events = read_cdc_stream(spark, events_path, event_count_max=64)
+    events = (spark.readStream.schema(EVENTS_SCHEMA)
+              .option("maxFilesPerTrigger", 1).parquet(events_path))
     out = events.select(
         F.concat_ws(".", F.lit(SUBJECT_PREFIX), F.col("event_type"))
         .alias("subject"),
@@ -168,7 +169,8 @@ def test_publish_resume_exact_counts(spark, tmp_path, broker):
     chk = str(tmp_path / "chk")
     metrics = str(tmp_path / "metrics")
 
-    _write_events(spark, src, 0, 100)
+    for lo in range(0, 100, 25):  # one micro-batch per file
+        _write_events(spark, src, lo, lo + 25)
     q = _publish_batch(spark, src, chk, metrics)
     try:
         _wait_for_count(broker, 100)
@@ -178,7 +180,8 @@ def test_publish_resume_exact_counts(spark, tmp_path, broker):
     assert _stream_messages(broker) == 100
 
     # events arriving while the pipeline is down (integration_test.go:206)
-    _write_events(spark, src, 100, 150)
+    for lo in range(100, 150, 25):
+        _write_events(spark, src, lo, lo + 25)
     q = _publish_batch(spark, src, chk, metrics)
     try:
         _wait_for_count(broker, 150)

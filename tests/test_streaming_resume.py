@@ -195,24 +195,3 @@ def test_expired_lease_takeover_includes_holder_metadata(paths):
         rec = json.load(f)
     assert rec["owner"] == "new-holder"
     pl.release_lock(lock2)
-
-
-def test_resume_through_first_class_source_offsets(spark, paths):
-    """Same resume contract, but through the Python DataSource
-    (sources/cdc_source.py): progress recovery flows through REAL source
-    offsets in the checkpoint log — no file-source bookkeeping."""
-    cfg = validate(CdcConfig(cluster_id="1"))
-
-    _write_events(spark, paths.source_dir, 0, 50, BASE_TS)
-    pl.run_until_caught_up(spark, cfg, paths, use_cdc_source=True)
-    assert spark.read.parquet(paths.sink_dir).count() == 50
-
-    # stopped; events arrive while down; restart from the same checkpoint
-    _write_events(spark, paths.source_dir, 50, 30, BASE_TS + 10**9)
-    pl.run_until_caught_up(spark, cfg, paths, use_cdc_source=True)
-
-    sink = spark.read.parquet(paths.sink_dir)
-    assert sink.count() == 80  # exactly once across the restart
-    assert sink.select("msg_id").distinct().count() == 80
-    cursor = pl.read_progress(spark, paths.cursor_dir)
-    assert cursor == BASE_TS + 10**9 + 29 * 1_000_000

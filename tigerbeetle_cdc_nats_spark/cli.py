@@ -8,10 +8,10 @@ equivalents (``--source-dir``/``--sink-dir``/``--checkpoint-dir`` replace
 the TigerBeetle addresses + NATS URL for the file-backed pipeline).
 
 Inert flags: these are parsed and validated but nothing reads them.
-``--event-count-max`` reaches only the cursor DataSource branch of
-``streaming.pipeline.build_query``, which the CLI never takes; its file
-source batches by ``maxFilesPerTrigger=16`` instead, so the flag has no
-effect here. ``--requests-per-second-limit``, ``--progress-every-events``,
+``--event-count-max`` has no effect: the pipeline's one source, Spark's
+parquet file source, batches by ``maxFilesPerTrigger=16``. A row bound
+would need a source with admission control, which Python DataSources lack
+in Spark 4.1. ``--requests-per-second-limit``, ``--progress-every-events``,
 ``--publish-mode``, ``--publish-ack-timeout``,
 ``--publish-async-max-pending``, ``--provision``, ``--stream-update``,
 ``--stream-replicas`` and ``--kv-replicas`` are likewise never read.

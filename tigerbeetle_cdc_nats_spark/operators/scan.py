@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-DEFAULT_EVENT_COUNT_MAX = 4096  # config.go:40
+from tigerbeetle_cdc_nats_spark.config import DEFAULT_EVENT_COUNT_MAX
 
 
 def _ns_bound_literal(ts_type: str, ns: int, *, ceil: bool) -> Column:

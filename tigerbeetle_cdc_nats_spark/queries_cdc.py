@@ -320,9 +320,9 @@ FROM ev WHERE ts >= {CURSOR_NS + 1} ORDER BY ts LIMIT 4096""",
         "rows survive a tie at the LIMIT cut can differ)",
 )
 def q_cdc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One poll through the first-class source's batch reader.
+    """One poll through the native source's batch reader.
 
-    The (startTs, endTs] range is the source's own offset algebra; the
+    The (startTs, endTs] range is the source's cursor arithmetic; the
     top-k limit lowers to TakeOrderedAndProject over the pruned scan —
     the reference's Limit applied after the cursor cut.
     """
@@ -358,9 +358,8 @@ def q_cdc_backlog_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One aggregation over the cursor-pruned scan.
 
     Scale shape: the ts > cursor predicate pushes to the parquet scan
-    (row groups before the cursor are never read — the same pruning the
-    streaming source's latestOffset uses), and the result is a single
-    map-side-combined global aggregate.
+    (row groups before the cursor are never read), and the result is a
+    single map-side-combined global aggregate.
     """
     from tigerbeetle_cdc_nats_spark.config import DEFAULT_EVENT_COUNT_MAX
 

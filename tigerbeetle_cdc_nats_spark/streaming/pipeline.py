@@ -380,38 +380,25 @@ def make_batch_sink(spark: SparkSession, paths: StreamPaths):
 
 def build_query(spark: SparkSession, cfg: CdcConfig, paths: StreamPaths,
                 *, trigger_available_now: bool = False,
-                trigger_seconds: float | None = None,
-                use_cdc_source: bool = False):
+                trigger_seconds: float | None = None):
     """Assemble the streaming query: source -> transform -> foreachBatch.
 
-    ``use_cdc_source=True`` reads through the first-class timestamp-cursor
-    DataSource (sources/cdc_source.py) — progress recovery then flows
-    through real source offsets in the checkpoint log and the per-batch
-    event limit is the reference's Limit (runner.go:149). The default file
-    source remains for deployments whose event store is append-by-files.
+    The source is Spark's parquet file source over ``paths.source_dir``;
+    its offset and commit logs in the checkpoint carry resume, and
+    ``maxFilesPerTrigger`` bounds a micro-batch.
 
     ``cfg.timestamp_last_override`` mirrors --timestamp-last: when set, rows
     at or below the override are filtered at the source (runner.go:392-398);
     otherwise the checkpoint resumes exactly where it stopped.
     """
-    if use_cdc_source:
-        from tigerbeetle_cdc_nats_spark.sources.cdc_source import (
-            read_cdc_stream,
-        )
-
-        stream = read_cdc_stream(
-            spark, paths.source_dir,
-            start_ts=cfg.timestamp_last_override,
-            event_count_max=cfg.event_count_max)
-    else:
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "16")  # batching ~ event-count-max
-            .parquet(paths.source_dir)
-        )
-        if cfg.timestamp_last_override is not None:
-            stream = stream.where(
-                F.col("ts") > F.lit(cfg.timestamp_last_override))
+    stream = (
+        spark.readStream.schema(EVENTS_SCHEMA)
+        .option("maxFilesPerTrigger", "16")  # batching ~ event-count-max
+        .parquet(paths.source_dir)
+    )
+    if cfg.timestamp_last_override is not None:
+        stream = stream.where(
+            F.col("ts") > F.lit(cfg.timestamp_last_override))
 
     transformed = transform_events(stream, cfg)
     writer = (
@@ -429,16 +416,11 @@ def build_query(spark: SparkSession, cfg: CdcConfig, paths: StreamPaths,
 
 
 def run_until_caught_up(spark: SparkSession, cfg: CdcConfig,
-                        paths: StreamPaths, timeout_s: float = 120.0,
-                        use_cdc_source: bool = False) -> None:
+                        paths: StreamPaths, timeout_s: float = 120.0) -> None:
     """One catch-up cycle (Trigger.AvailableNow): process everything
     currently in the source, then stop — the batch-mode analogue of the
-    reference's poll-until-empty loop. (With ``use_cdc_source`` the Python
-    DataSource runs one rate-limited poll per cycle — Spark's
-    AvailableNow falls back to single-batch for v2 Python sources — so a
-    full drain is cycles-until-quiescent, exactly the reference loop.)"""
-    q = build_query(spark, cfg, paths, trigger_available_now=True,
-                    use_cdc_source=use_cdc_source).start()
+    reference's poll-until-empty loop."""
+    q = build_query(spark, cfg, paths, trigger_available_now=True).start()
     q.awaitTermination(timeout_s)
     if q.isActive:
         q.stop()
