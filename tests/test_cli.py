@@ -5,6 +5,8 @@ from __future__ import annotations
 import subprocess
 import sys
 
+import pytest
+
 from tigerbeetle_cdc_nats_spark.cli import run_cli
 
 
@@ -52,6 +54,42 @@ def test_version_flag_exits_zero(capsys):
     assert "0.1.0" in capsys.readouterr().out
 
 
+@pytest.mark.parametrize("flag", [
+    ["--event-count-max", "100"],
+    ["--progress-every-events", "10"],
+    ["--requests-per-second-limit", "50"],
+    ["--provision", "false"],
+    ["--stream-update"],
+    ["--stream-replicas", "3"],
+    ["--kv-replicas", "3"],
+], ids=lambda flag: flag[0])
+def test_inert_flag_fails_fast(capsys, flag):
+    """A flag the pipeline cannot act on exits 2 with the reason when it is
+    set away from its default; the default stays accepted."""
+    assert run_cli(["--cluster-id", "1", *flag]) == 2
+    assert f"{flag[0]} has no effect here: " in capsys.readouterr().err
+
+
+def test_inert_flags_at_their_defaults_pass(capsys):
+    assert run_cli(["--cluster-id", "1", "--event-count-max", "4096",
+                    "--progress-every-events", "0", "--provision", "true",
+                    "--stream-replicas", "1", "--kv-replicas", "1"]) == 0
+
+
+def test_get_spark_keeps_a_running_sessions_confs(spark):
+    """Builder confs apply only when get_spark creates the session: a
+    second call (an in-process run_cli) gets the running session with its
+    confs as they were."""
+    from tigerbeetle_cdc_nats_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    again = get_spark(app_name="cli", shuffle_partitions=int(before) + 5)
+    assert again.sparkContext is spark.sparkContext
+    assert again.conf.get(key) == spark.conf.get(key) == before
+    assert again.sparkContext.appName == spark.sparkContext.appName
+
+
 def test_once_drains_a_multi_batch_backlog(spark, tmp_path):
     """--once is the reference's poll-until-empty loop (runner.go:126-169):
     one call drains a backlog of more files than one micro-batch admits
@@ -88,16 +126,10 @@ def test_once_drains_a_multi_batch_backlog(spark, tmp_path):
     n_unique = n_files * per_file
 
     sink, cursor = tmp_path / "sink", tmp_path / "cursor"
-    # run_cli builds its session through get_spark, which resets the
-    # shared session's shuffle partitions; restore them for later tests
-    partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert run_cli(["--cluster-id", "1", "--source-dir", str(src),
-                        "--sink-dir", str(sink),
-                        "--checkpoint-dir", str(tmp_path / "chk"),
-                        "--cursor-dir", str(cursor), "--once"]) == 0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert run_cli(["--cluster-id", "1", "--source-dir", str(src),
+                    "--sink-dir", str(sink),
+                    "--checkpoint-dir", str(tmp_path / "chk"),
+                    "--cursor-dir", str(cursor), "--once"]) == 0
 
     batches = [d for d in os.listdir(sink) if d.startswith("batch_id=")]
     assert len(batches) >= 2  # 22 files at 16 per micro-batch

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 
 from tigerbeetle_cdc_nats_spark.config import (
+    DEFAULT_EVENT_COUNT_MAX,
     CdcConfig,
     ConfigError,
     validate,
@@ -18,7 +19,7 @@ def test_defaults_and_derived_names():
     assert cfg.event_stream == "TB_CDC_EVENTS_7"
     assert cfg.progress_bucket == "TB_CDC_PROGRESS_7"
     assert cfg.lock_bucket == "TB_CDC_LOCK_7"
-    assert cfg.event_count_max == 4096
+    assert DEFAULT_EVENT_COUNT_MAX == 4096
     assert cfg.publish_mode == "async"
     assert cfg.publish_async_max_pending == 4096
     assert cfg.dedupe_window_s == 120.0
@@ -55,10 +56,10 @@ def test_subject_prefix_strips_exactly_one_trailing_dot():
     (CdcConfig(), "--cluster-id is required"),
     (CdcConfig(cluster_id="abc"), "invalid --cluster-id"),
     (CdcConfig(cluster_id=str(2**128)), "exceeds 128 bits"),
-    (CdcConfig(cluster_id="1", event_count_max=0), "--event-count-max"),
+    ((CdcConfig(cluster_id="1"), {"event_count_max": 0}), "--event-count-max"),
     (CdcConfig(cluster_id="1", idle_interval_s=0), "--idle-interval-ms"),
-    (CdcConfig(cluster_id="1", stream_replicas=6), "--stream-replicas"),
-    (CdcConfig(cluster_id="1", kv_replicas=0), "--kv-replicas"),
+    ((CdcConfig(cluster_id="1"), {"stream_replicas": 6}), "--stream-replicas"),
+    ((CdcConfig(cluster_id="1"), {"kv_replicas": 0}), "--kv-replicas"),
     (CdcConfig(cluster_id="1", lock_ttl_s=0), "--lock-ttl"),
     (CdcConfig(cluster_id="1", lock_refresh_s=0), "--lock-refresh"),
     # refresh >= ttl rejected (config.go:273-275)
@@ -68,7 +69,7 @@ def test_subject_prefix_strips_exactly_one_trailing_dot():
     (CdcConfig(cluster_id="1", publish_ack_timeout_s=0), "--publish-ack-timeout"),
     (CdcConfig(cluster_id="1", publish_async_max_pending=0),
      "--publish-async-max-pending"),
-    (CdcConfig(cluster_id="1", provision=False, stream_update=True),
+    ((CdcConfig(cluster_id="1"), {"provision": False, "stream_update": True}),
      "--stream-update requires --provision=true"),
     (CdcConfig(cluster_id="1", subject_prefix="  "),
      "--subject-prefix cannot be empty"),
@@ -78,15 +79,17 @@ def test_subject_prefix_strips_exactly_one_trailing_dot():
     (CdcConfig(cluster_id="1", subject_mode="bogus"), "--subject-mode"),
     (CdcConfig(cluster_id="1", publish_mode="bogus"), "--publish-mode"),
     (CdcConfig(cluster_id="1", nats_url=""), "--nats-url"),
-    (CdcConfig(cluster_id="1", requests_per_second_limit=0),
+    ((CdcConfig(cluster_id="1"), {"requests_per_second_limit": 0}),
      "--requests-per-second-limit"),
     # negatives rejected too (the reference's uint32 flag parse)
-    (CdcConfig(cluster_id="1", requests_per_second_limit=-5),
+    ((CdcConfig(cluster_id="1"), {"requests_per_second_limit": -5}),
      "--requests-per-second-limit"),
 ])
 def test_rejections(bad, msg):
+    # a (config, inert flags) pair: the inert flags are validate's keywords
+    cfg, inert = bad if isinstance(bad, tuple) else (bad, {})
     with pytest.raises(ConfigError, match=msg.replace("[", r"\[")):
-        validate(bad)
+        validate(cfg, **inert)
 
 
 def test_parse_addresses():

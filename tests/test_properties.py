@@ -50,12 +50,10 @@ def test_portable_encoding_matches_model(spark, values):
         alphabet=st.characters(whitelist_categories=("Ll", "Nd")),
         min_size=1, max_size=20,
     ),
-    every=st.integers(0, 2**32 - 1),
 )
-def test_validate_idempotent(cluster, ttl, prefix, every):
+def test_validate_idempotent(cluster, ttl, prefix):
     cfg = CdcConfig(cluster_id=str(cluster), lock_ttl_s=ttl,
-                    lock_refresh_s=ttl / 2, subject_prefix=prefix,
-                    progress_every_events=every)
+                    lock_refresh_s=ttl / 2, subject_prefix=prefix)
     once = validate(cfg)
     assert validate(once) == once
 

@@ -7,14 +7,20 @@ concept carries over; transport-specific flags map to their Spark
 equivalents (``--source-dir``/``--sink-dir``/``--checkpoint-dir`` replace
 the TigerBeetle addresses + NATS URL for the file-backed pipeline).
 
-Inert flags: these are parsed and validated but nothing reads them.
-``--event-count-max`` has no effect: the pipeline's one source, Spark's
-parquet file source, batches by ``maxFilesPerTrigger=16``. A row bound
-would need a source with admission control, which Python DataSources lack
-in Spark 4.1. ``--requests-per-second-limit``, ``--progress-every-events``,
-``--publish-mode``, ``--publish-ack-timeout``,
-``--publish-async-max-pending``, ``--provision``, ``--stream-update``,
-``--stream-replicas`` and ``--kv-replicas`` are likewise never read.
+Without ``--once`` the pipeline runs as in the reference's poll loop
+(runner.go:126-169): micro-batches run back to back while input waits, and
+``--idle-interval-ms`` is the sleep after a poll that found nothing
+(``spark.sql.streaming.pollingDelay``), not a fixed trigger tick.
+``--once`` drains what is there with ``Trigger.AvailableNow`` and exits.
+
+Inert flags: ``--event-count-max``, ``--progress-every-events``,
+``--requests-per-second-limit``, ``--provision``, ``--stream-update``,
+``--stream-replicas`` and ``--kv-replicas`` are parsed and get the
+reference's validators, but the pipeline cannot act on them, so any value
+other than the default exits 2 with the reason (``config.INERT_FLAGS``).
+``--publish-mode``, ``--publish-ack-timeout`` and
+``--publish-async-max-pending`` are validated and kept in the config, but
+the parquet sink does not read them.
 """
 
 from __future__ import annotations
@@ -22,7 +28,12 @@ from __future__ import annotations
 import argparse
 import sys
 
-from tigerbeetle_cdc_nats_spark.config import CdcConfig, ConfigError, validate
+from tigerbeetle_cdc_nats_spark.config import (
+    INERT_FLAGS,
+    CdcConfig,
+    ConfigError,
+    validate,
+)
 
 
 def build_parser() -> argparse.ArgumentParser:
@@ -86,19 +97,12 @@ def config_from_args(ns: argparse.Namespace) -> CdcConfig:
         lock_ttl_s=ns.lock_ttl,
         lock_refresh_s=ns.lock_refresh,
         dedupe_window_s=ns.dedupe_window,
-        event_count_max=ns.event_count_max,
-        progress_every_events=ns.progress_every_events,
         idle_interval_s=ns.idle_interval_ms / 1000.0,
         publish_mode=ns.publish_mode,
         publish_ack_timeout_s=ns.publish_ack_timeout,
         publish_async_max_pending=ns.publish_async_max_pending,
-        stream_replicas=ns.stream_replicas,
-        kv_replicas=ns.kv_replicas,
-        provision=ns.provision,
-        stream_update=ns.stream_update,
-        requests_per_second_limit=ns.requests_per_second_limit,
         timestamp_last_override=ns.timestamp_last,
-    ))
+    ), **{name: getattr(ns, name) for name in INERT_FLAGS})
 
 
 def run_cli(args: list[str]) -> int:

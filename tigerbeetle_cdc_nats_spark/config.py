@@ -71,17 +71,10 @@ class CdcConfig:
     lock_ttl_s: float = DEFAULT_LOCK_TTL_S
     lock_refresh_s: float = DEFAULT_LOCK_REFRESH_S
     dedupe_window_s: float = DEFAULT_DEDUPE_WINDOW_S
-    event_count_max: int = DEFAULT_EVENT_COUNT_MAX
-    progress_every_events: int = 0
     idle_interval_s: float = DEFAULT_IDLE_INTERVAL_S
     publish_mode: str = PUBLISH_MODE_ASYNC
     publish_ack_timeout_s: float = DEFAULT_PUBLISH_ACK_TIMEOUT_S
     publish_async_max_pending: int = DEFAULT_PUBLISH_ASYNC_MAX_PENDING
-    stream_replicas: int = 1
-    kv_replicas: int = 1
-    provision: bool = True
-    stream_update: bool = False
-    requests_per_second_limit: int | None = None
     timestamp_last_override: int | None = None
 
     def subject_for_event(self, ledger: int, event_type: str) -> str:
@@ -95,23 +88,55 @@ class CdcConfig:
         return f"{self.cluster_id}/{timestamp}"
 
 
-def validate(cfg: CdcConfig) -> CdcConfig:
+_NATS_ONLY = ("the pipeline provisions no JetStream stream or KV bucket: "
+              "its sink, checkpoint and cursor are directories")
+#: Reference flags this pipeline parses and validates but cannot act on:
+#: flag -> (default, why it has no effect). A non-default value is
+#: rejected, so a setting nothing reads never looks accepted.
+INERT_FLAGS = {
+    "event_count_max": (
+        DEFAULT_EVENT_COUNT_MAX,
+        "the parquet file source batches by maxFilesPerTrigger=16; a row "
+        "bound needs a source with admission control, which Python "
+        "DataSources lack in Spark 4.1"),
+    "progress_every_events": (
+        0, "the cursor is committed once per micro-batch, after its publish"),
+    "requests_per_second_limit": (
+        None, "the source reads files and sends no requests to limit"),
+    "provision": (True, _NATS_ONLY),
+    "stream_update": (False, _NATS_ONLY),
+    "stream_replicas": (1, _NATS_ONLY),
+    "kv_replicas": (1, _NATS_ONLY),
+}
+
+
+def validate(cfg: CdcConfig, **inert) -> CdcConfig:
     """Apply parseConfig's validation + derivation (config.go:220-347).
     Returns the resolved config; raises ConfigError with the reference's
-    message on the same inputs the reference rejects."""
+    message on the same inputs the reference rejects.
+
+    ``inert`` takes values of the ``INERT_FLAGS`` (absent ones are their
+    defaults): they get the reference's validators, and then a value other
+    than the default is rejected with the reason it would have no effect."""
+    flags = {name: default for name, (default, _) in INERT_FLAGS.items()}
+    unknown = inert.keys() - flags.keys()
+    if unknown:
+        raise TypeError(f"not an inert flag: {sorted(unknown)}")
+    flags.update(inert)
+
     if not cfg.cluster_id:
         raise ConfigError("--cluster-id is required")
     cluster_decimal = parse_uint128_decimal(cfg.cluster_id)
 
-    if not (1 <= cfg.event_count_max <= MAX_U32):
+    if not (1 <= flags["event_count_max"] <= MAX_U32):
         raise ConfigError(f"--event-count-max must be in [1, {MAX_U32}]")
-    if not (0 <= cfg.progress_every_events <= MAX_U32):
+    if not (0 <= flags["progress_every_events"] <= MAX_U32):
         raise ConfigError(f"--progress-every-events must be in [0, {MAX_U32}]")
     if cfg.idle_interval_s <= 0:
         raise ConfigError("--idle-interval-ms must be greater than zero")
-    if not (1 <= cfg.stream_replicas <= MAX_REPLICA_COUNT):
+    if not (1 <= flags["stream_replicas"] <= MAX_REPLICA_COUNT):
         raise ConfigError(f"--stream-replicas must be in [1, {MAX_REPLICA_COUNT}]")
-    if not (1 <= cfg.kv_replicas <= MAX_REPLICA_COUNT):
+    if not (1 <= flags["kv_replicas"] <= MAX_REPLICA_COUNT):
         raise ConfigError(f"--kv-replicas must be in [1, {MAX_REPLICA_COUNT}]")
     if cfg.lock_ttl_s <= 0:
         raise ConfigError("--lock-ttl must be greater than zero")
@@ -125,7 +150,7 @@ def validate(cfg: CdcConfig) -> CdcConfig:
         raise ConfigError("--publish-ack-timeout must be greater than zero")
     if cfg.publish_async_max_pending <= 0:
         raise ConfigError("--publish-async-max-pending must be greater than zero")
-    if not cfg.provision and cfg.stream_update:
+    if not flags["provision"] and flags["stream_update"]:
         raise ConfigError("--stream-update requires --provision=true")
 
     mode = cfg.subject_mode.strip().lower()
@@ -150,10 +175,15 @@ def validate(cfg: CdcConfig) -> CdcConfig:
 
     if not cfg.nats_url:
         raise ConfigError("--nats-url cannot be empty")
-    if cfg.requests_per_second_limit is not None and cfg.requests_per_second_limit <= 0:
+    rps = flags["requests_per_second_limit"]
+    if rps is not None and rps <= 0:
         # the reference parses this as uint32, so negatives are rejected at
         # flag-parse time; zero is rejected by its own validation.
         raise ConfigError("--requests-per-second-limit must be a positive integer")
+    for name, (default, why) in INERT_FLAGS.items():
+        if flags[name] != default:
+            raise ConfigError(
+                f"--{name.replace('_', '-')} has no effect here: {why}")
 
     # Derived resource names (config.go:330-343).
     derived = {}

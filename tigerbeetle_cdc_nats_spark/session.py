@@ -118,6 +118,16 @@ def configure(spark: SparkSession) -> SparkSession:
 def get_spark(app_name: str = "tigerbeetle-cdc-nats-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """The process's Spark session, passed through ``configure``.
+
+    The builder confs below apply only when this call creates the session.
+    A running session is returned with its confs as they are: a second
+    call (an in-process ``run_cli``, say) must not reset its caller's
+    shuffle partitions, master or app name."""
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        return configure(SparkSession.builder.getOrCreate())
     cores = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

@@ -4,8 +4,12 @@ Reference mapping (runner.go:49-170, 425-466):
 
 | reference                                   | here                            |
 |---------------------------------------------|---------------------------------|
-| poll loop + idle backoff (runner.go:126-169)| micro-batch trigger             |
-| cursor recovery (runner.go:388-410)         | checkpointLocation (+ override) |
+| poll loop + idle backoff (runner.go:126-169)| back-to-back micro-batches;     |
+|                                             | pollingDelay = idle interval    |
+|                                             | after an empty poll             |
+| cursor recovery (runner.go:388-410)         | checkpointLocation (+ override);|
+|                                             | FileSystem-rename commits on a  |
+|                                             | local checkpoint                |
 | chunked publish+checkpoint (425-466)        | foreachBatch: one write with    |
 |                                             | observed count + max ts, then   |
 |                                             | a driver-written cursor record  |
@@ -378,6 +382,16 @@ def make_batch_sink(spark: SparkSession, paths: StreamPaths):
     return sink
 
 
+#: Spark's checkpoint file manager over the Hadoop FileSystem API: it
+#: commits by ``FileSystem.rename`` (``File.renameTo`` on the local
+#: filesystem, atomic on POSIX). Spark's default goes through FileContext,
+#: whose local rename starts a ``readlink`` process per call when Hadoop's
+#: native library is absent.
+FS_CHECKPOINT_MANAGER = ("org.apache.spark.sql.execution.streaming."
+                         "checkpointing.FileSystemBasedCheckpointFileManager")
+_CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+
+
 def build_query(spark: SparkSession, cfg: CdcConfig, paths: StreamPaths,
                 *, trigger_available_now: bool = False,
                 trigger_seconds: float | None = None):
@@ -390,7 +404,29 @@ def build_query(spark: SparkSession, cfg: CdcConfig, paths: StreamPaths,
     ``cfg.timestamp_last_override`` mirrors --timestamp-last: when set, rows
     at or below the override are filtered at the source (runner.go:392-398);
     otherwise the checkpoint resumes exactly where it stopped.
+
+    Two streaming confs are set on ``spark``'s session; ``start()`` reads
+    them, so they hold for the query from then on:
+
+    - ``spark.sql.streaming.checkpointFileManagerClass`` is
+      ``FS_CHECKPOINT_MANAGER`` when the checkpoint dir is on the local
+      filesystem. The offset, commit and source logs and the state store's
+      delta and checksum files then commit by ``FileSystem.rename`` instead
+      of a FileContext rename that starts a ``readlink`` process each time.
+      Any other scheme keeps Spark's FileContext default, which gives
+      atomic overwrite on HDFS-like stores.
+    - ``spark.sql.streaming.pollingDelay`` is ``trigger_seconds`` when it is
+      set and the trigger is not AvailableNow. The query runs on the default
+      trigger: a micro-batch starts as soon as the previous one commits
+      while data is waiting, and the query sleeps ``trigger_seconds`` only
+      after a poll that found nothing (the reference's idle backoff,
+      runner.go:156-164).
     """
+    fs, _ = _hadoop_fs(spark, paths.checkpoint_dir)
+    if fs.getScheme() == "file":
+        spark.conf.set(_CHECKPOINT_MANAGER_CONF, FS_CHECKPOINT_MANAGER)
+    elif spark.conf.get(_CHECKPOINT_MANAGER_CONF, None) == FS_CHECKPOINT_MANAGER:
+        spark.conf.unset(_CHECKPOINT_MANAGER_CONF)
     stream = (
         spark.readStream.schema(EVENTS_SCHEMA)
         .option("maxFilesPerTrigger", "16")  # batching ~ event-count-max
@@ -410,8 +446,8 @@ def build_query(spark: SparkSession, cfg: CdcConfig, paths: StreamPaths,
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     elif trigger_seconds is not None:
-        # idle backoff analogue (runner.go:156-164).
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+        spark.conf.set("spark.sql.streaming.pollingDelay",
+                       f"{round(trigger_seconds * 1000)}ms")
     return writer
 
 
