@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 from tigerbeetle_cdc_nats_spark.plans.inspect import physical_plan
 from tigerbeetle_cdc_nats_spark.session import load_table
 from tigerbeetle_cdc_nats_spark.sources.ann_index import (
@@ -64,57 +63,6 @@ def test_multi_probe_reads_only_probe_set(spark, index):
                    for r in probe.select("bucket").distinct().collect()}
     assert got_buckets <= set(probes)
     assert _files_read(probe) <= len(probes) * 2  # a few files per bucket
-
-
-def test_incremental_append_equals_rebuild(spark, tmp_path):
-    """Index built on a prefix + appended delta == full rebuild (the
-    vector-side counterpart of the dedup-index append contract)."""
-    from tigerbeetle_cdc_nats_spark.sources.ann_index import (
-        append_ann_index,
-    )
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    dim = sim.embedding_dim(SF_DIR)
-    incr = str(tmp_path / "incr")
-    full = str(tmp_path / "full")
-    write_ann_index(emb.where(F.col("vec_id") % 4 != 0), incr, PLANES,
-                    dim=dim)
-    append_ann_index(emb.where(F.col("vec_id") % 4 == 0), incr, PLANES,
-                     dim=dim)
-    write_ann_index(emb, full, PLANES, dim=dim)
-    a = sorted(map(tuple, read_ann_index(spark, incr)
-                   .select("vec_id", "bucket").collect()))
-    b = sorted(map(tuple, read_ann_index(spark, full)
-                   .select("vec_id", "bucket").collect()))
-    assert a == b and len(a) == emb.count()
-
-
-def test_ann_compaction_drops_replay_duplicates(spark, tmp_path):
-    from tigerbeetle_cdc_nats_spark.operators import similarity as sim
-    from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
-    from tigerbeetle_cdc_nats_spark.session import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(64)
-    dim = sim.embedding_dim("/root/testdata/sf0.001")
-    planes = sim.hyperplanes(n_planes=4, dim=dim)
-    path = str(tmp_path / "annidx")
-    ai.write_ann_index(emb, path, planes, dim=dim)
-    baseline = spark.read.parquet(iv.current_dir(path)).count()
-
-    replay = emb.limit(16)
-    ai.append_ann_index(replay, path, planes, dim=dim)
-    ai.append_ann_index(replay, path, planes, dim=dim)
-    assert spark.read.parquet(iv.current_dir(path)).count() == baseline + 32
-
-    ai.compact_ann_index(spark, path)
-    after = ai.read_ann_index(spark, path)
-    assert after.count() == baseline
-    # partition pruning still works on the rewritten layout
-    some_bucket = after.select("bucket").first()["bucket"]
-    pruned = after.where(F.col("bucket").isin([some_bucket]))
-    assert pruned.count() > 0
-    assert {r["bucket"] for r in pruned.select("bucket")
-            .distinct().collect()} == {some_bucket}
 
 
 def test_stored_ivf_equals_in_session(spark, tmp_path, monkeypatch):

@@ -3,18 +3,17 @@
 The skew-safe near-dup plan choice needs the hottest bucket's population
 (and, when hot, the hot buckets' centroids). Computed per query those
 are one driver-side census job + a grouped centroid pass; both are
-INDEX properties, so build/append/compaction persist them as an
-underscore-prefixed sidecar and serving reads them with zero Spark
-jobs. These tests pin: sidecar lifecycle, the one-fewer-job contract
-(no driver action during plan build when the sidecar is present), and
-bit-equality of stored-served vs computed pairs on cold AND hot corpora.
+INDEX properties, so the build persists them as an underscore-prefixed
+sidecar and serving reads them with zero Spark jobs. These tests pin:
+the sidecar's build and upgrade, the one-fewer-job contract (no driver
+action during plan build when the sidecar is present), and bit-equality
+of stored-served vs computed pairs on cold AND hot corpora.
 """
 
 from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import DataFrame, functions as F
 
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
@@ -55,26 +54,6 @@ def test_sidecar_written_at_build_and_read_back(spark, tmp_path):
     assert 1 <= meta["max_pop"] <= 120
     # cold corpus: no centroid table
     assert ai.read_skew_centroids(spark, path) is None
-
-
-def test_append_refreshes_sidecar(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    ai.write_ann_index(_corpus(spark, 100), path, PLANES8, dim=DIM)
-    delta = _corpus(spark, 140).where(F.col("vec_id") >= 100)
-    ai.append_ann_index(delta, path, PLANES8, dim=DIM)
-    assert ai.read_skew_meta(path)["n_rows"] == 140
-
-
-def test_compaction_publishes_fresh_sidecar(spark, tmp_path):
-    path = str(tmp_path / "idx")
-    corpus = _corpus(spark, 100)
-    ai.write_ann_index(corpus, path, PLANES8, dim=DIM)
-    # replay: same rows appended again -> census doubles
-    ai.append_ann_index(corpus, path, PLANES8, dim=DIM)
-    assert ai.read_skew_meta(path)["n_rows"] == 200
-    ai.compact_ann_index(spark, path)
-    meta = ai.read_skew_meta(path)
-    assert meta["n_rows"] == 100  # duplicates gone, sidecar refreshed
 
 
 def test_serving_runs_no_driver_action_with_sidecar(spark, tmp_path,
@@ -130,8 +109,6 @@ def test_ensure_upgrades_stale_sidecar_generation(spark, tmp_path):
     re-paying the per-query census job warm serving claims to avoid."""
     import json
 
-    from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
-
     path = str(tmp_path / "idx")
     ai.write_ann_index(_corpus(spark, 200, hot=80), path, PLANES8, dim=DIM)
     cap = 16
@@ -141,7 +118,7 @@ def test_ensure_upgrades_stale_sidecar_generation(spark, tmp_path):
     # simulate the pre-round-9 generation: strip the round-9 fields
     old = {k: v for k, v in meta.items()
            if k not in ("n_planes", "max_cell_pop")}
-    mpath = os.path.join(iv.current_dir(path), "_skew_meta.json")
+    mpath = os.path.join(path, "_skew_meta.json")
     with open(mpath, "w", encoding="utf-8") as fh:
         json.dump(old, fh)
     ai.ensure_skew_sidecar(spark, path, dim=DIM, n_planes=8)
@@ -192,47 +169,6 @@ def test_indexed_equals_computed_hot(spark, tmp_path):
     served_rows = _pairs(served)
     assert served_rows == _pairs(computed)
     assert len(served_rows) > 0  # the hot cluster yields real pairs
-
-
-@pytest.mark.parametrize("bucket_dirs", [True, False],
-                         ids=["bucket-dirs", "flat"])
-def test_maintained_index_serves_same_pairs_as_rebuild(spark, tmp_path,
-                                                       bucket_dirs):
-    """Lifecycle proof at the PAIR level: an index that lived through
-    build -> append -> crash-replay re-append -> compaction must serve
-    exactly the near-dup pairs of a from-scratch rebuild (the streaming
-    rehearsal asserts this at the bucket level; the skew sidecar adds
-    census/centroid state that must also survive the lifecycle). Both
-    layouts: per-bucket directories (probe indexes) and balanced flat
-    files (the geometry-keyed near-dup index) — appends and compaction
-    must DETECT and PRESERVE whichever layout the index was built
-    with."""
-    corpus = _corpus(spark, 150, hot=60)
-    path = str(tmp_path / "maintained")
-    ai.write_ann_index(corpus.where(F.col("vec_id") < 100), path,
-                       PLANES8, dim=DIM, bucket_dirs=bucket_dirs)
-    delta = corpus.where(F.col("vec_id") >= 100)
-    ai.append_ann_index(delta, path, PLANES8, dim=DIM)
-    ai.append_ann_index(delta, path, PLANES8, dim=DIM)  # crash replay
-    ai.compact_ann_index(spark, path)
-    assert ai.read_skew_meta(path)["n_rows"] == 150
-    from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
-    assert ai._bucket_dir_layout(iv.current_dir(path)) is bucket_dirs
-
-    rebuild = str(tmp_path / "rebuild")
-    ai.write_ann_index(corpus, rebuild, PLANES8, dim=DIM,
-                       bucket_dirs=bucket_dirs)
-
-    cap = 16  # the 60-row cluster is hot at this cap
-    ai.write_skew_sidecar(spark, path, dim=DIM, cap=cap)
-    ai.write_skew_sidecar(spark, rebuild, dim=DIM, cap=cap)
-    maintained = _pairs(near_dup_pairs_from_index(spark, path, DIM,
-                                                  cap=cap))
-    fresh = _pairs(near_dup_pairs_from_index(spark, rebuild, DIM, cap=cap))
-    computed = _pairs(near_dup_pairs_skewsafe(corpus, DIM, n_planes=8,
-                                              cap=cap))
-    assert maintained == fresh == computed
-    assert len(maintained) > 0
 
 
 def test_widened_corpus_serves_from_geometry_keyed_index(spark, tmp_path):

@@ -1,15 +1,13 @@
-"""Composed CDC-source rehearsal (round-7 judge item #6).
+"""Composed CDC-source rehearsal.
 
 Ingest is Spark's parquet file source, one file per micro-batch
-(``maxFilesPerTrigger=1``), egress is the ``tb_cdc_publish`` native
-writer's metrics path (the per-chunk publish log, runner.go:580-583), and
-the stored MinHash index is maintained from the same event stream. The
-crash is a REAL at-least-once replay: the tail of each sink checkpoint's
-commit log is deleted while the offsets log is kept, so on restart the
-engine re-executes those batches through the same source offsets — exact
-publish counts hold because the metrics commit rewrites its batch file in
-place, and exact index rows hold because the maintenance loop compacts on
-replay detection (streaming/corpus._note_batch).
+(``maxFilesPerTrigger=1``), and egress is the ``tb_cdc_publish`` native
+writer's metrics path (the per-chunk publish log, runner.go:580-583).
+The crash is a REAL at-least-once replay: the tail of the sink
+checkpoint's commit log is deleted while the offsets log is kept, so on
+restart the engine re-executes those batches through the same source
+offsets — exact publish counts hold because the metrics commit rewrites
+its batch file in place.
 """
 
 from __future__ import annotations
@@ -24,18 +22,13 @@ from tigerbeetle_cdc_nats_spark.functions.events import (
     msg_id_column,
     subject_column,
 )
-from tigerbeetle_cdc_nats_spark.operators import dedup as dd
 from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
-from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 from tigerbeetle_cdc_nats_spark.sources.cdc_source import read_cdc_batch
 from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
     make_publish_datasource,
 )
-from tigerbeetle_cdc_nats_spark.streaming import corpus as sc
 
 BASE_NS = 1_800_000_000_000_000_000
-VOCAB = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
 FILE_EVENTS = 25  # events per file: several micro-batches per phase
 
 
@@ -56,17 +49,6 @@ def _read_stream(spark, src):
             .option("maxFilesPerTrigger", 1).parquet(src))
 
 
-def _doc_view(ev):
-    # deterministic event -> document projection: 20 distinct texts, so
-    # the corpus has real dup clusters for the index to serve
-    text = F.concat_ws(
-        " ", F.lit(VOCAB),
-        F.concat(F.lit("u"), F.col("user_id")),
-        F.concat(F.lit("e"), F.pmod(F.col("event_id"), F.lit(4))))
-    return ev.select(F.col("event_id").alias("doc_id"),
-                     text.alias("text"))
-
-
 def _publish_view(ev):
     return ev.select(
         subject_column("tb.cdc", "user_id", "event_type").alias("subject"),
@@ -80,9 +62,9 @@ def _publish_view(ev):
     ).coalesce(1)
 
 
-def _start(spark, src, *, chk_pub, chk_idx, metrics, mh_idx):
+def _start(spark, src, *, chk_pub, metrics):
     spark.dataSource.register(make_publish_datasource())
-    qp = (_publish_view(_read_stream(spark, src))
+    return (_publish_view(_read_stream(spark, src))
           .writeStream.format("tb_cdc_publish")
           .option("publisherFactory",
                   "tigerbeetle_cdc_nats_spark.sources.nats_sink:"
@@ -90,11 +72,6 @@ def _start(spark, src, *, chk_pub, chk_idx, metrics, mh_idx):
           .option("metricsDir", metrics)
           .option("checkpointLocation", chk_pub)
           .trigger(processingTime="50 milliseconds").start())
-    qi = sc.maintain_minhash_index(
-        _doc_view(_read_stream(spark, src)),
-        mh_idx, checkpoint_dir=chk_idx, trigger_seconds=0.2,
-        compact_every=None)  # replay DETECTION is the only compactor here
-    return qp, qi
 
 
 def _published_total(metrics):
@@ -103,14 +80,6 @@ def _published_total(metrics):
                    for f in os.listdir(metrics) if f.endswith(".json"))
     except (OSError, json.JSONDecodeError):
         return -1  # a metrics file mid-replace; retry at the next poll
-
-
-def _indexed_ids(spark, mh_idx):
-    try:
-        return {r["doc_id"] for r in di.read_minhash_index(spark, mh_idx)
-                .select("doc_id").distinct().collect()}
-    except Exception:
-        return set()
 
 
 def _wait_for(pred, timeout_s, info=None):
@@ -147,69 +116,36 @@ def _replay_tail(chk):
     return k
 
 
-def test_cdc_source_rehearsal_exact_counts_and_index(spark, tmp_path):
+def test_cdc_source_rehearsal_exact_publish_counts_across_replay(
+        spark, tmp_path):
     src = str(tmp_path / "events")
     metrics = str(tmp_path / "metrics")
-    mh_idx = str(tmp_path / "mh_idx")
     chk_pub = str(tmp_path / "chk_pub")
-    chk_idx = str(tmp_path / "chk_idx")
 
-    # ---- phase 1: 60 events flow source -> publish + index ----
+    # ---- phase 1: 60 events flow source -> publish ----
     _write_events(spark, src, 0, 60)
-    qp, qi = _start(spark, src, chk_pub=chk_pub, chk_idx=chk_idx,
-                    metrics=metrics, mh_idx=mh_idx)
+    qp = _start(spark, src, chk_pub=chk_pub, metrics=metrics)
     try:
         _wait_for(lambda: _published_total(metrics) == 60, 120,
                   info=lambda: f"published={_published_total(metrics)}")
-        _wait_for(lambda: _indexed_ids(spark, mh_idx) == set(range(60)),
-                  120)
     finally:
         qp.stop()
-        qi.stop()
         qp.awaitTermination(60)
-        qi.awaitTermination(60)
 
-    # ---- crash: uncommit the newest data batch of BOTH sinks ----
-    replay_pub = _replay_tail(chk_pub)
-    replay_idx = _replay_tail(chk_idx)
-    assert replay_pub >= 0 and replay_idx >= 0
-    pre_rows = di.read_minhash_index(spark, mh_idx).count()
+    # ---- crash: uncommit the sink's newest data batch ----
+    assert _replay_tail(chk_pub) >= 0
 
     # ---- phase 2: 40 more events + restart; the replayed batches
     # re-execute through their original source offsets ----
     _write_events(spark, src, 60, 100)
-    qp, qi = _start(spark, src, chk_pub=chk_pub, chk_idx=chk_idx,
-                    metrics=metrics, mh_idx=mh_idx)
+    qp = _start(spark, src, chk_pub=chk_pub, metrics=metrics)
     try:
         # exact publish accounting: the replayed batch REWRITES its
         # batch-N metrics file in place, so the total is exactly 100
         _wait_for(lambda: _published_total(metrics) == 100, 180,
                   info=lambda: f"published={_published_total(metrics)}")
-        _wait_for(lambda: _indexed_ids(spark, mh_idx) == set(range(100)),
-                  180)
     finally:
         qp.stop()
-        qi.stop()
         qp.awaitTermination(60)
-        qi.awaitTermination(60)
-
-    # replay-detection compaction (the only compactor configured) fired:
-    # raw maintained rows equal a from-scratch rebuild over the SAME
-    # source read as a batch cursor scan
-    docs_all = _doc_view(read_cdc_batch(spark, src))
-    assert docs_all.count() == 100
-    mh_rebuild = str(tmp_path / "mh_rebuild")
-    di.write_minhash_index(docs_all, mh_rebuild)
-    got_rows = di.read_minhash_index(spark, mh_idx).count()
-    want_rows = di.read_minhash_index(spark, mh_rebuild).count()
-    assert got_rows == want_rows, (
-        f"maintained={got_rows} rebuild={want_rows} pre_replay={pre_rows}")
-    # ...and the compaction migrated the index to the versioned layout
-    assert os.path.exists(os.path.join(mh_idx, iv.CURRENT))
-
-    # served candidate pairs equal the batch recompute of the corpus
-    served = sorted(map(tuple, di.minhash_pairs_from_index(
-        di.read_minhash_index(spark, mh_idx)).collect()))
-    fresh = sorted(map(tuple, dd.minhash_candidate_pairs(
-        dd.minhash_signatures(docs_all)).collect()))
-    assert served == fresh and len(served) >= 1
+    # the source holds exactly the 100 events a batch cursor scan reads
+    assert read_cdc_batch(spark, src).count() == 100

@@ -1,6 +1,6 @@
 """Persisted text-dedup indexes (sources/dedup_index.py): stored-vs-fresh
-agreement, incremental append maintenance, and file-level pruning on delta
-probes — the text-side counterpart of test_ann_index.py."""
+agreement and file-level pruning on delta probes — the text-side
+counterpart of test_ann_index.py."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from tigerbeetle_cdc_nats_spark.operators import dedup as dd
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 from tigerbeetle_cdc_nats_spark.plans.inspect import physical_plan
 from tigerbeetle_cdc_nats_spark.session import load_table
 from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
@@ -59,22 +58,9 @@ def test_winnow_stored_equals_fresh(spark, docs, wn_index):
     assert _pairs(stored, cols) == _pairs(fresh, cols)
 
 
-def test_minhash_incremental_append(spark, docs, tmp_path):
-    """Index built on a prefix + appended delta == index built on the
-    whole corpus (the inverted-index append contract)."""
-    path = str(tmp_path / "mh_incr")
-    old = docs.where(F.col("doc_id") % 5 != 0)
-    delta = docs.where(F.col("doc_id") % 5 == 0)
-    di.write_minhash_index(old, path)
-    di.append_minhash_index(delta, path)
-    stored = di.minhash_pairs_from_index(di.read_minhash_index(spark, path))
-    fresh = dd.minhash_candidate_pairs(dd.minhash_signatures(docs))
-    assert _pairs(stored) == _pairs(fresh)
-
-
 def test_minhash_probe_prunes_partitions(spark, docs, mh_index):
     delta = docs.where(F.col("doc_id") < 3)
-    probe = di.probe_minhash_index(spark, mh_index, delta)
+    probe, _ = di.probe_minhash_index(spark, mh_index, delta)
     plan = physical_plan(probe)
     # the (band, shard) predicate reached the scan's partition filters
     assert "PartitionFilters" in plan
@@ -159,72 +145,3 @@ def test_corpus_pairs_fall_back_when_cache_untrusted(spark, docs,
         "doc_id", "other_id", "est_jaccard").collect()))
         == sorted(map(tuple, fresh.select(
             "doc_id", "other_id", "est_jaccard").collect())))
-
-
-def test_compaction_drops_replay_duplicates(spark, tmp_path):
-    """Re-appending an already-indexed batch duplicates banded rows;
-    compaction must restore the from-scratch row count while leaving
-    candidate pairs, shard metadata, and probe pruning intact."""
-    from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta"),
-         (3, "totally different words entirely another thing")],
-        "doc_id long, text string")
-    path = str(tmp_path / "idx")
-    di.write_minhash_index(docs, path)
-    baseline_rows = spark.read.parquet(iv.current_dir(path)).count()
-    baseline_shards = di._read_meta_shards(path)
-
-    def pairs():
-        return sorted(map(tuple, di.minhash_pairs_from_index(
-            di.read_minhash_index(spark, path)).collect()))
-
-    before = pairs()
-    assert any(p[0] == 1 and p[1] == 2 for p in before)
-
-    # at-least-once replay: same batch appended twice
-    replay = docs.where("doc_id >= 2")
-    di.append_minhash_index(replay, path)
-    di.append_minhash_index(replay, path)
-    inflated = spark.read.parquet(iv.current_dir(path)).count()
-    assert inflated > baseline_rows
-    assert pairs() == before  # pairs immune, rows inflated
-
-    di.compact_minhash_index(spark, path)
-    assert spark.read.parquet(iv.current_dir(path)).count() == baseline_rows
-    assert pairs() == before
-    assert di._read_meta_shards(path) == baseline_shards
-    assert iv.index_ready(path)
-    # probe still prunes with the preserved modulus
-    delta = spark.createDataFrame(
-        [(9, "alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string")
-    hits = {r["other_id"]
-            for r in di.probe_minhash_index(spark, path, delta).collect()}
-    assert {1, 2} <= hits
-
-
-def test_winnow_compaction_preserves_candidates(spark, tmp_path):
-    from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota"),
-         (2, "alpha beta gamma delta epsilon zeta eta theta iota"),
-         (3, "unrelated content entirely other words in this doc here")],
-        "doc_id long, text string")
-    path = str(tmp_path / "widx")
-    di.write_winnow_index(docs, path)
-    baseline_rows = spark.read.parquet(iv.current_dir(path)).count()
-
-    def cands():
-        return sorted(map(tuple, di.winnow_candidates_from_index(
-            di.read_winnow_index(spark, path)).collect()))
-
-    before = cands()
-    di.append_winnow_index(docs.where("doc_id = 2"), path)
-    assert spark.read.parquet(iv.current_dir(path)).count() > baseline_rows
-    di.compact_winnow_index(spark, path)
-    assert spark.read.parquet(iv.current_dir(path)).count() == baseline_rows
-    assert cands() == before

@@ -10,10 +10,10 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.reference_forms import near_dup_pairs_pinned
 from tigerbeetle_cdc_nats_spark.errors import expected_index_env_error
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
 from tigerbeetle_cdc_nats_spark.queries_similarity import (
-    near_dup_pairs_pinned,
     near_dup_verdict_from_index,
 )
 from tigerbeetle_cdc_nats_spark.registry import all_queries
@@ -150,7 +150,6 @@ def test_corrupt_index_raises_not_silent_fallback(spark, tmp_path,
     from tigerbeetle_cdc_nats_spark import queries_dedup as qd
     from tigerbeetle_cdc_nats_spark import queries_similarity as qsim
     from tigerbeetle_cdc_nats_spark.queries_dedup import stored_index_dir
-    from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
@@ -160,9 +159,8 @@ def test_corrupt_index_raises_not_silent_fallback(spark, tmp_path,
     assert q(spark, sf_dir).count() == 120  # builds + serves the index
     assert qd.SERVED["embedding_dedup_verdict"] == "stored"
 
-    # corrupt every data file in the live snapshot; sidecars stay valid
-    live = iv.current_dir(stored_index_dir("annlsh", sf_dir,
-                                           table="embeddings"))
+    # corrupt every data file of the index; sidecars stay valid
+    live = stored_index_dir("annlsh", sf_dir, table="embeddings")
     parts = glob.glob(os.path.join(live, "**", "*.parquet"),
                       recursive=True)
     assert parts

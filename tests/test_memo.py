@@ -95,7 +95,7 @@ def _clusters(comp) -> dict[int, int]:
     return {r["node"]: r["cluster_id"] for r in comp.collect()}
 
 
-def test_dup_components_follow_index_append_and_compaction(spark, tmp_path):
+def test_dup_components_follow_an_index_rebuild(spark, tmp_path):
     sfd = str(tmp_path / "sf")
     spark.createDataFrame(
         [(1, GOOD), (2, GOOD + " iota"),
@@ -107,15 +107,20 @@ def test_dup_components_follow_index_append_and_compaction(spark, tmp_path):
     assert qd._dup_components(spark, sfd) is c1  # memo hit
     assert 3 not in _clusters(c1)
 
+    # an overwrite rebuild of the stored index, here with one more doc
     idx = qd.stored_index_dir("minhash", sfd)
-    di.append_minhash_index(spark.createDataFrame(
-        [(3, GOOD)], "doc_id long, text string"), idx)
+    grown = spark.createDataFrame(
+        [(1, GOOD), (2, GOOD + " iota"), (3, GOOD),
+         (5, "totally different words entirely distinct here")],
+        "doc_id long, text string")
+    di.write_minhash_index(grown, idx)
     c2 = qd._dup_components(spark, sfd)
     assert c2 is not c1
     got = _clusters(c2)
-    assert got[3] == got[1]  # the appended exact dup joins doc 1's cluster
+    assert got[3] == got[1]  # the added exact dup joins doc 1's cluster
 
-    di.compact_minhash_index(spark, idx)
+    # a same-content rebuild still moves the index identity
+    di.write_minhash_index(grown, idx)
     c3 = qd._dup_components(spark, sfd)
     assert c3 is not c2
     assert _clusters(c3) == got
@@ -194,6 +199,25 @@ def test_minhash_probe_follows_a_documents_rewrite(spark, tmp_path):
         lambda: _write_documents(
             sf, [(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2))
     assert {r["doc_id"] for r in probe.collect()} == {4, 9}
+
+
+def test_minhash_probe_releases_its_delta_on_identity_change(
+        spark, tmp_path, monkeypatch):
+    """The probe memo holds the persisted delta next to the pairs, so an
+    identity change releases both. The rebuilt index here has 2 shards
+    instead of 1 (a corpus grown past a shard boundary), so the new
+    delta's plan differs and no same-plan unpersist can catch the old
+    one."""
+    sf = str(tmp_path)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER)], 1)
+    qd.corpus_minhash_probe(spark, sf).collect()
+    held = persistent().size()
+    monkeypatch.setattr(di, "shards_for_corpus", lambda n: 2)
+    _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2)
+    assert {r["doc_id"] for r in
+            qd.corpus_minhash_probe(spark, sf).collect()} == {4, 9}
+    assert persistent().size() == held
 
 
 def test_winnow_probe_follows_a_same_path_rewrite(spark, tmp_path):

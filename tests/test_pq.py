@@ -10,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from tests.reference_forms import pq_encode_expr
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
 from tigerbeetle_cdc_nats_spark.session import load_table
 
@@ -88,5 +89,5 @@ def test_arrow_encode_matches_expression_encode(spark, emb):
     fast = {r["vec_id"]: list(r["codes"])
             for r in sim.pq_encode(emb, cb, dim).collect()}
     ref = {r["vec_id"]: list(r["codes"])
-           for r in sim.pq_encode_expr(emb, cb, dim).collect()}
+           for r in pq_encode_expr(emb, cb, dim).collect()}
     assert fast == ref

@@ -145,8 +145,7 @@ def test_mad_outliers_histogram_equals_rank_based(spark):
     of the raw rows); the pre-round-10 rank-based form survives as the
     bit-equality fixture. The ts tie-break in the rank form never changes
     WHICH value sits at the median rank, so the two are exactly equal."""
-    from tigerbeetle_cdc_nats_spark.queries_relational import (
-        mad_outliers_rank_based)
+    from tests.reference_forms import mad_outliers_rank_based
 
     got = sorted(map(tuple, _run(spark, "mad_outliers").collect()))
     ref = sorted(map(tuple,

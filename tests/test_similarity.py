@@ -50,10 +50,10 @@ def test_ivf_plan_has_no_unbroadcast_cartesian(spark, sf_dir):
 def test_ivf_assign_arrow_equals_expr(spark):
     """Map-side Arrow IVF assignment is bit-identical to the pure-Column
     window-argmax reference (cell AND the reused norm)."""
+    from tests.reference_forms import ivf_assign_expr
     from tigerbeetle_cdc_nats_spark.queries_similarity import (
         centroid_vectors,
         ivf_assign,
-        ivf_assign_expr,
     )
     from tigerbeetle_cdc_nats_spark.session import load_table
 
@@ -91,10 +91,8 @@ def test_ivf_assign_degenerate_vectors_agree(spark):
     in the Arrow path diverging from NULL handling in the expr path."""
     from pyspark.sql import types as T
 
-    from tigerbeetle_cdc_nats_spark.queries_similarity import (
-        ivf_assign,
-        ivf_assign_expr,
-    )
+    from tests.reference_forms import ivf_assign_expr
+    from tigerbeetle_cdc_nats_spark.queries_similarity import ivf_assign
 
     emb_schema = T.StructType([
         T.StructField("vec_id", T.LongType()),
@@ -137,9 +135,8 @@ def _pinned_pairs(spark, sf_dir):
     """The original pinned 8-plane near-dup — now a TEST FIXTURE
     (near_dup_pairs_pinned), the bit-equality baseline every scale-safe
     registered variant must reproduce at driver SFs."""
+    from tests.reference_forms import near_dup_pairs_pinned
     from tigerbeetle_cdc_nats_spark.operators import similarity as sim
-    from tigerbeetle_cdc_nats_spark.queries_similarity import (
-        near_dup_pairs_pinned)
     from tigerbeetle_cdc_nats_spark.session import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")

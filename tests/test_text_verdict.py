@@ -140,10 +140,9 @@ def test_embedding_delta_verdict_is_restricted_full_verdict(spark):
 
 def test_stale_sidecar_understating_census_still_exact(spark):
     """Round-11 advice (medium): the tiers must cover EVERY bucket
-    population regardless of sidecar staleness — a sidecar written one
-    mutation ago can understate the live census (streaming appends
-    land in the live snapshot between the meta write and a reader's
-    file listing), and a plan whose hot tier is capped at scan_cap
+    population regardless of sidecar staleness — a sidecar written
+    before the index files last changed can understate the census,
+    and a plan whose hot tier is capped at scan_cap
     with the mega tier gated on the stale max_pop would silently drop
     every bucket whose fresh population exceeds scan_cap from all
     tiers, KEEPING its docs with no candidates. The fix: with no
@@ -178,7 +177,6 @@ def test_corrupt_text_index_raises_not_silent_fallback(spark, tmp_path,
 
     from tigerbeetle_cdc_nats_spark import queries_dedup as qd
     from tigerbeetle_cdc_nats_spark.registry import all_queries
-    from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
     sf_dir = str(tmp_path / "sf")
     os.makedirs(sf_dir)
@@ -188,7 +186,7 @@ def test_corrupt_text_index_raises_not_silent_fallback(spark, tmp_path,
     assert q(spark, sf_dir).count() == 100  # builds + serves the index
     assert qd.SERVED["text_dedup_verdict"] == "stored"
 
-    live = iv.current_dir(qd.stored_index_dir("minhash", sf_dir))
+    live = qd.stored_index_dir("minhash", sf_dir)
     parts = glob.glob(os.path.join(live, "**", "*.parquet"),
                       recursive=True)
     assert parts

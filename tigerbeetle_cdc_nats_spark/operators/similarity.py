@@ -600,16 +600,6 @@ def pq_codebook(embeddings: DataFrame, id_col: str = "vec_id",
     ).persist()
 
 
-def _code_expr(s: int, subdim: int) -> str:
-    """argmin_j L2²(qv_sub_s, cw_j_sub_s), ties to the smallest j."""
-    o = s * subdim
-    d = " + ".join(
-        f"(qv[{o + i}] - x.cw[{o + i}]) * (qv[{o + i}] - x.cw[{o + i}])"
-        for i in range(subdim))
-    return (f"array_sort(transform(cb, x -> struct({d} AS d, x.j AS j)))"
-            f"[0].j")
-
-
 #: Hard cap on the ANN/PQ query-side collect: the query set is a bounded
 #: sample by contract, but nothing used to enforce it — a caller passing a
 #: large DataFrame would OOM the driver (round-4 judge finding #3).
@@ -643,22 +633,6 @@ def _codebook_np(codebook: DataFrame):
             f"— the (K, dim) reshape downstream would fail obscurely")
     cb = rows[0]["cb"]
     return np.array([list(e["cw"]) for e in cb], dtype=np.int64)
-
-
-def pq_encode_expr(embeddings: DataFrame, codebook: DataFrame, dim: int,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """Pure-Column encode (broadcast 1-row codebook cross join + argmin
-    expressions). Kept as the no-Python reference path; the higher-order
-    transforms are CodegenFallback, so :func:`pq_encode` (vectorized
-    Arrow) is ~10x faster at identical — integer-exact — results."""
-    subdim = dim // PQ_SUBS
-    enc = (embeddings.select(F.col(id_col),
-                             quantized_vec(vec_col).alias("qv"))
-           .crossJoin(F.broadcast(codebook)))
-    codes = F.array(*[F.expr(_code_expr(s, subdim))
-                      for s in range(PQ_SUBS)])
-    return enc.select(F.col(id_col), codes.alias("codes"))
 
 
 def pq_encode(embeddings: DataFrame, codebook: DataFrame, dim: int,

@@ -18,7 +18,6 @@ from tigerbeetle_cdc_nats_spark.session import (
     memo_scope,
     table_path,
 )
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
 _log = logging.getLogger(__name__)
 
@@ -176,8 +175,10 @@ def stored_index(kind: str, sf_dir: str, build,
                  table: str = "documents") -> str:
     """``stored_index_dir(kind, sf_dir, table)``, after ``build(path)``
     when no index is ready there yet (build on first touch)."""
+    import os
+
     path = stored_index_dir(kind, sf_dir, table=table)
-    if not iv.index_ready(path):  # resolves versioned layouts too
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
         build(path)
     return path
 
@@ -218,12 +219,11 @@ def _minhash_memo(spark: SparkSession, sf_dir: str, served: str,
     index, served as ``served``: ``from_index(path)`` over the stored
     index, else ``computed()``.
 
-    The identity is the documents identity PLUS the index snapshot
-    identity, taken AFTER the build (else the first lookup after a cold
-    build always misses once): a streaming append into the live
-    snapshot or a compaction flip moves it by itself, so same-session
-    consumers re-read the grown index instead of serving a frozen
-    snapshot. The computed value keys on the documents alone."""
+    The identity is the documents identity PLUS the index identity,
+    taken AFTER the build (else the first lookup after a cold build
+    always misses once): a rebuild of the index moves it by itself, so
+    same-session consumers re-read the rebuilt index instead of serving
+    a frozen one. The computed value keys on the documents alone."""
     docs_ident = dataset_identity(table_path(sf_dir, "documents"))
 
     def keyed(index_ident, build):
@@ -233,7 +233,7 @@ def _minhash_memo(spark: SparkSession, sf_dir: str, served: str,
 
     def stored():
         path = _minhash_path(spark, sf_dir)
-        return keyed(dataset_identity(iv.current_dir(path)),
+        return keyed(dataset_identity(path),
                      lambda: from_index(path))
 
     return serve_stored(served, stored,
@@ -310,7 +310,9 @@ def corpus_minhash_probe(spark: SparkSession, sf_dir: str,
     pruning predicate) plus an index open — four registered consumers
     (minhash_probe_indexed, incremental_dedup, novelty_score,
     delta_dedup_verdict) each re-paid it per query (~0.5 s fixed,
-    measured). One shared persist, re-probed when the index grows."""
+    measured). One shared persist, re-probed when the index is rebuilt.
+    The memo value also holds the stored probe's persisted delta, so an
+    identity change releases it with the pairs."""
     from pyspark import StorageLevel
 
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
@@ -318,19 +320,19 @@ def corpus_minhash_probe(spark: SparkSession, sf_dir: str,
     docs = load_table(spark, sf_dir, "documents")
     pred = (F.col("doc_id") % delta_mod) == delta_rem
 
-    def tagged(pairs: DataFrame) -> DataFrame:
+    def tagged(pairs: DataFrame, *held: DataFrame) -> tuple:
         # delta membership is a pure id function — derivable on either path
-        return pairs.withColumn(
+        return (pairs.withColumn(
             "other_is_delta", (F.col("other_id") % delta_mod) == delta_rem
-        ).persist(StorageLevel.MEMORY_AND_DISK)
+        ).persist(StorageLevel.MEMORY_AND_DISK), *held)
 
     return _minhash_memo(
         spark, sf_dir, "corpus_minhash_probe", "minhash_probe",
         (sf_dir, delta_mod, delta_rem),
-        lambda p: tagged(di.probe_minhash_index(spark, p, docs.where(pred))),
+        lambda p: tagged(*di.probe_minhash_index(spark, p, docs.where(pred))),
         lambda: tagged(dd.minhash_incremental_pairs(
             dd.minhash_signatures(docs), pred).select(
-            "doc_id", "other_id", "est_jaccard")))
+            "doc_id", "other_id", "est_jaccard")))[0]
 
 
 @register(
@@ -1489,8 +1491,7 @@ def _text_rep_fold(pairs: DataFrame) -> DataFrame:
     map-side where pairs are generated, so only |docs| partials ever
     shuffle and the pair list is never materialized (the same argument
     as queries_similarity._verdict_from_pairs; duplicate banded rows
-    from replayed appends only produce duplicate pairs, which cannot
-    change a min)."""
+    would only produce duplicate pairs, which cannot change a min)."""
     return (pairs.where(_sig_agree_ok())
             .groupBy(F.col("b_id").alias("doc_id"))
             .agg(F.min("a_id").alias("_rep")))
@@ -1506,10 +1507,9 @@ def _text_verdict_hot_scan(hot: DataFrame) -> DataFrame:
     the bucket costs O(pop x chunk x K) instead of its O(pop^2 x K)
     pair volume — the same decoupling the embedding verdict's
     _verdict_hot_scan measured (c64: 6.3 s vs 49 s). Duplicate doc_id
-    rows (replayed index appends before compaction) are dropped inside
-    the scan: a doc must never match its own replayed copy and become
-    its own representative. Returns (doc_id, _rep) with _rep = -1 for
-    no-hit docs."""
+    rows are dropped inside the scan: a doc must never match its own
+    copy and become its own representative. Returns (doc_id, _rep) with
+    _rep = -1 for no-hit docs."""
     import numpy as np
     import pandas as pd
 
@@ -1611,8 +1611,7 @@ def text_verdict_from_banded(ids: DataFrame, banded: DataFrame, *,
     cold = sized.where(F.col("_pop") <= cap)
     # Round-11 advice (stale-sidecar safety): the tier filters use the
     # fresh in-plan census `pops`, while ``max_pop`` may come from a
-    # sidecar one mutation behind the data (streaming appends land in
-    # the live snapshot; data files can be newer than the meta read).
+    # sidecar older than the index's data files.
     # A bucket grown past scan_cap under a max_pop-gated 3-tier plan
     # would then match NO tier and its docs would be silently KEPT with
     # no candidates — a wrong verdict. So the tiers must cover every
@@ -1697,19 +1696,14 @@ def q_text_dedup_verdict(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback); tier choice is data-dependent per bucket inside ONE lazy
     plan, and no tier materializes, shuffles, or returns a pair list.
     Docs with empty shingle sets never enter the index and are kept by
-    the left join. Duplicate banded rows from replayed streaming
-    appends cannot change any min() and are dropped inside the hot
-    scan, so the verdict is replay-tolerant between compactions.
+    the left join. Duplicate banded rows cannot change any min() and
+    are dropped inside the hot scan.
     """
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
 
     def stored():
-        # data + sidecar from ONE resolved physical snapshot — reading
-        # them through independent CURRENT resolutions could pair a new
-        # snapshot's rows with an old snapshot's max_pop (round-11
-        # advice; see read_minhash_snapshot)
         snap, meta = di.read_minhash_snapshot(
             spark, _minhash_path(spark, sf_dir))
         mp = meta.get("max_pop")

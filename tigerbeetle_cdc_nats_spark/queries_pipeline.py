@@ -266,23 +266,18 @@ def _verdict_store_kind(sf_dir: str) -> str:
 
 def ensure_corpus_verdict_store(spark: SparkSession, sf_dir: str) -> str:
     """Build-or-open the stored composed corpus verdict for ``sf_dir``,
-    returning its store path. The batch build materializes
-    corpus_verdict once (each stage already stored-index served) plus
-    the exact-stage hash index; every later consumer reads the
-    |docs|-sized artifact instead of re-running three stage verdicts.
-    Streaming ingest keeps it fresh via
-    streaming/corpus.maintain_corpus_verdict (delta-fold, the
-    progress-record pattern of runner.go:412-423)."""
+    returning its store path. The store is built whole: the build
+    materializes corpus_verdict once (each stage already stored-index
+    served), and every later consumer reads the |docs|-sized artifact
+    instead of re-running three stage verdicts. A changed documents or
+    embeddings table rotates the store path, so the next touch rebuilds
+    it."""
     from tigerbeetle_cdc_nats_spark.sources import verdict_store as vs
 
-    def build(path: str) -> None:
-        docs = load_table(spark, sf_dir, "documents")
-        hashes = (docs.select(F.md5("text").alias("h"), "doc_id")
-                  .groupBy("h").agg(F.min("doc_id").alias("rep")))
-        vs.write_verdict_store(corpus_verdict(spark, sf_dir), hashes,
-                               path)
-
-    return qd.stored_index(_verdict_store_kind(sf_dir), sf_dir, build)
+    return qd.stored_index(
+        _verdict_store_kind(sf_dir), sf_dir,
+        lambda path: vs.write_verdict_store(corpus_verdict(spark, sf_dir),
+                                            path))
 
 
 @register(
@@ -297,12 +292,10 @@ SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(-1 AS BIGINT),
 FROM n, mp WHERE n.n_vec > 16384 OR mp.maxpop > 256""",
     doc="corpus_dedup_verdict served from the PERSISTED verdict store "
         "(sources/verdict_store): the composed per-doc decision is "
-        "materialized once (build) and then maintained from per-batch "
-        "delta-verdict folds (streaming/corpus.maintain_corpus_verdict) "
-        "— consumers read the |docs|-sized artifact instead of "
-        "re-running all three stage verdicts per query; identical "
-        "output by the rehearsal pin (stored == full recompute across "
-        "build/append/replay/compaction)",
+        "materialized once, the store built whole — consumers read the "
+        "|docs|-sized artifact instead of re-running all three stage "
+        "verdicts per query; identical output to the composed verdict "
+        "(test-pinned)",
 )
 def q_corpus_verdict_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stored-artifact serving path for the composed corpus verdict."""
@@ -313,9 +306,9 @@ def q_corpus_verdict_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def corpus_verdict_served(spark: SparkSession, sf_dir: str, *,
                           consumer: str) -> DataFrame:
     """Composed verdict for downstream consumers: the stored artifact
-    when the scratch allows (built once, then delta-maintained),
-    the in-session composition otherwise — identical rows either way
-    (rehearsal-pinned). This is how the stats rollup and the pipeline
+    when the scratch allows (built whole, once per corpus), the
+    in-session composition otherwise — identical rows either way
+    (test-pinned). This is how the stats rollup and the pipeline
     composite avoid re-running all three stage verdicts per query
     (round-11 judge item #2's consumer half)."""
     from tigerbeetle_cdc_nats_spark.sources import verdict_store as vs

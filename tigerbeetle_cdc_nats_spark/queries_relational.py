@@ -2014,46 +2014,6 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mad_outliers_rank_based(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-round-10 rank-based exact form of mad_outliers, kept
-    UNREGISTERED as the bit-equality fixture for the histogram plan
-    (the judge's prescribed pattern: scale-safe form owns the registered
-    name, the deterministic rank form stays as its audit). Windows the
-    full table under partitionBy(event_type) — correct, but ~5 tasks own
-    the whole table's sort, which is why it lost the registration."""
-    from pyspark.sql import Window as W
-
-    ev = events_table(spark, sf_dir)
-    c = ev.select("event_type", "ts", agg.cents().alias("cents"))
-
-    def positional_median(df, col, out):
-        w = W.partitionBy("event_type").orderBy(col, "ts")
-        r = df.select(
-            "event_type", col,
-            F.row_number().over(w).alias("rn"),
-            F.count("*").over(W.partitionBy("event_type")).alias("n"))
-        pos = F.floor((F.col("n") - 1) * 0.50).cast("bigint") + 1
-        return r.groupBy("event_type").agg(
-            F.max("n").alias("n_events"),
-            F.max(F.when(F.col("rn") == pos, F.col(col))).alias(out))
-
-    med = positional_median(c, "cents", "med_cents")
-    dev = (c.join(F.broadcast(med), "event_type")
-           .select("event_type", "ts",
-                   F.abs(F.col("cents") - F.col("med_cents")).alias("adev")))
-    mad = positional_median(dev, "adev", "mad_cents").drop("n_events")
-    return (
-        dev.join(F.broadcast(mad), "event_type")
-        .join(F.broadcast(med.select("event_type", "n_events", "med_cents")),
-              "event_type")
-        .groupBy("event_type", "n_events", "med_cents", "mad_cents")
-        .agg(F.sum(F.when(F.col("adev") > 3 * F.col("mad_cents"), 1)
-                   .otherwise(0)).cast("bigint").alias("n_outliers"))
-        .select("event_type", "n_events", "med_cents", "mad_cents",
-                "n_outliers")
-    )
-
-
 @register(
     "join_key_skew_audit",
     """WITH f AS (

@@ -15,7 +15,6 @@ from tigerbeetle_cdc_nats_spark.session import (
     memo_scope,
     table_path,
 )
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
 QUERY_IDS = (0, 1, 2, 3, 4)
 #: Static corpus width (TESTDATA.md contract) — passed to every similarity
@@ -258,7 +257,7 @@ def near_dup_pairs_from_index(spark: SparkSession, path: str, dim: int, *,
                    ai.index_norm(idx, "embedding", dim).alias("norm"))
     meta = ai.read_skew_meta(path)
     if (meta is not None and int(meta["max_pop"]) > cap
-            and ai._bucket_dir_layout(iv.current_dir(path))):
+            and ai._bucket_dir_layout(path)):
         # a bucket-DIRECTORY index clusters each hot bucket into one or
         # two scan partitions, putting its whole pair volume on a single
         # join task (broadcast probes have no shuffle for AQE to
@@ -362,18 +361,21 @@ def ensure_near_dup_index(spark: SparkSession,
     64) — serving it from the 8-plane artifact would silently change
     the registered semantics, and recomputing signatures per query is
     exactly what a 100 TB deployment cannot afford — so it gets its own
-    GEOMETRY-KEYED index kind (``annlshw{n_planes}``): same sidecar and
-    maintenance ops but a balanced FLAT layout (near-dup serving scans
-    all buckets, so per-bucket directories only cluster hot rows onto
-    one join task — see write_ann_index), keyed so a corpus growth that
-    changes the adaptive width can never serve stale geometry (the
-    stored_index_dir fingerprint also rotates on any source change)."""
+    GEOMETRY-KEYED index kind (``annlshw{n_planes}``): same sidecar but
+    a balanced FLAT layout (near-dup serving scans all buckets, so
+    per-bucket directories only cluster hot rows onto one join task —
+    see write_ann_index), keyed so a corpus growth that changes the
+    adaptive width can never serve stale geometry (the stored_index_dir
+    fingerprint also rotates on any source change)."""
+    import os
+
     from tigerbeetle_cdc_nats_spark.sources import ann_index as ai
 
     emb = load_table(spark, sf_dir, "embeddings")
     dim, planes = _dim(sf_dir), _planes(sf_dir)
     path = qd.stored_index_dir("annlsh", sf_dir, table="embeddings")
-    meta = ai.read_skew_meta(path) if iv.index_ready(path) else None
+    built = os.path.exists(os.path.join(path, "_SUCCESS"))
+    meta = ai.read_skew_meta(path) if built else None
     # no sidecar knows n yet -> one count() scan job; a build-path-only
     # cost paid once per index generation, never by warm serving (with
     # parquet aggregate pushdown off — Spark's default — count(*) is a
@@ -381,7 +383,7 @@ def ensure_near_dup_index(spark: SparkSession,
     n = int(meta["n_rows"]) if meta else _corpus_n(emb, sf_dir)
     adaptive = max(len(PLANES), sim.planes_for_corpus(n, target_bucket=64))
     if adaptive == len(planes):
-        if not iv.index_ready(path):
+        if not built:
             ai.write_ann_index(emb, path, planes, dim=dim)
         else:
             ai.ensure_skew_sidecar(spark, path, dim=dim,
@@ -392,7 +394,7 @@ def ensure_near_dup_index(spark: SparkSession,
         return path, len(planes)
     wpath = qd.stored_index_dir(f"annlshw{adaptive}", sf_dir,
                                 table="embeddings")
-    if not iv.index_ready(wpath):
+    if not os.path.exists(os.path.join(wpath, "_SUCCESS")):
         # flat balanced layout: near-dup serving is this index's only
         # consumer and it scans ALL buckets — per-bucket directories
         # would cluster each hot bucket onto one or two scan partitions
@@ -431,7 +433,7 @@ SELECT CAST(-1 AS BIGINT), CAST(-1 AS BIGINT), CAST(-1 AS BIGINT)
 FROM n, mp WHERE n.n_vec > 16384 OR mp.maxpop > 256""",
     doc="embedding_near_dup served from the PERSISTED ANN index + its "
         "skew sidecar (bucket census summary + hot-bucket centroids "
-        "maintained at build/append/compaction): the warm-serving query "
+        "written at build): the warm-serving query "
         "runs NO per-query signature pass, NO census job, and NO "
         "centroid pass — the stored-artifact shape of production "
         "near-dup serving (round-8 judge item #4). Bit-identical "
@@ -532,8 +534,7 @@ def _verdict_hot_scan(hot: DataFrame, dim: int) -> DataFrame:
     import pandas as pd
 
     def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # drop replayed duplicate index rows (streaming appends between
-        # compactions): a vec must never match its own duplicate copy
+        # drop duplicate index rows: a vec must never match its own copy
         # and become its own dropped representative — the pair paths are
         # naturally immune (vec_a < vec_b excludes self-pairs)
         pdf = pdf.drop_duplicates("vec_id").sort_values("vec_id")
@@ -604,11 +605,10 @@ def near_dup_verdict_from_index(spark: SparkSession, path: str, dim: int, *,
     b = idx.select("vec_id", "embedding", "bucket",
                    ai.index_norm(idx, "embedding", dim).alias("norm"))
     # the id list comes from the INDEX here (unlike the computed path's
-    # clean source table), and a stream-maintained snapshot can carry
-    # replayed duplicate rows between compactions — distinct() keeps the
-    # verdict |docs|-sized; the exchange lands on the same vec_id
-    # partitioning the assembly join needs, so it adds no extra shuffle
-    # stage beyond the aggregate itself
+    # clean source table), and an index can carry duplicate rows —
+    # distinct() keeps the verdict |docs|-sized; the exchange lands on
+    # the same vec_id partitioning the assembly join needs, so it adds
+    # no extra shuffle stage beyond the aggregate itself
     ids = b.select("vec_id").distinct()
     meta = ai.read_skew_meta(path)
     cent = None
@@ -784,42 +784,6 @@ def q_dedup_verdict_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.expr("(n_dropped * 1000000) div n_docs")
                     .cast("long").alias("dup_rate_e6"),
                     "n_reps", "max_rep_fanout")
-
-
-def near_dup_pairs_pinned(emb, planes, dim: int):
-    """TEST FIXTURE: the original pinned-geometry near-dup — a fixed
-    plane set, one bucket-equality self-join, cosine >= 0.3. Quadratic
-    under corpus growth (bucket population n/2^planes), which is why it
-    is no longer a registered query; the cold-path/clamp-floor tests use
-    it as the bit-equality baseline for every scale-safe variant."""
-    from pyspark.sql import functions as F
-
-    from pyspark import StorageLevel
-
-    # Persisted for the same reason as ann_lsh: both pair sides read the
-    # bucketed+normed corpus — materialize the signature pass once.
-    b = sim.lsh_buckets(emb, planes, dim=dim).withColumn(
-        "norm", sim.norm_col("embedding", dim)).persist(
-        StorageLevel.MEMORY_AND_DISK)
-    q = b.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb"),
-                 F.col("bucket").alias("q_bucket"), F.col("norm").alias("q_n"))
-    c = b.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"),
-                 F.col("bucket").alias("c_bucket"), F.col("norm").alias("c_n"))
-    # The sim >= threshold filter pushes into the JOIN CONDITION, which is
-    # evaluated outside WholeStageCodegen: there the unrolled 64-term tree
-    # traverses interpreted (~6 us/pair); the zip_with/aggregate fold's
-    # tight internal loop is ~5x faster in that context (bit-identical
-    # accumulation either way). Unrolled stays the right form for
-    # projections; folds are the right form for join residuals.
-    s = sim.cosine_sim_e6_prenorm(F.col("q_emb"), F.col("c_emb"),
-                                  F.col("q_n"), F.col("c_n"), None)
-    return (
-        q.join(c, (F.col("q_bucket") == F.col("c_bucket"))
-               & (F.col("q_id") < F.col("c_id")))
-        .select(F.col("q_id").alias("vec_a"), F.col("c_id").alias("vec_b"),
-                s.alias("sim_e6"))
-        .where(F.col("sim_e6") >= 300000)
-    )
 
 
 def near_dup_pairs_adaptive(emb, corpus_size: int, dim: int, *,
@@ -1095,41 +1059,6 @@ def ivf_centroid_rows(spark: SparkSession, sf_dir: str) -> list:
         lambda: _bounded_collect(
             ivf_assigned(spark, sf_dir)[0].select("cell", "c_arr"),
             "ivf_assign centroids"))
-
-
-def ivf_assign_expr(emb: DataFrame, centv: DataFrame,
-                    dim: int = _DIM) -> DataFrame:
-    """Pure-Column IVF assignment (reference path): broadcast nested-loop
-    over k cells per vector, argmax via a vec_id window. Kept as the
-    no-Python reference — but the row_number() window shuffles N x k
-    scored rows for an argmax that needs no shuffle at all, so
-    :func:`ivf_assign` (map-side Arrow argmax, bit-identical) is the
-    production form; a test pins their equality."""
-    from pyspark.sql import Window, functions as F
-
-    # norms precomputed per vector (not per vector-x-centroid pair) and per
-    # centroid (k rows, inside the broadcast side). A zero norm on either
-    # side makes cosine undefined — such sims are NULL (excluded from the
-    # argmax; desc ordering puts NULLS LAST), and a vector with NO valid
-    # sim lands in the smallest cell via the ORDER BY cell tie-break —
-    # the same rule the map-side ivf_assign applies, keeping the two
-    # paths bit-identical even for degenerate vectors.
-    a_sim = F.when(
-        (F.col("_en") != 0) & (F.col("_cn") != 0),
-        sim.cosine_sim_e6_prenorm(
-            "embedding", "c_arr", F.col("_en"), F.col("_cn"), dim))
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("a_sim").desc(), F.col("cell"))
-    return (
-        emb.select("vec_id", "embedding",
-                   sim.norm_col("embedding", dim).alias("_en"))
-        .crossJoin(F.broadcast(
-            centv.withColumn("_cn", sim.norm_col("c_arr", dim))))
-        .withColumn("a_sim", a_sim)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("vec_id", "embedding", "cell", F.col("_en").alias("norm"))
-    )
 
 
 def ivf_assign(emb: DataFrame, centv: DataFrame,
@@ -2164,8 +2093,8 @@ def level1_cell_max(b, dim: int, n_planes: int, max_pop: int, cent, *,
     Cells only exist for HOT-bucket rows (cold rows carry the -1
     sentinel and are excluded by the census filter), so the pass runs
     on the hot buckets only — an isin on the index's partition column,
-    file-level pruned, instead of a full-index scan at every
-    build/append/compaction of a mostly-cold 100 TB index. The hot
+    file-level pruned, instead of a full-index scan at every build of
+    a mostly-cold 100 TB index. The hot
     list is bounded (each hot bucket holds > cap members); past the
     bound the unfiltered scan is the cheaper plan anyway."""
     from pyspark.sql import functions as F

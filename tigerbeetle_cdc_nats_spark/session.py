@@ -174,8 +174,8 @@ def table_path(sf_dir: str, name: str) -> str:
 #: (``dataset_identity``), so a rewritten, appended or compacted dataset
 #: changes the key by itself and no caller has to invalidate anything.
 _MEMO: dict = {}
-#: Streaming foreachBatch threads read stored indexes through the memo
-#: while batch queries run; builds nest (a pairs build loads a scan).
+#: Concurrent query threads read stored indexes through the memo; builds
+#: nest (a pairs build loads a scan).
 _MEMO_LOCK = threading.RLock()
 
 
@@ -203,7 +203,7 @@ def dataset_identity(path: str, marker: str | None = None):
     file must fall out of the memo so the next action re-reads, and
     raises on, the real bytes). The walk is a local stat pass, ~1 ms for
     a few hundred part files. ``marker`` (a stored index's metadata
-    sidecar, rewritten last by every build/append/compaction) adds its
+    sidecar, rewritten last by every build) adds its
     stat; a missing marker (pre-metadata layout) means no identity."""
     try:
         st = os.stat(path)
@@ -295,7 +295,7 @@ def memo_read_parquet(spark: SparkSession, path: str,
     calls per query; Spark only caches that for catalog tables. The memo
     holds the analyzed DataFrame (a logical plan: nothing is cached or
     persisted, every action still scans parquet). ``marker`` is a
-    stored-index snapshot's metadata sidecar (see dataset_identity)."""
+    stored index's metadata sidecar (see dataset_identity)."""
     return memo(memo_scope(spark), "scan", os.path.abspath(path),
                 dataset_identity(path, marker),
                 lambda: spark.read.parquet(path))

@@ -9,9 +9,9 @@ LSH bucket (and, for IVF, by cell) so that:
   partition pruning turns the candidate scan from O(corpus) to
   O(corpus / 2^planes) at the FILE level, before any row is decoded;
 - multi-probe reads (bucket + 1-bit-flip neighbors) become an IN filter
-  over partition values — still pruned;
-- index rebuilds are incremental per partition (new vectors append to
-  their bucket's directory).
+  over partition values — still pruned.
+
+The index is built whole: a rebuild overwrites the root.
 
 The bucket derivation is the same deterministic hyperplane expression the
 queries use (operators/similarity.bucket_col), so a stored index and an
@@ -23,15 +23,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.operators import similarity as sim
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
 
-def _bucket_dir_layout(live: str) -> bool:
-    """True when the live snapshot stores one directory per bucket."""
+def _bucket_dir_layout(path: str) -> bool:
+    """True when the index stores one directory per bucket."""
     import os
 
     try:
-        return any(e.startswith("bucket=") for e in os.listdir(live))
+        return any(e.startswith("bucket=") for e in os.listdir(path))
     except OSError:
         return True  # fresh path: the default layout
 
@@ -39,7 +38,6 @@ def _bucket_dir_layout(live: str) -> bool:
 def write_ann_index(embeddings: DataFrame, path: str,
                     planes: list[list[float]], *,
                     vec_col: str = "embedding", dim: int | None = None,
-                    mode: str = "overwrite",
                     bucket_dirs: bool = True) -> None:
     """Stored LSH index in one of two layouts, chosen by consumer:
 
@@ -59,23 +57,16 @@ def write_ann_index(embeddings: DataFrame, path: str,
     The vector norm is stored alongside (same folded accumulation the
     cosine uses, so FLOOR(cos*1e6) stays bit-identical) — probes read it
     instead of planning a dim-unrolled norm expression per query.
-    Build/append/compaction also maintain the SKEW SIDECAR (bucket
-    census + hot-bucket centroids, see write_skew_sidecar) so serving
-    never recomputes bucket populations per query. Appends adopt the
-    live snapshot's existing layout regardless of the flag (a mixed
-    directory would corrupt partition discovery)."""
-    # appends land in the LIVE snapshot (versioned layouts keep older
-    # snapshots immutable); an overwrite build resets to a flat root
-    dest = iv.current_dir(path) if mode == "append" else path
-    if mode == "append":
-        bucket_dirs = _bucket_dir_layout(dest)
+    The build also writes the SKEW SIDECAR (bucket census + hot-bucket
+    centroids, see write_skew_sidecar) so serving never recomputes
+    bucket populations per query."""
     signed = (sim.signature_cols(embeddings, [planes], vec_col, dim,
                                  bucket_names=["bucket"])
               .withColumn("norm", sim.norm_col(vec_col, dim)))
-    w = signed.write.mode(mode)
+    w = signed.write.mode("overwrite")
     if bucket_dirs:
         w = w.partitionBy("bucket")
-    w.parquet(dest)
+    w.parquet(path)
     write_skew_sidecar(embeddings.sparkSession, path, dim=dim,
                        n_planes=len(planes))
 
@@ -88,9 +79,8 @@ def write_ann_index(embeddings: DataFrame, path: str,
 # residual machinery entirely) and, when hot, the hot buckets' centroids.
 # Computed per query those are one driver-side census job plus a grouped
 # Arrow centroid pass over the hot rows — at 100 TB, one extra scan of
-# the bucket census per query (round-8 judge "what's wrong" #3). Both are
-# properties of the INDEX, not the query, so build/append/compaction
-# persist them next to the vectors:
+# the bucket census per query. Both are properties of the INDEX, not the
+# query, so the build persists them next to the vectors:
 #
 # - ``_skew_meta.json``: {"max_pop", "n_rows", "cap", "sec", "n_planes",
 #   and — hot indexes with known geometry — "max_cell_pop", the level-1
@@ -102,12 +92,9 @@ def write_ann_index(embeddings: DataFrame, path: str,
 #   so stored == freshly-computed bit-for-bit).
 #
 # Underscore-prefixed paths are invisible to Spark's file listing, so
-# index readers see only vectors. The sidecar lives INSIDE the snapshot
-# directory: a compaction publishes a fresh one with its new snapshot
-# and the CURRENT flip invalidates the old atomically. The census is a
-# partition-column-only aggregate (row counts from parquet footers — no
-# data column is decoded), so append-time maintenance is metadata-cheap;
-# the centroid recompute reads only hot-bucket partitions (pruned).
+# index readers see only vectors. The census is a partition-column-only
+# aggregate (row counts from parquet footers — no data column is
+# decoded); the centroid pass reads only hot-bucket partitions (pruned).
 
 _SKEW_META = "_skew_meta.json"
 _SKEW_CENTROIDS = "_skew_centroids"
@@ -117,7 +104,7 @@ def write_skew_sidecar(spark: SparkSession, path: str, *,
                        dim: int | None = None,
                        cap: int | None = None,
                        n_planes: int | None = None) -> None:
-    """(Re)compute the bucket census over the live snapshot and persist
+    """(Re)compute the bucket census over the index and persist
     ``max_pop`` + hot-bucket centroids (see module comment above).
 
     When the index is HOT (some bucket over ``cap``) and the build
@@ -141,16 +128,15 @@ def write_skew_sidecar(spark: SparkSession, path: str, *,
 
     if cap is None:
         cap = HOT_CAP
-    live = iv.current_dir(path)
     # DIRECT read, not read_ann_index's memo: this census runs right
-    # after rows were appended and BEFORE the sidecar marker is
-    # rewritten, so the memo would serve the pre-append file listing
+    # after the rows were written and BEFORE the sidecar marker is
+    # rewritten, so the memo would serve the pre-build file listing
     # here and the census would miss the new rows.
-    idx = spark.read.parquet(live)
+    idx = spark.read.parquet(path)
     if n_planes is None:
-        # compaction doesn't know the plane set; carry it over from the
-        # previous sidecar generation (the plane set is fixed per index
-        # generation — the caller owns plane-set versioning).
+        # a re-census that doesn't know the plane set carries it over from
+        # the previous sidecar generation (the plane set is fixed per
+        # index generation — the caller owns plane-set versioning).
         prior = read_skew_meta(path)
         n_planes = prior.get("n_planes") if prior else None
     pop = idx.groupBy("bucket").agg(F.count(F.lit(1)).alias("_pop"))
@@ -158,7 +144,7 @@ def write_skew_sidecar(spark: SparkSession, path: str, *,
                   F.sum("_pop").alias("n")).first()
     max_pop = int(row["m"] or 0)
     n_rows = int(row["n"] or 0)
-    cdir = os.path.join(live, _SKEW_CENTROIDS)
+    cdir = os.path.join(path, _SKEW_CENTROIDS)
     meta = {"max_pop": max_pop, "n_rows": n_rows, "cap": cap,
             "sec": SEC_PLANES, "n_planes": n_planes}
     if max_pop > cap:
@@ -176,10 +162,10 @@ def write_skew_sidecar(spark: SparkSession, path: str, *,
                 b, dim, n_planes, max_pop, spark.read.parquet(cdir))
     else:
         shutil.rmtree(cdir, ignore_errors=True)  # stale hot-era sidecar
-    tmp = os.path.join(live, _SKEW_META + ".tmp")
+    tmp = os.path.join(path, _SKEW_META + ".tmp")
     with open(tmp, "w", encoding="utf-8") as fh:
         json.dump(meta, fh)
-    os.replace(tmp, os.path.join(live, _SKEW_META))
+    os.replace(tmp, os.path.join(path, _SKEW_META))
 
 
 def read_skew_meta(path: str) -> dict | None:
@@ -189,8 +175,7 @@ def read_skew_meta(path: str) -> dict | None:
     import os
 
     try:
-        with open(os.path.join(iv.current_dir(path), _SKEW_META),
-                  encoding="utf-8") as fh:
+        with open(os.path.join(path, _SKEW_META), encoding="utf-8") as fh:
             meta = json.load(fh)
     except (OSError, ValueError):
         return None
@@ -203,7 +188,7 @@ def read_skew_centroids(spark: SparkSession, path: str) -> DataFrame | None:
 
     from tigerbeetle_cdc_nats_spark.session import configure
 
-    cdir = os.path.join(iv.current_dir(path), _SKEW_CENTROIDS)
+    cdir = os.path.join(path, _SKEW_CENTROIDS)
     if not os.path.isdir(cdir):
         return None
     configure(spark)
@@ -243,64 +228,16 @@ def index_norm(idx: DataFrame, vec_col: str = "embedding",
     return sim.norm_col(vec_col, dim)
 
 
-def append_ann_index(new_vectors: DataFrame, path: str,
-                     planes: list[list[float]], *,
-                     vec_col: str = "embedding",
-                     dim: int | None = None) -> None:
-    """Incremental maintenance: new vectors append into their bucket's
-    partition directory (same deterministic plane set as the original
-    build — the caller owns plane-set versioning); existing partitions
-    are untouched, so a daily embedding batch costs O(|delta|)."""
-    write_ann_index(new_vectors, path, planes, vec_col=vec_col, dim=dim,
-                    mode="append")
-
-
 def read_ann_index(spark: SparkSession, path: str) -> DataFrame:
     import os
 
     from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
-    snap = iv.current_dir(path)
-    # keyed on the skew sidecar: write_ann_index (build AND append) and
-    # compact_ann_index each finish by rewriting it, so the memoized
-    # listing is invalidated on every mutation; a pre-sidecar index
-    # falls through to a direct read
-    return memo_read_parquet(spark, snap, os.path.join(snap, _SKEW_META))
-
-
-def compact_ann_index(spark: SparkSession, path: str) -> None:
-    """Replay-duplicate compaction (same lifecycle op as the text
-    indexes, sources/dedup_index.compact_minhash_index): at-least-once
-    maintenance re-appends a replayed batch's vectors; row identity is
-    (vec_id, bucket) — the bucket is plane-determined, so a vec_id can
-    legitimately appear once per plane-set generation but a replayed
-    batch writes the SAME bucket twice. Published as a new immutable
-    snapshot (sources/index_versioning): the CURRENT pointer flips
-    atomically and the previous snapshot survives as a grace window so
-    a concurrent reader finishes its scan; probes keep pruning on the
-    partition column."""
-    vecs = read_ann_index(spark, path).dropDuplicates(["vec_id", "bucket"])
-    cols = [c for c in vecs.columns if c != "bucket"] + ["bucket"]
-    # capture the build geometry and LAYOUT before the snapshot flip:
-    # the prior generation's sidecar is the only record of the plane
-    # count, and current_dir points at the fresh (meta-less) snapshot
-    # afterwards
-    prior = read_skew_meta(path)
-    n_planes = prior.get("n_planes") if prior else None
-    bucket_dirs = _bucket_dir_layout(iv.current_dir(path))
-
-    def write(vdir: str) -> None:
-        w = vecs.select(*cols).write.mode("overwrite")
-        if bucket_dirs:
-            w = w.partitionBy("bucket")
-        w.parquet(vdir)
-
-    iv.publish_version(path, write)
-    spark.catalog.clearCache()
-    # fresh snapshot -> fresh skew sidecar (compaction may have removed
-    # replay duplicates, changing the census and hot-bucket centroids)
-    write_skew_sidecar(spark, path, n_planes=n_planes)
+    # keyed on the skew sidecar: write_ann_index finishes by rewriting
+    # it, so the memoized listing is invalidated on every build; a
+    # pre-sidecar index falls through to a direct read
+    return memo_read_parquet(spark, path, os.path.join(path, _SKEW_META))
 
 
 # -- Stored IVF index --------------------------------------------------------
@@ -345,7 +282,7 @@ def read_ivf_index(spark: SparkSession, path: str) -> DataFrame:
     from tigerbeetle_cdc_nats_spark.session import configure
 
     configure(spark)
-    return spark.read.parquet(iv.current_dir(path))
+    return spark.read.parquet(path)
 
 
 def read_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
@@ -354,5 +291,4 @@ def read_ivf_centroids(spark: SparkSession, path: str) -> DataFrame:
     from tigerbeetle_cdc_nats_spark.session import configure
 
     configure(spark)
-    return spark.read.parquet(
-        os.path.join(iv.current_dir(path), _IVF_CENTROIDS))
+    return spark.read.parquet(os.path.join(path, _IVF_CENTROIDS))

@@ -1,12 +1,11 @@
 """Persisted text-dedup indexes: MinHash banded + winnowing fingerprints.
 
-Round-4 judge item #4: the vector side already stores its index as a
-partitioned artifact (sources/ann_index.py); the TEXT near-dup family
-still rebuilt signatures/fingerprints per standalone query. At 100 TB the
-index IS the product — signatures are computed once per corpus, stored
-partitioned, maintained incrementally for appended documents, and every
-dedup query (full self-join or delta probe) runs against the stored
-artifact with file-level pruning.
+The vector side stores its index as a partitioned artifact
+(sources/ann_index.py); this is the text near-dup family's twin.
+Signatures are computed once per corpus, stored partitioned and built
+whole (a rebuild overwrites the root), and every dedup query (full
+self-join or delta probe) runs against the stored artifact with
+file-level pruning.
 
 Layouts (both derive from the exact operators the in-session queries use,
 so stored and fresh paths produce byte-identical candidates):
@@ -20,10 +19,8 @@ so stored and fresh paths produce byte-identical candidates):
   ``shard = wm % N_SHARDS``: same probe pruning on the 60-bit
   fingerprint's shard.
 
-Incremental maintenance is a partitioned APPEND of the delta's rows —
-no rewrite of existing partitions (the inverted-index append pattern);
-``probe_*`` then joins ONLY the delta against the stored corpus, so a
-daily batch costs O(|delta| x bands), not O(corpus).
+``probe_*`` joins ONLY a delta against the stored corpus, so a probe
+costs O(|delta| x bands), not O(corpus).
 """
 
 from __future__ import annotations
@@ -34,7 +31,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.operators import dedup as dd
-from tigerbeetle_cdc_nats_spark.sources import index_versioning as iv
 
 #: Default shard fan-out for indexes written before metadata existed.
 N_SHARDS = 16
@@ -56,11 +52,10 @@ def shards_for_corpus(n_docs: int, *, docs_per_shard: int = 50_000,
 
 def _write_meta(path: str, n_shards: int,
                 max_pop: int | None = None) -> None:
-    """Write shard metadata into the given PHYSICAL directory (callers
-    resolve snapshots; the builders write flat roots directly).
-    ``max_pop`` (round 11) is the band-bucket population census maximum
-    — the text verdict's zero-Spark-jobs plan-choice sidecar, refreshed
-    on every build/append/compaction like the ANN skew sidecar."""
+    """Write shard metadata into the index root. ``max_pop`` is the
+    band-bucket population census maximum — the text verdict's
+    zero-Spark-jobs plan-choice sidecar, written at every build like the
+    ANN skew sidecar."""
     os.makedirs(path, exist_ok=True)
     meta: dict = {"n_shards": int(n_shards)}
     if max_pop is not None:
@@ -69,20 +64,10 @@ def _write_meta(path: str, n_shards: int,
         json.dump(meta, fh)
 
 
-def read_index_meta(path: str) -> dict:
-    """Live-snapshot index metadata ({} when unreadable/pre-metadata)."""
-    try:
-        with open(os.path.join(iv.current_dir(path), _META),
-                  encoding="utf-8") as fh:
-            return json.load(fh)
-    except (OSError, ValueError):
-        return {}
-
-
 def _census_max_pop(spark: SparkSession, physical_dir: str) -> int:
     """MAX band-bucket population over a written index directory — a
     2-column pruned scan + map-side-combinable count, run once per index
-    mutation so every later verdict plans with zero Spark jobs."""
+    build so every later verdict plans with zero Spark jobs."""
     pop = (spark.read.parquet(physical_dir)
            .groupBy("band", "bucket").agg(F.count(F.lit(1)).alias("c"))
            .agg(F.max("c").alias("m")).first())
@@ -91,8 +76,7 @@ def _census_max_pop(spark: SparkSession, physical_dir: str) -> int:
 
 def _read_meta_shards(path: str) -> int:
     try:
-        with open(os.path.join(iv.current_dir(path), _META),
-                  encoding="utf-8") as fh:
+        with open(os.path.join(path, _META), encoding="utf-8") as fh:
             return int(json.load(fh)["n_shards"])
     except (OSError, ValueError, KeyError):
         return N_SHARDS  # pre-metadata index layout
@@ -105,7 +89,6 @@ def _bucket_shard(col, n_shards: int) -> F.Column:
 # -- MinHash banded index ---------------------------------------------------
 
 def write_minhash_index(docs: DataFrame, path: str, *,
-                        mode: str = "overwrite",
                         n_shards: int | None = None) -> None:
     """Compute signatures + banding for ``docs`` and store them
     ``(band, shard)``-partitioned. Shard count defaults to
@@ -113,58 +96,34 @@ def write_minhash_index(docs: DataFrame, path: str, *,
     probes always derive shards with the writer's modulus."""
     if n_shards is None:
         n_shards = shards_for_corpus(docs.count())
-    # appends land in the LIVE snapshot dir (versioned layouts keep older
-    # snapshots immutable); a fresh overwrite build resets to a flat root
-    dest = iv.current_dir(path) if mode == "append" else path
     banded = dd.banded_buckets(dd.minhash_signatures(docs))
     (banded.withColumn("shard", _bucket_shard(F.col("bucket"), n_shards))
-     .write.mode(mode).partitionBy("band", "shard").parquet(dest))
-    # sidecar: census the WRITTEN directory (append mode: the whole live
-    # snapshot), so the stored max_pop always reflects index contents
-    _write_meta(dest, n_shards,
-                max_pop=_census_max_pop(docs.sparkSession, dest))
-
-
-def append_minhash_index(delta_docs: DataFrame, path: str) -> None:
-    """Incremental maintenance: the delta's banded rows append into their
-    (band, shard) partitions (the EXISTING index's shard modulus);
-    existing partitions are untouched."""
-    write_minhash_index(delta_docs, path, mode="append",
-                        n_shards=_read_meta_shards(path))
+     .write.mode("overwrite").partitionBy("band", "shard").parquet(path))
+    # sidecar: census the WRITTEN directory, so the stored max_pop
+    # always reflects index contents
+    _write_meta(path, n_shards,
+                max_pop=_census_max_pop(docs.sparkSession, path))
 
 
 def read_minhash_index(spark: SparkSession, path: str) -> DataFrame:
     from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
-    snap = iv.current_dir(path)
-    # keyed on the meta sidecar: every build/append/compaction rewrites
-    # it last, so the memo can never serve a stale file listing
-    return memo_read_parquet(spark, snap, os.path.join(snap, _META))
+    # keyed on the meta sidecar: every build rewrites it last, so the
+    # memo can never serve a stale file listing
+    return memo_read_parquet(spark, path, os.path.join(path, _META))
 
 
 def read_minhash_snapshot(spark: SparkSession,
                           path: str) -> tuple[DataFrame, dict]:
-    """(banded rows, metadata) from ONE resolved physical snapshot.
-
-    ``read_minhash_index`` + ``read_index_meta`` each resolve
-    ``CURRENT`` independently; a compaction flipping the pointer
-    between the two reads would pair one snapshot's data with
-    another's sidecar — and a stale ``max_pop`` understating the live
-    census mis-tiers the verdict plan (round-11 advice). Resolving the
-    snapshot once pins data and meta to the same immutable version
-    directory (versioned snapshots are never mutated in place, so the
-    pair stays coherent even if a flip lands mid-scan)."""
-    from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
-
-    configure(spark)
-    snap = iv.current_dir(path)
+    """(banded rows, metadata) of the stored index; ``{}`` when the
+    metadata is unreadable (a pre-metadata index)."""
     try:
-        with open(os.path.join(snap, _META), encoding="utf-8") as fh:
+        with open(os.path.join(path, _META), encoding="utf-8") as fh:
             meta = json.load(fh)
     except (OSError, ValueError):
         meta = {}
-    return memo_read_parquet(spark, snap, os.path.join(snap, _META)), meta
+    return read_minhash_index(spark, path), meta
 
 
 def minhash_pairs_from_index(index: DataFrame) -> DataFrame:
@@ -185,13 +144,15 @@ def _persist_fresh(delta: DataFrame) -> DataFrame:
 
 
 def probe_minhash_index(spark: SparkSession, path: str,
-                        delta_docs: DataFrame) -> DataFrame:
+                        delta_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Delta-vs-corpus probe: band the delta, prune the stored index to
     the delta's (band, shard) partitions, equality-join on (band, bucket).
 
-    Output: (doc_id [delta], other_id, est_jaccard) — cost tracks the
-    DELTA size; the index side reads only the probed partition
-    directories (file-level pruning, plan-tested).
+    Output: ``(pairs, delta)``. ``pairs`` is (doc_id [delta], other_id,
+    est_jaccard) — cost tracks the DELTA size; the index side reads only
+    the probed partition directories (file-level pruning, plan-tested).
+    ``delta`` is the persisted banded delta the pairs read; the caller
+    unpersists it once it drops the pairs.
     """
     n_shards = _read_meta_shards(path)
     delta_banded = (dd.banded_buckets(dd.minhash_signatures(delta_docs))
@@ -208,8 +169,9 @@ def probe_minhash_index(spark: SparkSession, path: str,
         clause = (F.col("band") == band) & (F.col("shard") == shard)
         pred = clause if pred is None else (pred | clause)
     if pred is None:
-        return spark.createDataFrame(
+        empty = spark.createDataFrame(
             [], "doc_id long, other_id long, est_jaccard double")
+        return empty, delta_banded
     a = delta_banded.alias("a")
     b = index.where(pred).alias("b")
     pairs = (
@@ -223,13 +185,13 @@ def probe_minhash_index(spark: SparkSession, path: str,
         .dropDuplicates(["doc_id", "other_id"])
     )
     est = dd.sig_agreement_count() / F.lit(float(dd.MINHASH_K))
-    return pairs.select("doc_id", "other_id", est.alias("est_jaccard"))
+    return (pairs.select("doc_id", "other_id", est.alias("est_jaccard")),
+            delta_banded)
 
 
 # -- Winnowing fingerprint index --------------------------------------------
 
 def write_winnow_index(docs: DataFrame, path: str, *,
-                       mode: str = "overwrite",
                        n_shards: int | None = None) -> None:
     """Winnowed fingerprint set (doc_id, wm) stored shard-partitioned
     (corpus-scaled shard count, persisted in the index metadata)."""
@@ -237,25 +199,18 @@ def write_winnow_index(docs: DataFrame, path: str, *,
 
     if n_shards is None:
         n_shards = shards_for_corpus(docs.count())
-    dest = iv.current_dir(path) if mode == "append" else path
     fp = winnow_fingerprints(docs)
     (fp.withColumn("shard", F.pmod(F.col("wm"), F.lit(n_shards))
                    .cast("int"))
-     .write.mode(mode).partitionBy("shard").parquet(dest))
-    _write_meta(dest, n_shards)
-
-
-def append_winnow_index(delta_docs: DataFrame, path: str) -> None:
-    write_winnow_index(delta_docs, path, mode="append",
-                       n_shards=_read_meta_shards(path))
+     .write.mode("overwrite").partitionBy("shard").parquet(path))
+    _write_meta(path, n_shards)
 
 
 def read_winnow_index(spark: SparkSession, path: str) -> DataFrame:
     from tigerbeetle_cdc_nats_spark.session import configure, memo_read_parquet
 
     configure(spark)
-    snap = iv.current_dir(path)
-    return memo_read_parquet(spark, snap, os.path.join(snap, _META))
+    return memo_read_parquet(spark, path, os.path.join(path, _META))
 
 
 def winnow_candidates_from_index(index: DataFrame) -> DataFrame:
@@ -299,60 +254,3 @@ def probe_winnow_index(spark: SparkSession, path: str,
         .agg(F.count("*").alias("n_shared"))
     )
 
-
-# -- Compaction --------------------------------------------------------------
-
-def _swap_in(spark: SparkSession, path: str, rows: DataFrame,
-             partition_cols: list[str]) -> None:
-    """Publish ``rows`` as a new immutable snapshot of the index
-    (sources/index_versioning): the compacted tree is written into the
-    next ``v<N>/`` directory, the ``CURRENT`` pointer flips atomically,
-    and the previous snapshot survives as a grace window so a reader
-    that resolved it BEFORE the flip finishes its scan untouched —
-    concurrent-reader-safe, unlike a directory rename swap. Shard
-    metadata and the ``_SUCCESS`` trust marker ride inside the
-    snapshot. Single-WRITER remains the contract (publish_version
-    asserts it); the streaming pipeline runs appends + compactions in
-    one foreachBatch thread under its writer lock."""
-    n_shards = _read_meta_shards(path)
-    # only the minhash layout carries the band-bucket census sidecar
-    with_pop = {"band", "shard"} == set(partition_cols)
-
-    def write(vdir: str) -> None:
-        rows.write.mode("overwrite").partitionBy(
-            *partition_cols).parquet(vdir)
-        _write_meta(vdir, n_shards,
-                    max_pop=(_census_max_pop(spark, vdir)
-                             if with_pop else None))
-        open(os.path.join(vdir, "_SUCCESS"), "a").close()
-
-    iv.publish_version(path, write)
-    spark.catalog.clearCache()  # drop any cached scans of the old files
-
-
-def compact_minhash_index(spark: SparkSession, path: str) -> None:
-    """Rewrite the banded index with replay duplicates dropped.
-
-    At-least-once maintenance (streaming/corpus.maintain_minhash_index)
-    re-appends a replayed batch's banded rows; candidate PAIRS are
-    unaffected (pairs_est_from_banded dropDuplicates on the pair key) but
-    the duplicated rows inflate every future index read and delta probe.
-    Compaction is the standard LSM-style remedy: one dropDuplicates on
-    the row identity (doc_id, band, bucket) — sig is doc-determined,
-    shard is bucket-determined — rewritten under the SAME shard modulus,
-    so probes keep pruning correctly. O(index) once, amortized against
-    every read after it. The flip to a new snapshot moves the identity
-    the session pairs memo keys on, so same-session consumers re-read
-    the compacted files."""
-    rows = read_minhash_index(spark, path).select(
-        "doc_id", "sig", "band", "bucket", "shard"
-    ).dropDuplicates(["doc_id", "band", "bucket"])
-    _swap_in(spark, path, rows, ["band", "shard"])
-
-
-def compact_winnow_index(spark: SparkSession, path: str) -> None:
-    """Replay-duplicate compaction for the fingerprint index: row identity
-    is (doc_id, wm); shard is wm-determined and preserved."""
-    rows = read_winnow_index(spark, path).select(
-        "doc_id", "wm", "shard").dropDuplicates(["doc_id", "wm"])
-    _swap_in(spark, path, rows, ["shard"])

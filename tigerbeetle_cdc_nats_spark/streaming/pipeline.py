@@ -51,6 +51,7 @@ from dataclasses import dataclass
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.config import CdcConfig
@@ -335,6 +336,29 @@ def release_lock(lease: LockLease) -> None:
         pass
 
 
+def _write_error(batch_id: int, err: Py4JJavaError) -> RuntimeError:
+    """A short stand-in for the Py4J error of a failed sink write.
+
+    The Py4J error's text chains the whole Java stack trace, and Spark
+    4.1's StreamExecution tells a stop from a failure by matching that
+    text against a regex that recurses once per character: a stop that
+    lands during the write then kills the stream thread with a
+    StackOverflowError. This error names the batch, keeps the Py4J head
+    (``py4j.protocol.Py4JJavaError: An error occurred while calling``)
+    and gives the class and first message line of each exception in the
+    Java cause chain. An interruption class or a cancelled job group in
+    that chain still reads as a stop; anything else fails the query."""
+    chain = []
+    t = err.java_exception
+    while t is not None and len(chain) < 8:
+        first = (t.getMessage() or "").split("\n", 1)[0][:300]
+        chain.append(f"{t.getClass().getName()}: {first}")
+        t = t.getCause()
+    return RuntimeError(
+        f"batch {batch_id}: py4j.protocol.Py4JJavaError: "
+        f"{err.errmsg.strip()}\n: " + "\ncaused by: ".join(chain))
+
+
 def make_batch_sink(spark: SparkSession, paths: StreamPaths):
     """foreachBatch body: idempotent publish (overwrite-by-batch-id) THEN
     cursor commit — the at-least-once ordering of runner.go:442-462.
@@ -343,7 +367,9 @@ def make_batch_sink(spark: SparkSession, paths: StreamPaths):
     count and max ``ts`` as observed metrics (side outputs of the same
     job); the progress record is written by the driver. Each record holds
     the running max (the batch max ``ts`` and the cursor read when the
-    sink was made), so trimming old records never lowers the cursor."""
+    sink was made), so trimming old records never lowers the cursor.
+    A failed write raises ``_write_error``'s short error instead of the
+    Py4J one."""
     retain = int(spark.conf.get("spark.sql.streaming.minBatchesToRetain"))
     cursor = read_progress(spark, paths.cursor_dir)
     fs, jdir = _hadoop_fs(spark, paths.cursor_dir)
@@ -354,10 +380,13 @@ def make_batch_sink(spark: SparkSession, paths: StreamPaths):
         nonlocal cursor
         out = os.path.join(paths.sink_dir, f"batch_id={batch_id}")
         obs = Observation()
-        (batch_df.drop("event_time")
-         .observe(obs, F.count(F.lit(1)).alias("rows"),
-                  F.max("ts").alias("max_ts"))
-         .write.mode("overwrite").parquet(out))
+        try:
+            (batch_df.drop("event_time")
+             .observe(obs, F.count(F.lit(1)).alias("rows"),
+                      F.max("ts").alias("max_ts"))
+             .write.mode("overwrite").parquet(out))
+        except Py4JJavaError as err:
+            raise _write_error(batch_id, err) from None
         # read only after the write returned: a failed publish raises
         # above and commits nothing
         metrics = obs.get
