@@ -3,17 +3,21 @@
 
 Without Hadoop's native library (``libhadoop``), its local filesystem
 starts a process for some calls: ``readlink`` for a FileContext rename,
-``chmod`` for a file it creates with a permission. Each start costs
-milliseconds on the commit path of every micro-batch. This script counts
-them: it runs the CLI's streaming branch (``run_cli`` without ``--once``)
-over a tail-shaped feed, one 250-event file every 0.25 s after 10 files
-present at the start, under a JFR recording of the driver JVM
-(``-XX:StartFlightRecording``). It stops the query once ``--batches``
-micro-batches have run after the first one, reads the recording's
-``jdk.ProcessStart`` events with the JDK's ``jfr`` tool, keeps those
-between the end of the first micro-batch and the end of the last, and
-prints the process starts per micro-batch by command and by thread. The
-last line is the same figures as one JSON object.
+``chmod`` for every file it creates and every directory it makes. Each
+start costs milliseconds on the commit path of every micro-batch. The
+pipeline avoids both: it commits checkpoints by FileSystem rename
+(``streaming/pipeline.build_query``), and ``session.get_spark`` resolves
+``file:`` to ``session.LOCAL_FS_CLASS``, which sets modes through
+java.nio. So a micro-batch should start no process; this script checks
+that by counting them. It runs the CLI's streaming branch (``run_cli``
+without ``--once``) over a tail-shaped feed, one 250-event file every
+0.25 s after 10 files present at the start, under a JFR recording of
+the driver JVM (``-XX:StartFlightRecording``). It stops the query once
+``--batches`` micro-batches have run after the first one, reads the
+recording's ``jdk.ProcessStart`` events with the JDK's ``jfr`` tool,
+keeps those between the end of the first micro-batch and the end of the
+last, and prints the process starts per micro-batch by command and by
+thread. The last line is the same figures as one JSON object.
 
 Usage:
     python scripts/fork_count.py [--batches 40] [--cores 3] [--keep]

@@ -80,7 +80,7 @@ def test_winnow_probe_prunes_and_counts(spark, docs, wn_index):
     from tigerbeetle_cdc_nats_spark.queries_corpus import winnow_fingerprints
 
     delta = docs.where(F.col("doc_id") < 3)
-    probe = di.probe_winnow_index(spark, wn_index, delta)
+    probe, _ = di.probe_winnow_index(spark, wn_index, delta)
     plan = physical_plan(probe)
     assert "PartitionFilters" in plan
     assert "shard" in plan.split("PartitionFilters", 1)[1].split("]")[0]

@@ -20,6 +20,15 @@ from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 GOOD = "alpha beta gamma delta epsilon zeta eta theta"
 
 
+def _live_persisted(spark) -> int:
+    """Persisted RDDs still referenced. SparkContext holds persisted RDDs
+    by weak reference, so a JVM garbage collection drops those of earlier
+    tests that nothing references any more; collect first, so the count
+    does not depend on when the collector last ran."""
+    spark._jvm.System.gc()
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def _n_materialized(spark) -> int:
     # materialized cache blocks registered with the block manager
     return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
@@ -209,15 +218,36 @@ def test_minhash_probe_releases_its_delta_on_identity_change(
     delta's plan differs and no same-plan unpersist can catch the old
     one."""
     sf = str(tmp_path)
-    persistent = spark.sparkContext._jsc.getPersistentRDDs
     _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER)], 1)
     qd.corpus_minhash_probe(spark, sf).collect()
-    held = persistent().size()
+    held = _live_persisted(spark)
     monkeypatch.setattr(di, "shards_for_corpus", lambda n: 2)
     _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2)
     assert {r["doc_id"] for r in
             qd.corpus_minhash_probe(spark, sf).collect()} == {4, 9}
-    assert persistent().size() == held
+    assert _live_persisted(spark) == held
+
+
+def test_winnow_probe_releases_its_delta_on_identity_change(
+        spark, tmp_path, monkeypatch):
+    """The winnow probe's memo value holds its persisted delta
+    fingerprints next to the counts, so an identity change releases
+    both; as in the MinHash case, the rebuilt index has 2 shards, so no
+    same-plan unpersist can catch the old delta."""
+    from tigerbeetle_cdc_nats_spark.queries_corpus import (
+        q_winnow_probe_indexed,
+    )
+
+    sf = str(tmp_path)
+    _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER)], 1)
+    assert {r["doc_id"] for r in
+            q_winnow_probe_indexed(spark, sf).collect()} == {4}
+    held = _live_persisted(spark)
+    monkeypatch.setattr(di, "shards_for_corpus", lambda n: 2)
+    _write_documents(sf, [(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2)
+    assert {r["doc_id"] for r in
+            q_winnow_probe_indexed(spark, sf).collect()} == {4, 9}
+    assert _live_persisted(spark) == held
 
 
 def test_winnow_probe_follows_a_same_path_rewrite(spark, tmp_path):
@@ -232,7 +262,7 @@ def test_winnow_probe_follows_a_same_path_rewrite(spark, tmp_path):
         di.write_winnow_index(frame, index, n_shards=4)
         delta = frame.where(frame["doc_id"] % 5 == 4)
         return {r["doc_id"] for r in
-                di.probe_winnow_index(spark, index, delta).collect()}
+                di.probe_winnow_index(spark, index, delta)[0].collect()}
 
     assert probed([(1, GOOD), (4, GOOD), (7, OTHER)], 1) == {4}
     assert probed([(1, GOOD), (4, GOOD), (7, OTHER), (9, GOOD)], 2) == {4, 9}

@@ -1406,10 +1406,8 @@ def q_winnow_candidates_indexed(spark: SparkSession,
     docs = load_table(spark, sf_dir, "documents")
 
     def stored() -> DataFrame:
-        path = qd.stored_index("winnow", sf_dir,
-                               lambda p: di.write_winnow_index(docs, p))
         return di.winnow_candidates_from_index(
-            di.read_winnow_index(spark, path))
+            di.read_winnow_index(spark, _winnow_path(spark, sf_dir)))
 
     # the computed path: an identical result in-session
     return qd.serve_stored(
@@ -1948,18 +1946,18 @@ def q_winnow_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the probe side is the delta's fingerprints (~2/(w+1) of
     its gram volume); the index side prunes to the probed shards before
     any join, so a daily batch costs O(|delta|), not O(corpus).
+
+    Session-memoized on the documents and index identities, like
+    corpus_minhash_probe: the memo value holds the persisted delta (or,
+    in-session, the persisted fingerprints) next to the counts, so an
+    identity change releases it.
     """
     from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
 
     docs = load_table(spark, sf_dir, "documents")
     pred = (F.col("doc_id") % 5) == 4
 
-    def stored() -> DataFrame:
-        path = qd.stored_index("winnow", sf_dir,
-                               lambda p: di.write_winnow_index(docs, p))
-        return di.probe_winnow_index(spark, path, docs.where(pred))
-
-    def computed() -> DataFrame:
+    def computed() -> tuple:
         # identical counts in-session
         fp = winnow_fingerprints(docs).persist()
         a = fp.where(pred).select("wm", F.col("doc_id").alias("doc_id"))
@@ -1967,9 +1965,21 @@ def q_winnow_probe_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (a.join(b, ["wm"])
                 .where(F.col("doc_id") != F.col("other_id"))
                 .groupBy("doc_id", "other_id")
-                .agg(F.count("*").alias("n_shared")))
+                .agg(F.count("*").alias("n_shared")), fp)
 
-    return qd.serve_stored("winnow_probe_indexed", stored, computed)
+    return qd.index_memo(
+        spark, sf_dir, "winnow_probe_indexed", "winnow_probe", sf_dir,
+        _winnow_path,
+        lambda p: di.probe_winnow_index(spark, p, docs.where(pred)),
+        computed)[0]
+
+
+def _winnow_path(spark: SparkSession, sf_dir: str) -> str:
+    """The corpus's winnowing fingerprint index, built on first touch."""
+    from tigerbeetle_cdc_nats_spark.sources import dedup_index as di
+
+    return qd.stored_index("winnow", sf_dir, lambda p: di.write_winnow_index(
+        load_table(spark, sf_dir, "documents"), p))
 
 
 #: Head sizes for the vocabulary coverage curve.

@@ -213,11 +213,11 @@ def _minhash_path(spark: SparkSession, sf_dir: str) -> str:
         load_table(spark, sf_dir, "documents"), p))
 
 
-def _minhash_memo(spark: SparkSession, sf_dir: str, served: str,
-                  name: str, params, from_index, computed):
-    """Memo slot ``name`` of a value derived from the MinHash banded
-    index, served as ``served``: ``from_index(path)`` over the stored
-    index, else ``computed()``.
+def index_memo(spark: SparkSession, sf_dir: str, served: str, name: str,
+               params, index_path, from_index, computed):
+    """Memo slot ``name`` of a value derived from a stored index, served
+    as ``served``: ``from_index(path)`` over ``index_path(spark,
+    sf_dir)``, the built index, else ``computed()``.
 
     The identity is the documents identity PLUS the index identity,
     taken AFTER the build (else the first lookup after a cold build
@@ -232,7 +232,7 @@ def _minhash_memo(spark: SparkSession, sf_dir: str, served: str,
         return memo(memo_scope(spark), name, params, ident, build)
 
     def stored():
-        path = _minhash_path(spark, sf_dir)
+        path = index_path(spark, sf_dir)
         return keyed(dataset_identity(path),
                      lambda: from_index(path))
 
@@ -251,7 +251,7 @@ def corpus_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     either way (stored and fresh share pairs_est_from_banded).
 
     The stored index is the CROSS-session cache; this session memo (one
-    persisted pairs table, keyed as in _minhash_memo) is the
+    persisted pairs table, keyed as in index_memo) is the
     WITHIN-session one — 14 consumers share it instead of each re-reading
     + re-joining the index (measured ~1.2 s fixed overhead per consumer
     at sf0.1)."""
@@ -264,9 +264,9 @@ def corpus_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.count()  # eager: concurrent consumers read one materialization
         return pairs
 
-    return _minhash_memo(
+    return index_memo(
         spark, sf_dir, "corpus_minhash_pairs", "minhash_pairs", sf_dir,
-        lambda p: persisted(di.minhash_pairs_from_index(
+        _minhash_path, lambda p: persisted(di.minhash_pairs_from_index(
             di.read_minhash_index(spark, p))),
         lambda: persisted(dd.minhash_candidate_pairs(dd.minhash_signatures(
             load_table(spark, sf_dir, "documents")))))
@@ -326,9 +326,9 @@ def corpus_minhash_probe(spark: SparkSession, sf_dir: str,
             "other_is_delta", (F.col("other_id") % delta_mod) == delta_rem
         ).persist(StorageLevel.MEMORY_AND_DISK), *held)
 
-    return _minhash_memo(
+    return index_memo(
         spark, sf_dir, "corpus_minhash_probe", "minhash_probe",
-        (sf_dir, delta_mod, delta_rem),
+        (sf_dir, delta_mod, delta_rem), _minhash_path,
         lambda p: tagged(*di.probe_minhash_index(spark, p, docs.where(pred))),
         lambda: tagged(dd.minhash_incremental_pairs(
             dd.minhash_signatures(docs), pred).select(
@@ -407,8 +407,8 @@ def _dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("est_jaccard") >= DUP_CLUSTER_THRESHOLD)
         return dd.connected_components(edges, src="doc_a", dst="doc_b")
 
-    return _minhash_memo(spark, sf_dir, "dup_components", "dup_components",
-                         sf_dir, lambda _path: build(), build)
+    return index_memo(spark, sf_dir, "dup_components", "dup_components",
+                      sf_dir, _minhash_path, lambda _path: build(), build)
 
 
 @register(

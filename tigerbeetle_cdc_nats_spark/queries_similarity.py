@@ -534,10 +534,9 @@ def _verdict_hot_scan(hot: DataFrame, dim: int) -> DataFrame:
     import pandas as pd
 
     def scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        # drop duplicate index rows: a vec must never match its own copy
-        # and become its own dropped representative — the pair paths are
-        # naturally immune (vec_a < vec_b excludes self-pairs)
-        pdf = pdf.drop_duplicates("vec_id").sort_values("vec_id")
+        # the index holds one row per vec_id (one hash table), so a
+        # bucket never holds a vec twice
+        pdf = pdf.sort_values("vec_id")
         ids = pdf["vec_id"].to_numpy()
         n = len(ids)
         reps = np.full(n, -1, dtype=np.int64)
@@ -604,12 +603,9 @@ def near_dup_verdict_from_index(spark: SparkSession, path: str, dim: int, *,
     idx = ai.read_ann_index(spark, path)
     b = idx.select("vec_id", "embedding", "bucket",
                    ai.index_norm(idx, "embedding", dim).alias("norm"))
-    # the id list comes from the INDEX here (unlike the computed path's
-    # clean source table), and an index can carry duplicate rows —
-    # distinct() keeps the verdict |docs|-sized; the exchange lands on
-    # the same vec_id partitioning the assembly join needs, so it adds
-    # no extra shuffle stage beyond the aggregate itself
-    ids = b.select("vec_id").distinct()
+    # the id list comes from the index, which write_ann_index builds
+    # whole from one hash table: one row per vec_id, as in the source
+    ids = b.select("vec_id")
     meta = ai.read_skew_meta(path)
     cent = None
     if meta is not None:

@@ -49,6 +49,15 @@ TABLES = (
 #: them to broadcast at runtime when a filtered side actually fits.
 SMALL_DIMS = frozenset({"region", "nation"})
 
+#: Hadoop's checksummed local filesystem with java.nio permissions
+#: (jvm/NioLocalFileSystem.java, built by scripts/build_jvm.py). Without
+#: Hadoop's native library the stock one starts a ``chmod`` process for
+#: every file it creates and every directory it makes, about 35 per
+#: micro-batch of the CDC pipeline at a few milliseconds each.
+LOCAL_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                            "jvm", "local-fs.jar")
+LOCAL_FS_CLASS = "tigerbeetle_cdc_nats_spark.jvm.NioLocalFileSystem"
+
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -123,7 +132,12 @@ def get_spark(app_name: str = "tigerbeetle-cdc-nats-spark",
     The builder confs below apply only when this call creates the session.
     A running session is returned with its confs as they are: a second
     call (an in-process ``run_cli``, say) must not reset its caller's
-    shuffle partitions, master or app name."""
+    shuffle partitions, master or app name.
+
+    When the call also starts the JVM in local mode, ``file:`` resolves
+    to ``LOCAL_FS_CLASS``: the jar goes on the driver class path and the
+    class into ``fs.file.impl``, both at launch, since Hadoop's
+    FileSystem cache keeps the first ``file:`` filesystem a JVM makes."""
     from pyspark import SparkContext
 
     if SparkContext._active_spark_context is not None:
@@ -157,10 +171,42 @@ def get_spark(app_name: str = "tigerbeetle-cdc-nats-spark",
     if master:
         builder = builder.config("spark.master", master)
     elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.config("spark.master", f"local[{cores}]")
+        master = f"local[{cores}]"
+        builder = builder.config("spark.master", master)
+    # local[N] only: local-cluster executors run in JVMs of their own
+    local_fs = (SparkContext._gateway is None
+                and (master or "").split("[")[0] == "local")
+    if local_fs:
+        builder = (builder.config("spark.driver.extraClassPath", LOCAL_FS_JAR)
+                   .config("spark.hadoop.fs.file.impl", LOCAL_FS_CLASS))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if local_fs:
+        _check_local_fs(spark)
     return configure(spark)
+
+
+def _check_local_fs(spark: SparkSession) -> None:
+    """Stop ``spark`` and raise unless ``file:`` resolves to
+    ``LOCAL_FS_CLASS``; a ``--driver-class-path`` in
+    ``PYSPARK_SUBMIT_ARGS`` replaces the jar's class path entry, and every
+    ``file:`` access would then throw ``ClassNotFoundException``."""
+    from py4j.protocol import Py4JJavaError
+
+    jvm = spark._jvm
+    try:
+        got = jvm.org.apache.hadoop.fs.FileSystem.get(
+            jvm.java.net.URI("file:///"),
+            spark.sparkContext._jsc.hadoopConfiguration()
+        ).getClass().getName()
+    except Py4JJavaError as e:
+        got = str(e.java_exception.toString())
+    if got != LOCAL_FS_CLASS:
+        spark.stop()
+        raise RuntimeError(
+            f"file: resolves to {got}, not {LOCAL_FS_CLASS}: {LOCAL_FS_JAR} "
+            "must be on the driver class path, which a --driver-class-path "
+            "in PYSPARK_SUBMIT_ARGS replaces")
 
 
 def table_path(sf_dir: str, name: str) -> str:

@@ -225,12 +225,14 @@ def winnow_candidates_from_index(index: DataFrame) -> DataFrame:
 
 
 def probe_winnow_index(spark: SparkSession, path: str,
-                       delta_docs: DataFrame) -> DataFrame:
+                       delta_docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Delta probe: fingerprints of the delta joined against ONLY their
     fingerprints' shard partitions in the stored index.
 
-    Output: (doc_id [delta], other_id, n_shared) — shared-fingerprint
-    counts of each delta doc against the indexed corpus.
+    Output: ``(pairs, delta)``. ``pairs`` is (doc_id [delta], other_id,
+    n_shared) — shared-fingerprint counts of each delta doc against the
+    indexed corpus. ``delta`` is the persisted delta fingerprints the
+    pairs read; the caller unpersists it once it drops the pairs.
     """
     from tigerbeetle_cdc_nats_spark.queries_corpus import winnow_fingerprints
 
@@ -242,15 +244,16 @@ def probe_winnow_index(spark: SparkSession, path: str,
                      delta_fp.select("shard").distinct().collect()})
     if not shards:
         return spark.createDataFrame(
-            [], "doc_id long, other_id long, n_shared long")
+            [], "doc_id long, other_id long, n_shared long"), delta_fp
     index = read_winnow_index(spark, path).where(
         F.col("shard").isin(shards))
     a, b = delta_fp.alias("a"), index.alias("b")
-    return (
+    pairs = (
         a.join(b, (F.col("a.wm") == F.col("b.wm"))
                & (F.col("a.doc_id") != F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_id"),
                  F.col("b.doc_id").alias("other_id"))
         .agg(F.count("*").alias("n_shared"))
     )
+    return pairs, delta_fp
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def write_verdict_store(verdict: DataFrame, path: str) -> None:
@@ -24,12 +24,8 @@ def write_verdict_store(verdict: DataFrame, path: str) -> None:
 
 
 def read_corpus_verdict(spark: SparkSession, path: str) -> DataFrame:
-    """|docs|-sized composed verdict from the store, collapsed to one
-    row per doc_id by a max() per column (no window or sort)."""
+    """|docs|-sized composed verdict from the store: the build writes one
+    row per doc_id, so the rows are served as stored."""
     from tigerbeetle_cdc_nats_spark.session import memo_read_parquet
 
-    rows = memo_read_parquet(spark, os.path.join(path, "verdict"))
-    return (rows.groupBy("doc_id")
-            .agg(F.max("rep_id").alias("rep_id"),
-                 F.max("is_kept").alias("is_kept"),
-                 F.max("stage").alias("stage")))
+    return memo_read_parquet(spark, os.path.join(path, "verdict"))

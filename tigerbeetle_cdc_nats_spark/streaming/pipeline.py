@@ -9,7 +9,9 @@ Reference mapping (runner.go:49-170, 425-466):
 |                                             | after an empty poll             |
 | cursor recovery (runner.go:388-410)         | checkpointLocation (+ override);|
 |                                             | FileSystem-rename commits on a  |
-|                                             | local checkpoint                |
+|                                             | local checkpoint; file: modes   |
+|                                             | set by java.nio, no chmod       |
+|                                             | process (session.LOCAL_FS_CLASS)|
 | chunked publish+checkpoint (425-466)        | foreachBatch: one write with    |
 |                                             | observed count + max ts, then   |
 |                                             | a driver-written cursor record  |
