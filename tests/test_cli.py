@@ -76,6 +76,29 @@ def test_inert_flags_at_their_defaults_pass(capsys):
                     "--stream-replicas", "1", "--kv-replicas", "1"]) == 0
 
 
+PIPELINE_DIRS = ("--sink-dir", "--checkpoint-dir", "--cursor-dir")
+
+
+@pytest.mark.parametrize("missing", PIPELINE_DIRS)
+def test_missing_pipeline_dir_exits_two(capsys, monkeypatch, tmp_path,
+                                        missing):
+    """With --source-dir, each other pipeline dir is required: its absence
+    exits 2 and names the flag, before any Spark session starts."""
+    from tigerbeetle_cdc_nats_spark import session
+
+    def no_spark(**_kw):
+        raise AssertionError("get_spark called")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    args = ["--cluster-id", "1", "--source-dir", str(tmp_path / "src"),
+            "--once"]
+    for flag in PIPELINE_DIRS:
+        if flag != missing:
+            args += [flag, str(tmp_path / flag[2:])]
+    assert run_cli(args) == 2
+    assert f"{missing} is required with --source-dir" in capsys.readouterr().err
+
+
 def test_get_spark_keeps_a_running_sessions_confs(spark):
     """Builder confs apply only when get_spark creates the session: a
     second call (an in-process run_cli) gets the running session with its

@@ -149,33 +149,11 @@ def test_decimal_path_matches_string_path(spark):
         }
 
 
-def test_spark_sql_encoder_matches_column_encoder(spark):
-    """The single-F.expr envelope encoder must stay byte-identical to the
-    Column-built form (which the goldens pin) on real event data."""
-    from pyspark.sql import functions as F
-
-    from tigerbeetle_cdc_nats_spark.functions.json_codec import (
-        encode_cdc_json_spark_expr,
-    )
-    from tigerbeetle_cdc_nats_spark.operators.cdc_view import with_cdc_event
-    from tigerbeetle_cdc_nats_spark.session import load_events
-
-    ev = with_cdc_event(load_events(spark, "/root/testdata/sf0.001"))
-    df = ev.select(
-        encode_cdc_json("event").alias("a"),
-        encode_cdc_json_spark_expr("event").alias("b"),
-    )
-    assert df.where(F.col("a") != F.col("b")).count() == 0
-
-
-def test_field_encoder_matches_struct_encoder(spark):
-    """The pipeline's form — the walker over ``cdc_view.spark_field`` —
-    is byte-equal to encoding the materialized ``event`` struct."""
-    from tigerbeetle_cdc_nats_spark.functions.json_codec import (
-        encode_cdc_json_fields,
-    )
+def test_struct_form_matches_field_form(spark):
+    """The encoder over the materialized ``event`` struct (by name) is
+    byte-equal to the pipeline's form over ``cdc_view.spark_sql``."""
     from tigerbeetle_cdc_nats_spark.operators.cdc_view import (
-        spark_field,
+        spark_sql,
         with_cdc_event,
     )
     from tigerbeetle_cdc_nats_spark.session import load_events
@@ -183,7 +161,7 @@ def test_field_encoder_matches_struct_encoder(spark):
     ev = with_cdc_event(load_events(spark, SF_SMOKE))
     df = ev.select(
         encode_cdc_json("event").alias("a"),
-        encode_cdc_json_fields(spark_field).alias("b"),
+        encode_cdc_json(spark_sql).alias("b"),
     )
     assert df.count() > 0
     assert df.where(~F.col("a").eqNullSafe(F.col("b"))).count() == 0

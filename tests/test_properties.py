@@ -2,7 +2,8 @@
 (SURVEY.md §5: "no property-based tests").
 
 The portable-number contract (message.go:12-41) is checked against an
-independent Python model over the full u128 domain with boundary bias; the
+independent Python model over the full u128 domain (digit strings) and the
+DECIMAL(38,0) domain (typed values), both with boundary bias; the
 config validator is checked for idempotence (resolving a resolved config is
 a no-op).
 """
@@ -10,6 +11,7 @@ a no-op).
 from __future__ import annotations
 
 import json
+from decimal import Decimal
 
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F, types as T
@@ -17,7 +19,7 @@ from pyspark.sql import functions as F, types as T
 from tigerbeetle_cdc_nats_spark.config import CdcConfig, validate
 from tigerbeetle_cdc_nats_spark.functions.portable import (
     MAX_PORTABLE_JSON_INT,
-    portable_uint_json_str,
+    portable_uint_spark_sql,
 )
 
 BOUNDARY = [0, 1, MAX_PORTABLE_JSON_INT - 1, MAX_PORTABLE_JSON_INT,
@@ -29,17 +31,38 @@ def model_portable(v: int) -> str:
     return json.dumps(str(v)) if v > MAX_PORTABLE_JSON_INT else str(v)
 
 
+#: The typed path's boundaries, each with its neighbours: 2^53-1, 2^53,
+#: 2^53+1, the long and u64 maxima and the DECIMAL(38,0) range ends. Every
+#: example encodes all of them, then the drawn values.
+DECIMAL_MAX = 10**38 - 1
+DECIMAL_BOUNDARY = sorted({min(max(p + d, 0), DECIMAL_MAX)
+                           for p in (0, 2**53, 2**63 - 1, 2**64 - 1,
+                                     DECIMAL_MAX)
+                           for d in (-1, 0, 1)})
+
+
 @settings(max_examples=5, deadline=None)
-@given(st.lists(
-    st.one_of(st.sampled_from(BOUNDARY), st.integers(0, 2**128 - 1)),
-    min_size=1, max_size=64,
-))
-def test_portable_encoding_matches_model(spark, values):
+@given(
+    st.lists(st.one_of(st.sampled_from(BOUNDARY), st.integers(0, 2**128 - 1)),
+             min_size=1, max_size=64),
+    st.lists(st.integers(0, DECIMAL_MAX), max_size=64),
+)
+def test_portable_encoding_matches_model(spark, values, decimals):
+    """Both inputs of the one Spark portable function: canonical-digit
+    strings over the full u128 domain (the lossless path) and
+    DECIMAL(38,0) values (the typed path the pipeline runs)."""
     schema = T.StructType([T.StructField("v", T.StringType())])
     df = spark.createDataFrame([{"v": str(v)} for v in values], schema)
-    got = [r["j"] for r in
-           df.select(portable_uint_json_str("v").alias("j")).collect()]
+    got = [r["j"] for r in df.select(F.expr(
+        portable_uint_spark_sql("v", from_strings=True)).alias("j")).collect()]
     assert got == [model_portable(v) for v in values]
+
+    schema = T.StructType([T.StructField("v", T.DecimalType(38, 0))])
+    decimals = DECIMAL_BOUNDARY + decimals
+    df = spark.createDataFrame([(Decimal(v),) for v in decimals], schema)
+    got = [r["j"] for r in df.select(
+        F.expr(portable_uint_spark_sql("v")).alias("j")).collect()]
+    assert got == [model_portable(v) for v in decimals]
 
 
 @settings(max_examples=50, deadline=None)

@@ -126,6 +126,13 @@ def run_cli(args: list[str]) -> int:
         print(f"resolved: stream={cfg.event_stream} "
               f"progress={cfg.progress_bucket} lock={cfg.lock_bucket}")
         return 0
+    for flag, value in (("--sink-dir", ns.sink_dir),
+                        ("--checkpoint-dir", ns.checkpoint_dir),
+                        ("--cursor-dir", ns.cursor_dir)):
+        if not value:
+            print(f"error: {flag} is required with --source-dir",
+                  file=sys.stderr)
+            return 2
 
     try:
         from tigerbeetle_cdc_nats_spark.session import get_spark

@@ -6,22 +6,24 @@ contract is exact bytes — golden tests pin a 564-byte all-zero encoding and a
 and the portable-number rule (number <= 2^53-1, decimal string above).
 
 Spark's ``to_json`` cannot express "number or string per value", so the JSON
-is assembled with ``concat`` of literal fragments and per-field encodings —
-no UDF, no Python in the hot path. One spec walker (``_walk``) emits every
-form: Spark Columns, Spark SQL text and the equivalent DuckDB SQL, so the
-DuckDB oracle produces identical strings. Its input is a field accessor
-(path -> value), so the envelope can be read from a struct column or built
-straight from the per-field expressions.
+is assembled with ``||`` of literal fragments and per-field encodings — no
+UDF, no Python in the hot path. One spec walker (``_walk``) emits both
+forms as SQL text: Spark SQL for :func:`encode_cdc_json` and the equivalent
+DuckDB SQL for :func:`encode_cdc_json_sql`, so the DuckDB oracle produces
+identical strings. Its input is a field accessor (path -> SQL), so the
+envelope can be read from a struct column or built straight from the
+per-field expressions (``operators/cdc_view.spark_sql``).
 
-The encode is ~500 expression nodes, and its generated code is large.
-HotSpot never JIT-compiles a method over 8,000 bytes of bytecode
-(``HugeMethodLimit``); such a method runs in the bytecode interpreter for
-every row. When the encode reads a materialized struct, the optimizer
-keeps two Projects (the struct, then the encode) and every field access
-carries struct-extraction code, which puts the fused stage's largest
-method over that limit. So the pipeline encodes from the field expressions
-(``encode_cdc_json_fields(cdc_view.spark_field)``); the struct wrapper
-``encode_cdc_json`` serves the goldens and the lossless u128 path.
+The Spark form is one text and one ``F.expr`` for two reasons:
+- Build cost. The encode is ~500 expression nodes. Built as Columns, each
+  node is a py4j call; as text, it is parsed once in the JVM.
+- The JIT limit. HotSpot never JIT-compiles a method over 8,000 bytes of
+  bytecode (``HugeMethodLimit``); such a method runs in the bytecode
+  interpreter for every row. When the encode reads a materialized struct,
+  the optimizer keeps two Projects (the struct, then the encode) and every
+  field access carries struct-extraction code, which puts the fused
+  stage's largest method over that limit. Encoded from the field
+  expressions, the largest method stays under it.
 """
 
 from __future__ import annotations
@@ -29,8 +31,6 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 from tigerbeetle_cdc_nats_spark.functions.portable import (
-    portable_uint_json,
-    portable_uint_json_str,
     portable_uint_spark_sql,
     portable_uint_sql,
 )
@@ -62,16 +62,6 @@ NESTED_SPECS = (
 )  # message.go:70-77 nested objects, in envelope order
 
 
-def _encode_field(kind: str, c: Column, from_strings: bool = False) -> Column:
-    if kind == "p":
-        return portable_uint_json_str(c) if from_strings else portable_uint_json(c)
-    if kind == "n":
-        if from_strings:
-            return c
-        return c.cast("decimal(38,0)").cast("string")
-    return F.concat(F.lit('"'), c, F.lit('"'))
-
-
 def _encode_field_sql(kind: str, expr: str) -> str:
     if kind == "p":
         return portable_uint_sql(expr)
@@ -80,24 +70,14 @@ def _encode_field_sql(kind: str, expr: str) -> str:
     return f"'\"' || {expr} || '\"'"
 
 
-def _encode_field_spark_sql(kind: str, expr: str) -> str:
+def _encode_field_spark_sql(kind: str, expr: str, from_strings: bool) -> str:
     if kind == "p":
-        return portable_uint_spark_sql(expr)
+        return portable_uint_spark_sql(expr, from_strings=from_strings)
     if kind == "n":
+        if from_strings:
+            return expr
         return f"CAST(CAST({expr} AS DECIMAL(38,0)) AS STRING)"
     return f"concat('\"', {expr}, '\"')"
-
-
-def json_object(items: list[tuple[str, Column]]) -> Column:
-    """``{"k1":<v1>,"k2":<v2>,...}`` — values are pre-encoded JSON fragments."""
-    parts: list[Column] = [F.lit("{")]
-    for i, (key, val) in enumerate(items):
-        if i:
-            parts.append(F.lit(","))
-        parts.append(F.lit(f'"{key}":'))
-        parts.append(val)
-    parts.append(F.lit("}"))
-    return F.concat(*parts)
 
 
 def json_object_sql(items: list[tuple[str, str]]) -> str:
@@ -121,31 +101,21 @@ def _walk(field, encode, obj):
     return obj(items)
 
 
-def encode_cdc_json_fields(field, *, from_strings: bool = False) -> Column:
-    """The reference's exact JSON bytes (message.go:96-152), read through
-    ``field(path) -> Column`` — e.g. ``cdc_view.spark_field``, which builds
-    each field straight from the raw event columns.
+def encode_cdc_json(event, *, from_strings: bool = False) -> Column:
+    """The reference's exact JSON bytes (message.go:96-152) as one Spark
+    ``F.expr``. ``event`` is the name of a struct column shaped like
+    ``schemas.CDC_EVENT_SCHEMA`` or a ``path -> Spark SQL`` function such
+    as ``cdc_view.spark_sql``, which reads each field straight from the
+    raw event columns.
 
     ``from_strings=True`` treats every numeric field as a canonical-digit
     string — the lossless u128 path needed for the all-max golden
     (message_test.go:88); the decimal-typed path covers the realistic range.
     """
-    return _walk(field, lambda k, c: _encode_field(k, c, from_strings),
-                 json_object)
-
-
-def encode_cdc_json(event: Column | str, *, from_strings: bool = False) -> Column:
-    """:func:`encode_cdc_json_fields` over a struct column shaped like
-    ``schemas.CDC_EVENT_SCHEMA``."""
-    ev = F.col(event) if isinstance(event, str) else event
-
-    def field(path: str) -> Column:
-        c = ev
-        for name in path.split("."):
-            c = c[name]
-        return c
-
-    return encode_cdc_json_fields(field, from_strings=from_strings)
+    field = (lambda path: f"{event}.{path}") if isinstance(event, str) else event
+    return F.expr(_walk(
+        field, lambda k, e: _encode_field_spark_sql(k, e, from_strings),
+        json_object_sql))
 
 
 def encode_cdc_json_sql(field_expr) -> str:
@@ -153,18 +123,3 @@ def encode_cdc_json_sql(field_expr) -> str:
     maps a field path like ``"transfer.id"`` to an integer (or, for
     ``"type"``, string) SQL expression."""
     return _walk(field_expr, _encode_field_sql, json_object_sql)
-
-
-def encode_cdc_json_spark_expr(event_col: str) -> Column:
-    """The full envelope encoding of struct column ``event_col`` as ONE
-    Spark-SQL expression string.
-
-    Value-identical to ``encode_cdc_json(F.col(event_col))`` (same field
-    order, same portable rule, same cast chain) but built as a single
-    F.expr: the Column-object form assembles ~500 expression nodes through
-    py4j — ~1 s of driver time per query at plan-build — while the string
-    parses JVM-side. The golden byte tests pin both forms to the same
-    output.
-    """
-    return F.expr(_walk(lambda path: f"{event_col}.{path}",
-                        _encode_field_spark_sql, json_object_sql))

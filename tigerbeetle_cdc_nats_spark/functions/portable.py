@@ -8,57 +8,21 @@ a JSON-literal STRING fragment, not a typed numeric column — the typed schema
 keeps the numeric column; encoding happens only at JSON assembly time
 (SURVEY.md §7 "portable-number typing").
 
-Implemented as pure Column expressions (whole-stage codegen, no Python).
+There is one Spark form, :func:`portable_uint_spark_sql`, and it is Spark
+SQL text: the envelope encoder (functions/json_codec.py) embeds it 23 times
+in one ``F.expr``, which parses JVM-side instead of assembling hundreds of
+Column nodes over py4j. :func:`portable_uint_sql` is the DuckDB twin the
+oracles use. Both are CASE expressions — whole-stage codegen, no Python.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column, functions as F
 
 #: 2^53 - 1 (message.go:12)
 MAX_PORTABLE_JSON_INT = 9007199254740991
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def portable_uint_json(c: Column | str) -> Column:
-    """JSON literal for an unsigned integer column (long or decimal):
-    ``123`` when value <= 2^53-1, ``"123"`` above. NULL -> JSON ``null``.
-    """
-    c = _col(c)
-    digits = c.cast("decimal(38,0)").cast("string")
-    return (
-        F.when(c.isNull(), F.lit("null"))
-        .when(c > F.lit(MAX_PORTABLE_JSON_INT), F.concat(F.lit('"'), digits, F.lit('"')))
-        .otherwise(digits)
-    )
-
-
-def portable_uint_json_str(c: Column | str) -> Column:
-    """Portable encoding for a canonical-digit-STRING column (the lossless
-    u128 path — DecimalType(38,0) cannot hold the full 39-digit u128 range,
-    so encoding parity for extreme values flows through strings;
-    SURVEY.md §7 "u128 fidelity").
-
-    Branch on digit count: 2^53-1 has 16 digits, so >16 digits is always
-    above threshold, <16 always below, and ==16 fits a long for an exact
-    compare.
-    """
-    c = _col(c)
-    quoted = F.concat(F.lit('"'), c, F.lit('"'))
-    return (
-        F.when(c.isNull(), F.lit("null"))
-        .when(F.length(c) > 16, quoted)
-        .when((F.length(c) == 16) & (c.cast("long") > F.lit(MAX_PORTABLE_JSON_INT)),
-              quoted)
-        .otherwise(c)
-    )
-
-
 def portable_uint_sql(expr: str) -> str:
-    """The same encoding as ANSI/DuckDB SQL text, for oracle parity.
+    """The encoding as ANSI/DuckDB SQL text, for oracle parity.
 
     ``expr`` must be an integer-typed SQL expression (BIGINT/HUGEINT).
     """
@@ -69,12 +33,26 @@ def portable_uint_sql(expr: str) -> str:
     )
 
 
-def portable_uint_spark_sql(expr: str) -> str:
-    """The portable encoding as SPARK SQL text — the same values as
-    :func:`portable_uint_json`, emitted as one parseable string so the
-    full-envelope encoder can hand Catalyst a single F.expr instead of
-    hundreds of py4j-built Column nodes (~1 s of driver time per query).
+def portable_uint_spark_sql(expr: str, *, from_strings: bool = False) -> str:
+    """The encoding as Spark SQL text: ``123`` when the value is <= 2^53-1,
+    ``"123"`` above, JSON ``null`` for NULL.
+
+    ``expr`` is an unsigned integer expression (long or decimal). With
+    ``from_strings=True`` it is a canonical-digit STRING instead — the
+    lossless u128 path, since DECIMAL(38,0) cannot hold the full 39-digit
+    u128 range (SURVEY.md §7 "u128 fidelity"). That rule branches on digit
+    count: 2^53-1 has 16 digits, so more than 16 is always above it, fewer
+    always at or below, and 16 digits fit a BIGINT for an exact compare.
     """
+    if from_strings:
+        quoted = f"concat('\"', {expr}, '\"')"
+        return (
+            f"CASE WHEN {expr} IS NULL THEN 'null' "
+            f"WHEN length({expr}) > 16 THEN {quoted} "
+            f"WHEN length({expr}) = 16 AND CAST({expr} AS BIGINT) > "
+            f"{MAX_PORTABLE_JSON_INT} THEN {quoted} "
+            f"ELSE {expr} END"
+        )
     digits = f"CAST(CAST({expr} AS DECIMAL(38,0)) AS STRING)"
     return (
         f"CASE WHEN {expr} IS NULL THEN 'null' "

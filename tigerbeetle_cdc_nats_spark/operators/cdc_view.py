@@ -3,8 +3,9 @@
 The reference consumes pre-joined TigerBeetle change events (SURVEY.md §1.1).
 The driver's testdata has a flat ``events`` table instead, so this module
 derives a deterministic, fully-populated CDC envelope (schemas.CDC_EVENT_SCHEMA)
-from it — the same arithmetic is emitted both as Spark expressions and as
-DuckDB SQL so the oracle sees identical values.
+from it — the same arithmetic is emitted both as Spark SQL (``spark_sql``,
+``spark_field``) and as DuckDB SQL (``duck_field``) so the oracle sees
+identical values.
 
 Every expression is integer-exact (no float summation): amounts are derived
 via ``FLOOR(value*100)`` (cents), u128s via exact integer multiplication
@@ -86,8 +87,12 @@ EVENTS_CTE = (
 )
 
 
+def spark_sql(path: str) -> str:
+    return "(" + FIELD_EXPRS[path][0] + ")"
+
+
 def spark_field(path: str) -> Column:
-    return F.expr(FIELD_EXPRS[path][0])
+    return F.expr(spark_sql(path))
 
 
 def duck_field(path: str) -> str:

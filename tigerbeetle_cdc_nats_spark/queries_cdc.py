@@ -11,12 +11,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tigerbeetle_cdc_nats_spark.functions.events import (
     event_type_name,
+    header_columns,
     msg_id_column,
     subject_column,
 )
-from tigerbeetle_cdc_nats_spark.functions.json_codec import encode_cdc_json_sql
+from tigerbeetle_cdc_nats_spark.functions.json_codec import (
+    encode_cdc_json,
+    encode_cdc_json_sql,
+)
 from tigerbeetle_cdc_nats_spark.functions.portable import (
-    portable_uint_json,
+    portable_uint_spark_sql,
     portable_uint_sql,
 )
 from tigerbeetle_cdc_nats_spark.operators import cdc_view
@@ -102,16 +106,11 @@ FROM ev""",
     doc="Full nested-envelope JSON encoding, byte-exact (message.go:96-152)",
 )
 def q_event_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigerbeetle_cdc_nats_spark.functions.json_codec import (
-        encode_cdc_json_spark_expr,
-    )
     from tigerbeetle_cdc_nats_spark.session import ensure_parallelism
 
-    ev = cdc_view.with_cdc_event(ensure_parallelism(events_table(spark, sf_dir)))
-    # single-F.expr form: byte-identical to encode_cdc_json (golden-pinned),
-    # ~1 s less driver time spent assembling the envelope expression
+    ev = ensure_parallelism(events_table(spark, sf_dir))
     return ev.select("event_id",
-                     encode_cdc_json_spark_expr("event").alias("payload"))
+                     encode_cdc_json(cdc_view.spark_sql).alias("payload"))
 
 
 # --- P2: portable number encoding (message.go:12-41) -----------------------
@@ -130,14 +129,13 @@ FROM ev""",
 )
 def q_portable_number_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_table(spark, sf_dir)
-    big = F.col("event_id").cast("decimal(38,0)") * F.lit(9007199254740993).cast(
-        "decimal(38,0)"
-    )
+    big = ("(CAST(event_id AS DECIMAL(38,0))"
+           " * CAST(9007199254740993 AS DECIMAL(38,0)))")
     return ev.select(
         "event_id",
-        portable_uint_json("ts").alias("ts_json"),
-        portable_uint_json("event_id").alias("id_json"),
-        portable_uint_json(big).alias("big_json"),
+        F.expr(portable_uint_spark_sql("ts")).alias("ts_json"),
+        F.expr(portable_uint_spark_sql("event_id")).alias("id_json"),
+        F.expr(portable_uint_spark_sql(big)).alias("big_json"),
     )
 
 
@@ -170,15 +168,12 @@ FROM ev""",
     doc="5 routing headers per event, as strings (runner.go:586-605)",
 )
 def q_header_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = cdc_view.with_cdc_event(events_table(spark, sf_dir))
-    e = F.col("event")
+    ev = events_table(spark, sf_dir)
     return ev.select(
         "event_id",
-        e["type"].cast("string").alias("event_type"),
-        e["ledger"].cast("string").alias("ledger"),
-        e["transfer"]["code"].cast("string").alias("transfer_code"),
-        e["debit_account"]["code"].cast("string").alias("debit_account_code"),
-        e["credit_account"]["code"].cast("string").alias("credit_account_code"),
+        *header_columns(*map(cdc_view.spark_field, (
+            "type", "ledger", "transfer.code", "debit_account.code",
+            "credit_account.code"))),
     )
 
 
@@ -251,15 +246,12 @@ FROM ev""",
         "the encode->decode round trip is lossless",
 )
 def q_event_json_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from tigerbeetle_cdc_nats_spark.functions.json_codec import (
-        encode_cdc_json_spark_expr,
-    )
     from tigerbeetle_cdc_nats_spark.schemas import CDC_EVENT_SCHEMA
     from tigerbeetle_cdc_nats_spark.session import ensure_parallelism
 
-    ev = cdc_view.with_cdc_event(ensure_parallelism(events_table(spark, sf_dir)))
+    ev = ensure_parallelism(events_table(spark, sf_dir))
     payload = ev.select("event_id",
-                        encode_cdc_json_spark_expr("event").alias("payload"))
+                        encode_cdc_json(cdc_view.spark_sql).alias("payload"))
     d = F.from_json("payload", CDC_EVENT_SCHEMA)
     return payload.select(
         "event_id",

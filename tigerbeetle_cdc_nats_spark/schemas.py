@@ -39,10 +39,6 @@ EVENT_TYPE_NAMES = (
     "two_phase_expired",   # 4
 )
 
-#: Portable-JSON integer threshold 2^53-1 (message.go:12): values above this
-#: serialize as decimal strings, at-or-below as bare JSON numbers.
-MAX_PORTABLE_JSON_INT = 9007199254740991
-
 #: transferMessage (message.go:43-54) — order matters.
 TRANSFER_FIELDS = (
     ("id", U128),

@@ -18,9 +18,11 @@ Reference mapping (runner.go:49-170, 425-466):
 |                                             | (ack-before-commit, no job)     |
 | dedupe window (runner.go:180,602)           | withWatermark + dropDuplicates  |
 |                                             | on the raw rows, before encode  |
-| encodeEventJSON (message.go:96-152)         | envelope, subject and headers   |
-|                                             | from the field expressions of   |
-|                                             | the dedup survivors             |
+| encodeEventJSON (message.go:96-152)         | envelope: one Spark SQL text    |
+|                                             | over the field expressions of   |
+|                                             | the dedup survivors; subject    |
+|                                             | and headers from the same       |
+|                                             | expressions                     |
 | single-writer lock (runner.go:607-724)      | one active query per checkpoint |
 |                                             | dir (Spark-enforced) + lease    |
 |                                             | marker for operator visibility  |
@@ -62,8 +64,8 @@ from tigerbeetle_cdc_nats_spark.functions.events import (
     msg_id_column,
     subject_column,
 )
-from tigerbeetle_cdc_nats_spark.functions.json_codec import encode_cdc_json_fields
-from tigerbeetle_cdc_nats_spark.operators.cdc_view import spark_field
+from tigerbeetle_cdc_nats_spark.functions.json_codec import encode_cdc_json
+from tigerbeetle_cdc_nats_spark.operators.cdc_view import spark_field, spark_sql
 from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
 
 
@@ -80,7 +82,7 @@ def transform_events(stream: DataFrame, cfg: CdcConfig) -> DataFrame:
     """events -> publishable messages (runner.go:586-605): dedup the raw
     rows on the deterministic msg id, then encode the survivors — envelope
     JSON payload, subject and routing headers — straight from the field
-    expressions. All Column expressions, streaming-safe.
+    expressions (the payload as one Spark SQL text). Streaming-safe.
 
     The dedup comes first, so its shuffle carries only the raw columns and
     dropped replays are never encoded. The encode reads no ``event`` struct
@@ -111,7 +113,7 @@ def transform_events(stream: DataFrame, cfg: CdcConfig) -> DataFrame:
             single_subject=(cfg.single_subject
                             if cfg.subject_mode == "single" else None),
         ).alias("subject"),
-        encode_cdc_json_fields(spark_field).alias("payload"),
+        encode_cdc_json(spark_sql).alias("payload"),
         *header_columns(*map(spark_field, (
             "type", "ledger", "transfer.code", "debit_account.code",
             "credit_account.code"))),
