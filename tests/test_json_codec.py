@@ -149,7 +149,56 @@ def test_decimal_path_matches_string_path(spark):
         }
 
 
-def test_struct_form_matches_field_form(spark):
+def _column_encoder(event: str):
+    """The envelope built through the Column API (``F.when``/``F.concat``
+    over struct fields) instead of one parsed Spark SQL text: an
+    independent construction of the typed path's bytes."""
+    from tigerbeetle_cdc_nats_spark.functions.json_codec import NESTED_SPECS
+    from tigerbeetle_cdc_nats_spark.functions.portable import (
+        MAX_PORTABLE_JSON_INT,
+    )
+
+    def enc(kind, c):
+        if kind == "s":
+            return F.concat(F.lit('"'), c, F.lit('"'))
+        digits = c.cast("decimal(38,0)").cast("string")
+        if kind == "n":
+            return digits
+        return (F.when(c.isNull(), F.lit("null"))
+                .when(c > F.lit(MAX_PORTABLE_JSON_INT),
+                      F.concat(F.lit('"'), digits, F.lit('"')))
+                .otherwise(digits))
+
+    def obj(items):
+        parts = []
+        for key, val in items:
+            parts += [F.lit(("," if parts else "{") + f'"{key}":'), val]
+        return F.concat(*parts, F.lit("}"))
+
+    ev = F.col(event)
+    items = [(n, enc(k, ev[n])) for n, k in ENVELOPE_SPEC]
+    for nested, spec in NESTED_SPECS:
+        items.append((nested, obj([(n, enc(k, ev[nested][n]))
+                                   for n, k in spec])))
+    return obj(items)
+
+
+def test_spark_sql_encoder_matches_column_encoder(spark):
+    """The single-F.expr envelope encoder stays byte-identical to a
+    Column-built form of the same envelope on real event data."""
+    from tigerbeetle_cdc_nats_spark.operators.cdc_view import with_cdc_event
+    from tigerbeetle_cdc_nats_spark.session import load_events
+
+    ev = with_cdc_event(load_events(spark, SF_SMOKE))
+    df = ev.select(
+        _column_encoder("event").alias("a"),
+        encode_cdc_json("event").alias("b"),
+    )
+    assert df.count() > 0
+    assert df.where(~F.col("a").eqNullSafe(F.col("b"))).count() == 0
+
+
+def test_field_encoder_matches_struct_encoder(spark):
     """The encoder over the materialized ``event`` struct (by name) is
     byte-equal to the pipeline's form over ``cdc_view.spark_sql``."""
     from tigerbeetle_cdc_nats_spark.operators.cdc_view import (
