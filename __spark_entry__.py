@@ -39,7 +39,7 @@ _SAMPLED_IN_PRIOR_ROUNDS = frozenset({
     "balance_rollup", "blocklist_filter", "blocklist_kwic",
     "bloom_prefilter_join", "bm25_score", "bpe_merge_candidates",
     "canonical_selection", "cdc_backlog_stats", "cdc_incremental_scan",
-    "cdc_native_scan", "centroid_drift_audit", "centroid_separation",
+    "centroid_drift_audit", "centroid_separation",
     "changelog_compaction", "chunk_assignment", "chunk_max_checkpoint",
     "cluster_balanced_sample", "cms_user_counts", "cohort_retention",
     "column_stats", "conversion_funnel", "crosslingual_near_dup",

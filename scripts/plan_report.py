@@ -110,7 +110,6 @@ HEADLINE = [
     "gap_fill_interpolate",
     "rolling_median_value",
     "ewma_value",
-    "cdc_native_scan",
     # round 6 (dup_triangles above now reports the degree-ordered form)
     "local_clustering",
     "dedup_threshold_sweep",

@@ -1,15 +1,15 @@
-"""The tb_cdc_events cursor-range source (sources/cdc_source.py): the
-(startTs, endTs] scan with row-group pruning, ts normalization and the
-per-partition top-k pushdown."""
+"""The event store's cursor-range read: Spark's parquet reader under the
+type-aware ts bounds of ``operators/scan.py`` (``timestamp_range_filter``
+and the ``cdc_incremental_scan`` poll), the reference's
+``GetChangeEvents(TimestampMin=last+1)`` over a parquet directory."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from tigerbeetle_cdc_nats_spark.sources.cdc_source import (
-    CdcEventsBatchReader,
-    read_cdc_batch,
+from tigerbeetle_cdc_nats_spark.operators.scan import (
+    cdc_incremental_scan,
+    timestamp_range_filter,
 )
 
 BASE_NS = 1_700_000_000_000_000_000
@@ -26,76 +26,38 @@ def _write_events(spark, src, lo, hi, ts_step_ns=1_000_000_000):
     ).coalesce(1).write.mode("append").parquet(src)
 
 
+def _event_ids(df) -> list[int]:
+    return sorted(r[0] for r in df.select("event_id").collect())
+
+
 def test_start_ts_skips_consumed_prefix(spark, tmp_path):
     src = str(tmp_path / "events")
     _write_events(spark, src, 0, 50)
     cut = BASE_NS + 29 * 1_000_000_000
-    reader = CdcEventsBatchReader({"path": src, "startts": str(cut)})
-    import pyarrow as pa
-
-    tbl = pa.Table.from_batches(
-        [b for p in reader.partitions() for b in reader.read(p)])
-    assert tbl.num_rows == 20
-    assert min(tbl.column("event_id").to_pylist()) == 30
-    # the same cut through spark.read: exactly the 20 later rows
-    got = read_cdc_batch(spark, src, start_ts=cut).select("event_id")
-    assert sorted(r[0] for r in got.collect()) == list(range(30, 50))
-
-
-def test_missing_path_option_raises():
-    with pytest.raises(ValueError, match="path"):
-        CdcEventsBatchReader({})
+    # one poll from the cursor: exactly the 20 later rows, in ts order
+    got = cdc_incremental_scan(spark.read.parquet(src), cursor=cut)
+    assert [r[0] for r in got.select("event_id").collect()] == (
+        list(range(30, 50)))
 
 
 def test_batch_reader_cursor_range(spark, tmp_path):
-    """spark.read.format('tb_cdc_events') — one-shot (startTs, endTs]
-    scan with ts normalized to int64 nanoseconds."""
+    """One-shot (lo, hi] scan over the raw int64-ns column."""
     src = str(tmp_path / "events")
     _write_events(spark, src, 0, 100)
+    ev = spark.read.parquet(src)
     lo = BASE_NS + 9 * 1_000_000_000   # exclusive
     hi = BASE_NS + 49 * 1_000_000_000  # inclusive
-    got = read_cdc_batch(spark, src, start_ts=lo, end_ts=hi)
-    rows = got.select("event_id", "ts").collect()
-    assert len(rows) == 40
-    assert {r["event_id"] for r in rows} == set(range(10, 50))
+    assert _event_ids(timestamp_range_filter(ev, lo + 1, hi)) == (
+        list(range(10, 50)))
     # full scan with no bounds
-    assert read_cdc_batch(spark, src).count() == 100
+    assert timestamp_range_filter(ev, 0).count() == 100
     # empty range still evaluates (no plan-time error)
-    assert read_cdc_batch(spark, src, start_ts=hi, end_ts=hi).count() == 0
-
-
-def test_batch_reader_agrees_with_load_events(spark, tmp_path):
-    """The native source's normalized ts matches the session loader's
-    cursor arithmetic on the driver-shaped events table."""
-    from tigerbeetle_cdc_nats_spark.session import load_events
-
-    sf = "/root/testdata/sf0.001"
-    ref = load_events(spark, sf).select("event_id", "ts")
-    lo = ref.agg(F.min("ts")).first()[0]
-    got = read_cdc_batch(spark, f"{sf}/events.parquet",
-                         start_ts=lo).select("event_id", "ts")
-    ref_after = ref.where(F.col("ts") > lo)
-    assert got.count() == ref_after.count()
-    assert got.exceptAll(ref_after).count() == 0
+    assert timestamp_range_filter(ev, hi + 1, hi).count() == 0
 
 
 def test_stat_ns_handles_tz_aware_timestamps(spark, tmp_path):
-    """Parquet ts columns written adjusted-to-UTC (Spark's default for
-    TIMESTAMP) surface tz-AWARE datetime statistics; the row-group pruning
-    must not crash on them (naive-minus-aware raises TypeError)."""
-    import datetime
-
-    from tigerbeetle_cdc_nats_spark.sources.cdc_source import _stat_ns
-
-    aware = datetime.datetime(2023, 11, 14, 22, 13, 20,
-                              tzinfo=datetime.timezone.utc)
-    naive = datetime.datetime(2023, 11, 14, 22, 13, 20)
-    assert _stat_ns(aware) == 1_700_000_000_000_000_000
-    assert _stat_ns(naive) == 1_700_000_000_000_000_000
-    assert _stat_ns(1_700_000_000_000_000_000) == 1_700_000_000_000_000_000
-
-    # end-to-end: a store whose ts is a real TIMESTAMP column (stats are
-    # tz-aware datetimes) plans and reads without error
+    """A store whose ts is a real TIMESTAMP column (written adjusted-to-UTC,
+    Spark's default) takes ns cursor bounds as native timestamp literals."""
     src = str(tmp_path / "events_tz")
     spark.range(0, 50).select(
         F.col("id").alias("event_id"),
@@ -106,51 +68,12 @@ def test_stat_ns_handles_tz_aware_timestamps(spark, tmp_path):
         F.col("id").cast("double").alias("value"),
         F.lit('{"k":1}').alias("props"),
     ).coalesce(1).write.mode("append").parquet(src)
+    ev = spark.read.parquet(src)
+    assert dict(ev.dtypes)["ts"] == "timestamp"
     end = BASE_NS + 19 * 1_000_000_000
-    reader = CdcEventsBatchReader({"path": src, "endts": str(end)})
-    import pyarrow as pa
-
-    tbl = pa.Table.from_batches(
-        [b for p in reader.partitions() for b in reader.read(p)])
-    assert tbl.num_rows == 20
-    assert max(tbl.column("ts").to_pylist()) == end
-    # through spark.read, bounded on both sides: ts in (BASE_NS, end]
-    got = read_cdc_batch(spark, src, start_ts=BASE_NS, end_ts=end)
-    assert sorted(r[0] for r in got.select("event_id").collect()) == (
+    upto = timestamp_range_filter(ev, 0, end)
+    assert upto.count() == 20
+    assert upto.agg(F.max(F.unix_micros("ts"))).first()[0] * 1000 == end
+    # bounded on both sides: ts in (BASE_NS, end]
+    assert _event_ids(timestamp_range_filter(ev, BASE_NS + 1, end)) == (
         list(range(1, 20)))
-
-
-def test_batch_top_k_prunes_per_partition_not_result(spark, tmp_path):
-    """topK pushdown: a multi-row-group file must yield the same global
-    ORDER BY ts LIMIT k rows with per-partition pruning on, while each
-    partition ships at most k rows."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    n = 1000
-    tbl = pa.table({
-        "event_id": pa.array(range(n), pa.int64()),
-        # interleave timestamps across row groups so the global top-k
-        # draws from both partitions
-        "ts": pa.array([1_000 + ((i * 7919) % n) * 1_000 for i in range(n)],
-                       pa.int64()),
-        "user_id": pa.array([i % 10 for i in range(n)], pa.int64()),
-        "event_type": pa.array(["t"] * n, pa.string()),
-        "value": pa.array([float(i) for i in range(n)], pa.float64()),
-        "props": pa.array(["{}"] * n, pa.string()),
-    })
-    path = os.path.join(tmp_path, "events.parquet")
-    pq.write_table(tbl, path, row_group_size=250)  # 4 partitions
-
-    k = 37
-    plain = read_cdc_batch(spark, path, start_ts=0)
-    pruned = read_cdc_batch(spark, path, start_ts=0, top_k=k)
-    want = sorted((r["ts"], r["event_id"])
-                  for r in plain.orderBy("ts").limit(k).collect())
-    got = sorted((r["ts"], r["event_id"])
-                 for r in pruned.orderBy("ts").limit(k).collect())
-    assert got == want
-    # each of the 4 partitions ships at most k rows
-    assert pruned.count() <= 4 * k

@@ -19,8 +19,10 @@ SRC = "/root/testdata/sf0.001/events.parquet"
 
 @pytest.fixture(scope="module")
 def variant_dirs(tmp_path_factory):
-    """Two copies of sf0.001 events: one TIMESTAMP(MICROS) (the round-2+
-    physical type), one raw int64 nanoseconds (the round-1 type)."""
+    """Copies of sf0.001 events: TIMESTAMP(MICROS) (the round-2+ physical
+    type), raw int64 nanoseconds (the round-1 type), TIMESTAMP(NANOS), and
+    raw int64 nanoseconds with sub-µs digits (``+ 500``), which the loader
+    truncates to the µs variant's values."""
     t = pq.read_table(SRC)
     ts = t.column("ts")
     if pa.types.is_timestamp(ts.type):
@@ -32,7 +34,9 @@ def variant_dirs(tmp_path_factory):
     ns_ts = pc.cast(us, pa.timestamp("ns"))  # TIMESTAMP(NANOS) logical type
     i = t.schema.get_field_index("ts")
     dirs = {}
-    for name, col in (("us", us), ("ns", ns_int), ("ns_ts", ns_ts)):
+    ns_sub = pc.add(ns_int, 500)
+    for name, col in (("us", us), ("ns", ns_int), ("ns_ts", ns_ts),
+                      ("ns_sub", ns_sub)):
         d = tmp_path_factory.mktemp(f"events_{name}")
         pq.write_table(t.set_column(i, "ts", col),
                        os.path.join(d, "events.parquet"))
@@ -52,7 +56,9 @@ def test_both_physical_types_normalize_identically(spark, variant_dirs):
     rows_a = sorted(map(tuple, a.collect()))
     rows_b = sorted(map(tuple, b.collect()))
     rows_c = sorted(map(tuple, c.collect()))
-    assert rows_a == rows_b == rows_c
+    d = load_events(spark, variant_dirs["ns_sub"]).select("event_id", "ts")
+    rows_d = sorted(map(tuple, d.collect()))
+    assert rows_a == rows_b == rows_c == rows_d
     # values are ns at µs precision (DuckDB's epoch_ns view of the data)
     assert all(ts % 1000 == 0 for _, ts in rows_a[:100])
 
@@ -66,3 +72,18 @@ def test_cursor_bounds_match_across_physical_types(spark, variant_dirs):
     n_us = load_events(spark, variant_dirs["us"], lo_ns=mid).count()
     n_ns = load_events(spark, variant_dirs["ns"], lo_ns=mid).count()
     assert n_us == n_ns > 0
+
+    # bounds off the µs grid over a store with sub-µs digits: a row whose
+    # raw ts is past a bound but whose µs-truncated ts is not must follow
+    # its truncated ts, as in the µs store
+    tss = sorted(r[0] for r in load_events(
+        spark, variant_dirs["us"]).select("ts").collect())
+    b_lo, b_hi = tss[len(tss) // 4] + 1, tss[3 * len(tss) // 4] + 100
+
+    def rows(name):
+        df = load_events(spark, variant_dirs[name], lo_ns=b_lo, hi_ns=b_hi)
+        return sorted(map(tuple, df.select("event_id", "ts").collect()))
+
+    want = rows("us")
+    assert want and all(b_lo <= ts <= b_hi for _, ts in want)
+    assert rows("ns_sub") == want

@@ -301,38 +301,6 @@ def q_props_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "cdc_native_scan",
-    f"""WITH ev AS ({_EV})
-SELECT event_id, ts, user_id, event_type, value, props
-FROM ev WHERE ts >= {CURSOR_NS + 1} ORDER BY ts LIMIT 4096""",
-    doc="the same CDC poll served by the NATIVE Python DataSource "
-        "(sources/cdc_source.py batch reader): the cursor is the source "
-        "OFFSET, pruning at the parquet row-group level from footer "
-        "stats — the same ts multiset as cdc_incremental_scan (which "
-        "rows survive a tie at the LIMIT cut can differ)",
-)
-def q_cdc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One poll through the native source's batch reader.
-
-    The (startTs, endTs] range is the source's cursor arithmetic; the
-    top-k limit lowers to TakeOrderedAndProject over the pruned scan —
-    the reference's Limit applied after the cursor cut.
-    """
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tigerbeetle_cdc_nats_spark.sources.cdc_source import read_cdc_batch
-
-    ev = read_cdc_batch(
-        spark, os.path.join(sf_dir, "events.parquet"), start_ts=CURSOR_NS,
-        top_k=4096)  # limit pushdown: the global LIMIT below re-applies it
-    return (ev.orderBy("ts").limit(4096)
-            .select("event_id", "ts", "user_id", "event_type",
-                    F.col("value").cast("double").alias("value"), "props"))
-
-
-@register(
     "cdc_backlog_stats",
     f"""WITH ev AS ({_EV})
 SELECT CAST(COUNT(*) AS BIGINT) AS n_pending,

@@ -65,7 +65,7 @@ def default_parallelism() -> int:
 
 #: Sessions already passed through configure(): every conf it sets is
 #: set-once, so re-issuing the ~7 py4j conf round-trips on every
-#: load_table call (several per query, 222 queries per bench pass) is
+#: load_table call (several per query, 221 queries per bench pass) is
 #: pure driver overhead. WeakSet so a stopped session doesn't pin JVM
 #: references.
 _CONFIGURED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
@@ -379,9 +379,14 @@ def load_events(spark: SparkSession, sf_dir: str,
     from tigerbeetle_cdc_nats_spark.operators.scan import timestamp_range_filter
 
     ev = load_table(spark, sf_dir, "events")
-    if lo_ns is not None or hi_ns is not None:
-        ev = timestamp_range_filter(ev, lo_ns or 0, hi_ns or 0)
     ts_type = dict(ev.dtypes)["ts"]
+    if lo_ns is not None or hi_ns is not None:
+        if ts_type == "bigint":
+            # raw ns with sub-µs digits: bound the µs-truncated value, i.e.
+            # raw >= ceil(lo/1000)*1000 and raw <= floor(hi/1000)*1000 + 999
+            lo_ns = lo_ns and -(-lo_ns // 1000) * 1000
+            hi_ns = hi_ns and hi_ns // 1000 * 1000 + 999
+        ev = timestamp_range_filter(ev, lo_ns or 0, hi_ns or 0)
     if ts_type == "bigint":  # TIMESTAMP(NANOS) via nanosAsLong: raw ns
         return ev.withColumn("ts", F.col("ts") - F.col("ts") % 1000)
     # TIMESTAMP(_NTZ): µs since epoch * 1000. timestampdiff from the epoch
