@@ -62,6 +62,9 @@ def test_version_flag_exits_zero(capsys):
     ["--stream-update"],
     ["--stream-replicas", "3"],
     ["--kv-replicas", "3"],
+    ["--publish-mode", "sync"],
+    ["--publish-ack-timeout", "5"],
+    ["--publish-async-max-pending", "64"],
 ], ids=lambda flag: flag[0])
 def test_inert_flag_fails_fast(capsys, flag):
     """A flag the pipeline cannot act on exits 2 with the reason when it is
@@ -73,7 +76,9 @@ def test_inert_flag_fails_fast(capsys, flag):
 def test_inert_flags_at_their_defaults_pass(capsys):
     assert run_cli(["--cluster-id", "1", "--event-count-max", "4096",
                     "--progress-every-events", "0", "--provision", "true",
-                    "--stream-replicas", "1", "--kv-replicas", "1"]) == 0
+                    "--stream-replicas", "1", "--kv-replicas", "1",
+                    "--publish-mode", "ASYNC", "--publish-ack-timeout", "30",
+                    "--publish-async-max-pending", "4096"]) == 0
 
 
 PIPELINE_DIRS = ("--sink-dir", "--checkpoint-dir", "--cursor-dir")
@@ -113,6 +118,25 @@ def test_get_spark_keeps_a_running_sessions_confs(spark):
     assert again.sparkContext.appName == spark.sparkContext.appName
 
 
+BASE_TS = 1_704_067_200_000_000_000
+
+
+def _write_file(path, ids):
+    """One source file of events ``ids``, 1 ms apart from ``BASE_TS``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids = list(ids)
+    pq.write_table(pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array([BASE_TS + i * 1_000_000 for i in ids], pa.int64()),
+        "user_id": pa.array([i % 7 for i in ids], pa.int64()),
+        "event_type": ["purchase"] * len(ids),
+        "value": pa.array([float(i) for i in ids], pa.float64()),
+        "props": ['{"k": 1}'] * len(ids),
+    }), str(path))
+
+
 def test_once_drains_a_multi_batch_backlog(spark, tmp_path):
     """--once is the reference's poll-until-empty loop (runner.go:126-169):
     one call drains a backlog of more files than one micro-batch admits
@@ -120,32 +144,17 @@ def test_once_drains_a_multi_batch_backlog(spark, tmp_path):
     the backlog's max ts."""
     import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from tigerbeetle_cdc_nats_spark.streaming.pipeline import read_progress
 
-    base_ts, n_files, per_file = 1_704_067_200_000_000_000, 20, 10
+    n_files, per_file = 20, 10
     src = tmp_path / "source"
     os.makedirs(src)
-
-    def write_file(name, ids):
-        pq.write_table(pa.table({
-            "event_id": pa.array(ids, pa.int64()),
-            "ts": pa.array([base_ts + i * 1_000_000 for i in ids],
-                           pa.int64()),
-            "user_id": pa.array([i % 7 for i in ids], pa.int64()),
-            "event_type": ["purchase"] * len(ids),
-            "value": pa.array([float(i) for i in ids], pa.float64()),
-            "props": ['{"k": 1}'] * len(ids),
-        }), str(src / name))
-
     for f in range(n_files):
-        write_file(f"part-{f:03d}.parquet",
-                   list(range(f * per_file, (f + 1) * per_file)))
+        _write_file(src / f"part-{f:03d}.parquet",
+                    range(f * per_file, (f + 1) * per_file))
     # at-least-once upstream: two files replay the first file's events
     for f in (n_files, n_files + 1):
-        write_file(f"part-{f:03d}.parquet", list(range(per_file)))
+        _write_file(src / f"part-{f:03d}.parquet", range(per_file))
     n_unique = n_files * per_file
 
     sink, cursor = tmp_path / "sink", tmp_path / "cursor"
@@ -160,4 +169,48 @@ def test_once_drains_a_multi_batch_backlog(spark, tmp_path):
     assert out.count() == n_unique
     assert out.select("msg_id").distinct().count() == n_unique
     assert read_progress(spark, str(cursor)) == (
-        base_ts + (n_unique - 1) * 1_000_000)
+        BASE_TS + (n_unique - 1) * 1_000_000)
+
+
+def test_once_stops_when_the_lease_is_lost(spark, tmp_path, monkeypatch):
+    """A --once drain whose lease refresh fails stops its streaming query
+    rather than draining the whole backlog next to the new holder, and
+    exits 1 (runner.go:147-151: a refresh error ends the run)."""
+    import glob
+    import os
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from tigerbeetle_cdc_nats_spark.streaming.pipeline import LockLease
+
+    def lose_once_active(self, refresh_s, on_failure=None):
+        def loop():
+            while not self._stop.wait(0.05):
+                if spark.streams.active:
+                    self.failure = "lease stolen by test"
+                    if on_failure is not None:
+                        on_failure(self.failure)
+                    return
+
+        self._thread = threading.Thread(target=loop, daemon=True)
+        self._thread.start()
+
+    monkeypatch.setattr(LockLease, "start_refresh", lose_once_active)
+
+    n_files, per_file = 80, 10
+    src = tmp_path / "source"
+    os.makedirs(src)
+    for f in range(n_files):  # 5 micro-batches of 16 files
+        _write_file(src / f"part-{f:03d}.parquet",
+                    range(f * per_file, (f + 1) * per_file))
+
+    sink = tmp_path / "sink"
+    assert run_cli(["--cluster-id", "1", "--source-dir", str(src),
+                    "--sink-dir", str(sink),
+                    "--checkpoint-dir", str(tmp_path / "chk"),
+                    "--cursor-dir", str(tmp_path / "cursor"), "--once"]) == 1
+    assert not spark.streams.active
+    published = sum(pq.read_metadata(p).num_rows for p in glob.glob(
+        str(sink / "batch_id=*" / "*.parquet")))
+    assert published < n_files * per_file

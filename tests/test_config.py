@@ -20,8 +20,6 @@ def test_defaults_and_derived_names():
     assert cfg.progress_bucket == "TB_CDC_PROGRESS_7"
     assert cfg.lock_bucket == "TB_CDC_LOCK_7"
     assert DEFAULT_EVENT_COUNT_MAX == 4096
-    assert cfg.publish_mode == "async"
-    assert cfg.publish_async_max_pending == 4096
     assert cfg.dedupe_window_s == 120.0
     assert cfg.lock_ttl_s == 30.0 and cfg.lock_refresh_s == 10.0
     # subject: tigerbeetle.cdc.7.single_phase (config_test.go:44)
@@ -34,11 +32,9 @@ def test_explicit_overrides_and_single_mode():
     cfg = validate(CdcConfig(
         cluster_id="42", event_stream="MY_STREAM",
         subject_mode="single", single_subject="events.all",
-        publish_mode="sync",
     ))
     assert cfg.event_stream == "MY_STREAM"
     assert cfg.subject_for_event(9, "two_phase_posted") == "events.all"
-    assert cfg.publish_mode == "sync"
 
 
 def test_subject_prefix_trailing_dot_trimmed():
@@ -66,8 +62,9 @@ def test_subject_prefix_strips_exactly_one_trailing_dot():
     (CdcConfig(cluster_id="1", lock_refresh_s=30, lock_ttl_s=30),
      "--lock-refresh must be less than --lock-ttl"),
     (CdcConfig(cluster_id="1", dedupe_window_s=0), "--dedupe-window"),
-    (CdcConfig(cluster_id="1", publish_ack_timeout_s=0), "--publish-ack-timeout"),
-    (CdcConfig(cluster_id="1", publish_async_max_pending=0),
+    ((CdcConfig(cluster_id="1"), {"publish_ack_timeout": 0}),
+     "--publish-ack-timeout"),
+    ((CdcConfig(cluster_id="1"), {"publish_async_max_pending": 0}),
      "--publish-async-max-pending"),
     ((CdcConfig(cluster_id="1"), {"provision": False, "stream_update": True}),
      "--stream-update requires --provision=true"),
@@ -77,8 +74,10 @@ def test_subject_prefix_strips_exactly_one_trailing_dot():
      "--subject cannot be empty"),
     # invalid mode rejection (config_test.go:97-108)
     (CdcConfig(cluster_id="1", subject_mode="bogus"), "--subject-mode"),
-    (CdcConfig(cluster_id="1", publish_mode="bogus"), "--publish-mode"),
-    (CdcConfig(cluster_id="1", nats_url=""), "--nats-url"),
+    ((CdcConfig(cluster_id="1"), {"publish_mode": "bogus"}), "--publish-mode"),
+    # a valid non-default value of an inert flag has no effect: rejected
+    ((CdcConfig(cluster_id="1"), {"publish_mode": "sync"}),
+     "--publish-mode has no effect here"),
     ((CdcConfig(cluster_id="1"), {"requests_per_second_limit": 0}),
      "--requests-per-second-limit"),
     # negatives rejected too (the reference's uint32 flag parse)
@@ -91,22 +90,3 @@ def test_rejections(bad, msg):
     with pytest.raises(ConfigError, match=msg.replace("[", r"\[")):
         validate(cfg, **inert)
 
-
-def test_parse_addresses():
-    from tigerbeetle_cdc_nats_spark.config import parse_addresses
-    # config.go:373-390 semantics
-    assert parse_addresses("127.0.0.1:3000") == ["127.0.0.1:3000"]
-    assert parse_addresses(" a:1 , b:2 ") == ["a:1", "b:2"]
-    with pytest.raises(ConfigError, match="must not be empty"):
-        parse_addresses("  ")
-    with pytest.raises(ConfigError, match="empty address"):
-        parse_addresses("a:1,,b:2")
-
-
-def test_parse_storage_type():
-    from tigerbeetle_cdc_nats_spark.config import parse_storage_type
-    assert parse_storage_type("file") == "file"
-    assert parse_storage_type(" MEM ") == "memory"
-    assert parse_storage_type("Memory") == "memory"
-    with pytest.raises(ConfigError, match="file, memory"):
-        parse_storage_type("disk")

@@ -8,9 +8,9 @@ import os
 from pyspark.sql import functions as F
 
 from tigerbeetle_cdc_nats_spark.config import CdcConfig, validate
+from tigerbeetle_cdc_nats_spark.functions.events import HEADER_COLS
 from tigerbeetle_cdc_nats_spark.schemas import EVENTS_SCHEMA
 from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
-    HEADER_COLS,
     NatsSinkConfig,
     drain_partition,
 )

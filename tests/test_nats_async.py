@@ -121,65 +121,3 @@ def test_ack_timeout_propagates():
         drain_partition(iter(_rows(["x"])), publish,
                         NatsSinkConfig(max_pending=8, ack_timeout_s=0.01))
 
-
-def test_native_publish_writer_end_to_end(spark, tmp_path):
-    """The tb_cdc_publish DataSourceStreamWriter drains a transformed
-    event stream through the bounded pipelining core and records
-    per-batch publish/duplicate counts via the driver-side commit."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
-        make_publish_datasource,
-    )
-
-    src = str(tmp_path / "src")
-    metrics = str(tmp_path / "metrics")
-    chk = str(tmp_path / "chk")
-    n = 120
-    (spark.range(n).select(
-        F.concat(F.lit("tigerbeetle.cdc.t"), F.col("id")).alias("subject"),
-        F.concat(F.lit("m"), (F.col("id") % 100)).alias("msg_id"),
-        F.lit('{"p":1}').alias("payload"),
-        F.lit("transfer").alias("event_type"),
-        F.lit("1").alias("ledger"),
-        F.lit("1").alias("transfer_code"),
-        F.lit("10").alias("debit_account_code"),
-        F.lit("20").alias("credit_account_code"))
-     .coalesce(1).write.parquet(src))
-
-    spark.dataSource.register(make_publish_datasource())
-    q = (spark.readStream.schema(
-            "subject string, msg_id string, payload string, "
-            "event_type string, ledger string, transfer_code string, "
-            "debit_account_code string, credit_account_code string")
-         .parquet(src).coalesce(1)
-         .writeStream.format("tb_cdc_publish")
-         .option("publisherFactory",
-                 "tigerbeetle_cdc_nats_spark.sources.nats_sink:"
-                 "fake_publisher_factory")
-         .option("metricsDir", metrics)
-         .option("maxPending", "8")
-         .option("checkpointLocation", chk)
-         .trigger(availableNow=True).start())
-    q.awaitTermination(120)
-
-    recs = [json.load(open(os.path.join(metrics, f)))
-            for f in sorted(os.listdir(metrics)) if f.endswith(".json")]
-    assert sum(r["published"] for r in recs) == n
-    # 120 rows share 100 msg_ids within one partition -> 20 duplicates
-    # flagged by the fake JetStream msg-id dedup
-    assert sum(r["duplicates"] for r in recs) == 20
-
-
-def test_publish_writer_requires_factory():
-    import pytest
-
-    from tigerbeetle_cdc_nats_spark.sources.nats_sink import (
-        NatsPublishWriter,
-    )
-
-    with pytest.raises(ValueError, match="publisherFactory"):
-        NatsPublishWriter({})

@@ -28,20 +28,6 @@ FACTORY = re.compile(r"[A-Za-z_][\w.]*:([A-Za-z_]\w*)")
 
 #: Kept without an entry-point caller, each for the reason given.
 ALLOWED = {
-    "make_publish_datasource":
-        "the paper's JetStream broker path (runner.go:484-584); the CLI "
-        "publishes to parquet",
-    "ensure_resource":
-        "sink resource create/validate/update (runner.go:207-291)",
-    "schema_to_json":
-        "the schema half of the resource config diff (runner.go:207-291)",
-    "parse_addresses":
-        "config.go:373-418 validator, ported with config_test.go",
-    "parse_storage_type":
-        "config.go:373-418 validator, ported with config_test.go",
-    "jetstream_publisher_factory":
-        "the live-broker factory of make_publish_datasource; ROADMAP "
-        "item 4 decides both",
     "count_nodes": "plan-assertion tooling",
     "count_occurrences": "plan-assertion tooling",
     "pushed_filters": "plan-assertion tooling",
@@ -111,7 +97,7 @@ def test_no_definition_only_tests_reach():
 
 def test_allowlist_is_short_and_needed():
     """Each allowlisted name would be reported dead without its entry."""
-    assert len(ALLOWED) <= 9
+    assert len(ALLOWED) <= 3
     dead = {d.rsplit(":", 1)[1] for d in dead_definitions(allowed={})}
     assert set(ALLOWED) <= dead
 

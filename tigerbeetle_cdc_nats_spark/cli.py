@@ -15,12 +15,11 @@ Without ``--once`` the pipeline runs as in the reference's poll loop
 
 Inert flags: ``--event-count-max``, ``--progress-every-events``,
 ``--requests-per-second-limit``, ``--provision``, ``--stream-update``,
-``--stream-replicas`` and ``--kv-replicas`` are parsed and get the
-reference's validators, but the pipeline cannot act on them, so any value
-other than the default exits 2 with the reason (``config.INERT_FLAGS``).
-``--publish-mode``, ``--publish-ack-timeout`` and
-``--publish-async-max-pending`` are validated and kept in the config, but
-the parquet sink does not read them.
+``--stream-replicas``, ``--kv-replicas``, ``--publish-mode``,
+``--publish-ack-timeout`` and ``--publish-async-max-pending`` are parsed
+and get the reference's validators, but the pipeline cannot act on them,
+so any value other than the default exits 2 with the reason
+(``config.INERT_FLAGS``).
 """
 
 from __future__ import annotations
@@ -98,9 +97,6 @@ def config_from_args(ns: argparse.Namespace) -> CdcConfig:
         lock_refresh_s=ns.lock_refresh,
         dedupe_window_s=ns.dedupe_window,
         idle_interval_s=ns.idle_interval_ms / 1000.0,
-        publish_mode=ns.publish_mode,
-        publish_ack_timeout_s=ns.publish_ack_timeout,
-        publish_async_max_pending=ns.publish_async_max_pending,
         timestamp_last_override=ns.timestamp_last,
     ), **{name: getattr(ns, name) for name in INERT_FLAGS})
 
@@ -150,8 +146,13 @@ def run_cli(args: list[str]) -> int:
                                ttl_s=cfg.lock_ttl_s)
         try:
             if ns.once:
-                # a long catch-up can outlive the TTL — keep the lease warm.
-                lock.start_refresh(cfg.lock_refresh_s)
+                # a long catch-up can outlive the TTL — keep the lease warm,
+                # and stop the drain when a refresh fails.
+                def stop_drain(_reason):
+                    for q in spark.streams.active:
+                        q.stop()
+
+                lock.start_refresh(cfg.lock_refresh_s, on_failure=stop_drain)
                 pl.run_until_caught_up(spark, cfg, paths)
                 lock.check()
             else:

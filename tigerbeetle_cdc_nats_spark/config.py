@@ -15,7 +15,6 @@ from __future__ import annotations
 from dataclasses import dataclass, replace
 
 # Defaults — config.go:30-51.
-DEFAULT_NATS_URL = "nats://127.0.0.1:4222"
 DEFAULT_EVENT_STREAM_BASE = "TB_CDC_EVENTS"
 DEFAULT_PROGRESS_BUCKET_BASE = "TB_CDC_PROGRESS"
 DEFAULT_LOCK_BUCKET_BASE = "TB_CDC_LOCK"
@@ -61,7 +60,6 @@ def parse_uint128_decimal(raw: str) -> str:
 @dataclass(frozen=True)
 class CdcConfig:
     cluster_id: str = ""
-    nats_url: str = DEFAULT_NATS_URL
     event_stream: str = ""
     progress_bucket: str = ""
     lock_bucket: str = ""
@@ -72,9 +70,6 @@ class CdcConfig:
     lock_refresh_s: float = DEFAULT_LOCK_REFRESH_S
     dedupe_window_s: float = DEFAULT_DEDUPE_WINDOW_S
     idle_interval_s: float = DEFAULT_IDLE_INTERVAL_S
-    publish_mode: str = PUBLISH_MODE_ASYNC
-    publish_ack_timeout_s: float = DEFAULT_PUBLISH_ACK_TIMEOUT_S
-    publish_async_max_pending: int = DEFAULT_PUBLISH_ASYNC_MAX_PENDING
     timestamp_last_override: int | None = None
 
     def subject_for_event(self, ledger: int, event_type: str) -> str:
@@ -90,6 +85,8 @@ class CdcConfig:
 
 _NATS_ONLY = ("the pipeline provisions no JetStream stream or KV bucket: "
               "its sink, checkpoint and cursor are directories")
+_NO_BROKER = ("the pipeline publishes to a parquet sink and holds no broker "
+              "connection")
 #: Reference flags this pipeline parses and validates but cannot act on:
 #: flag -> (default, why it has no effect). A non-default value is
 #: rejected, so a setting nothing reads never looks accepted.
@@ -107,6 +104,10 @@ INERT_FLAGS = {
     "stream_update": (False, _NATS_ONLY),
     "stream_replicas": (1, _NATS_ONLY),
     "kv_replicas": (1, _NATS_ONLY),
+    "publish_mode": (PUBLISH_MODE_ASYNC, _NO_BROKER),
+    "publish_ack_timeout": (DEFAULT_PUBLISH_ACK_TIMEOUT_S, _NO_BROKER),
+    "publish_async_max_pending": (DEFAULT_PUBLISH_ASYNC_MAX_PENDING,
+                                  _NO_BROKER),
 }
 
 
@@ -146,9 +147,9 @@ def validate(cfg: CdcConfig, **inert) -> CdcConfig:
         raise ConfigError("--lock-refresh must be less than --lock-ttl")
     if cfg.dedupe_window_s <= 0:
         raise ConfigError("--dedupe-window must be greater than zero")
-    if cfg.publish_ack_timeout_s <= 0:
+    if flags["publish_ack_timeout"] <= 0:
         raise ConfigError("--publish-ack-timeout must be greater than zero")
-    if cfg.publish_async_max_pending <= 0:
+    if flags["publish_async_max_pending"] <= 0:
         raise ConfigError("--publish-async-max-pending must be greater than zero")
     if not flags["provision"] and flags["stream_update"]:
         raise ConfigError("--stream-update requires --provision=true")
@@ -169,12 +170,10 @@ def validate(cfg: CdcConfig, **inert) -> CdcConfig:
     else:
         raise ConfigError("--subject-mode must be one of: structured, single")
 
-    pmode = cfg.publish_mode.strip().lower()
-    if pmode not in (PUBLISH_MODE_ASYNC, PUBLISH_MODE_SYNC):
+    flags["publish_mode"] = flags["publish_mode"].strip().lower()
+    if flags["publish_mode"] not in (PUBLISH_MODE_ASYNC, PUBLISH_MODE_SYNC):
         raise ConfigError("--publish-mode must be one of: async, sync")
 
-    if not cfg.nats_url:
-        raise ConfigError("--nats-url cannot be empty")
     rps = flags["requests_per_second_limit"]
     if rps is not None and rps <= 0:
         # the reference parses this as uint32, so negatives are rejected at
@@ -197,30 +196,4 @@ def validate(cfg: CdcConfig, **inert) -> CdcConfig:
         derived["lock_bucket"] = cluster_scoped_resource_name(
             DEFAULT_LOCK_BUCKET_BASE, cluster_decimal)
     return replace(cfg, cluster_id=cluster_decimal,
-                   subject_mode=mode, publish_mode=pmode, **derived)
-
-
-def parse_addresses(raw: str) -> list[str]:
-    """Comma-separated source addresses (config.go:373-390): empty string
-    or any empty element is rejected."""
-    raw = raw.strip()
-    if not raw:
-        raise ConfigError("invalid --addresses: must not be empty")
-    addresses = []
-    for part in raw.split(","):
-        address = part.strip()
-        if not address:
-            raise ConfigError("invalid --addresses: contains an empty address")
-        addresses.append(address)
-    return addresses
-
-
-def parse_storage_type(raw: str) -> str:
-    """Storage kind for provisioned resources (config.go:409-418):
-    'file' | 'memory' (alias 'mem')."""
-    s = raw.strip().lower()
-    if s == "file":
-        return "file"
-    if s in ("memory", "mem"):
-        return "memory"
-    raise ConfigError("invalid storage: must be one of: file, memory")
+                   subject_mode=mode, **derived)

@@ -60,15 +60,16 @@ def msg_id_column(cluster_id: str | int, ts: Column | str) -> Column:
     return F.concat_ws("/", F.lit(str(cluster_id)), _col(ts).cast("string"))
 
 
+#: The 5 routing header names (runner.go:586-605), in header order.
+HEADER_COLS = ("event_type", "ledger", "transfer_code",
+               "debit_account_code", "credit_account_code")
+
+
 def header_columns(event_type: Column | str, ledger: Column | str,
                    transfer_code: Column | str, debit_code: Column | str,
                    credit_code: Column | str) -> list[Column]:
     """The 5 per-event routing headers (runner.go:586-605), as string columns
     aliased with their header names."""
-    return [
-        _col(event_type).cast("string").alias("event_type"),
-        _col(ledger).cast("string").alias("ledger"),
-        _col(transfer_code).cast("string").alias("transfer_code"),
-        _col(debit_code).cast("string").alias("debit_account_code"),
-        _col(credit_code).cast("string").alias("credit_account_code"),
-    ]
+    cols = (event_type, ledger, transfer_code, debit_code, credit_code)
+    return [_col(c).cast("string").alias(name)
+            for c, name in zip(cols, HEADER_COLS)]

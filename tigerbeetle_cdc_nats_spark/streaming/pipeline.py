@@ -26,9 +26,9 @@ Reference mapping (runner.go:49-170, 425-466):
 | single-writer lock (runner.go:607-724)      | one active query per checkpoint |
 |                                             | dir (Spark-enforced) + lease    |
 |                                             | marker for operator visibility  |
-| JetStream publish (484-584)                 | parquet sink; the broker path   |
-|                                             | is the tb_cdc_publish writer    |
-|                                             | (sources/nats_sink.py)          |
+| JetStream publish (484-584)                 | the foreachBatch parquet sink   |
+|                                             | above: the one sink, idempotent |
+|                                             | per batch id                    |
 
 At-least-once becomes effectively-once: the sink write is idempotent per
 micro-batch (overwrite-by-batch-id), and the cursor record is committed only
@@ -485,14 +485,12 @@ def build_query(spark: SparkSession, cfg: CdcConfig, paths: StreamPaths,
 
 
 def run_until_caught_up(spark: SparkSession, cfg: CdcConfig,
-                        paths: StreamPaths, timeout_s: float = 120.0) -> None:
+                        paths: StreamPaths) -> None:
     """One catch-up cycle (Trigger.AvailableNow): process everything
     currently in the source, then stop — the batch-mode analogue of the
-    reference's poll-until-empty loop."""
+    reference's poll-until-empty loop. Waits with no time cap, however
+    large the backlog; a stopped query returns, a failed one raises."""
     q = build_query(spark, cfg, paths, trigger_available_now=True).start()
-    q.awaitTermination(timeout_s)
-    if q.isActive:
-        q.stop()
-        raise TimeoutError("stream did not catch up within timeout")
+    q.awaitTermination()
     if q.exception() is not None:
         raise q.exception()
