@@ -144,15 +144,18 @@ def run_cli(args: list[str]) -> int:
         spark = get_spark(app_name=f"tb-cdc-spark-{cfg.cluster_id}")
         lock = pl.acquire_lock(paths, owner=f"cli-{cfg.cluster_id}",
                                ttl_s=cfg.lock_ttl_s)
+
+        # refresh failure stops the stream — the reference surfaces refresh
+        # errors to the main loop (runner.go:147-151).
+        def stop_queries(_reason):
+            for q in spark.streams.active:
+                q.stop()
+
         try:
             if ns.once:
-                # a long catch-up can outlive the TTL — keep the lease warm,
-                # and stop the drain when a refresh fails.
-                def stop_drain(_reason):
-                    for q in spark.streams.active:
-                        q.stop()
-
-                lock.start_refresh(cfg.lock_refresh_s, on_failure=stop_drain)
+                # a long catch-up can outlive the TTL — keep the lease warm.
+                lock.start_refresh(cfg.lock_refresh_s,
+                                   on_failure=stop_queries)
                 pl.run_until_caught_up(spark, cfg, paths)
                 lock.check()
             else:
@@ -160,10 +163,8 @@ def run_cli(args: list[str]) -> int:
                     spark, cfg, paths,
                     trigger_seconds=cfg.idle_interval_s,
                 ).start()
-                # refresh failure kills the stream — the reference surfaces
-                # refresh errors to the main loop (runner.go:147-151).
                 lock.start_refresh(cfg.lock_refresh_s,
-                                   on_failure=lambda _reason: q.stop())
+                                   on_failure=stop_queries)
                 q.awaitTermination()
                 lock.check()
         finally:
